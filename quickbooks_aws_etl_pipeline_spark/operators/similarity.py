@@ -200,6 +200,11 @@ def _dlit(x: float) -> str:
     return f"{float(x)!r}D"
 
 
+def _ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def assign_cell(vec_col: str, centroids: list[list[float]]) -> Column:
     """Nearest-centroid id by dot product with L2-normalized input —
     centroids are baked into the expression as literals, so assignment
@@ -219,7 +224,7 @@ def assign_cell(vec_col: str, centroids: list[list[float]]) -> Column:
     issued ~512 F.lit py4j calls per use, ~0.3-0.5 s of pure driver
     chatter per consumer (measured; the Lloyd's loop had the same
     defect, fixed via `_assign_cell_sql`)."""
-    v = f"transform(`{vec_col}`, x -> cast(x as double))"
+    v = f"transform({_ident(vec_col)}, x -> cast(x as double))"
     n = (f"sqrt(aggregate(transform({v}, x -> x * x), 0.0D, "
          f"(acc, x) -> acc + x))")
     dots = ", ".join(
@@ -245,11 +250,12 @@ def _assign_cell_sql(vec_col: str, cents_col: str, k: int) -> str:
     Column-object form spent ~0.5 s PER Lloyd's ITERATION just
     constructing expressions through py4j (measured r15 — that, not
     codegen, was the per-iteration driver cost)."""
-    v = f"transform({vec_col}, x -> cast(x as double))"
+    v = f"transform({_ident(vec_col)}, x -> cast(x as double))"
+    cs = _ident(cents_col)
     n = (f"sqrt(aggregate(transform({v}, x -> x * x), 0.0D, "
          f"(acc, x) -> acc + x))")
     dots = ", ".join(
-        f"aggregate(zip_with({v}, element_at({cents_col}, {i + 1}), "
+        f"aggregate(zip_with({v}, element_at({cs}, {i + 1}), "
         f"(x, y) -> x * y), 0.0D, (acc, x) -> acc + x) / {n}"
         for i in range(k))
     sims = f"array({dots})"
@@ -278,7 +284,11 @@ def _kmeans_fit_inputs(base: DataFrame, k: int) -> tuple[int, list]:
     proj = (base
             .filter(F.size("__v") > 0)
             .select(F.size("__v").alias("__d"),
-                    md5_long(F.col("__id").cast("string")).alias("__h"),
+                    # a NULL id's hash becomes -2^63 so it sorts
+                    # first, like the ascending orderBy this pass
+                    # replaces; filled JVM-side so __h stays int64
+                    F.coalesce(md5_long(F.col("__id").cast("string")),
+                               F.lit(-(2 ** 63))).alias("__h"),
                     "__v"))
 
     def partials(batches):
@@ -288,10 +298,7 @@ def _kmeans_fit_inputs(base: DataFrame, k: int) -> tuple[int, list]:
             for d, g in pdf.groupby("__d"):
                 d = int(d)
                 counts[d] = counts.get(d, 0) + len(g)
-                cand = g[["__h", "__v"]].copy()
-                # NULL hash (null id) sorts first, like the JVM
-                # ascending orderBy this pass replaces
-                cand["__h"] = cand["__h"].fillna(-(2 ** 63))
+                cand = g[["__h", "__v"]]
                 prev = tops.get(d)
                 if prev is not None:
                     cand = pd.concat([prev, cand], ignore_index=True)

@@ -12,1139 +12,7 @@ from . import sink_queries  # noqa: F401  (registers Qkeys)
 from . import streaming_queries  # noqa: F401  (registers Qkeys)
 from .oracle import ORACLE
 
-# ---------------------------------------------------------------------------
-# Registry order curation. The driver's correctness sweep takes the
-# first 50 keys in dict order (CORRECTNESS_r01.json == positions 1-50
-# of the round-1 registry). Round 1 verified the core/advanced/sink
-# half; this window rotates the not-yet-driver-verified keys — the
-# LLM-data-pipeline suite, report parsers, streaming, UDF surface —
-# to the front so they gain hard driver-checked rows. Keys past
-# position 50 remain registered and internally oracle-checked
-# (tests/test_registry_oracle.py covers all of them every run).
-# ---------------------------------------------------------------------------
-
-_ROUND2_WINDOW = [
-    # §2.12 dedup / similarity (north star)
-    "dedup_exact", "dedup_fuzzy", "dedup_simhash", "dedup_minhash_lsh",
-    "dedup_ngram_jaccard", "dedup_ngram_verified", "dedup_cluster_components",
-    "dedup_embedding_cosine", "dedup_embedding_verified",
-    "text_edit_distance", "sim_topk_cosine", "sim_topk_cosine_ivf",
-    # §2.12 text / corpus analytics
-    "text_tokenize_count", "text_lang_id", "text_quality_score",
-    "text_token_count_bpe", "doc_fingerprint", "text_normalize_scrub",
-    "seq_pack_chunked",
-    # §2.12 multimodal / JSON / map
-    "multimodal_binary_meta", "multimodal_decode_stub", "json_extract_props",
-    "map_functions",
-    # §2.2/2.3/2.8 flatten + JSON round-trip (P1/J1/F3/F4)
-    "flatten_struct", "explode_lines", "json_to_string", "json_from_string",
-    # §2.11 UDF surface
-    "udf_pandas_scalar", "udf_grouped_apply_in_pandas", "udtf_sentence_split",
-    # §2.9 report parsers + entity pipelines
-    "flatten_report_tree", "parse_tabular_report", "parse_grouped_report",
-    "qbo_entity_bills_pipeline", "qbo_entity_journal_explode",
-    "qbo_entity_billpayment_sparse", "qbo_entity_purchases_explode",
-    "qbo_entity_deposit",
-    # §2.1 sources
-    "source_qbo_datasource", "source_json_lines_permissive",
-    # §2.10 streaming (batch-equivalent oracles)
-    "stream_tumbling_agg", "stream_sliding_agg", "stream_session_window",
-    "stream_dedup_watermark", "stream_stateful_user_totals",
-    "stream_foreach_batch_sink",
-    # remaining oracle-checked closure keys without a driver row
-    "agg_monthly_spine", "agg_approx_distinct", "sql_shipping_priority",
-    "sql_correlated_subquery",
-]
-
-
-# Round-3 window. Head: the 15 keys that still have no driver row
-# after rounds 1+2. Middle: keys whose implementation changed this
-# round (epsilon-guarded prefix-filter bounds, half-up hyperplane
-# quantization, convergence-checked components) — a regression there
-# must be driver-visible, not just internal-test-visible. Tail:
-# round-1 greens rotating back in for re-confirmation (verified
-# longest ago; includes every bench headline query). Keys outside
-# the 50-slot window stay registered and internally oracle-checked
-# every test run (tests/test_registry_oracle.py).
-_ROUND3_WINDOW = [
-    # --- never driver-verified (15) ---
-    "text_repetition_filter", "decontaminate_ngram_overlap",
-    "stream_join_static", "stream_join_static_live",
-    "agg_max_by", "scalar_regexp_funcs", "array_functions",
-    "sort_nulls_ordering", "sample_quota_per_source", "dq_column_profile",
-    "agg_approx_percentile",
-    "sim_topk_cosine_ivf_learned", "stream_tumbling_agg_live",
-    "stream_sliding_agg_live", "stream_session_window_live",
-    # --- new this round (first driver verification) ---
-    "text_ngram_topk", "sim_topk_cosine_pq",
-    # --- implementation changed this round (re-verify hard) ---
-    "dedup_ngram_verified", "dedup_cluster_components",
-    "dedup_embedding_verified",
-    # --- round-1 greens rotating in for re-confirmation ---
-    "flagship_revenue_by_month_segment", "join_5way_regional_revenue",
-    "agg_group_sum", "agg_monthly_bucket", "join_fact_dim_inner",
-    "window_partition_sum", "sort_limit_topk",
-    "join_asof", "join_range_bands", "join_salted_skew",
-    "agg_two_phase_salted", "join_bucketed_colocated",
-    "split_train_test", "sample_stratified_hash",
-    "pivot_segment_revenue", "agg_cube_grouping", "agg_percentiles",
-    "window_ntile_cume", "merge_upsert_scd1", "merge_upsert_scd2",
-    "unpivot_melt", "scan_paged_union", "filter_date_range",
-    "project_rename_cast", "safe_cast_numeric", "date_parse",
-    "timestamp_parse", "date_format_mon_yyyy",
-    "agg_rollup_summary", "setop_intersect_except",
-]
-
-
-# Round-4 window. Head: the 5 keys added in the final round-3 commit
-# that the driver sweep has never seen. Then: keys whose
-# implementation changes this round (tumbling-live promoted to a full
-# oracle, ivf_learned made oracle-checkable by construction, the LSH
-# persist strategy) — any regression must be driver-visible. Then:
-# the 19 keys whose latest green row is still round 1 (verified
-# longest ago). Tail: round-2 greens rotating back in, highest-risk
-# first (dedup/similarity/text/UDF/report surface). Keys outside the
-# 50-slot window stay registered and internally oracle-checked every
-# test run (tests/test_registry_oracle.py).
-_ROUND4_WINDOW = [
-    # --- never driver-verified (round-3 additions) ---
-    "dedup_segment_corpus", "shuffle_deterministic",
-    "sketch_count_min", "sketch_heavy_hitters", "text_unigram_logprob",
-    # --- never driver-verified (new this round) ---
-    "sample_weighted_reservoir", "sketch_hll_merge",
-    "embedding_int8_quantize", "text_class_nb",
-    "dedup_incremental_minhash", "maintenance_compact_small_files",
-    "sim_topk_batch_queries", "dq_outlier_zscore", "dq_numeric_histogram",
-    "sample_weighted_per_source", "maintenance_sorted_rewrite",
-    "dedup_containment", "text_pii_scrub", "sketch_hll_retention",
-    "sql_recursive_subtree_totals", "multimodal_frame_sample",
-    "funnel_conversion", "session_entry_paths", "resample_daily_locf",
-    "stream_stateful_funnel", "agg_retention_cohorts",
-    "dq_referential_integrity", "text_tfidf_top_terms",
-    # --- never driver-verified (new this round, session 2: the
-    #     decision-support parity pack + bloom/KMV/PageRank) ---
-    "sql_pricing_summary", "sql_order_priority_exists",
-    "sql_volume_shipping", "sql_market_share", "sql_returned_items",
-    "sql_top_revenue_parts", "sql_cust_order_distribution",
-    "sql_promo_revenue_ratio", "sql_top_supplier",
-    "sql_small_qty_revenue", "sql_volume_customers",
-    "sql_disjunctive_revenue", "sql_dormant_customers",
-    "sketch_bloom_filter", "sketch_kmv_overlap", "graph_pagerank_fixed",
-    "join_interval_overlap", "embedding_gram_matrix",
-    "stream_stream_join", "stream_stream_join_live",
-    # --- implementation changed this round (re-verify hard).
-    #     dedup_minhash_lsh's round-4 change is a behavior-preserving
-    #     materialization knob (default unchanged, A/B-tested in
-    #     NOTES.md), so with the window full of never-verified keys
-    #     it yields its slot and re-confirms in round 5. ---
-    "stream_tumbling_agg_live", "sim_topk_cosine_ivf_learned",
-    # --- Priority rule: never-verified > implementation-changed >
-    #     longest-unconfirmed (a key with NO driver row ever is a
-    #     bigger evidence gap than a green row aging two rounds; every
-    #     displaced key stays internally oracle-checked each pytest
-    #     run via tests/test_registry_oracle.py). The 48 never-swept
-    #     keys plus the two genuinely-changed keys fill all 50 slots.
-    # --- round-5 window must rotate in, in order: the 7 second-wave
-    #     keys added after this window filled (sql_forecast_revenue,
-    #     sql_lateness_priority_mix, sql_supplier_part_counts,
-    #     agg_mode_per_group, sql_grouping_sets,
-    #     maintenance_incremental_rollup, maintenance_zorder_rewrite,
-    #     join_scd2_pointintime, window_rolling_distinct,
-    #     source_qbo_stream_live, sql_waiting_suppliers,
-    #     json_variant_extract, udf_sql_scalar, join_lateral_topn,
-    #     sql_parameterized_query, dq_observe_metrics,
-    #     stream_source_incremental_restart, text_cooccurrence_pmi,
-    #     dedup_bloom_prefilter, embedding_gram_matrix_arrow,
-    #     scan_schema_evolution, sink_dynamic_partition_overwrite),
-    #     then the wave-4 additions (mixture_temperature_sampling,
-    #     sessionize_inactivity_gap, privacy_k_anonymity,
-    #     cdc_apply_changes, graph_triangle_count,
-    #     text_bigram_logprob, source_csv_permissive,
-    #     window_rolling_regression, text_quality_gopher,
-    #     sim_knn_graph, embedding_pca_project, tokenizer_bpe_train,
-    #     join_asof_tolerance, dq_freshness_lag,
-    #     sample_balanced_classes, dq_outlier_mad,
-    #     sql_profit_by_nation_year, maintenance_snapshot_diff,
-    #     join_nearest_event, source_fixed_width, dedup_canonical_map,
-    #     pairs_contrastive_sampling, agg_bitmap_distinct,
-    #     stream_sliding_topk, transform_transpose,
-    #     udf_grouped_apply_in_arrow, dedup_lsh_calibration,
-    #     doc_chunking_overlap, text_encode_vocab_ids,
-    #     sink_python_datasource, dq_equidepth_histogram,
-    #     maintenance_analyze_stats, window_rolling_median,
-    #     attribution_first_touch, udtf_polymorphic_ngrams),
-    #     then dedup_minhash_lsh (changed), then the r1 greens
-    #  (agg_group_collect, agg_null_count, derive_literal_cols,
-    #  join_left_outer, join_left_semi_anti, null_fill, nullif_empty,
-    #  scalar_string_funcs, scalar_datetime_funcs, scan_parquet,
-    #  setop_union_all, sink_csv_roundtrip, sink_parquet_roundtrip,
-    #  sink_table_append, sink_table_overwrite, window_lag_lead,
-    #  window_range_frame, window_row_number, window_running_sum),
-    #  then the round-2 greens
-    #  (dedup_exact, dedup_fuzzy, dedup_simhash,
-    #  dedup_ngram_jaccard, dedup_embedding_cosine, sim_topk_cosine,
-    #  sim_topk_cosine_ivf, text_tokenize_count, text_lang_id,
-    #  text_quality_score, text_token_count_bpe, doc_fingerprint,
-    #  text_normalize_scrub, seq_pack_chunked, flatten_struct,
-    #  explode_lines, json_extract_props, json_from_string,
-    #  json_to_string, udf_pandas_scalar, udf_grouped_apply_in_pandas,
-    #  udtf_sentence_split, flatten_report_tree) ---
-]
-
-
-# Round-5 window. 58 candidates for 50 slots: the 57 keys that have
-# never been in a driver sweep (everything added after the r4 window
-# was cut) plus sql_pricing_summary, whose charge aggregation was
-# rewritten this round (decimal-native three-factor product — the one
-# r4 red row; see olap_suite.py module docstring). Priority per
-# VERDICT.md r4: (a) the fixed red key, (b) the Spark-4 surface,
-# (c) the wave-4 LLM-pipeline ops, (d) the remaining decision-support
-# shapes, then the maintenance/DQ/window/join tier. The 8 that don't
-# fit are the never-verified keys whose nearest sibling is already
-# driver-green (scan_schema_evolution ~ scan_parquet;
-# sink_dynamic_partition_overwrite ~ sink_table_overwrite;
-# source_csv_permissive / source_fixed_width ~
-# source_json_lines_permissive; maintenance_zorder_rewrite /
-# maintenance_snapshot_diff ~ maintenance_sorted_rewrite;
-# dq_outlier_mad ~ dq_outlier_zscore; dq_freshness_lag ~
-# dq_column_profile) — they rotate to the FRONT of round 6, followed
-# by the keys ADDED in round 5 after this window was cut
-# (dedup_duplicate_spans, dedup_spans_rewrite, tokenizer_bpe_apply,
-# text_hash_embedding, select_token_budget,
-# decontaminate_minhash_lsh, dq_rate_anomaly, text_zipf_curve,
-# privacy_l_diversity, sample_poisson_bootstrap, dq_higher_moments,
-# events_markov_transitions, window_ewma_smoothing,
-# pipeline_corpus_curation — fourteen total, all already sf0.01-exact
-# locally),
-# then the three keys whose IMPLEMENTATION changed in round 5
-# (dedup_segment_corpus — firsts aggregate re-encoded from
-# min(struct) to a hash-aggregable bigint min, output-identical and
-# re-proven exact at sf0.01; dedup_containment AND
-# dedup_ngram_verified — rarest-first prefix re-encoding,
-# output-identical at sf0.001/sf0.01 (pinned by
-# test_prefix_order_variants_equal) and ~2x faster at sf2; and
-# dedup_minhash_lsh — r4
-# materialization-knob change still unconfirmed by a driver row),
-# then the aging r1 greens
-# (agg_group_collect, agg_null_count, derive_literal_cols,
-# join_left_outer, join_left_semi_anti, null_fill, nullif_empty,
-# scalar_string_funcs, scalar_datetime_funcs, scan_parquet,
-# setop_union_all, sink_csv_roundtrip, sink_parquet_roundtrip,
-# sink_table_append, sink_table_overwrite, window_lag_lead,
-# window_range_frame, window_row_number, window_running_sum) and the
-# r2 greens, oldest first. Keys outside the 50-slot window stay
-# registered and oracle-checked every pytest run
-# (tests/test_registry_oracle.py at sf0.001; money-product keys
-# additionally bit-exact at sf0.01 via tests/test_money_ties.py).
-_ROUND5_WINDOW = [
-    # --- (a) fixed this round: the r4 red row ---
-    "sql_pricing_summary",
-    # --- (b) Spark-4 surface (udf_sql_scalar also carries the
-    #     decimal-native charge fix) ---
-    "udf_sql_scalar", "json_variant_extract", "join_lateral_topn",
-    "sink_python_datasource", "source_qbo_stream_live",
-    "stream_source_incremental_restart", "udtf_polymorphic_ngrams",
-    "transform_transpose", "udf_grouped_apply_in_arrow",
-    # --- (c) wave-4 LLM-pipeline ops ---
-    "tokenizer_bpe_train", "embedding_pca_project",
-    "dedup_bloom_prefilter", "text_cooccurrence_pmi",
-    "doc_chunking_overlap", "text_encode_vocab_ids",
-    "dedup_lsh_calibration", "sim_knn_graph", "text_bigram_logprob",
-    "text_quality_gopher", "mixture_temperature_sampling",
-    "pairs_contrastive_sampling", "dedup_canonical_map",
-    "privacy_k_anonymity", "sessionize_inactivity_gap",
-    "agg_bitmap_distinct", "embedding_gram_matrix_arrow",
-    "dq_equidepth_histogram",
-    # --- (d) remaining decision-support / SQL-surface shapes ---
-    "sql_forecast_revenue", "sql_lateness_priority_mix",
-    "sql_supplier_part_counts", "agg_mode_per_group",
-    "sql_grouping_sets", "sql_waiting_suppliers",
-    "sql_parameterized_query", "dq_observe_metrics",
-    "graph_triangle_count", "sql_profit_by_nation_year",
-    # --- maintenance / DQ / window / join / streaming tier ---
-    "cdc_apply_changes", "window_rolling_regression",
-    "join_asof_tolerance", "join_nearest_event",
-    "window_rolling_median", "maintenance_incremental_rollup",
-    "sample_balanced_classes", "attribution_first_touch",
-    "join_scd2_pointintime", "window_rolling_distinct",
-    "stream_sliding_topk", "maintenance_analyze_stats",
-]
-assert len(_ROUND5_WINDOW) == 50
-
-# Head of the round-6 rotation (the narrative above, as data): the 8
-# never-verified keys deferred from round 5, the keys ADDED in round
-# 5 after the window was cut, and the keys whose implementation
-# changed in round 5. tests/test_window_preflight.py holds these to
-# the same sf0.01 driver-grade oracle check as the current window, so
-# they enter round 6 pre-flighted.
-_ROUND6_ROTATION_HEAD = [
-    # deferred never-verified (nearest sibling driver-green)
-    "scan_schema_evolution", "sink_dynamic_partition_overwrite",
-    "source_csv_permissive", "source_fixed_width",
-    "maintenance_zorder_rewrite", "maintenance_snapshot_diff",
-    "dq_outlier_mad", "dq_freshness_lag",
-    # added in round 5 post-window
-    "dedup_duplicate_spans", "dedup_spans_rewrite", "tokenizer_bpe_apply",
-    "text_hash_embedding", "select_token_budget",
-    "decontaminate_minhash_lsh", "dq_rate_anomaly", "text_zipf_curve",
-    "privacy_l_diversity", "sample_poisson_bootstrap",
-    "dq_higher_moments", "events_markov_transitions",
-    "window_ewma_smoothing", "pipeline_corpus_curation",
-    "mixture_epoch_upsample", "dq_cusum_drift", "sketch_ams_f2",
-    "multimodal_audio_windows", "privacy_dp_laplace_counts", "resample_daily_interpolate",
-    "dq_seasonal_anomaly", "sketch_cms_merge",
-    "pipeline_user_features", "graph_link_prediction",
-    "multimodal_image_tiles", "events_rfm_segmentation",
-    "multimodal_resize_stub",
-    # implementation changed in round 5
-    "dedup_segment_corpus", "dedup_containment", "dedup_ngram_verified",
-    "dedup_minhash_lsh",
-]
-assert len(_ROUND6_ROTATION_HEAD) == 39
-
-# The round-6 window THE DRIVER ACTUALLY SWEEPS: the 39-key rotation
-# head (never-driver-verified round-5 additions + keys whose
-# implementation changed in round 5, incl. dedup_duplicate_spans
-# post island-merge fix) followed by the 11 oldest aging-r1 greens
-# (last driver-checked in round 1) to fill the 50-slot window.
-_ROUND6_WINDOW = _ROUND6_ROTATION_HEAD + [
-    "scan_parquet", "sink_parquet_roundtrip", "sink_csv_roundtrip",
-    "sink_table_overwrite", "sink_table_append",
-    "window_row_number", "window_running_sum", "window_lag_lead",
-    "setop_union_all", "null_fill", "nullif_empty",
-]
-assert len(_ROUND6_WINDOW) == 50
-
-# Keys ADDED (or implementation-changed) DURING round 6, i.e. after
-# the round-6 window above was cut: the head of the NEXT round's
-# sweep. Every key appended here is immediately held to the sf0.01
-# driver-grade preflight (tests/test_window_preflight.py parametrizes
-# over _ROUND6_WINDOW + _ROUND7_ROTATION_HEAD), so the round-7 flip
-# is a one-line _curate swap with zero new risk — the round-5
-# lesson ("the switch must actually be thrown") turned into standing
-# process.
-_ROUND7_ROTATION_HEAD = [
-    # bounded production tiers of the three documented >10 s sf0.1
-    # keys (r5 verdict task 5) + the span-dedup fingerprint tier
-    # (task 4)
-    "dedup_duplicate_spans_fp", "dedup_lsh_calibration_sampled",
-    "graph_triangle_count_sampled", "sim_topk_cosine_ivf_trainsampled",
-    # DSIR hashed-bigram importance resampling (new round-6 op)
-    "select_importance_resample",
-    # implementation changed in round 6: localCheckpoint barrier
-    # stops CollapseProject from inlining the shingle map into the
-    # 16 minhash transforms (41 s -> 5.4 s at sf0.1, same output)
-    "dedup_lsh_calibration",
-    # Spark-4 SQL pipe syntax (|> chain, plain-ANSI oracle)
-    "sql_pipe_syntax",
-    # CCNet perplexity head/middle/tail tiers (new round-6 op)
-    "mixture_perplexity_buckets",
-    # bounded node-sample tier of the dense co-purchase wedge join
-    "graph_link_prediction_sampled",
-    # continuous-ingest dedup: within-batch LSH + batch-vs-index
-    # probe per epoch, union == full-corpus tier (shared oracle)
-    "stream_dedup_incremental_live",
-    # Benford first-digit money screen (all-integer, shared ppm
-    # constants)
-    "dq_benford_digits",
-    # Spark-4 DataSourceStreamWriter: per-epoch manifest commit
-    "sink_python_stream_datasource",
-    # end-to-end composition: CCNet gate -> DSIR selection
-    "pipeline_ccnet_dsir",
-    # implementation changed in round 6: integer half-away means
-    # (decimal-sum / count roundings were tie-UNSAFE across engines —
-    # found by the perplexity hypothesis differential)
-    "text_unigram_logprob", "text_bigram_logprob",
-    "sample_poisson_bootstrap",
-    # round-6 session 2: integer round-6 ratios for the remaining
-    # exact-rational sites (same tie-unsafe ROUND(double, 6) class)
-    "text_quality_score", "text_repetition_filter",
-    "text_quality_gopher", "resample_daily_interpolate",
-    # fp tier for the rewrite path (completes the span fp split)
-    "dedup_spans_rewrite_fp",
-    # per-dimension z-score standardization stats (new round-6 op)
-    "embedding_standardize_stats",
-    # keyed consistent pseudonymization (surrogate join == raw join)
-    "privacy_pseudonymize_consistent",
-    # IVF index lifecycle: build -> persist partitionBy(cell) ->
-    # partition-pruned serve (PartitionFilters pinned)
-    "sim_index_persist_serve",
-]
-assert len(_ROUND7_ROTATION_HEAD) == 24
-
-# The round-7 window THE DRIVER ACTUALLY SWEEPS (r6 verdict tasks
-# 1-3): the 24-key rotation head (16 never-driver-verified round-6
-# additions + 8 keys whose implementation changed in round 6 — the
-# tie-recipe text keys and the barrier-fixed dedup_lsh_calibration),
-# then the 26 oldest aging greens: all 8 remaining r1-row keys,
-# followed by the highest-risk r2-row keys per the r6 verdict's
-# backfill list (llm_ops r2 block, the five qbo_entity parity keys,
-# the three report parsers). The batch streaming trio
-# (stream_tumbling/sliding/session) from that list yields its slots —
-# their `_live` twins re-verified green in r3/r4 over the same
-# transformation code — and rotates into round 8 with the remaining
-# r2 keys. Keys outside the window stay registered and oracle-checked
-# every pytest run (tests/test_registry_oracle.py).
-_ROUND7_WINDOW = _ROUND7_ROTATION_HEAD + [
-    # --- round-7 addition, verified same-round (r6 verdict task 4:
-    #     the protobuf-provisioned transformWithStateInPandas twin;
-    #     "done" includes a driver green row) ---
-    "stream_stateful_totals_tws",
-    # --- aging r1 rows (scalar_string_funcs — a pure projection of
-    #     built-in string functions, the lowest-risk aging key —
-    #     yields its slot to the TWS key and rotates into round 8;
-    #     it stays oracle-checked every pytest run) ---
-    "agg_group_collect", "agg_null_count", "derive_literal_cols",
-    "join_left_outer", "join_left_semi_anti",
-    "scalar_datetime_funcs", "window_range_frame",
-    # --- aging r2 rows, verdict priority order ---
-    "flatten_struct", "explode_lines", "json_to_string",
-    "json_from_string", "udf_pandas_scalar",
-    "dedup_exact", "dedup_fuzzy", "sim_topk_cosine",
-    "text_tokenize_count", "json_extract_props",
-    "qbo_entity_bills_pipeline", "qbo_entity_journal_explode",
-    "qbo_entity_billpayment_sparse", "qbo_entity_purchases_explode",
-    "qbo_entity_deposit",
-    "flatten_report_tree", "parse_tabular_report", "parse_grouped_report",
-]
-assert len(_ROUND7_WINDOW) == 50
-
-# Keys ADDED (or implementation-changed) DURING round 7, after the
-# round-7 window above was cut: the head of the NEXT round's sweep.
-# Same standing process as _ROUND7_ROTATION_HEAD — every key appended
-# here is immediately held to the sf0.01 driver-grade preflight
-# (tests/test_window_preflight.py parametrizes over _ROUND7_WINDOW +
-# _ROUND8_ROTATION_HEAD), so the round-8 flip is a one-line _curate
-# swap with zero new risk.
-_ROUND8_ROTATION_HEAD: list[str] = [
-    # displaced from the round-7 window by stream_stateful_totals_tws
-    "scalar_string_funcs",
-    # r6 verdict task 6: the production crawl-refresh loop — bloom
-    # exact-prefilter -> incremental minhash probe -> span-FP
-    # rewrite -> Gopher gate, one composed full oracle
-    "pipeline_crawl_refresh",
-    # round-7 additions: SemDeDup per-cell curation manifest,
-    # integer-exact greedy k-center coreset (unrolled-CTE oracle),
-    # MMR diversity rerank over the brute-force shortlist
-    "dedup_semantic_cells", "select_kcenter_coreset", "sim_mmr_rerank",
-    # MATCH_RECOGNIZE-style per-user sequence pattern counts
-    "events_sequence_patterns",
-    # classifier-eval / leakage-audit tier (plans/eval_queries.py):
-    # distributed tie-corrected AUC, reliability bins, cluster-aware
-    # leakage-safe split, single-scan filter-funnel report
-    "eval_auc_rank", "eval_calibration_bins", "split_leakage_safe",
-    "pipeline_filter_funnel",
-    # ORC sibling of the parquet roundtrip (partition-pruned read-back)
-    "sink_orc_roundtrip",
-    # RHO-style excess-loss selection (two unigram LMs, one vocab
-    # exchange, decimal-exact ranking)
-    "select_excess_loss",
-    # the composed pre-training prep loop: gates -> canonical keep ->
-    # cluster-atomic split -> per-split pack card, one oracle
-    "pipeline_pretrain_prep",
-    # ANN index acceptance metric: recall@10 of the IVF cell tier vs
-    # brute-force exact top-10 over the 8-query batch
-    "eval_ann_recall",
-    # production monitoring: all-integer PSI score-drift terms, and
-    # the same monitor AS a live streaming query (10-row state)
-    "eval_score_drift_psi", "stream_drift_monitor_live",
-    # the operating-point table (precision/recall/F1 per decile cut)
-    "eval_pr_thresholds",
-]
-
-
-# The round-8 window THE DRIVER ACTUALLY SWEEPS (r7 verdict task 1):
-# the 17-key rotation head (the 16 never-driver-verified round-7
-# additions — the whole eval tier, crawl-refresh, SemDeDup/k-center/
-# MMR, ORC, excess-loss, pretrain-prep, PSI batch+live — plus the
-# displaced scalar_string_funcs), then the keys ADDED IN ROUND 8
-# ITSELF (domain curation, the classifier loop, the LEFT OUTER
-# stream-stream join batch+live — same-round verification, the
-# stream_stateful_totals_tws precedent), then the aging backfill:
-# ALL 27 remaining r2-row keys (incl. the batch streaming trio that
-# yielded its r7 slots), and the oldest r3 row (scan_paged_union) to
-# fill slot 50.
-_ROUND8_NEW_KEYS = [
-    "curate_domain_caps", "stats_domain_mix",
-    "pipeline_classifier_loop",
-    "stream_stream_join_outer", "stream_stream_join_outer_live",
-]
-_ROUND8_WINDOW = _ROUND8_ROTATION_HEAD + _ROUND8_NEW_KEYS + [
-    # --- aging r2 rows (last driver-checked round 2) ---
-    "agg_approx_distinct", "agg_monthly_spine",
-    "dedup_embedding_cosine", "dedup_ngram_jaccard", "dedup_simhash",
-    "doc_fingerprint", "map_functions", "multimodal_binary_meta",
-    "multimodal_decode_stub", "seq_pack_chunked", "sim_topk_cosine_ivf",
-    "source_json_lines_permissive", "source_qbo_datasource",
-    "sql_correlated_subquery", "sql_shipping_priority",
-    "stream_dedup_watermark", "stream_foreach_batch_sink",
-    "stream_session_window", "stream_sliding_agg",
-    "stream_stateful_user_totals", "stream_tumbling_agg",
-    "text_edit_distance", "text_lang_id", "text_normalize_scrub",
-    "text_token_count_bpe", "udf_grouped_apply_in_pandas",
-    "udtf_sentence_split",
-    # --- oldest aging r3 row fills slot 50 ---
-    "scan_paged_union",
-]
-assert len(_ROUND8_WINDOW) == 50
-
-# Keys ADDED (or implementation-changed) DURING round 8 AFTER the
-# window cut above: the head of the NEXT round's sweep. Same standing
-# process — every key appended here is immediately held to the
-# sf0.01 driver-grade preflight (tests/test_window_preflight.py
-# parametrizes over _ROUND8_WINDOW + _ROUND9_ROTATION_HEAD), so the
-# round-9 flip is a one-line _curate swap with zero new risk.
-_ROUND9_ROTATION_HEAD: list[str] = [
-    # DoReMi-style one-shot proportional domain reweighting, added
-    # after the round-8 window cut. (Its two_lm_token_delta refactor
-    # also touched select_excess_loss's implementation — that key is
-    # IN the round-8 window, so the refactored code gains its driver
-    # row this round.)
-    "mixture_domain_reweight",
-    # Poisson-bootstrap AUC confidence interval: 8 deterministic
-    # md5-seeded resamples, each graded by the eval-tier rank-sum;
-    # (replicate, bucket)-partitioned windows, codebook offsets
-    "eval_auc_bootstrap_ci",
-    # the domain tier composed end-to-end: gates -> ranked caps ->
-    # excess-loss mixture weights -> token-budget allocation
-    "pipeline_domain_curation",
-    # retrieval / serving tier (plans/retrieval_queries.py): BM25
-    # lexical top-k in exact 1e-6 integer units, hybrid RRF fusion
-    # of the lexical + dense legs, Artetxe-Schwenk distance-margin
-    # bitext mining, blocked record linkage over customer, and the
-    # split-conformal decision threshold for the quality gate
-    "text_bm25_topk", "sim_hybrid_rrf", "sim_margin_bitext_mine",
-    "dedup_record_linkage", "eval_conformal_threshold",
-    # curriculum data ordering (deterministic easy-first phases,
-    # md5-shuffled within (phase, shard)) and the Matryoshka-style
-    # dimension-ablation recall (16-of-64-dim search vs exact top-10
-    # from ONE pair scan)
-    "curate_curriculum_order", "eval_dim_ablation_recall",
-    # the RAG serving path composed end-to-end: chunk -> chunk-level
-    # BM25 recall -> RRF with the parent doc's dense rank ->
-    # <=2-chunks-per-doc diversity cap -> top-5 contexts
-    "pipeline_rag_retrieval",
-    # graded retrieval quality: NDCG@10 of the truncated-dim system
-    # vs full-dim relevance, discount table via the shared-constant
-    # pattern (no engine evaluates log2)
-    "eval_retrieval_ndcg",
-    # the FULL OUTER watermarked stream-stream interval join (batch
-    # + live twins, one oracle) — the last cell of the join matrix
-    "stream_stream_join_full", "stream_stream_join_full_live",
-    # batched lexical serving: Q BM25 queries in one corpus pass
-    # (the sim_topk_batch_queries shape on the lexical side)
-    "text_bm25_batch_queries",
-    # the lexical index lifecycle: full inverted index persisted
-    # partitionBy(term) + stats sidecar, partition-pruned serve,
-    # held to text_bm25_topk's oracle verbatim
-    "text_bm25_index_serve",
-    # DPR-style hard-negative mining: nearest same-label positive vs
-    # nearest other-label negative per query, exact integer margins
-    "pairs_hard_negatives",
-    # incremental lexical-index refresh: batch appended as its own
-    # (term, batch) slices under dynamic partition overwrite
-    # (redelivery-idempotent, O(batch) not O(corpus)); serve held to
-    # the full-corpus oracle verbatim
-    "maintenance_bm25_index_refresh",
-    # Spark-4 surface: native XML roundtrip (explicit-schema
-    # read-back vs original-rows oracle) and the SQL scripting block
-    # (BEGIN/DECLARE/WHILE equals the set-wise form)
-    "sink_xml_roundtrip", "sql_scripting_block",
-    # tokenizer acceptance: per-language chars-per-token + BPE
-    # fertility as exact HUGEINT/DECIMAL half-away ratios
-    "eval_tokenizer_compression",
-    # atomic next-fit packing (no document splitting): grouped
-    # applyInPandas chain recurrence, recursive-CTE oracle
-    "seq_pack_atomic",
-    # quality-priority cluster keep: the keep-the-best policy axis
-    # over the same near-dup components (one extra component window)
-    "dedup_quality_keep",
-    # OHLC hourly bars (selected raw doubles — rank-1 open/close,
-    # min/max high/low — bit-exact by construction)
-    "resample_hourly_ohlc",
-    # the one-row corpus data card a release ships (size, diversity,
-    # quality, near-dup cluster mass; all ratios integer half-away)
-    "stats_corpus_datasheet",
-    # radius (range) vector search — the top-k complement: all
-    # neighbors above an integer similarity floor, bounded summary
-    "sim_range_search",
-]
-
-# The round-9 window THE DRIVER ACTUALLY SWEEPS (r8 verdict task 1):
-# the full 26-key rotation head (every round-8 addition that has no
-# driver row yet — the retrieval/serving tier, the FULL OUTER
-# stream-stream pair, XML sink, SQL scripting, bootstrap CI, domain
-# pipeline, hard negatives, curriculum, atomic packing, quality-keep,
-# OHLC, datasheet, range search, tokenizer compression), then the
-# aging backfill: the 24 alphabetically-first keys of the r3 cohort
-# (oldest driver rows after round 8 swept the r2 stragglers),
-# recomputed fresh against CORRECTNESS_r01..r08 at this cut.
-_ROUND9_WINDOW = _ROUND9_ROTATION_HEAD + [
-    # --- aging r3 rows (last driver-checked round 3) ---
-    "agg_approx_percentile", "agg_cube_grouping", "agg_group_sum",
-    "agg_max_by", "agg_monthly_bucket", "agg_percentiles",
-    "agg_rollup_summary", "agg_two_phase_salted", "array_functions",
-    "date_format_mon_yyyy", "date_parse",
-    "decontaminate_ngram_overlap", "dedup_cluster_components",
-    "dedup_embedding_verified", "dq_column_profile",
-    "filter_date_range", "flagship_revenue_by_month_segment",
-    "join_5way_regional_revenue", "join_asof",
-    "join_bucketed_colocated", "join_fact_dim_inner",
-    "join_range_bands", "join_salted_skew", "merge_upsert_scd1",
-]
-assert len(_ROUND9_WINDOW) == 50
-
-# Keys ADDED (or implementation-changed) DURING round 9 AFTER the
-# window cut above: the head of the NEXT round's sweep. Same standing
-# process — every key appended here is immediately held to the
-# sf0.01 driver-grade preflight (tests/test_window_preflight.py
-# parametrizes over _ROUND9_WINDOW + _ROUND10_ROTATION_HEAD), so the
-# round-10 flip is a one-line _curate swap with zero new risk.
-_ROUND10_ROTATION_HEAD: list[str] = [
-    # r8 verdict task 6: the composed IVF-pruned hard-negative
-    # serving path (integer cell quantizer, nprobe=2 probe, same
-    # conditional max_by mining over the pruned candidates) — the
-    # production form that retires pairs_hard_negatives' docstring
-    # waiver
-    "pairs_hard_negatives_ivf",
-    # paired model comparison (Cohen's kappa + McNemar) and the
-    # Carlini-style verbatim-memorization span audit
-    "eval_classifier_agreement", "eval_memorization_spans",
-    # the crawl-refresh promotion report: snapshot diff per
-    # (source, added/removed/changed/unchanged) with token deltas
-    "stats_corpus_diff",
-    # the actual JDBC wire path (embedded Derby): overwrite +
-    # append warehouse load, read back over JDBC — retires the
-    # r8 "untestable here" gap for the Redshift sink
-    "sink_jdbc_roundtrip",
-    # the end-to-end live flow: stream -> foreachBatch ->
-    # epoch-staging JDBC warehouse load, catalog-discovered
-    # read-back held to the batch aggregate
-    "stream_jdbc_warehouse_live",
-    # UniMax language-balanced budget allocation (integer
-    # waterfilling inside array expressions — no window)
-    "mixture_unimax_budget",
-    # live CDC: the change feed as a multi-epoch stream merged
-    # into epoch-versioned state (idempotent redelivery), held
-    # to the batch apply oracle verbatim
-    "stream_cdc_apply_live",
-    # CBO stats lifecycle: ANALYZE FOR COLUMNS, catalog
-    # read-back held to exact recomputation
-    "maintenance_column_stats",
-    # community detection: 3 synchronous LPA rounds, unrolled
-    # oracle (pagerank convention)
-    "graph_label_propagation",
-    # Spearman mid-rank correlation between two quality
-    # signals (histogram ranks, integer 6*sum(d^2) form)
-    "eval_rank_correlation",
-    # the binaryFile multimodal ingestion entry point
-    "source_binaryfile_blobs",
-]
-
-# The round-10 window THE DRIVER ACTUALLY SWEEPS (r9 verdict task 1):
-# the 12-key rotation head (every round-9 addition with no driver row
-# yet), the keys whose IMPLEMENTATION changed in round 10 (the
-# standing process: a changed plan re-enters the sweep), the round-10
-# additions, then the aging backfill recomputed fresh against
-# CORRECTNESS_r01..r09 at this cut: the full r3-cohort remainder
-# (21 keys, oldest driver rows after round 9 swept the first 24),
-# then the alphabetically-first r4-cohort keys to fill slot 50.
-_ROUND10_WINDOW = _ROUND10_ROTATION_HEAD + [
-    # --- round-10 changed/added keys ---
-    # nearest-id folded into the summary aggregate (min_by over
-    # (-sim, id)) — the r9 verdict's Q-partition-window finding
-    "sim_range_search",
-    # NEW: the composed IVF-pruned radius search (r9 verdict task 7)
-    "sim_range_search_ivf",
-    # de-vacuated via the planted-copy feed (r9 verdict task 5)
-    "dedup_embedding_verified",
-    # --- aging r3 rows (last driver-checked round 3) ---
-    "merge_upsert_scd2", "pivot_segment_revenue",
-    "project_rename_cast", "safe_cast_numeric",
-    "sample_quota_per_source", "sample_stratified_hash",
-    "scalar_regexp_funcs", "setop_intersect_except",
-    "sim_topk_cosine_pq", "sort_limit_topk", "sort_nulls_ordering",
-    "split_train_test", "stream_join_static",
-    "stream_join_static_live", "stream_session_window_live",
-    "stream_sliding_agg_live", "text_ngram_topk", "timestamp_parse",
-    "unpivot_melt", "window_ntile_cume", "window_partition_sum",
-    # --- aging r4 rows (alphabetically first; rest stay for r11) ---
-    "agg_retention_cohorts", "dedup_incremental_minhash",
-    "dq_numeric_histogram", "dq_outlier_zscore",
-    "dq_referential_integrity", "embedding_gram_matrix",
-    "embedding_int8_quantize", "funnel_conversion",
-    "graph_pagerank_fixed", "join_interval_overlap",
-    "maintenance_compact_small_files", "maintenance_sorted_rewrite",
-    "multimodal_frame_sample", "resample_daily_locf",
-]
-assert len(_ROUND10_WINDOW) == 50
-
-# Keys ADDED (or implementation-changed) DURING round 10 AFTER the
-# window cut above: the head of the NEXT round's sweep. Same standing
-# process — every key appended here is immediately held to the
-# sf0.01 driver-grade preflight (tests/test_window_preflight.py
-# parametrizes over _ROUND10_WINDOW + _ROUND11_ROTATION_HEAD), so the
-# round-11 flip is a one-line _curate swap with zero new risk.
-_ROUND11_ROTATION_HEAD: list[str] = [
-    # r10 session: widen() on the bigram expansion changed the plan
-    # (4.18 -> 0.94 s sf0.1 — the one-row-group discovery, NOTES r10)
-    "select_importance_resample",
-    # representative re-verifies for the registry-wide word_shingles
-    # zip_with rewrite (string-identical by property test at n=2/3/8;
-    # these cover the n=2 LM, n=3 dedup/fingerprint/repetition, and
-    # prefix-filter tiers at driver grade; eval_memorization_spans
-    # covers n=8 from inside the r10 window)
-    "text_repetition_filter", "doc_fingerprint", "dedup_minhash_lsh",
-    "dedup_duplicate_spans", "decontaminate_ngram_overlap",
-    "text_bigram_logprob",
-    # NEW r10 session: the IVF-pruned bitext miner (the second
-    # composed serving form of r9 verdict task 7). (The LPA two-join
-    # rewrite needs no slot here: graph_label_propagation already
-    # sits in the r10 window's rotation head, so the driver verifies
-    # the new plan this round; same for eval_memorization_spans'
-    # widened training expansion.)
-    "sim_margin_bitext_mine_ivf",
-    # r10 widen() sites (the one-row-group salvage, measured wins in
-    # NOTES r10): the hashing-trick featurizer and the ExactSubstr
-    # span tiers' gram expansion (exact + fp + the rewrite APPLY)
-    "text_hash_embedding", "dedup_duplicate_spans_fp",
-    "dedup_spans_rewrite",
-    # NEW r10 session 2: the pattern-mining / preference-query pack
-    # (plans/mining_queries.py) — multi-source BFS, Apriori basket
-    # pairs, Pareto skyline, time-decay attribution, per-source
-    # winsorization; all with full DuckDB oracles
-    "graph_bfs_distances", "mining_basket_pairs", "query_pareto_skyline",
-    "attribution_time_decay", "curate_winsorize_scores",
-    # NEW r10 session 2 batch 2: distribution statistics — two-sample
-    # KS drift (binning-free complement to PSI), chi-square
-    # independence, and t-closeness (completing the k-anonymity /
-    # l-diversity privacy trio)
-    "dq_ks_drift", "dq_chi_square_assoc", "privacy_t_closeness",
-    # NEW r10 session 2 batch 3: binary-code hamming ANN (the bit-
-    # packed index path completing brute/IVF/PQ/LSH), the Heaps-law
-    # type-token curve, and the mapInArrow §2.11 surface
-    "sim_hamming_topk", "text_heaps_law", "udf_map_in_arrow",
-    # NEW r10 session 2 batch 4: runtime dynamic partition pruning,
-    # pinned in-plan (every other partitioned key prunes on literals)
-    "scan_dynamic_partition_pruning",
-    # NEW r10 session 2 batch 5: the GROUPED_AGG pandas UDF surface
-    # (exact lower-median custom aggregate inside groupBy().agg())
-    "udf_pandas_grouped_agg",
-    # NEW r10 session 2 batch 6: min-plus weighted shortest paths and
-    # Neyman-optimal stratified allocation (Hamilton apportionment)
-    "graph_weighted_sssp", "sample_neyman_allocation",
-    # NEW r10 session 2 batch 7: the KS monitor as a TRUE streaming
-    # query (domain-bounded complete-mode state, snapshot held to the
-    # batch oracle verbatim — the *_live contract)
-    "stream_ks_drift_live",
-    # NEW r10 session 2 batch 8: the privacy trio composed into one
-    # release gate (per-QI-group k-anon + l-div + t-closeness verdicts)
-    "pipeline_release_gate",
-    # NEW r10 session 2 batch 9: seasonal-naive forecast accuracy
-    # (MASE) — the grader the forecasting keys lacked
-    "eval_forecast_mase",
-]
-
-# Round-11 window, per the recipe staged at the round-10 session-2
-# cut: the rotation head (every round-10-session key above, incl.
-# the attribution day-boundary-probe rewrite this round re-verifies)
-# + the oldest-driver-row keys to fill 50. CORRECTNESS_r10.json was
-# re-checked at flip time: all 50 r10 rows green (rows+schema+hash,
-# min spark_rows 1), so no key needed promotion and the fill is the
-# r4-cohort remainder, alphabetically, truncated to fit; the three
-# that don't fit (sql_top_revenue_parts, sql_top_supplier,
-# sql_volume_customers) roll to round 12.
-_R4_COHORT_FILL = [
-    "sample_weighted_per_source", "sample_weighted_reservoir",
-    "session_entry_paths", "shuffle_deterministic",
-    "sim_topk_batch_queries", "sim_topk_cosine_ivf_learned",
-    "sketch_bloom_filter", "sketch_count_min", "sketch_heavy_hitters",
-    "sketch_hll_merge", "sketch_hll_retention", "sketch_kmv_overlap",
-    "sql_cust_order_distribution", "sql_disjunctive_revenue",
-    "sql_dormant_customers", "sql_market_share",
-    "sql_order_priority_exists", "sql_promo_revenue_ratio",
-    "sql_recursive_subtree_totals", "sql_returned_items",
-    "sql_small_qty_revenue", "sql_top_revenue_parts",
-    "sql_top_supplier", "sql_volume_customers",
-]
-_ROUND11_WINDOW = (_ROUND11_ROTATION_HEAD
-                   + _R4_COHORT_FILL[:50 - len(_ROUND11_ROTATION_HEAD)])
-assert len(_ROUND11_WINDOW) == 50
-
-# Keys ADDED (or implementation-changed) DURING round 11 AFTER the
-# window cut above: the head of the round-12 sweep. Standing process —
-# every key appended here is immediately held to the sf0.01
-# driver-grade preflight (tests/test_window_preflight.py), and the
-# round-12 flip is a one-line _curate swap. Seeded with the r4-cohort
-# keys that didn't fit this window.
-_ROUND12_ROTATION_HEAD: list[str] = [
-    *_R4_COHORT_FILL[50 - len(_ROUND11_ROTATION_HEAD):],
-    # r11 session: the composed dedup -> refresh-both-indexes ->
-    # serve loop (r10 verdict task 6)
-    "pipeline_index_serve_refresh",
-    # r11 session batch 2: exact-integer ACF per event type (the
-    # weekly-seasonality screen next to eval_forecast_mase) and the
-    # 8-round k-core peel of the mutual 5-NN graph (iterative
-    # subgraph refinement — the peeling class)
-    "stats_autocorrelation", "graph_kcore_decompose",
-    # r11 session batch 3: the Z-order layout model (Morton vs
-    # linear bucket pruning under a 2-D predicate — the
-    # OPTIMIZE ZORDER BY math, fully SQL-checkable)
-    "maintenance_zorder_layout",
-    # r11 session batch 4: cross-document duplicate tiles (the
-    # multimodal boilerplate detector) and manifest-pinned snapshot
-    # reads (the lakehouse time-travel metadata plane)
-    "multimodal_tile_dedup", "maintenance_snapshot_read",
-    # r11 session batch 5: ROUGE-style clipped n-gram overlap — the
-    # generation-eval text-overlap family the eval tier lacked
-    "eval_rouge_overlap",
-    # r11 session batch 6: exact top-k maintained across arriving
-    # batches by k-row shortlist merges (PAPERS.md incremental
-    # interactive-session top-k, simplest sound form)
-    "sim_topk_incremental",
-    # r11 session batch 7: the windowed leaderboard as a TRUE
-    # stream (complete-mode window state + snapshot rank — the
-    # *_live contract; shares the batch key's oracle verbatim)
-    "stream_sliding_topk_live",
-    # r11 session: attribution_time_decay's exact boundary-probe
-    # rewrite is ALREADY in the r11 window head (re-verified this
-    # round); no extra slot needed.
-]
-
-# Round-12 window, flipped at the round-12 session start after
-# re-checking CORRECTNESS_r11 (all 50 rows green, key set verified
-# set-equal to _ROUND11_WINDOW, min spark_rows 1): the 12-key
-# rotation head above + the 38 STALEST driver-green keys. "Stalest"
-# was DERIVED, not typed — union of CORRECTNESS_r01..r11, each key's
-# latest driver round, sorted (round, key) ascending: 8 keys whose
-# latest row is r4 and 30 whose latest row is r5 (staler than the r6
-# cohort — those keys were re-swept in later windows; these were
-# not). With this sweep every key that had a driver row before this
-# round has one from r12 or newer OR sits in a later-round cohort,
-# and the 9 round-11 additions gain their FIRST driver rows — at
-# which point all 353+ registry keys are driver-verified at least
-# once.
-_R12_STALE_FILL = [
-    # latest driver row r4:
-    "sql_volume_shipping", "stream_stateful_funnel",
-    "stream_stream_join", "stream_stream_join_live",
-    "stream_tumbling_agg_live", "text_class_nb", "text_pii_scrub",
-    "text_tfidf_top_terms",
-    # latest driver row r5:
-    "agg_bitmap_distinct", "agg_mode_per_group",
-    "attribution_first_touch", "cdc_apply_changes",
-    "dedup_bloom_prefilter", "dedup_canonical_map",
-    "doc_chunking_overlap", "dq_equidepth_histogram",
-    "dq_observe_metrics", "embedding_gram_matrix_arrow",
-    "embedding_pca_project", "graph_triangle_count",
-    "join_asof_tolerance", "join_lateral_topn", "join_nearest_event",
-    "join_scd2_pointintime", "json_variant_extract",
-    "maintenance_analyze_stats", "maintenance_incremental_rollup",
-    "mixture_temperature_sampling", "pairs_contrastive_sampling",
-    "privacy_k_anonymity", "sample_balanced_classes",
-    "sessionize_inactivity_gap", "sim_knn_graph",
-    "sink_python_datasource", "source_qbo_stream_live",
-    "sql_forecast_revenue", "sql_grouping_sets",
-    "sql_lateness_priority_mix",
-]
-_ROUND12_WINDOW = _ROUND12_ROTATION_HEAD + _R12_STALE_FILL
-assert len(_ROUND12_WINDOW) == 50
-assert len(set(_ROUND12_WINDOW)) == 50
-
-# Keys ADDED (or implementation-changed) DURING round 12 AFTER the
-# window cut above: the head of the round-13 sweep. Standing process —
-# every key appended here is immediately held to the sf0.01
-# driver-grade preflight (tests/test_window_preflight.py), and the
-# round-13 flip is a one-line _curate swap.
-_ROUND13_ROTATION_HEAD: list[str] = [
-    # r12 session: the non-file Hadoop FileSystem roundtrip (viewfs
-    # mount-table dispatch — r11 verdict task 4)
-    "sink_viewfs_roundtrip",
-    # r12 session batch 2: classical seasonal decomposition (the
-    # trend/seasonal split between ACF detection and MASE grading),
-    # Wasserstein-1 drift (the magnitude-sensitive drift statistic
-    # next to KS/PSI/chi-square), JOIN-view IVM with both-side delta
-    # propagation (the algebra the aggregate-only rollup IVM lacks),
-    # and Bradley-Terry paired-preference strengths (the RLHF
-    # leaderboard shape, 8 exact-integer MM iterations mirrored by
-    # an unrolled MATERIALIZED-CTE oracle)
-    "stats_seasonal_decompose", "dq_wasserstein_drift",
-    "maintenance_ivm_join_view", "eval_bradley_terry",
-    # r12 session batch 3: pairs completeness + reduction ratio of
-    # the banded-MinHash blocking vs the exact prefix-tier ground
-    # truth — the entity-resolution blocking-quality grader
-    "eval_blocking_quality",
-    # r12 session batch 4: Markov-chain removal-effect attribution
-    # (the data-driven counterfactual completing first-touch /
-    # time-decay: 12 exact-integer value-iteration steps on the
-    # journey chain, unrolled (removal x state) grid-CTE oracle)
-    "attribution_markov_removal",
-    # r12 session batch 5: STREAMING join-view IVM (the
-    # materialized-view-over-a-stream shape: foreachBatch epochs
-    # overwrite their own batch partition, additive roll-up serves
-    # the view; shares the batch IVM key's full-recompute oracle)
-    "stream_ivm_join_live",
-    # r12 session batch 6: slice-wise AUC keyed by source — the
-    # fairness/slice-analysis form of eval_auc_rank (single-class
-    # slices emit NULL identically in both engines)
-    "eval_auc_sliced",
-    # r12 session batch 7: the W1 monitor as a TRUE stream (same
-    # value-domain-bounded complete-mode histogram state as the KS
-    # live twin; snapshot scored by the dense-spine finisher and
-    # held to dq_wasserstein_drift's oracle verbatim)
-    "stream_wasserstein_drift_live",
-    # r12 session: eval_rank_correlation re-verifies under the fused
-    # single-pass spearman_rho rewrite (one stacked histogram scan +
-    # one offset collect instead of two of each; bit-identical by
-    # the hypothesis differential test) — implementation-changed, so
-    # it re-enters the sweep per the standing process
-    "eval_rank_correlation",
-]
-
-# Round-13 window, flipped at the round-13 session start after
-# re-checking CORRECTNESS_r12 (all 50 rows green, key set verified
-# set-equal to _ROUND12_WINDOW): the 11-key rotation head above + the
-# 39 STALEST driver-green keys. "Stalest" DERIVED, not typed — union
-# of CORRECTNESS_r01..r12, each key's latest driver round, sorted
-# (round, key) ascending, head keys excluded: all 17 keys whose
-# latest row is r5 plus the first 22 (alphabetical) of the 44 whose
-# latest row is r6. Once CORRECTNESS_r13 lands green, every key in
-# the registry has a driver row — the 10 round-12 additions gain
-# their first, and eval_rank_correlation re-verifies under the fused
-# single-pass spearman_rho plan.
-_R13_STALE_FILL = [
-    # latest driver row r5:
-    "sql_parameterized_query", "sql_pricing_summary",
-    "sql_profit_by_nation_year", "sql_supplier_part_counts",
-    "sql_waiting_suppliers", "stream_sliding_topk",
-    "stream_source_incremental_restart", "text_cooccurrence_pmi",
-    "text_encode_vocab_ids", "tokenizer_bpe_train",
-    "transform_transpose", "udf_grouped_apply_in_arrow",
-    "udf_sql_scalar", "udtf_polymorphic_ngrams",
-    "window_rolling_distinct", "window_rolling_median",
-    "window_rolling_regression",
-    # latest driver row r6 (first 22 alphabetical):
-    "decontaminate_minhash_lsh", "dedup_containment",
-    "dedup_ngram_verified", "dedup_segment_corpus",
-    "dq_cusum_drift", "dq_freshness_lag", "dq_higher_moments",
-    "dq_outlier_mad", "dq_rate_anomaly", "dq_seasonal_anomaly",
-    "events_markov_transitions", "events_rfm_segmentation",
-    "graph_link_prediction", "maintenance_snapshot_diff",
-    "maintenance_zorder_rewrite", "mixture_epoch_upsample",
-    "multimodal_audio_windows", "multimodal_image_tiles",
-    "multimodal_resize_stub", "null_fill", "nullif_empty",
-    "pipeline_corpus_curation",
-]
-_ROUND13_WINDOW = _ROUND13_ROTATION_HEAD + _R13_STALE_FILL
-assert len(_ROUND13_WINDOW) == 50
-assert len(set(_ROUND13_WINDOW)) == 50
-
-# Keys ADDED (or implementation-changed) DURING round 13 AFTER the
-# window cut above: the head of the round-14 sweep. Standing process —
-# every key appended here is immediately held to the sf0.01
-# driver-grade preflight (tests/test_window_preflight.py), and the
-# round-14 flip is a one-line _curate swap. (The round-13 keys whose
-# implementations changed THIS round — eval_blocking_quality's
-# sampled-truth tier, the W1 degenerate-spine guard, the IVM
-# broadcast-hint removals, the viewfs mount guard — are already in
-# _ROUND13_WINDOW, so their r13 driver rows verify the new code; no
-# re-staging needed.)
-_ROUND14_ROTATION_HEAD: list[str] = [
-    # r13 session: Rao-Kupper tie-parameter preference strengths
-    # (r12 verdict task 8 — the one suggested addition; reuses
-    # bt_solve's exact-integer MM recipe with directed cells and a
-    # fixed integer θ, unrolled MATERIALIZED-CTE oracle)
-    "eval_rao_kupper",
-    # r13 session: implementation-changed by the spherical_kmeans
-    # update-step rewrite (wide groupBy(cell) sum aggregate replaces
-    # posexplode -> (cell, pos) avg, which CollapseProject-inlined
-    # the k interpreted assign_cell lambdas into the generate and
-    # re-evaluated the assignment per exploded row — dim x the work;
-    # -80/-57/-54/-19% at sf0.1, oracles unchanged and green)
-    "sim_topk_cosine_ivf_learned", "sim_topk_cosine_ivf_trainsampled",
-    "sim_index_persist_serve", "pipeline_index_serve_refresh",
-    # r13 session: implementation-changed by the per-pair cosine
-    # norm hoist (L2 norms computed once per VECTOR in the
-    # projections feeding the pair joins instead of per candidate
-    # pair inside cosine()'s interpreted folds — identical doubles,
-    # 2-4x less per-pair work; dedup_embedding_cosine 4.9 -> 1.7 s,
-    # sim_knn_graph -> 2.7 s, graph_kcore_decompose -> 5.5 s at
-    # sf0.1, every consumer oracle-exact)
-    "dedup_embedding_cosine", "dedup_embedding_verified",
-    "sim_knn_graph", "graph_kcore_decompose", "dedup_semantic_cells",
-    "sim_margin_bitext_mine", "sim_margin_bitext_mine_ivf",
-    "sim_topk_batch_queries",
-    # r13 session: cosine_topk / mmr_rerank now score through
-    # cosine_to_query (query norm precomputed in Python — identical
-    # IEEE fold, one-third less per-row work); the four headline
-    # consumers re-verify (the IVF keys above already re-enter)
-    "sim_topk_cosine", "sim_mmr_rerank", "sim_hybrid_rrf",
-    "pipeline_rag_retrieval",
-    # r13 session: the three (row x query) eval keys moved to the
-    # same per-side norm hoist (identical doubles, oracle-green)
-    "eval_ann_recall", "eval_dim_ablation_recall",
-    "eval_retrieval_ndcg",
-    # (sql_waiting_suppliers' single-pass two-phase rewrite is
-    # already in _ROUND13_WINDOW — its r13 driver row verifies the
-    # new plan; no re-staging needed.)
-]
-
-# Round-14 window, flipped at the round-14 session start after
-# re-checking CORRECTNESS_r13 (all 50 rows green, key set verified
-# set-equal to _ROUND13_WINDOW, min spark_rows 1): the 20-key
-# rotation head above + the 30 STALEST driver-green keys. "Stalest"
-# DERIVED, not typed — union of CORRECTNESS_r01..r13, each key's
-# latest driver round, sorted (round, key) ascending, head keys
-# excluded: all 22 remaining keys whose latest row is r6 plus the
-# first 8 (alphabetical) of the 43 whose latest row is r7. Once
-# CORRECTNESS_r14 lands green, eval_rao_kupper gains its first
-# driver row and every implementation-changed r13 key (the
-# kmeans-rewrite/norm-hoist cohort) re-verifies on its current plan.
-_R14_STALE_FILL = [
-    # latest driver row r6 (all 22 remaining):
-    "pipeline_user_features", "privacy_dp_laplace_counts",
-    "privacy_l_diversity", "scan_parquet", "scan_schema_evolution",
-    "select_token_budget", "setop_union_all", "sink_csv_roundtrip",
-    "sink_dynamic_partition_overwrite", "sink_parquet_roundtrip",
-    "sink_table_append", "sink_table_overwrite", "sketch_ams_f2",
-    "sketch_cms_merge", "source_csv_permissive",
-    "source_fixed_width", "text_zipf_curve", "tokenizer_bpe_apply",
-    "window_ewma_smoothing", "window_lag_lead", "window_row_number",
-    "window_running_sum",
-    # latest driver row r7 (first 8 alphabetical):
-    "agg_group_collect", "agg_null_count", "dedup_exact",
-    "dedup_fuzzy", "dedup_lsh_calibration",
-    "dedup_lsh_calibration_sampled", "dedup_spans_rewrite_fp",
-    "derive_literal_cols",
-]
-_ROUND14_WINDOW = _ROUND14_ROTATION_HEAD + _R14_STALE_FILL
-assert len(_ROUND14_WINDOW) == 50
-assert len(set(_ROUND14_WINDOW)) == 50
-
-# Keys ADDED (or implementation-changed) DURING round 14 AFTER the
-# window cut above: the head of the round-15 sweep. Standing process —
-# every key appended here is immediately held to the sf0.01
-# driver-grade preflight (tests/test_window_preflight.py), and the
-# round-15 flip is a one-line _curate swap.
-_ROUND15_ROTATION_HEAD: list[str] = [
-    # r14 session: implementation-changed by the two-phase
-    # (user, purchase) -> user attribution aggregate (the
-    # count_distinct -> Expand defect class sql_waiting_suppliers
-    # had; streaming/windows.py attributed_*_agg). All six consumers
-    # re-verified oracle-EXACT (money columns ==) at sf0.01 in
-    # session; plans Expand-free.
-    "stream_stream_join", "stream_stream_join_live",
-    "stream_stream_join_outer", "stream_stream_join_outer_live",
-    "stream_stream_join_full", "stream_stream_join_full_live",
-    # r14 session: presentation-order bias diagnostic next to the
-    # BT/RK preference leaderboards (r13 verdict task 6 — the one
-    # suggested addition; reuses the per-user cell build with the
-    # user-md5 parity as the order cohort bit, plain-SQL oracle)
-    "eval_order_bias",
-    # r14 session, added at the r15 flip (VERDICT r14 item 1: "bank
-    # the round-14 wins under the driver"): every query path the r14
-    # optimizer REWROTE landed after the r14 window was cut, so none
-    # of them has a driver row on its current plan. The rewrites:
-    # lex_embed bigint node encoding + packed argmin orderings
-    # (63be810), basket-array pair generation + halved SSSP pair
-    # exchange (99b8615), whole-row distinct in minhash_lsh_pairs
-    # (e44ff50 — eval_blocking_quality and the live incremental
-    # dedup stream consume the same helper), and the link-prediction
-    # edge checkpoint (a72a43c).
-    "graph_label_propagation", "graph_pagerank_fixed",
-    "graph_bfs_distances", "graph_weighted_sssp",
-    "mining_basket_pairs", "pairs_hard_negatives",
-    "pairs_hard_negatives_ivf", "sim_range_search",
-    "sim_range_search_ivf", "dedup_minhash_lsh",
-    "graph_link_prediction", "graph_link_prediction_sampled",
-    "decontaminate_minhash_lsh", "eval_blocking_quality",
-    "stream_dedup_incremental_live",
-    # r15 session: implementation-changed by the spherical_kmeans
-    # fit-job fusion (modal-dim + seed scans in one pass, stable
-    # iteration plan shape) — the four consumers of the fit re-enter
-    # the sweep on their new build path (r14 verdict item 4/7).
-    "sim_topk_cosine_ivf_learned", "sim_topk_cosine_ivf_trainsampled",
-    "sim_index_persist_serve", "pipeline_index_serve_refresh",
-    # r15 session: representative driver re-verifies for the two
-    # iterative-chain rewrites (r14 verdict item 6): the
-    # connected_components convergence-count fold (one node-keyed
-    # shuffle join per round removed; dedup_canonical_map is the most
-    # expensive of its seven consumers — the other six are staged in
-    # _ROUND16_ROTATION_HEAD and so run the sf0.01 preflight now) and
-    # the k-core last-round checkpoint trim.
-    "dedup_canonical_map", "graph_kcore_decompose",
-]
-
-# Round-15 window, flipped at the round-15 session start after
-# re-checking CORRECTNESS_r14 (all 50 rows green, key set verified
-# set-equal to _ROUND14_WINDOW): the 28-key rotation head above + the
-# 22 STALEST driver-green keys. "Stalest" DERIVED, not typed — union
-# of CORRECTNESS_r01..r14, each key's latest driver round, sorted
-# (round, key) ascending, head keys excluded: the first 22
-# (alphabetical) of the 35 keys whose latest row is r7
-# (tests/test_window_derivation.py re-derives this fill from the
-# artifacts on disk).
-_R15_STALE_FILL = [
-    "dq_benford_digits", "embedding_standardize_stats",
-    "explode_lines", "flatten_report_tree", "flatten_struct",
-    "graph_triangle_count_sampled", "join_left_outer",
-    "join_left_semi_anti", "json_extract_props", "json_from_string",
-    "json_to_string", "mixture_perplexity_buckets",
-    "parse_grouped_report", "parse_tabular_report",
-    "pipeline_ccnet_dsir", "privacy_pseudonymize_consistent",
-    "qbo_entity_billpayment_sparse", "qbo_entity_bills_pipeline",
-    "qbo_entity_deposit", "qbo_entity_journal_explode",
-    "qbo_entity_purchases_explode", "resample_daily_interpolate",
-]
-_ROUND15_WINDOW = _ROUND15_ROTATION_HEAD + _R15_STALE_FILL
-assert len(_ROUND15_WINDOW) == 50
-assert len(set(_ROUND15_WINDOW)) == 50
-
-# Keys ADDED (or implementation-changed) DURING round 15 AFTER the
-# window cut above: the head of the round-16 sweep. Standing process —
-# every key appended here is immediately held to the sf0.01
-# driver-grade preflight (tests/test_window_preflight.py), and the
-# round-16 flip is a one-line _curate swap.
-_ROUND16_ROTATION_HEAD: list[str] = [
-    # r15 session: the remaining six consumers of the
-    # connected_components convergence-count fold (the seventh,
-    # dedup_canonical_map, took a round-15 window slot as the
-    # representative re-verify; every one of these is preflighted at
-    # sf0.01 this round and oracle-checked at sf0.001 every run)
-    "dedup_cluster_components", "dedup_quality_keep",
-    "stats_corpus_datasheet", "split_leakage_safe",
-    "pipeline_filter_funnel", "pipeline_pretrain_prep",
-    # r15 session: consumers of the lit(list) literal-array swap in
-    # cosine_to_query / kcenter / PCA / the shared IVF probe builder
-    # (one py4j call instead of one per element; array<double>
-    # unchanged, int literals widen to bigint inside internal-only
-    # columns — values identical). The four kmeans-window keys
-    # already re-verify the cosine_topk exact legs; these cover the
-    # remaining consumer shapes at driver grade via the preflight.
-    "sim_topk_cosine", "sim_topk_cosine_ivf", "sim_topk_cosine_pq",
-    "sim_topk_incremental", "sim_mmr_rerank", "sim_hybrid_rrf",
-    "pipeline_rag_retrieval", "sim_topk_batch_queries",
-    "eval_ann_recall", "eval_dim_ablation_recall",
-    "eval_retrieval_ndcg", "sim_margin_bitext_mine",
-    "sim_margin_bitext_mine_ivf", "select_kcenter_coreset",
-    "embedding_pca_project",
-]
-
-
-def _curate(order: list[str]) -> None:
-    missing = [k for k in order if k not in QUERIES]
-    assert not missing, f"curated window names unknown Qkeys: {missing}"
-    snapshot = dict(QUERIES)
-    QUERIES.clear()
-    for k in order + [k for k in snapshot if k not in order]:
-        QUERIES[k] = snapshot[k]
-
-
-# The window the driver sweeps THIS round (first 50 registry slots).
-# Tests reference this alias instead of the per-round name so the
-# flip is exactly two lines: build _ROUND{N}_WINDOW, repoint these.
-_ACTIVE_WINDOW = _ROUND15_WINDOW
-
-_curate(_ACTIVE_WINDOW)
+# Registration order only: the driver's sweep order (which keys come
+# first) is part of the driver contract, see __spark_entry__.py.
 
 __all__ = ["QUERIES", "ORACLE", "flagship"]

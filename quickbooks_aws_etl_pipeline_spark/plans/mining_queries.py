@@ -57,6 +57,9 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _bfs_distances(spark, sf_dir)
 
 
+_BFS_ROUNDS = 3
+
+
 def _bfs_distances(spark: SparkSession, sf_dir: str,
                    checkpoint: bool = True) -> DataFrame:
     """``checkpoint=False`` keeps every round inline (no ExistingRDD
@@ -89,7 +92,7 @@ def _bfs_distances(spark: SparkSession, sf_dir: str,
 
     frontiers = [seeds]
     labeled = seeds
-    for rnd in range(3):
+    for rnd in range(_BFS_ROUNDS):
         nxt = (edges.join(frontiers[-1],
                           edges["src"] == frontiers[-1]["node"])
                .select(F.col("dst").alias("node"))
@@ -100,7 +103,7 @@ def _bfs_distances(spark: SparkSession, sf_dir: str,
         # histogram); the LAST frontier feeds only the histogram —
         # skip its checkpoint so the closing count fuses instead of
         # paying one more materialization barrier (r15, guide §5)
-        if checkpoint and rnd < 2:
+        if checkpoint and rnd < _BFS_ROUNDS - 1:
             nxt = nxt.localCheckpoint(eager=False)
         frontiers.append(nxt)
         labeled = labeled.unionByName(nxt)
@@ -846,6 +849,9 @@ def graph_weighted_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _weighted_sssp(spark, sf_dir)
 
 
+_SSSP_ROUNDS = 3
+
+
 def _weighted_sssp(spark: SparkSession, sf_dir: str,
                    checkpoint: bool = True) -> DataFrame:
     """``checkpoint=False`` keeps the edge build and every relaxation
@@ -886,7 +892,7 @@ def _weighted_sssp(spark: SparkSession, sf_dir: str,
             .filter(F.col("s_suppkey") % 16 == 7)
             .select(F.col("s_suppkey").alias("node"),
                     F.lit(0).cast("bigint").alias("dist")))
-    for rnd in range(3):
+    for rnd in range(_SSSP_ROUNDS):
         msgs = (edges.join(dist, edges["u"] == dist["node"])
                 .select(F.col("v").alias("node"),
                         (F.col("dist") + F.col("w")).alias("dist")))
@@ -897,7 +903,7 @@ def _weighted_sssp(spark: SparkSession, sf_dir: str,
         # doubling; the LAST round feeds only the final top-10 select
         # — skip its checkpoint so the closing aggregate fuses
         # instead of paying one more materialization (r15, guide §5)
-        if checkpoint and rnd < 2:
+        if checkpoint and rnd < _SSSP_ROUNDS - 1:
             dist = dist.localCheckpoint(eager=False)
     return (dist.filter(F.col("dist") > 0)
             .select(F.col("node").cast("bigint").alias("suppkey"),
@@ -1171,6 +1177,8 @@ def stats_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # k-core decomposition — iterative subgraph refinement (peeling).
 # ---------------------------------------------------------------------------
 
+_KCORE_ROUNDS = 8
+
 
 @register("graph_kcore_decompose")
 def graph_kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1209,7 +1217,7 @@ def graph_kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
            .localCheckpoint(eager=True))
     alive = mut.select("u").distinct().localCheckpoint(eager=True)
     counts = [alive.agg(F.count(F.lit(1)).cast("bigint").alias("n"))]
-    for rnd in range(8):
+    for rnd in range(_KCORE_ROUNDS):
         au = alive.select(F.col("u"))
         av = alive.select(F.col("u").alias("v"))
         deg = (mut.join(au, "u", "left_semi")
@@ -1221,7 +1229,7 @@ def graph_kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
         # round feeds only its count — leave it inline so the final
         # job fuses the closing peel instead of paying one more
         # eager materialization (r15, guide §5)
-        if rnd < 7:
+        if rnd < _KCORE_ROUNDS - 1:
             alive = alive.localCheckpoint(eager=True)
         counts.append(alive.agg(F.count(F.lit(1)).cast("bigint")
                                 .alias("n")))

@@ -30,6 +30,7 @@ SF_ORACLE = "/root/testdata/sf0.01"
 #     item 9: they must stay internally checked),
 #   * the bench HEADLINE set (every key the driver times),
 #   * the next-round rotation head (keys added/changed mid-round).
+# (ACTIVE, PREVIOUS and NEXT_HEAD come from __spark_entry__.py.)
 # Everything else in those batteries is deselected by default; the
 # tests themselves are unchanged, so the full tier runs the exact
 # same assertions.
@@ -53,12 +54,22 @@ _PLAN_ONLY_BATTERIES = {"test_registry_wide_no_scale_killers",
 
 
 def _fast_keys() -> tuple[set[str], set[str]]:
+    import __spark_entry__ as E
     import bench
-    from quickbooks_aws_etl_pipeline_spark.plans import (
-        _ACTIVE_WINDOW, _ROUND14_WINDOW, _ROUND16_ROTATION_HEAD)
-    plan_fast = (set(_ACTIVE_WINDOW) | set(_ROUND16_ROTATION_HEAD)
-                 | set(bench.HEADLINE))
-    return plan_fast | set(_ROUND14_WINDOW), plan_fast
+    active, previous = E.window()
+    plan_fast = set(active) | set(E.NEXT_HEAD) | set(bench.HEADLINE)
+    return plan_fast | previous, plan_fast
+
+
+_FAST_TIER_DROPPED = pytest.StashKey[tuple[int, int]]()
+
+
+def pytest_terminal_summary(terminalreporter, config):
+    dropped = config.stash.get(_FAST_TIER_DROPPED, None)
+    if dropped:
+        terminalreporter.write_line(
+            f"fast tier: {dropped[0]}/{dropped[1]} deselected — set "
+            "SPARK_GRAFT_FULL_TESTS=1 for the full suite")
 
 
 def pytest_configure(config):
@@ -88,6 +99,8 @@ def pytest_collection_modifyitems(config, items):
     if dropped:
         config.hook.pytest_deselected(items=dropped)
         items[:] = kept
+        config.stash[_FAST_TIER_DROPPED] = (len(dropped),
+                                            len(kept) + len(dropped))
     # run the driver-critical batteries FIRST (stable sort keeps the
     # original order within each band): if the driver's verify budget
     # ever truncates the run again, the tail it loses is operator

@@ -1756,3 +1756,53 @@ def test_spherical_kmeans_ignores_malformed_vectors(spark, sf_smoke):
     mixed = emb.unionByName(bad)
     assert (spherical_kmeans(mixed, "embedding", "vec_id", k=4, iters=2)
             == spherical_kmeans(emb, "embedding", "vec_id", k=4, iters=2))
+
+
+def test_kmeans_seed_scan_with_null_id_matches_orderby(spark, sf_smoke):
+    """A NULL id hashes to NULL. The fit-input pass fills that hash on
+    the JVM side (so ``__h`` stays int64 in every pandas batch) and
+    must pick exactly the seeds of the ``orderBy(md5_long(id))
+    .limit(k)`` form it replaced, where the NULL sorts first."""
+    from quickbooks_aws_etl_pipeline_spark.operators.similarity import (
+        _kmeans_fit_inputs)
+    from quickbooks_aws_etl_pipeline_spark.operators.text import md5_long
+    emb = (spark.read.parquet(f"{sf_smoke}/embeddings.parquet")
+           .select("vec_id", "embedding"))
+    v0 = emb.orderBy("vec_id").first()["embedding"]
+    corpus = emb.unionByName(spark.createDataFrame([(None, v0)], emb.schema))
+    base = corpus.select(
+        F.col("vec_id").alias("__id"),
+        F.transform("embedding", lambda x: x.cast("double")).alias("__v"))
+    dim, seeds = _kmeans_fit_inputs(base, 8)
+    want = [list(r["__v"]) for r in
+            base.filter(F.size("__v") == dim)
+            .orderBy(md5_long(F.col("__id").cast("string")))
+            .limit(8).collect()]
+    assert seeds == want
+    assert seeds[0] == [float(x) for x in v0]
+
+
+def test_assign_cell_quotes_backticked_column_names(spark, sf_smoke):
+    """Both SQL-string forms of the nearest-centroid assignment must
+    treat a column name containing a backtick as one identifier."""
+    from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
+
+    from quickbooks_aws_etl_pipeline_spark.operators.similarity import (
+        _assign_cell_sql, assign_cell)
+    emb = (spark.read.parquet(f"{sf_smoke}/embeddings.parquet")
+           .select("vec_id", "embedding"))
+    cents = [[float(x) for x in r["embedding"]]
+             for r in emb.orderBy("vec_id").limit(4).collect()]
+    want = sorted(emb.select(
+        "vec_id", assign_cell("embedding", cents).alias("cell")).collect())
+    odd = emb.withColumnRenamed("embedding", "emb`x")
+    got = sorted(odd.select(
+        "vec_id", assign_cell("emb`x", cents).alias("cell")).collect())
+    cents_row = spark.createDataFrame(
+        [(cents,)], StructType([StructField(
+            "c`s", ArrayType(ArrayType(DoubleType())))]))
+    via_col = sorted(odd.crossJoin(cents_row).selectExpr(
+        "vec_id", f"{_assign_cell_sql('emb`x', 'c`s', k=4)} as cell")
+        .collect())
+    assert got == want
+    assert via_col == want

@@ -30,22 +30,17 @@ def test_rows_only_queries_run(spark, sf_smoke, name):
 
 def test_driver_window_order_reaches_contract():
     """The driver sweeps the FIRST 50 keys of __spark_entry__.queries()
-    — pin that the curated window ordering survives the contract
-    adapter (dict-order preservation) and that every window key has
-    oracle SQL, so a refactor can't silently demote a never-verified
-    key out of its sweep slot."""
-    import importlib
-    import sys as _sys
-    _sys.path.insert(0, __file__.rsplit("/tests/", 1)[0])
-    entry = importlib.import_module("__spark_entry__")
-    from quickbooks_aws_etl_pipeline_spark.plans import (
-        QUERIES as plan_queries)
-    from quickbooks_aws_etl_pipeline_spark.plans import \
-        _ACTIVE_WINDOW  # noqa: PLC2701
+    — pin that the derived ACTIVE window leads the contract dict, that
+    the contract still offers every registry key exactly once, and
+    that every window key has oracle SQL, so a refactor can't silently
+    demote a never-verified key out of its sweep slot."""
+    import __spark_entry__ as E
 
-    contract_keys = list(entry.queries())
-    assert contract_keys[:50] == list(plan_queries)[:50]
-    assert contract_keys[:50] == _ACTIVE_WINDOW[:50]
-    oracles = entry.oracle_sql()
+    active, _ = E.window()
+    contract_keys = list(E.queries())
+    assert contract_keys[:50] == active
+    assert len(active) == 50
+    assert sorted(contract_keys) == sorted(QUERIES)
+    oracles = E.oracle_sql()
     missing = [k for k in contract_keys[:50] if k not in oracles]
     assert not missing, f"window keys without oracle SQL: {missing}"

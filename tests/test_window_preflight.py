@@ -1,6 +1,7 @@
-"""Driver-window pre-flight: every key in the CURRENT round's 50-slot
-sweep window must match its oracle at sf0.01 — the driver's scale —
-not just the sf0.001 smoke scale the registry-wide test uses.
+"""Driver-window pre-flight: every key in the ACTIVE 50-slot sweep
+window, and in the NEXT_HEAD staged for the next one, must match its
+oracle at sf0.01 — the driver's scale — not just the sf0.001 smoke
+scale the registry-wide test uses.
 
 Round 4 taught why: ``sql_pricing_summary`` was green at sf0.001 and
 red in the driver, because the data volume at sf0.01 is what surfaces
@@ -19,13 +20,13 @@ import math
 import pandas as pd
 import pytest
 
-from quickbooks_aws_etl_pipeline_spark.plans import (ORACLE, QUERIES,
-                                                     _ROUND15_WINDOW,
-                                                     _ROUND16_ROTATION_HEAD)
+import __spark_entry__ as E
+from quickbooks_aws_etl_pipeline_spark.plans import ORACLE, QUERIES
 
 from .oracle_util import _canon, duckdb_run
 
 _REL = 1e-12
+ACTIVE, _ = E.window()
 
 
 def _assert_driver_grade(spark_df, sql: str, sf_dir: str, name: str):
@@ -51,8 +52,7 @@ def _assert_driver_grade(spark_df, sql: str, sf_dir: str, name: str):
 
 
 @pytest.mark.parametrize(
-    "name", _ROUND15_WINDOW + [k for k in _ROUND16_ROTATION_HEAD
-                               if k not in _ROUND15_WINDOW])
+    "name", ACTIVE + [k for k in E.NEXT_HEAD if k not in ACTIVE])
 def test_window_key_matches_oracle_at_driver_scale(spark, sf_oracle, name):
     if name not in ORACLE:
         df = QUERIES[name](spark, sf_oracle)
