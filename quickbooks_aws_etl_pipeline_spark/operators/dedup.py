@@ -510,7 +510,8 @@ def connected_components(edges: DataFrame, src: str = "id_a",
     adopts the smallest label among itself and its neighbors; a
     cluster's final label is its smallest member id. Converges in
     O(graph diameter) rounds — near-dup clusters are quasi-cliques,
-    so 1-3 rounds in practice; ``max_iters`` is a runaway guard.
+    so 1-3 rounds in practice; ``max_iters`` (>= 1) is a runaway
+    guard.
 
     Scale shape per round: one join edges x labels (shuffle on node
     id) + one min-aggregate; labels are localCheckpointed per round
@@ -518,6 +519,9 @@ def connected_components(edges: DataFrame, src: str = "id_a",
     exits on a zero `changed` count — a driver-side scalar per round,
     never data.
     """
+    if max_iters < 1:  # zero rounds never test convergence
+        raise ValueError(f"connected_components: max_iters must be "
+                         f">= 1, got {max_iters}")
     sym = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
            .unionByName(edges.select(F.col(dst).alias("u"),
                                      F.col(src).alias("v"))))

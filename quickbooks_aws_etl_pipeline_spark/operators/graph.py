@@ -27,6 +27,8 @@ these unit sizes; callers scaling past that drop RANK_UNIT a decade.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -118,6 +120,49 @@ def cs_node_decode(col: Column) -> Column:
     return F.concat(F.when(is_s, F.lit("S")).otherwise(F.lit("C")),
                     lex_decode(F.when(is_s, col - F.lit(LEX_SPAN))
                                .otherwise(col)))
+
+
+def trade_graph_edges(lineitem: DataFrame, orders: DataFrame) -> DataFrame:
+    """The undirected customer<->supplier trade graph as a SYMMETRIC
+    (src, dst) edge list: one distinct (customer, supplier) pair per
+    lineitem><orders match, emitted in both directions, nodes as
+    :func:`cs_node_encode` bigints. Callers choose how the two tables
+    are scanned (e.g. ``widen``) and whether to checkpoint."""
+    orders = orders.select("o_orderkey", "o_custkey")
+    lineitem = lineitem.select("l_orderkey", "l_suppkey")
+    pairs = (lineitem.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+             .select(cs_node_encode("C", F.col("o_custkey"))
+                     .alias("c_node"),
+                     cs_node_encode("S", F.col("l_suppkey"))
+                     .alias("s_node"))
+             .distinct())
+    return (pairs.select(F.col("c_node").alias("src"),
+                         F.col("s_node").alias("dst"))
+            .unionByName(pairs.select(F.col("s_node").alias("src"),
+                                      F.col("c_node").alias("dst"))))
+
+
+def unrolled_rounds(state: DataFrame,
+                    step: Callable[[list[DataFrame]], DataFrame],
+                    rounds: int, *, eager: bool = False) -> list[DataFrame]:
+    """Run ``rounds`` driver-unrolled rounds and return every state,
+    ``[state, s_1, ..., s_rounds]``. ``step`` receives the states so
+    far (the last one is current) and returns the next.
+
+    Each intermediate state is localCheckpointed: it feeds the next
+    round and the caller's closing aggregate, so the barrier stops the
+    subtree doubling per round. The LAST state feeds only the closing
+    aggregate, so it stays inline and the two fuse instead of paying
+    one more materialization. ``eager=True`` materializes each
+    checkpoint at once, for lineage too deep to re-analyze per round.
+    """
+    states = [state]
+    for rnd in range(rounds):
+        nxt = step(states)
+        if rnd < rounds - 1:
+            nxt = nxt.localCheckpoint(eager=eager)
+        states.append(nxt)
+    return states
 
 
 # NOTE (r15, measured — do not re-try blind): pre-partitioning the

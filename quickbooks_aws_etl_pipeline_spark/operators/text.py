@@ -743,8 +743,7 @@ def bpe_train_merges(df: DataFrame, text_col: str,
     representation; ``replace`` scans the original string left to
     right without rescanning replacements in both Spark and DuckDB,
     so non-overlapping merge application is engine-identical). The
-    vocab frame is localCheckpoint'd per step so lineage stays flat
-    (the pagerank_fixed recipe).
+    vocab frame is localCheckpoint'd per step so lineage stays flat.
 
     Tie-break: highest count, then lexicographically smallest pair —
     fully deterministic, no RNG. Word symbols start as characters

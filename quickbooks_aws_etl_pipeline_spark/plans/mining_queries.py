@@ -23,10 +23,14 @@ decay weights) so the DuckDB oracles match bit for bit.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import read_table, widen
+from ..operators.graph import (cs_node_encode, trade_graph_edges,
+                               unrolled_rounds)
 from .queries import register
 
 # ---------------------------------------------------------------------------
@@ -44,74 +48,37 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the Pregel shape — per round ONE |frontier-edges| join
     shuffled on the node key plus a node-sized distinct + anti-join
     against the labeled set; no round ever materializes more than the
-    node set. The edge list is built once (the same
-    lineitem><orders distinct projection as graph_label_propagation)
-    and lazily checkpointed so the three rounds share it instead of
-    re-deriving the fact join. Nodes travel as the bigint
+    node set. The trade_graph_edges list is lazily checkpointed once
+    so the three rounds share it instead of re-deriving the fact
+    join. Nodes travel as the bigint
     cs_node_encode embedding, not "C../S.." strings (r14): BFS's
     output is a distance histogram, so node identity only ever
     joins/dedups — an injective integer id gives the identical
     result while every per-round exchange, sort and hash runs on
     longs instead of strings.
     """
-    return _bfs_distances(spark, sf_dir)
-
-
-_BFS_ROUNDS = 3
-
-
-def _bfs_distances(spark: SparkSession, sf_dir: str,
-                   checkpoint: bool = True) -> DataFrame:
-    """``checkpoint=False`` keeps every round inline (no ExistingRDD
-    truncation) so plan receipts/audits can see the full tree;
-    production always checkpoints (see graph_bfs_distances)."""
-    from ..operators.graph import cs_node_encode
-    orders = read_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey")
     # widen: the sf0.1 lineitem is one parquet row group (one scan
-    # task); no-op at scale where the fact scan has thousands of
-    # splits
-    li = widen(read_table(spark, sf_dir, "lineitem")).select(
-        "l_orderkey", "l_suppkey")
-    pairs = (li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-             .select(cs_node_encode("C", F.col("o_custkey"))
-                     .alias("c_node"),
-                     cs_node_encode("S", F.col("l_suppkey"))
-                     .alias("s_node"))
-             .distinct())
-    edges = (pairs.select(F.col("c_node").alias("src"),
-                          F.col("s_node").alias("dst"))
-             .unionByName(pairs.select(F.col("s_node").alias("src"),
-                                       F.col("c_node").alias("dst"))))
-    if checkpoint:
-        edges = edges.localCheckpoint(eager=False)
+    # task); no-op at scale where the scan has thousands of splits
+    edges = trade_graph_edges(
+        widen(read_table(spark, sf_dir, "lineitem")),
+        read_table(spark, sf_dir, "orders")).localCheckpoint(eager=False)
     seeds = (read_table(spark, sf_dir, "supplier")
              .filter(F.col("s_suppkey") % 16 == 7)
              .select(cs_node_encode("S", F.col("s_suppkey")).alias("node"))
              .distinct())
 
-    frontiers = [seeds]
-    labeled = seeds
-    for rnd in range(_BFS_ROUNDS):
-        nxt = (edges.join(frontiers[-1],
-                          edges["src"] == frontiers[-1]["node"])
-               .select(F.col("dst").alias("node"))
-               .distinct()
-               .join(labeled, "node", "left_anti"))
-        # intermediate frontiers feed multiple consumers (next
-        # round's join, every later anti-join via labeled, the final
-        # histogram); the LAST frontier feeds only the histogram —
-        # skip its checkpoint so the closing count fuses instead of
-        # paying one more materialization barrier (r15, guide §5)
-        if checkpoint and rnd < _BFS_ROUNDS - 1:
-            nxt = nxt.localCheckpoint(eager=False)
-        frontiers.append(nxt)
-        labeled = labeled.unionByName(nxt)
+    def expand(frontiers: list[DataFrame]) -> DataFrame:
+        labeled = reduce(DataFrame.unionByName, frontiers)
+        return (edges.join(frontiers[-1],
+                           edges["src"] == frontiers[-1]["node"])
+                .select(F.col("dst").alias("node"))
+                .distinct()
+                .join(labeled, "node", "left_anti"))
 
-    levels = None
-    for dist, fr in enumerate(frontiers):
-        lv = fr.select(F.lit(dist).cast("int").alias("dist"), "node")
-        levels = lv if levels is None else levels.unionByName(lv)
+    frontiers = unrolled_rounds(seeds, expand, rounds=3)
+    levels = reduce(DataFrame.unionByName, [
+        fr.select(F.lit(dist).cast("int").alias("dist"), "node")
+        for dist, fr in enumerate(frontiers)])
     return (levels.groupBy("dist")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
             .orderBy("dist"))
@@ -846,19 +813,6 @@ def graph_weighted_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     The cap is mirrored verbatim in the oracle; TPC-H-shaped orders
     carry <= 7 suppliers so testdata output is unchanged.
     """
-    return _weighted_sssp(spark, sf_dir)
-
-
-_SSSP_ROUNDS = 3
-
-
-def _weighted_sssp(spark: SparkSession, sf_dir: str,
-                   checkpoint: bool = True) -> DataFrame:
-    """``checkpoint=False`` keeps the edge build and every relaxation
-    round inline (no ExistingRDD truncation) so plan receipts/audits
-    can see the full tree — the r14 verdict found the sssp after-plan
-    unauditable; production always checkpoints (graph_weighted_sssp).
-    """
     # basket-array pair generation: collect_set per order (ONE
     # exchange, dedups suppliers for free), the cap as a size
     # filter that doubles as the per-row memory bound (<= 64
@@ -885,26 +839,22 @@ def _weighted_sssp(spark: SparkSession, sf_dir: str,
     edges = (half.unionByName(half.select(F.col("v").alias("u"),
                                           F.col("u").alias("v"), "shared"))
              .select("u", "v",
-                     F.expr("cast(1000000 div shared as bigint)").alias("w")))
-    if checkpoint:
-        edges = edges.localCheckpoint(eager=False)
-    dist = (read_table(spark, sf_dir, "supplier")
-            .filter(F.col("s_suppkey") % 16 == 7)
-            .select(F.col("s_suppkey").alias("node"),
-                    F.lit(0).cast("bigint").alias("dist")))
-    for rnd in range(_SSSP_ROUNDS):
+                     F.expr("cast(1000000 div shared as bigint)").alias("w"))
+             .localCheckpoint(eager=False))
+    seeds = (read_table(spark, sf_dir, "supplier")
+             .filter(F.col("s_suppkey") % 16 == 7)
+             .select(F.col("s_suppkey").alias("node"),
+                     F.lit(0).cast("bigint").alias("dist")))
+
+    def relax(states: list[DataFrame]) -> DataFrame:
+        dist = states[-1]
         msgs = (edges.join(dist, edges["u"] == dist["node"])
                 .select(F.col("v").alias("node"),
                         (F.col("dist") + F.col("w")).alias("dist")))
-        dist = (dist.unionByName(msgs)
+        return (dist.unionByName(msgs)
                 .groupBy("node").agg(F.min("dist").alias("dist")))
-        # intermediate rounds feed TWO consumers each (next round's
-        # message join + its union), so the barrier stops subtree
-        # doubling; the LAST round feeds only the final top-10 select
-        # — skip its checkpoint so the closing aggregate fuses
-        # instead of paying one more materialization (r15, guide §5)
-        if checkpoint and rnd < _SSSP_ROUNDS - 1:
-            dist = dist.localCheckpoint(eager=False)
+
+    dist = unrolled_rounds(seeds, relax, rounds=3)[-1]
     return (dist.filter(F.col("dist") > 0)
             .select(F.col("node").cast("bigint").alias("suppkey"),
                     F.col("dist").cast("bigint").alias("dist_e6"))
@@ -1177,9 +1127,6 @@ def stats_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # k-core decomposition — iterative subgraph refinement (peeling).
 # ---------------------------------------------------------------------------
 
-_KCORE_ROUNDS = 8
-
-
 @register("graph_kcore_decompose")
 def graph_kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """8-round k-core peel (k=3) of the MUTUAL 5-NN embedding graph:
@@ -1199,8 +1146,8 @@ def graph_kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself is the blocked sum(block^2) plan pinned by
     sim_knn_graph). Each round is TWO node-keyed semi-joins + one
     degree aggregate over the shrinking edge relation; per-round
-    lazy checkpoints stop lineage growth (the BFS convention). The
-    9 count rows are 1-row aggregates, crossJoined broadcast.
+    EAGER checkpoints stop lineage growth (see below). The 9 count
+    rows are 1-row aggregates, crossJoined broadcast.
     """
     from ..operators.similarity import knn_graph_blocked
     emb = read_table(spark, sf_dir, "embeddings")
@@ -1216,40 +1163,28 @@ def graph_kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select(F.col("src").alias("u"), F.col("nbr").alias("v"))
            .localCheckpoint(eager=True))
     alive = mut.select("u").distinct().localCheckpoint(eager=True)
-    counts = [alive.agg(F.count(F.lit(1)).cast("bigint").alias("n"))]
-    for rnd in range(_KCORE_ROUNDS):
-        au = alive.select(F.col("u"))
-        av = alive.select(F.col("u").alias("v"))
+
+    def peel(states: list[DataFrame]) -> DataFrame:
+        au = states[-1].select(F.col("u"))
+        av = states[-1].select(F.col("u").alias("v"))
         deg = (mut.join(au, "u", "left_semi")
                .join(av, "v", "left_semi")
                .groupBy("u").agg(F.count(F.lit(1)).alias("c")))
-        alive = deg.filter(F.col("c") >= 3).select("u")
-        # every intermediate round feeds three consumers (both
-        # semi-join sides of the next round + its count); the LAST
-        # round feeds only its count — leave it inline so the final
-        # job fuses the closing peel instead of paying one more
-        # eager materialization (r15, guide §5)
-        if rnd < _KCORE_ROUNDS - 1:
-            alive = alive.localCheckpoint(eager=True)
-        counts.append(alive.agg(F.count(F.lit(1)).cast("bigint")
-                                .alias("n")))
-    rows = None
-    prev = None
-    for r, cnt in enumerate(counts):
-        cur = cnt.select(F.col("n").alias(f"n{r}"))
-        if r == 0:
-            row = cur.select(F.lit(0).cast("int").alias("peel_round"),
+        return deg.filter(F.col("c") >= 3).select("u")
+
+    counts = [a.agg(F.count(F.lit(1)).cast("bigint").alias(f"n{r}"))
+              for r, a in enumerate(unrolled_rounds(
+                  alive, peel, rounds=8, eager=True))]
+    rows = [counts[0].select(F.lit(0).cast("int").alias("peel_round"),
                              F.lit(0).cast("bigint").alias("n_removed"),
-                             F.col("n0").cast("bigint").alias("n_alive"))
-        else:
-            row = (prev.crossJoin(F.broadcast(cur))
-                   .select(F.lit(r).cast("int").alias("peel_round"),
-                           (F.col(f"n{r-1}") - F.col(f"n{r}"))
-                           .cast("bigint").alias("n_removed"),
-                           F.col(f"n{r}").cast("bigint").alias("n_alive")))
-        rows = row if rows is None else rows.unionByName(row)
-        prev = cur
-    return rows.orderBy("peel_round")
+                             F.col("n0").cast("bigint").alias("n_alive"))]
+    rows += [counts[r - 1].crossJoin(F.broadcast(counts[r]))
+             .select(F.lit(r).cast("int").alias("peel_round"),
+                     (F.col(f"n{r-1}") - F.col(f"n{r}"))
+                     .cast("bigint").alias("n_removed"),
+                     F.col(f"n{r}").cast("bigint").alias("n_alive"))
+             for r in range(1, len(counts))]
+    return reduce(DataFrame.unionByName, rows).orderBy("peel_round")
 
 
 # ---------------------------------------------------------------------------

@@ -68,7 +68,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.numeric import exact_sum
-from ..io import read_table
+from ..io import read_table, widen
 from .queries import register
 
 
@@ -497,34 +497,22 @@ def sql_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("graph_pagerank_fixed")
 def graph_pagerank_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Influence ranking over the undirected customer<->supplier
-    trade graph (distinct pairs from orders x lineitem, both edge
-    directions), 3 damped iterations, top 25. Integer micro-unit
-    arithmetic makes the ranks bit-reproducible in any engine (the
-    oracle unrolls the same 3 steps as chained CTEs); per iteration
-    the only shuffle is the groupBy(dst) message exchange, and the
-    edge/routing tables are checkpointed once, not re-derived.
+    trade graph (operators/graph.trade_graph_edges), 3 damped
+    iterations, top 25. Integer micro-unit arithmetic makes the ranks
+    bit-reproducible in any engine (the oracle unrolls the same 3
+    steps as chained CTEs); per iteration the only shuffle is the
+    groupBy(dst) message exchange, and the edge/routing tables are
+    checkpointed once, not re-derived.
     Nodes travel as the order-preserving bigint embedding
     (operators/graph.cs_node_encode — r14: rank arithmetic never
     compares labels, and the top-25 tie-break ORDER BY node reads
     identically off the embedding's numeric order; the 25 output
     labels decode back to strings), so every iteration's join and
     message exchange moves longs instead of strings."""
-    from ..operators.graph import (cs_node_decode, cs_node_encode,
-                                   pagerank_fixed)
-    orders = read_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey")
-    li = read_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey")
-    pairs = (li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-             .select(cs_node_encode("C", F.col("o_custkey"))
-                     .alias("c_node"),
-                     cs_node_encode("S", F.col("l_suppkey"))
-                     .alias("s_node"))
-             .distinct())
-    edges = (pairs.select(F.col("c_node").alias("src"),
-                          F.col("s_node").alias("dst"))
-             .unionByName(pairs.select(F.col("s_node").alias("src"),
-                                       F.col("c_node").alias("dst"))))
+    from ..operators.graph import (cs_node_decode, pagerank_fixed,
+                                   trade_graph_edges)
+    edges = trade_graph_edges(read_table(spark, sf_dir, "lineitem"),
+                              read_table(spark, sf_dir, "orders"))
     ranks = pagerank_fixed(edges, iterations=3)
     return (ranks.orderBy(F.col("rank_units").desc(), F.col("node").asc())
             .limit(25)
@@ -1048,13 +1036,12 @@ def graph_link_prediction_sampled(spark: SparkSession,
     return _link_prediction(spark, sf_dir, sample_mod=4)
 
 
-def _link_prediction(spark: SparkSession, sf_dir: str,
-                     sample_mod: int | None = None,
-                     checkpoint: bool = True) -> DataFrame:
-    """``checkpoint=False`` keeps the edge build inline (no plan
-    truncation) so tests/test_plan_audit.py can pin that the node
-    sample reaches the lineitem scans; production always
-    checkpoints."""
+def _copurchase_edges(spark: SparkSession, sf_dir: str,
+                      sample_mod: int | None) -> DataFrame:
+    """Undirected part co-purchase edges (pa < pb, distinct): two
+    parts are adjacent when one order holds both. ``sample_mod``
+    keeps only parts with l_partkey % sample_mod == 0, filtered on
+    the lineitem scan so the sample bounds every later join."""
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey")
     if sample_mod is not None:
@@ -1062,18 +1049,21 @@ def _link_prediction(spark: SparkSession, sf_dir: str,
     li = li.distinct()
     a = li.withColumnRenamed("l_partkey", "pa")
     b = li.withColumnRenamed("l_partkey", "pb")
-    # checkpoint the co-purchase edge list (the pagerank/LPA/BFS
-    # convention, r14): edges feeds sym twice, the anti-join once and
-    # — through sym — the pivot relation twice more; without the
-    # barrier the lineitem self-join + distinct re-ran per copy
-    # (back-to-back A/B at sf0.1: 17.8 -> 9.0 s in the same
-    # window; the box swings 2x between windows, so only
-    # same-window pairs are comparable)
-    edges = (a.join(b, "l_orderkey")
-             .filter(F.col("pa") < F.col("pb"))
-             .select("pa", "pb").distinct())
-    if checkpoint:
-        edges = edges.localCheckpoint(eager=False)
+    return (a.join(b, "l_orderkey")
+            .filter(F.col("pa") < F.col("pb"))
+            .select("pa", "pb").distinct())
+
+
+def _link_prediction(spark: SparkSession, sf_dir: str,
+                     sample_mod: int | None = None) -> DataFrame:
+    # checkpoint the co-purchase edge list (r14): edges feeds sym
+    # twice, the anti-join once and — through sym — the pivot
+    # relation twice more; without the barrier the lineitem
+    # self-join + distinct re-ran per copy (back-to-back A/B at
+    # sf0.1: 17.8 -> 9.0 s in the same window; the box swings 2x
+    # between windows, so only same-window pairs are comparable)
+    edges = _copurchase_edges(spark, sf_dir, sample_mod).localCheckpoint(
+        eager=False)
     sym = edges.unionByName(
         edges.select(F.col("pb").alias("pa"), F.col("pa").alias("pb")))
     deg = sym.groupBy("pa").agg(F.count(F.lit(1)).alias("deg")) \
@@ -1120,26 +1110,12 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates instead of sort-aggregating; numeric order == string
     order makes every count/tie decision identical) and decodes the
     10 output labels back to strings."""
-    from ..io import widen
-    from ..operators.graph import (cs_node_decode, cs_node_encode,
-                                   label_propagation_fixed)
-    orders = read_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey")
+    from ..operators.graph import (cs_node_decode, label_propagation_fixed,
+                                   trade_graph_edges)
     # widen: the sf0.1 lineitem is one parquet row group (one scan
-    # task), which would serialize the edge construction; no-op at
-    # scale where the fact scan has thousands of splits
-    li = widen(read_table(spark, sf_dir, "lineitem")).select(
-        "l_orderkey", "l_suppkey")
-    pairs = (li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-             .select(cs_node_encode("C", F.col("o_custkey"))
-                     .alias("c_node"),
-                     cs_node_encode("S", F.col("l_suppkey"))
-                     .alias("s_node"))
-             .distinct())
-    edges = (pairs.select(F.col("c_node").alias("src"),
-                          F.col("s_node").alias("dst"))
-             .unionByName(pairs.select(F.col("s_node").alias("src"),
-                                       F.col("c_node").alias("dst"))))
+    # task); no-op at scale where the scan has thousands of splits
+    edges = trade_graph_edges(widen(read_table(spark, sf_dir, "lineitem")),
+                              read_table(spark, sf_dir, "orders"))
     lab = label_propagation_fixed(edges, iterations=3)
     comm = (lab.groupBy("lbl")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_members")))

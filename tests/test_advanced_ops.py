@@ -389,6 +389,17 @@ def test_connected_components_raises_on_iteration_cap(spark):
         connected_components(edges, max_iters=2)
 
 
+@pytest.mark.parametrize("max_iters", [0, -1])
+def test_connected_components_rejects_nonpositive_cap(spark, max_iters):
+    """Zero rounds never propagate a label nor test convergence, so a
+    non-positive cap must raise instead of returning identity labels."""
+    from quickbooks_aws_etl_pipeline_spark.operators.dedup import (
+        connected_components)
+    edges = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    with pytest.raises(ValueError, match="max_iters"):
+        connected_components(edges, max_iters=max_iters)
+
+
 def test_connected_components_chain_and_clique(spark):
     """Min-label propagation must traverse multi-hop chains (label
     travels one hop per round) and keep disjoint clusters apart."""

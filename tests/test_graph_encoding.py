@@ -2,7 +2,8 @@
 node encoding (operators/graph.lex_embed / cs_node_encode) that lets
 graph keys shuffle longs instead of "C../S.." strings, and the packed
 single-long argmin/argmax orderings that keep min_by/max_by in
-HashAggregate (struct orderings fall back to SortAggregate)."""
+HashAggregate (struct orderings fall back to SortAggregate); plus the
+checkpoint policy of the fixed-round helper unrolled_rounds."""
 
 from __future__ import annotations
 
@@ -13,7 +14,7 @@ from pyspark.sql import functions as F
 
 from quickbooks_aws_etl_pipeline_spark.operators.graph import (
     LEX_SPAN, cs_node_decode, cs_node_encode, label_propagation_fixed,
-    lex_decode, lex_embed)
+    lex_decode, lex_embed, unrolled_rounds)
 
 KEY_SAMPLE = (list(range(0, 130)) + [999, 1000, 1001, 9999, 10000,
                                      123456, 10**9, 10**10 - 1])
@@ -120,3 +121,29 @@ def test_packed_hard_negative_ordering_equals_struct_order():
         struct_order = lambda t: (t[0], -t[1])
         assert (pack(a) > pack(b)) == (struct_order(a) > struct_order(b))
         assert abs(pack(a)) < 2 ** 63
+
+
+def _physical_lines(df) -> list[str]:
+    return (df._jdf.queryExecution().executedPlan().toString()
+            .strip().splitlines())
+
+
+def test_unrolled_rounds_checkpoints_all_but_the_last_state(spark):
+    seen = []
+
+    def step(states):
+        seen.append(len(states))
+        return states[-1].select((F.col("x") + 1).alias("x"))
+
+    start = spark.range(2).select((F.col("id") * 10).alias("x"))
+    states = unrolled_rounds(start, step, 3)
+    assert seen == [1, 2, 3] and len(states) == 4 and states[0] is start
+    for mid in states[1:3]:
+        lines = _physical_lines(mid)
+        assert len(lines) == 1 and "Scan ExistingRDD" in lines[0], lines
+    assert len(_physical_lines(states[3])) > 1  # last round stays inline
+    assert sorted(r.x for r in states[3].collect()) == [3, 13]
+
+    assert unrolled_rounds(start, step, 0) == [start]
+    (_, only) = unrolled_rounds(start, step, 1)
+    assert "ExistingRDD" not in "\n".join(_physical_lines(only))

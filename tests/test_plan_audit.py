@@ -816,10 +816,10 @@ def test_link_prediction_sampled_filter_precedes_wedge(spark, sf_smoke):
     the full projection. Since r14 the edge list is localCheckpointed
     (the subtree fed five downstream copies), which truncates the
     registry query's visible plan at the checkpoint — so the scan pin
-    runs on the helper's checkpoint=False form (same construction,
-    no truncation): EVERY lineitem scan must carry the % 4 sample
-    predicate (a regression filtering after the distinct would show
-    a bare scan). The production plan keeps the Python-free /
+    runs on the edge builder the query checkpoints,
+    ``_copurchase_edges``: EVERY lineitem scan must carry the % 4
+    sample predicate (a regression filtering after the distinct would
+    show a bare scan). The production plan keeps the Python-free /
     no-cartesian asserts."""
     df = QUERIES["graph_link_prediction_sampled"](spark, sf_smoke)
     plan = plan_of(df, "simple")
@@ -827,9 +827,9 @@ def test_link_prediction_sampled_filter_precedes_wedge(spark, sf_smoke):
     assert "BatchEvalPython" not in plan, plan
 
     from quickbooks_aws_etl_pipeline_spark.plans.olap_suite import (
-        _link_prediction)
-    full = plan_of(_link_prediction(spark, sf_smoke, sample_mod=4,
-                                    checkpoint=False), "simple")
+        _copurchase_edges)
+    full = plan_of(_copurchase_edges(spark, sf_smoke, sample_mod=4),
+                   "simple")
     scans = [ln for ln in full.splitlines()
              if "FileScan parquet" in ln and "lineitem" in ln]
     assert scans, full
