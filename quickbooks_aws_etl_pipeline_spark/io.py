@@ -2,18 +2,24 @@
 
 TESTDATA.md: one parquet file per table under
 ``/root/testdata/sf{0.001,0.01,0.1}/``. Reading is a plain
-``spark.read.parquet`` — Catalyst handles column pruning and filter
+parquet scan — Catalyst handles column pruning and filter
 pushdown into the scan (SURVEY.md §4), which is the Spark-native
 replacement for the reference's hand-rolled ``selected_columns``
 projection (qb_bills.py:72-89) and server-side date-range params
 (qb_transactionlist.py:54-57).
+
+Each file's schema is inferred once per session and file stamp
+(:func:`read_parquet`): inference is a Spark job per read, and a
+refresh reads the same unchanged tables over and over.
 """
 
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -28,6 +34,45 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
+
+
+# session -> absolute path -> (file stamp, inferred schema). Weak in
+# the session, so a session's entries go with it; two threads racing
+# on one path only infer its schema twice.
+_SCHEMAS: weakref.WeakKeyDictionary[
+    SparkSession, dict[str, tuple[tuple, StructType]]] = weakref.WeakKeyDictionary()
+
+
+def _stamp(path: str) -> tuple:
+    """(path, mtime_ns, size) of ``path`` and, for a directory, of
+    every entry below it: any rewrite, added or removed part file
+    changes the stamp."""
+    paths = [path]
+    if os.path.isdir(path):
+        paths += sorted(os.path.join(root, n)
+                        for root, dirs, files in os.walk(path)
+                        for n in dirs + files)
+    return tuple((p, st.st_mtime_ns, st.st_size)
+                 for p, st in ((p, os.stat(p)) for p in paths))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema inferred once per
+    (session, absolute path) and file stamp, then passed back with
+    ``.schema()``, which skips the inference job. The file index is
+    still built on every call, so a rewritten table is never read
+    stale. Paths that are not local files (object-store URIs) are
+    read without the memo."""
+    local = os.path.abspath(path)
+    try:
+        stamp = _stamp(local)
+    except OSError:
+        return spark.read.parquet(path)
+    memo = _SCHEMAS.setdefault(spark, {})
+    hit = memo.get(local)
+    if hit is None or hit[0] != stamp:
+        hit = memo[local] = (stamp, spark.read.parquet(path).schema)
+    return spark.read.schema(hit[1]).parquet(path)
 
 
 def normalize_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
@@ -54,7 +99,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one testdata table (SURVEY.md §2.1 S2 `scan_parquet`)."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = read_parquet(spark, table_path(sf_dir, name))
     if name == "events":
         df = normalize_event_time(df)
     return df

@@ -277,22 +277,20 @@ def source_qbo_stream_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sinks import scratch_path
     from ..sources.datasource import read_qbo_pages_stream, stage_pages
     from ..sources.fixtures import BILL_PAGES
+    from ..streaming.windows import run_available_now
     path = stage_pages(scratch_path("qbo_pages", "bills_stream"),
                        BILL_PAGES)
     ckpt = scratch_path("checkpoints", "qbo_stream")
     shutil.rmtree(ckpt, ignore_errors=True)
     os.makedirs(ckpt, exist_ok=True)
     name = "qbo_stream_sink"
-    q = (read_qbo_pages_stream(spark, path, "Bill")
-         .writeStream.format("memory").queryName(name)
-         .outputMode("append")
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(120):
-        q.stop()
-        raise TimeoutError("qbo page stream did not finish in 120s")
-    q.stop()
+    run_available_now(
+        spark,
+        read_qbo_pages_stream(spark, path, "Bill")
+        .writeStream.format("memory").queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation", ckpt),
+        name, 120)
     return spark.table(name).select(
         "id", "doc_number", "due_date", "balance",
         "vendor_ref_name", "page")
@@ -317,6 +315,7 @@ def stream_source_incremental_restart(spark: SparkSession,
     from ..sinks import scratch_path
     from ..sources.datasource import read_qbo_pages_stream, stage_pages
     from ..sources.fixtures import BILL_PAGES
+    from ..streaming.windows import run_available_now
     path_dir = scratch_path("qbo_pages", "bills_incr")
     ckpt = scratch_path("checkpoints", "qbo_incr")
     out = scratch_path("qbo_pages", "bills_incr_out")
@@ -327,16 +326,13 @@ def stream_source_incremental_restart(spark: SparkSession,
     def run_once() -> None:
         # parquet sink: the fault-tolerant sink whose checkpoint
         # contract ALLOWS restart (memory sinks refuse recovery)
-        q = (read_qbo_pages_stream(spark, path_dir, "Bill")
-             .writeStream.format("parquet")
-             .option("path", out)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True)
-             .start())
-        if not q.awaitTermination(120):
-            q.stop()
-            raise TimeoutError("incremental stream timed out")
-        q.stop()
+        run_available_now(
+            spark,
+            read_qbo_pages_stream(spark, path_dir, "Bill")
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt),
+            "qbo_incr", 120)
 
     stage_pages(path_dir, BILL_PAGES[:1])
     run_once()

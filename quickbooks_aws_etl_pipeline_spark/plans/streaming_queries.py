@@ -620,7 +620,7 @@ def _ivm_live_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from ..sinks import scratch_path
-    from ..streaming.windows import _checkpoint_dir
+    from ..streaming.windows import _checkpoint_dir, run_available_now
     tag = _sanitize(sf_dir)
     orders = read_table(spark, sf_dir, "orders")
     cust = read_table(spark, sf_dir, "customer").select(
@@ -642,15 +642,13 @@ def _ivm_live_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy("batch").parquet(view_dir))
 
-    q = (spark.readStream.schema(orders.schema)
-         .option("maxFilesPerTrigger", 1).parquet(watch)
-         .writeStream.foreachBatch(apply_batch)
-         .option("checkpointLocation", _checkpoint_dir(f"ivm_live{tag}"))
-         .trigger(availableNow=True).start())
-    if not q.awaitTermination(180):
-        q.stop()
-        raise TimeoutError("stream_ivm_join_live did not finish")
-    q.stop()
+    run_available_now(
+        spark,
+        spark.readStream.schema(orders.schema)
+        .option("maxFilesPerTrigger", 1).parquet(watch)
+        .writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", _checkpoint_dir(f"ivm_live{tag}")),
+        "stream_ivm_join_live", 180)
     return (spark.read.parquet(view_dir)
             .groupBy("segment", "order_month")
             .agg(F.sum("n_orders").cast("bigint").alias("n_orders"),

@@ -28,7 +28,10 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.ansi.enabled": "false",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # local-mode default; on a cluster AQE coalesces upward/downward
+    # local-mode default; on a cluster AQE coalesces upward/downward.
+    # Stateful streams are the exception: AQE is off for stateful
+    # micro-batches, so streaming.windows.run_available_now starts
+    # them with min(shuffle.partitions, cores) state partitions
     "spark.sql.shuffle.partitions": "32",
     # tiny dims (region=5, nation=25, supplier/part small) must
     # broadcast; 64MB leaves headroom for customer at larger SFs

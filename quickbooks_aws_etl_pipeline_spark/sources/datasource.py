@@ -320,6 +320,8 @@ def write_jsonl_stream_datasource(spark: SparkSession, df,
                                         DataSourceStreamWriter,
                                         WriterCommitMessage)
 
+    from ..streaming.windows import run_available_now
+
     class PartCommit(WriterCommitMessage):
         def __init__(self, path: str, n: int):
             self.path = path
@@ -380,17 +382,14 @@ def write_jsonl_stream_datasource(spark: SparkSession, df,
 
     ckpt = os.path.join(out_dir, "_ckpt")
     spark.dataSource.register(JsonlStreamSink)
-    q = (spark.readStream.schema(df.schema)
-         .option("maxFilesPerTrigger", 1).parquet(base)
-         .writeStream.format("qbo_jsonl_stream_sink")
-         .option("path", out_dir)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(180):
-        q.stop()
-        raise TimeoutError(f"stream {query_name!r} did not finish in 180s")
-    q.stop()
+    run_available_now(
+        spark,
+        spark.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", 1).parquet(base)
+        .writeStream.format("qbo_jsonl_stream_sink")
+        .option("path", out_dir)
+        .option("checkpointLocation", ckpt),
+        query_name, 180)
     parts: list[str] = []
     for mpath in sorted(_glob.glob(os.path.join(out_dir, "manifest-*.json"))):
         with open(mpath, encoding="utf-8") as fh:

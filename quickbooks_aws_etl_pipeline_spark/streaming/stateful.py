@@ -17,9 +17,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import normalize_event_time
-from .windows import (_checkpoint_dir, run_stream_to_memory,
-                      stage_stream_source)
+from ..io import normalize_event_time, read_parquet
+from .windows import (_checkpoint_dir, run_available_now,
+                      run_stream_to_memory, stage_stream_source)
 
 
 def dedup_within_watermark(events: DataFrame, keys: list[str],
@@ -78,7 +78,7 @@ def run_stream_foreach_batch_parquet(spark: SparkSession, events_path: str,
     read-back of everything written."""
     out_dir = _checkpoint_dir(f"fb_out_{query_name}")
 
-    schema = spark.read.parquet(events_path).schema
+    schema = read_parquet(spark, events_path).schema
     src_dir = stage_stream_source(events_path, query_name)
     stream = normalize_event_time(spark.readStream.schema(schema).parquet(src_dir))
 
@@ -86,14 +86,11 @@ def run_stream_foreach_batch_parquet(spark: SparkSession, events_path: str,
         batch_df.write.mode("overwrite").parquet(
             os.path.join(out_dir, f"batch={batch_id}"))
 
-    q = (stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", _checkpoint_dir(query_name))
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(120):
-        q.stop()
-        raise TimeoutError(f"stream {query_name!r} did not finish in 120s")
-    q.stop()
+    run_available_now(
+        spark,
+        stream.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", _checkpoint_dir(query_name)),
+        query_name, 120)
     return spark.read.option("basePath", out_dir).parquet(
         os.path.join(out_dir, "batch=*"))
 
@@ -194,17 +191,14 @@ def run_stream_incremental_dedup(spark: SparkSession, docs: DataFrame,
         batch.write.mode("overwrite").parquet(
             os.path.join(idx_dir, f"batch={batch_id}"))
 
-    q = (spark.readStream.schema(schema)
-         .option("maxFilesPerTrigger", 1).parquet(in_dir)
-         .writeStream.foreachBatch(sink)
-         .option("checkpointLocation",
-                 _checkpoint_dir(f"incdedup_ckpt_{query_name}"))
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(f"stream {query_name!r} did not finish in 300s")
-    q.stop()
+    run_available_now(
+        spark,
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).parquet(in_dir)
+        .writeStream.foreachBatch(sink)
+        .option("checkpointLocation",
+                _checkpoint_dir(f"incdedup_ckpt_{query_name}")),
+        query_name, 300)
     return (spark.read.option("basePath", out_dir)
             .parquet(os.path.join(out_dir, "batch=*"))
             .select("id_a", "id_b", "jaccard"))
@@ -355,7 +349,7 @@ def run_stream_foreach_batch_jdbc(spark: SparkSession, events_path: str,
     url, drv = derby_jdbc_url(spark, db_dir)
     derby_drop_tables_like(spark, url, "QB_STREAM_WH_B%")
 
-    schema = spark.read.parquet(events_path).schema
+    schema = read_parquet(spark, events_path).schema
     src_dir = stage_stream_source(events_path, query_name)
     stream = normalize_event_time(
         spark.readStream.schema(schema).parquet(src_dir))
@@ -367,14 +361,11 @@ def run_stream_foreach_batch_jdbc(spark: SparkSession, events_path: str,
          .option("dbtable", f"qb_stream_wh_b{batch_id}")
          .option("driver", drv).save())
 
-    q = (stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", _checkpoint_dir(query_name))
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(120):
-        q.stop()
-        raise TimeoutError(f"stream {query_name!r} did not finish in 120s")
-    q.stop()
+    run_available_now(
+        spark,
+        stream.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", _checkpoint_dir(query_name)),
+        query_name, 120)
     tables = (spark.read.format("jdbc").option("url", url)
               .option("driver", drv)
               .option("query",
@@ -415,7 +406,7 @@ def run_stream_cdc_merge(spark: SparkSession, feed_path: str,
     max-seq wins regardless of micro-batch arrival order, so
     maxFilesPerTrigger-driven multi-epoch replay needs no ordering
     guarantee from the file source."""
-    schema = spark.read.parquet(feed_path).schema
+    schema = read_parquet(spark, feed_path).schema
     stream = spark.readStream.schema(schema) \
         .option("maxFilesPerTrigger", "1").parquet(feed_path)
 
@@ -445,13 +436,10 @@ def run_stream_cdc_merge(spark: SparkSession, feed_path: str,
         (merged.write.mode("overwrite")
          .parquet(os.path.join(state_root, f"v={batch_id}")))
 
-    q = (stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", _checkpoint_dir(query_name))
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(180):
-        q.stop()
-        raise TimeoutError(f"stream {query_name!r} did not finish in 180s")
-    q.stop()
+    run_available_now(
+        spark,
+        stream.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", _checkpoint_dir(query_name)),
+        query_name, 180)
     vs = versions()
     return spark.read.parquet(os.path.join(state_root, f"v={vs[-1]}"))

@@ -21,9 +21,10 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..functions.numeric import exact_sum
-from ..io import normalize_event_time
+from ..io import normalize_event_time, read_parquet
 
 
 def tumbling_agg(events: DataFrame, minutes: int = 10) -> DataFrame:
@@ -119,6 +120,40 @@ def stage_stream_source(events_path: str, query_name: str) -> str:
     return src_dir
 
 
+def run_available_now(spark: SparkSession, writer: DataStreamWriter,
+                      name: str, timeout_sec: float) -> StreamingQuery:
+    """Run ``writer`` once over everything available (availableNow),
+    wait for it, stop it and return the stopped query, whose
+    ``lastProgress`` stays readable. Every stream in the engine
+    starts here.
+
+    Spark turns AQE off for stateful micro-batches, so a stateful
+    operator runs ``spark.sql.shuffle.partitions`` state-store tasks
+    in every batch, most of them empty on a small input. The query
+    starts with ``min(shuffle.partitions, defaultParallelism)``, which
+    never raises the count. The session value is restored once
+    ``start()`` returns or raises: the query runs on a clone of the
+    session taken inside ``start()``, and the count is pinned in its
+    offset log.
+
+    On timeout the query is stopped and ``TimeoutError`` raised
+    instead of handing back a silently partial sink.
+    """
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(min(int(prev),
+                                spark.sparkContext.defaultParallelism)))
+    try:
+        q = writer.trigger(availableNow=True).start()
+    finally:
+        spark.conf.set(key, prev)
+    finished = q.awaitTermination(timeout_sec)
+    q.stop()
+    if not finished:
+        raise TimeoutError(f"stream {name!r} did not finish in {timeout_sec}s")
+    return q
+
+
 def run_stream_to_memory(spark: SparkSession, events_path: str,
                          transform, query_name: str,
                          watermark: str | None = None,
@@ -128,23 +163,18 @@ def run_stream_to_memory(spark: SparkSession, events_path: str,
     complete pass over the input, then stop). ``transform`` is the
     same batch function (tumbling_agg etc.) — identical plan in both
     modes."""
-    schema = spark.read.parquet(events_path).schema
+    schema = read_parquet(spark, events_path).schema
     src_dir = stage_stream_source(events_path, query_name)
     stream = normalize_event_time(spark.readStream.schema(schema).parquet(src_dir))
     if watermark:
         stream = stream.withWatermark("ts", watermark)
     out = transform(stream)
-    q = (out.writeStream.format("memory").queryName(query_name)
-         .outputMode(output_mode)
-         .option("checkpointLocation", _checkpoint_dir(query_name))
-         .trigger(availableNow=True)
-         .start())
-    # awaitTermination returns False on timeout; stopping then would
-    # hand back a silently PARTIAL memory-sink table, so fail loudly
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(f"stream {query_name!r} did not finish in {timeout_sec}s")
-    q.stop()
+    run_available_now(
+        spark,
+        out.writeStream.format("memory").queryName(query_name)
+        .outputMode(output_mode)
+        .option("checkpointLocation", _checkpoint_dir(query_name)),
+        query_name, timeout_sec)
     return spark.table(query_name)
 
 
@@ -294,7 +324,7 @@ def run_two_stream_join_to_memory(spark: SparkSession, events_path: str,
     default 30-day one would leave every unmatched purchase stuck in
     state at query end) and must consume only the closed region
     (attributed_outer_agg's cutoff)."""
-    schema = spark.read.parquet(events_path).schema
+    schema = read_parquet(spark, events_path).schema
     src_dir = stage_stream_source(events_path, query_name)
 
     def side(event_type: str) -> DataFrame:
@@ -307,16 +337,12 @@ def run_two_stream_join_to_memory(spark: SparkSession, events_path: str,
               "leftOuter": interval_pair_join_outer,
               "fullOuter": interval_pair_join_full}[how]
     pairs = joiner(side("view"), side("purchase"), lookback_minutes)
-    q = (pairs.writeStream.format("memory").queryName(query_name)
-         .outputMode("append")
-         .option("checkpointLocation", _checkpoint_dir(query_name))
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"stream {query_name!r} did not finish in {timeout_sec}s")
-    q.stop()
+    run_available_now(
+        spark,
+        pairs.writeStream.format("memory").queryName(query_name)
+        .outputMode("append")
+        .option("checkpointLocation", _checkpoint_dir(query_name)),
+        query_name, timeout_sec)
     return spark.table(query_name)
 
 

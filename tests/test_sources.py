@@ -93,3 +93,46 @@ def test_write_sorted_by_layout(spark, sf_smoke, tmp_path):
     pf = spark.read.parquet(os.path.join(path, files[0]))
     dates = [r.o_orderdate for r in pf.select("o_orderdate").collect()]
     assert dates == sorted(dates)
+
+
+def test_read_table_infers_schema_once_per_file_stamp(spark, sf_smoke,
+                                                      tmp_path):
+    """A second read of an unchanged table launches no Spark job (the
+    schema comes from the memo), and a rewrite with an extra column
+    is seen by the next read."""
+    import shutil
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from quickbooks_aws_etl_pipeline_spark.io import read_table, table_path
+
+    sf = str(tmp_path)
+    path = table_path(sf, "nation")
+    shutil.copy(table_path(sf_smoke, "nation"), path)
+    sc = spark.sparkContext
+
+    def jobs_of(read):
+        group = f"memo-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "schema memo test")
+        try:
+            df = read()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return df, sc.statusTracker().getJobIdsForGroup(group)
+
+    first, cold_jobs = jobs_of(lambda: read_table(spark, sf, "nation"))
+    second, warm_jobs = jobs_of(lambda: read_table(spark, sf, "nation"))
+    assert cold_jobs, "schema inference launched no job to memoize"
+    assert warm_jobs == []
+    assert second.schema == first.schema
+
+    table = pq.read_table(path)
+    pq.write_table(table.append_column(
+        "n_extra", pa.array(range(table.num_rows), pa.int64())), path)
+    third = read_table(spark, sf, "nation")
+    assert third.columns == first.columns + ["n_extra"]
+    assert [r.n_extra for r in third.orderBy("n_extra").collect()] == \
+        list(range(table.num_rows))

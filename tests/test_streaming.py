@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from quickbooks_aws_etl_pipeline_spark.io import read_table, table_path
 from quickbooks_aws_etl_pipeline_spark.streaming.windows import (
-    run_stream_to_memory, session_agg, sliding_agg,
+    run_available_now, run_stream_to_memory, session_agg, sliding_agg,
     streaming_dedup_within_watermark, tumbling_agg)
 
 
@@ -105,12 +105,12 @@ def test_streaming_checkpoint_incremental_recovery(spark, sf_smoke, tmp_path):
     def run_once():
         stream = (spark.readStream.schema(ev.schema)
                   .option("recursiveFileLookup", "true").parquet(src))
-        q = (stream.writeStream
-             .foreachBatch(lambda df, bid: seen.append((bid, df.count())))
-             .option("checkpointLocation", ck)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(60)
-        q.stop()
+        run_available_now(
+            spark,
+            stream.writeStream
+            .foreachBatch(lambda df, bid: seen.append((bid, df.count())))
+            .option("checkpointLocation", ck),
+            "t_incremental_recovery", 60)
 
     run_once()
     first_total = sum(n for _, n in seen)
@@ -223,3 +223,129 @@ def test_stream_stream_outer_join_emits_nulls_at_watermark(spark, sf_smoke):
     batch = _sorted_rows(
         QUERIES["stream_stream_join_outer"](spark, sf_smoke))
     assert live == batch
+
+
+# Registry keys that start a stream; each runs through run_available_now.
+STREAM_KEYS = [
+    "sink_python_stream_datasource", "source_qbo_stream_live",
+    "stream_cdc_apply_live", "stream_dedup_incremental_live",
+    "stream_dedup_watermark", "stream_drift_monitor_live",
+    "stream_foreach_batch_sink", "stream_ivm_join_live",
+    "stream_jdbc_warehouse_live", "stream_join_static_live",
+    "stream_ks_drift_live", "stream_session_window_live",
+    "stream_sliding_agg_live", "stream_sliding_topk_live",
+    "stream_source_incremental_restart", "stream_stateful_funnel",
+    "stream_stateful_totals_tws", "stream_stateful_user_totals",
+    "stream_stream_join_full_live", "stream_stream_join_live",
+    "stream_stream_join_outer_live", "stream_tumbling_agg_live",
+    "stream_wasserstein_drift_live",
+]
+
+_PARTITIONS = "spark.sql.shuffle.partitions"
+
+
+@pytest.fixture
+def wide_shuffle(spark):
+    """The session with shuffle.partitions=32, above the test
+    master's 12 cores, so the runner's cap actually applies."""
+    prev = spark.conf.get(_PARTITIONS)
+    spark.conf.set(_PARTITIONS, "32")
+    try:
+        yield spark
+    finally:
+        spark.conf.set(_PARTITIONS, prev)
+
+
+def test_available_now_caps_state_partitions_at_cores(
+        wide_shuffle, sf_smoke, monkeypatch):
+    """A stateful stream runs min(shuffle.partitions, cores) state
+    partitions, matches its oracle, and leaves the session's value
+    as it found it."""
+    from quickbooks_aws_etl_pipeline_spark.plans import ORACLE, QUERIES
+    from quickbooks_aws_etl_pipeline_spark.streaming import windows
+
+    from .oracle_util import assert_matches_oracle
+
+    spark = wide_shuffle
+    started = []
+
+    def recording(*args, **kwargs):
+        started.append(run_available_now(*args, **kwargs))
+        return started[-1]
+
+    monkeypatch.setattr(windows, "run_available_now", recording)
+    name = "stream_tumbling_agg_live"
+    assert_matches_oracle(QUERIES[name](spark, sf_smoke), ORACLE[name],
+                          sf_smoke, name)
+    want = min(32, spark.sparkContext.defaultParallelism)
+    assert want < 32
+    [q] = started
+    assert {op["numShufflePartitions"]
+            for op in q.lastProgress["stateOperators"]} == {want}
+    assert spark.conf.get(_PARTITIONS) == "32"
+
+
+def test_available_now_restores_partitions_when_start_raises(
+        wide_shuffle, tmp_path):
+    """Complete mode over a stateless transform is rejected inside
+    start(); the session's shuffle.partitions is restored anyway."""
+    from pyspark.errors import AnalysisException
+
+    spark = wide_shuffle
+    src = tmp_path / "src"
+    src.mkdir()
+    stream = spark.readStream.schema("event_id bigint").parquet(str(src))
+    writer = (stream.writeStream.format("memory")
+              .queryName("t_complete_stateless").outputMode("complete")
+              .option("checkpointLocation", str(tmp_path / "ck")))
+    with pytest.raises(AnalysisException):
+        run_available_now(spark, writer, "t_complete_stateless", 30)
+    assert spark.conf.get(_PARTITIONS) == "32"
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize(
+    "name", [k for k in STREAM_KEYS if k != "stream_tumbling_agg_live"])
+def test_stream_key_matches_oracle_with_capped_state_partitions(
+        wide_shuffle, sf_smoke, name):
+    """Every streaming key stays oracle-exact when the runner caps
+    its state partitions (32 -> the master's cores)."""
+    from quickbooks_aws_etl_pipeline_spark.plans import ORACLE, QUERIES
+
+    from .oracle_util import assert_matches_oracle
+
+    assert_matches_oracle(QUERIES[name](wide_shuffle, sf_smoke),
+                          ORACLE[name], sf_smoke, name)
+    assert wide_shuffle.conf.get(_PARTITIONS) == "32"
+
+
+def test_every_stream_starts_through_run_available_now():
+    """Spark-free code shape: the availableNow trigger and the await
+    appear in the package only inside ``run_available_now``, so no
+    stream can skip its state-partition cap or its timeout check;
+    and no stream probes a parquet schema by inference."""
+    import ast
+    import pathlib
+    import re
+
+    import quickbooks_aws_etl_pipeline_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    runner = root / "streaming" / "windows.py"
+    fn = next(n for n in ast.parse(runner.read_text()).body
+              if isinstance(n, ast.FunctionDef)
+              and n.name == "run_available_now")
+    hits = {"trigger(availableNow=True)": [], ".awaitTermination(": []}
+    for path in sorted(root.rglob("*.py")):
+        for lineno, line in enumerate(path.read_text().splitlines(), 1):
+            for pattern, found in hits.items():
+                if pattern in line:
+                    found.append((path, lineno))
+    for pattern, found in hits.items():
+        assert len(found) == 1, (pattern, found)
+        [(path, lineno)] = found
+        assert path == runner and fn.lineno <= lineno <= fn.end_lineno, \
+            (pattern, path, lineno)
+    probe = re.compile(r"read\.parquet\([^)]*\)\s*\.schema")
+    for path in sorted((root / "streaming").rglob("*.py")):
+        assert not probe.search(path.read_text()), path
