@@ -909,8 +909,8 @@ def duplicate_span_islands(df: DataFrame, text_col: str, id_col: str,
     pure CPU — the same two-pass choice suffix-array ExactSubstr
     implementations make.
 
-    Measured (scale_probe --wave5, 100k docs with half the corpus
-    exact replicas — the WORST case, where nearly every gram is
+    Measured (20x of sf0.1, 100k docs with half the corpus exact
+    replicas — the WORST case, where nearly every gram is
     duplicated): 6.3 s / 132 MB shuffle with the min/max dup-set
     aggregate (the count_distinct form measured 11.5 s / 308 MB —
     the removed (gram, id) pre-dedup exchange was 2.3x the

@@ -19,9 +19,8 @@ from ..io import read_table
 from ..operators.advanced_joins import (asof_join, range_join, salted_join,
                                         two_phase_agg)
 from ..operators.sampling import stratified_hash_sample, train_test_split
-from ..sinks import merge_upsert, scratch_path
+from ..sinks import merge_upsert, scratch_path, sf_tag
 from .queries import register
-from .sink_queries import _tag
 
 
 # --- advanced joins --------------------------------------------------------
@@ -107,7 +106,7 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     and needs NO shuffle on either side — the 100 TB recipe for a
     repeatedly-joined fact pair. Oracle joins the originals (the
     bucketed round trip must be lossless)."""
-    tag = _tag(sf_dir).replace(".", "_")
+    tag = sf_tag(sf_dir).replace(".", "_")
     li_tbl, ord_tbl = f"bkt_lineitem_{tag}", f"bkt_orders_{tag}"
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice")

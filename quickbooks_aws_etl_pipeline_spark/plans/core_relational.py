@@ -586,10 +586,8 @@ def source_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged BY SPARK (concat_ws -> text sink), so nothing data-sized
     ever rides the driver; the permissive read then parses what it
     can, captures what it can't, and the rollup proves the split."""
-    import os
-
-    from ..sinks import scratch_path
-    path = scratch_path("csv_feed", os.path.basename(sf_dir.rstrip("/")))
+    from ..sinks import scratch_path, sf_tag
+    path = scratch_path("csv_feed", sf_tag(sf_dir))
     orders = read_table(spark, sf_dir, "orders")
     price_cell = F.when(F.col("o_orderkey") % 50 == 0, F.lit("oops")) \
         .otherwise(F.col("o_totalprice").cast("string"))
@@ -720,10 +718,8 @@ def source_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
     read back as text and sliced by substring into typed columns.
     Parse is pure codegen; the rollup proves the round trip
     lossless."""
-    import os
-
-    from ..sinks import scratch_path
-    path = scratch_path("fixedw", os.path.basename(sf_dir.rstrip("/")))
+    from ..sinks import scratch_path, sf_tag
+    path = scratch_path("fixedw", sf_tag(sf_dir))
     orders = read_table(spark, sf_dir, "orders")
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
     (orders.select(F.format_string(

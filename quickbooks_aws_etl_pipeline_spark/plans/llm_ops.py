@@ -668,11 +668,9 @@ def sim_index_persist_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same oracle-by-construction contract as the other IVF tiers:
     recall@10 vs exact brute force over the ORIGINAL table, bound
     >= 5 stated as constants (deterministic end to end)."""
-    import os
-
     from ..operators.similarity import (assign_cell, cosine_topk,
                                         spherical_kmeans)
-    from ..sinks import scratch_path
+    from ..sinks import scratch_path, sf_tag
     from concurrent.futures import ThreadPoolExecutor
 
     emb = read_table(spark, sf_dir, "embeddings")
@@ -683,8 +681,7 @@ def sim_index_persist_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         cents = spherical_kmeans(emb, "embedding", "vec_id", k=8, iters=4,
                                  train_mod=4)
         qv = fut_qv.result()
-    idx_dir = scratch_path("ivf_index",
-                           os.path.basename(sf_dir.rstrip("/")))
+    idx_dir = scratch_path("ivf_index", sf_tag(sf_dir))
     (emb.withColumn("cell", assign_cell("embedding", cents))
         .write.mode("overwrite").partitionBy("cell").parquet(idx_dir))
 
@@ -2859,7 +2856,8 @@ def maintenance_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side metadata (one row), never data."""
     import os
     import re as _re
-    tag = _re.sub(r"[^A-Za-z0-9_]", "_", os.path.basename(sf_dir.rstrip("/")))
+    from ..sinks import sf_tag
+    tag = _re.sub(r"[^A-Za-z0-9_]", "_", sf_tag(sf_dir))
     tbl = f"stats_orders_{tag}"
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice")
@@ -3206,9 +3204,9 @@ def maintenance_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from ..sinks import scratch_path
+    from ..sinks import scratch_path, sf_tag
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tag = os.path.basename(sf_dir.rstrip("/"))
+    tag = sf_tag(sf_dir)
     root = scratch_path("snapshots", tag)
     fa = os.path.join(root, "A.parquet")
     fb = os.path.join(root, "B.parquet")
@@ -3261,13 +3259,11 @@ def sim_topk_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver-side write, never a global sort), k-row state on
     disk between refreshes.
     """
-    import os
-
     from ..operators.similarity import cosine_topk, fetch_query_vector
-    from ..sinks import scratch_path
+    from ..sinks import scratch_path, sf_tag
     emb = read_table(spark, sf_dir, "embeddings")
     qv = fetch_query_vector(emb, "embedding", "vec_id", Q_VEC_ID)
-    tag = os.path.basename(sf_dir.rstrip("/"))
+    tag = sf_tag(sf_dir)
     # ping-pong state paths: refresh b reads shortlist b-1 while
     # writing shortlist b — overwriting the path being read fails
     # with FILE_NOT_EXIST mid-scan (lazy plans re-list at execute)

@@ -1454,7 +1454,7 @@ def maintenance_ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a 100-TB-class dimension flips to sort-merge automatically
     instead of OOMing the driver on a hard-coded hint.
     """
-    from ..sinks import scratch_path
+    from ..sinks import scratch_path, sf_tag
     orders = read_table(spark, sf_dir, "orders")
     cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment")
@@ -1472,7 +1472,7 @@ def maintenance_ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.sum(F.col("o_totalprice").cast("decimal(18,4)"))
                      .cast("decimal(38,4)").alias("rev_dec")))
 
-    view_path = scratch_path("maintenance", f"ivm_join_{_sf_tag(sf_dir)}")
+    view_path = scratch_path("maintenance", f"ivm_join_{sf_tag(sf_dir)}")
     agg(o_old, c_old).write.mode("overwrite").parquet(view_path)
     delta = (agg(o_new, c_old)
              .unionByName(agg(o_old, c_new))
@@ -1483,11 +1483,6 @@ def maintenance_ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("n_orders").cast("bigint").alias("n_orders"),
                  F.sum("rev_dec").cast("double").alias("revenue"))
             .orderBy("segment", "order_month"))
-
-
-def _sf_tag(sf_dir: str) -> str:
-    import os
-    return os.path.basename(os.path.normpath(sf_dir)) or "sf"
 
 
 # ---------------------------------------------------------------------------

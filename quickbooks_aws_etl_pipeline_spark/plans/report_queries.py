@@ -359,9 +359,9 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from ..io import read_table
-    from ..sinks import scratch_path
+    from ..sinks import scratch_path, sf_tag
     from ..sources.datasource import write_jsonl_datasource
-    out_dir = scratch_path("pyds_sink", os.path.basename(sf_dir.rstrip("/")))
+    out_dir = scratch_path("pyds_sink", sf_tag(sf_dir))
     # fresh dir per run: the sink appends part files
     import shutil
     if os.path.isdir(out_dir):
@@ -392,20 +392,17 @@ def sink_python_stream_datasource(spark: SparkSession,
     live key shares sink_python_datasource's oracle. Scale: rows
     stream executor-side; driver state is one commit-message list
     per epoch."""
-    import os
-
     from ..io import read_table
-    from ..sinks import scratch_path
+    from ..sinks import scratch_path, sf_tag
     from ..sources.datasource import write_jsonl_stream_datasource
-    out_dir = scratch_path("pyds_stream_sink",
-                           os.path.basename(sf_dir.rstrip("/")))
+    out_dir = scratch_path("pyds_stream_sink", sf_tag(sf_dir))
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus",
         F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
         .cast("bigint").alias("cents"))
     back = write_jsonl_stream_datasource(
         spark, orders, out_dir,
-        query_name=f"pydss_{os.path.basename(sf_dir.rstrip('/'))}")
+        query_name=f"pydss_{sf_tag(sf_dir)}")
     return (back.groupBy("o_orderstatus")
             .agg(F.count(F.lit(1)).alias("n_rows"),
                  F.sum("cents").alias("cents_total")))

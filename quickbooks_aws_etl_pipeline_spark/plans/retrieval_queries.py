@@ -287,16 +287,14 @@ def text_bm25_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     At corpus scale the term space outgrows directory-per-term;
     the partition key becomes a hash bucket of the term (the same
     pruning, bounded directory count)."""
-    import os
-
     from ..operators.retrieval import (bm25_contrib_e6_expr, idf_e7,
                                        topk_with_rank)
     from ..operators.text import tokens
-    from ..sinks import scratch_path
+    from ..sinks import scratch_path, sf_tag
     docs = read_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens(F.col("text")).alias("toks"))
     dld = toks.select("doc_id", F.size("toks").alias("dl"), "toks")
-    tag = os.path.basename(sf_dir.rstrip("/"))
+    tag = sf_tag(sf_dir)
     idx_dir = scratch_path("bm25_index", tag, "postings")
     stats_dir = scratch_path("bm25_index", tag, "stats")
     (dld.select("doc_id", "dl", F.explode("toks").alias("term"))
@@ -421,16 +419,14 @@ def maintenance_bm25_index_refresh(spark: SparkSession,
     path lost, duplicated, or double-counted a single posting —
     including df and the corpus stats, which are re-derived from the
     merged sidecar — the driver sees a red row."""
-    import os
-
     from ..operators.retrieval import (bm25_contrib_e6_expr, idf_e7,
                                        topk_with_rank)
     from ..operators.text import tokens
-    from ..sinks import scratch_path
+    from ..sinks import scratch_path, sf_tag
     docs = read_table(spark, sf_dir, "documents")
     n_docs_total = docs.agg(F.max("doc_id")).first()[0] + 1
     split = int(n_docs_total * 4 // 5)
-    tag = os.path.basename(sf_dir.rstrip("/"))
+    tag = sf_tag(sf_dir)
     idx_dir = scratch_path("bm25_incr", tag, "postings")
     side_dir = scratch_path("bm25_incr", tag, "docstats")
 
@@ -788,9 +784,8 @@ def sim_margin_bitext_mine_ivf(spark: SparkSession,
 
 
 @register("pipeline_index_serve_refresh")
-def pipeline_index_serve_refresh(spark: SparkSession, sf_dir: str,
-                                 stage_receipts: dict | None = None,
-                                 ) -> DataFrame:
+def pipeline_index_serve_refresh(spark: SparkSession,
+                                 sf_dir: str) -> DataFrame:
     """END-TO-END daily-crawl SERVING loop (r10 verdict task 6) — the
     refresh path a deployed corpus runs on every ingest batch, each
     stage an already-pinned registry semantic, composed into one key
@@ -830,9 +825,6 @@ def pipeline_index_serve_refresh(spark: SparkSession, sf_dir: str,
     1 serve_ann row (id = n_results, metric_e6 = recall_ok) — stated
     constants, recall verified inside the query.
     """
-    import os
-    import time as _time
-
     from ..operators.dedup import incremental_minhash_matches
     from ..operators.retrieval import (bm25_contrib_e6_expr, idf_e7,
                                        topk_with_rank)
@@ -841,20 +833,7 @@ def pipeline_index_serve_refresh(spark: SparkSession, sf_dir: str,
                                         spherical_kmeans)
     from ..operators.sketch import bloom_build, bloom_probe
     from ..operators.text import tokens
-    from ..sinks import scratch_path
-    _last = [_time.perf_counter()]
-
-    def _mark(stage: str) -> None:
-        # wall seconds since the previous mark — meaningful because
-        # every stage boundary below sits after an EAGER step (the
-        # survivors checkpoint, the index writes, the read-back
-        # counts); the returned serve plan is lazy and timed by the
-        # caller. No-op (zero overhead) unless a probe asks.
-        if stage_receipts is not None:
-            now = _time.perf_counter()
-            stage_receipts[stage] = round(now - _last[0], 2)
-            _last[0] = now
-
+    from ..sinks import scratch_path, sf_tag
     docs = read_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 3 == 0).select("doc_id", "text")
     batch = docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "text")
@@ -884,11 +863,8 @@ def pipeline_index_serve_refresh(spark: SparkSession, sf_dir: str,
         near.select(F.col("id_new").alias("doc_id")).distinct(),
         "doc_id", "left_anti")
         .localCheckpoint(eager=True))  # 3 consumers below
-    if stage_receipts is not None:
-        stage_receipts["n_survivors"] = survivors.count()
-    _mark("s1_dedup_sec")
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
+    tag = sf_tag(sf_dir)
     idx_dir = scratch_path("serve_refresh", tag, "postings")
     side_dir = scratch_path("serve_refresh", tag, "docstats")
     vec_dir = scratch_path("serve_refresh", tag, "vectors")
@@ -933,7 +909,6 @@ def pipeline_index_serve_refresh(spark: SparkSession, sf_dir: str,
         (docstats_from(tok1, 1).write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy("batch").parquet(side_dir))
-    _mark("s2_lexical_refresh_sec")
 
     # --- stage 3: vector index refresh with the frozen quantizer ---
     from concurrent.futures import ThreadPoolExecutor
@@ -962,7 +937,6 @@ def pipeline_index_serve_refresh(spark: SparkSession, sf_dir: str,
         (nv1.write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy("cell", "batch").parquet(vec_dir))
-    _mark("s3_vector_refresh_sec")
 
     # --- stage 4a: BM25 serve from the persisted merged index ---
     posting = (spark.read.parquet(idx_dir)
@@ -996,7 +970,6 @@ def pipeline_index_serve_refresh(spark: SparkSession, sf_dir: str,
         F.lit(0).cast("int").alias("rank"),
         F.lit(n_post).cast("bigint").alias("id"),
         F.lit(n_vec).cast("bigint").alias("metric_e6"))
-    _mark("s4_readback_receipt_sec")
 
     # --- stage 4b: ANN serve, partition-pruned to nprobe cells ---
     # nv1 carries exactly new_vec's ids (projection of the same rows)

@@ -16,12 +16,8 @@ from pyspark.sql import types as T
 from ..functions.numeric import exact_sum
 from ..io import read_table
 from ..sinks import (append_table, overwrite_table, read_back, scratch_path,
-                     write_csv, write_parquet)
+                     sf_tag, write_csv, write_parquet)
 from .queries import register
-
-
-def _tag(sf_dir: str) -> str:
-    return os.path.basename(os.path.normpath(sf_dir)) or "sf"
 
 
 @register("sink_parquet_roundtrip")
@@ -30,7 +26,7 @@ def sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned write; the read-back filter prunes to one partition
     (partition pruning replaces the reference's file-per-month
     bookkeeping)."""
-    path = scratch_path("sink_parquet", _tag(sf_dir))
+    path = scratch_path("sink_parquet", sf_tag(sf_dir))
     orders = read_table(spark, sf_dir, "orders").withColumn(
         "order_month", F.date_format("o_orderdate", "yyyy-MM"))
     # co-locate each month before the partitioned write: one file per
@@ -46,7 +42,7 @@ def sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("sink_csv_roundtrip")
 def sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S7 (qb_profit&loss.py:125): csv write + schema-full read back."""
-    path = scratch_path("sink_csv", _tag(sf_dir))
+    path = scratch_path("sink_csv", sf_tag(sf_dir))
     nation = read_table(spark, sf_dir, "nation")
     write_csv(nation, path)
     schema = T.StructType([
@@ -65,7 +61,7 @@ def sink_table_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S8: the reference's 5-statement Redshift full refresh
     (qb_bills.py:130-169) as one atomic overwrite saveAsTable; cast
     layer runs in-plan before the write."""
-    table = f"qb_sink_overwrite_{_tag(sf_dir).replace('.', '_')}"
+    table = f"qb_sink_overwrite_{sf_tag(sf_dir).replace('.', '_')}"
     path = scratch_path("tables", table)
     orders = read_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     staged = orders.select(
@@ -84,7 +80,7 @@ def sink_table_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S9: append-without-truncate (the P&L monthly load,
     qb_profit&loss.py:137-151) — a fresh overwrite then one append
     doubles every row, which the read-back count proves."""
-    table = f"qb_sink_append_{_tag(sf_dir).replace('.', '_')}"
+    table = f"qb_sink_append_{sf_tag(sf_dir).replace('.', '_')}"
     path = scratch_path("tables", table)
     region = read_table(spark, sf_dir, "region")
     overwrite_table(region, table, path)
@@ -105,7 +101,7 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     AND the null semantics are oracle-pinned. Batches split on
     orderkey parity, so the oracle derives the same evolution from
     the raw table."""
-    path = scratch_path("sink_evolution", _tag(sf_dir))
+    path = scratch_path("sink_evolution", sf_tag(sf_dir))
     orders = read_table(spark, sf_dir, "orders")
     old = (orders.filter(F.col("o_orderkey") % 2 == 0)
            .select("o_orderkey", "o_orderstatus", "o_totalprice"))
@@ -131,7 +127,7 @@ def sink_dynamic_partition_overwrite(spark: SparkSession,
     the difference between an O(day) and O(history) reload). The
     read-back aggregate proves both: the corrected month doubled,
     the untouched months byte-identical."""
-    path = scratch_path("sink_dynpart", _tag(sf_dir))
+    path = scratch_path("sink_dynpart", sf_tag(sf_dir))
     orders = read_table(spark, sf_dir, "orders").withColumn(
         "order_month", F.date_format("o_orderdate", "yyyy-MM"))
     (orders.repartition("order_month")
@@ -205,8 +201,8 @@ def maintenance_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     mismatch. The mutation set is derived from the data, so the
     oracle reproduces the classification without reading the
     snapshots."""
-    path_a = scratch_path("snapdiff_a", _tag(sf_dir))
-    path_b = scratch_path("snapdiff_b", _tag(sf_dir))
+    path_a = scratch_path("snapdiff_a", sf_tag(sf_dir))
+    path_b = scratch_path("snapdiff_b", sf_tag(sf_dir))
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice")
     max_k = orders.agg(F.max("o_orderkey")).first()[0]
@@ -249,7 +245,7 @@ def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition directory exactly like the parquet path — ORC shares
     Spark's FileSourceScan machinery, so PartitionFilters and
     column pruning apply unchanged."""
-    path = scratch_path("sink_orc", _tag(sf_dir))
+    path = scratch_path("sink_orc", sf_tag(sf_dir))
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice")
     (li.repartition("l_returnflag").write.mode("overwrite")
@@ -274,7 +270,7 @@ def sink_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the B2B-feed ingestion format; at scale each executor parses
     its own file split (rowTag streaming parse), so the roundtrip
     parallelizes like every other FileSource."""
-    path = scratch_path("sink_xml", _tag(sf_dir))
+    path = scratch_path("sink_xml", sf_tag(sf_dir))
     nation = read_table(spark, sf_dir, "nation")
     (nation.coalesce(1).write.mode("overwrite")
      .option("rootTag", "nations").option("rowTag", "nation")
@@ -304,7 +300,7 @@ def sql_scripting_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     each iteration's aggregate is still a distributed plan, so the
     script scales like any month-filtered aggregate)."""
     spark.conf.set("spark.sql.scripting.enabled", "true")
-    tag = _tag(sf_dir).replace(".", "_")
+    tag = sf_tag(sf_dir).replace(".", "_")
     read_table(spark, sf_dir, "orders").createOrReplaceTempView(
         f"orders_script_{tag}")
     return spark.sql(f"""
@@ -349,7 +345,7 @@ def sink_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Derby folds unquoted identifiers to uppercase; the read-back
     projection restores the contract names."""
     from ..sinks import derby_jdbc_url, scratch_path
-    tag = _tag(sf_dir).replace(".", "_")
+    tag = sf_tag(sf_dir).replace(".", "_")
     db = scratch_path("jdbc_derby", tag)
     url, drv = derby_jdbc_url(spark, db)
     nation = (read_table(spark, sf_dir, "nation")
@@ -398,7 +394,7 @@ def maintenance_column_stats(spark: SparkSession,
     max / num_nulls are exact by definition. The catalog read is a
     bounded driver-side fetch (|columns| rows — a model read, the
     documented convention)."""
-    table = f"qb_colstats_{_tag(sf_dir).replace('.', '_')}"
+    table = f"qb_colstats_{sf_tag(sf_dir).replace('.', '_')}"
     nation = read_table(spark, sf_dir, "nation")
     # external location (the overwrite_table convention): a managed
     # saveAsTable fails on a fresh session whose in-memory catalog
@@ -447,7 +443,7 @@ def source_binaryfile_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     like any file-source scan."""
     import os
     from ..sinks import scratch_path
-    blob_dir = scratch_path("blobs", _tag(sf_dir))
+    blob_dir = scratch_path("blobs", sf_tag(sf_dir))
     docs20 = (read_table(spark, sf_dir, "documents")
               .filter(F.col("doc_id") < 20)
               .select("doc_id", "text").collect())
@@ -487,7 +483,7 @@ def scan_dynamic_partition_pruning(spark: SparkSession,
     convention), then the pruned scan reads ~12 of ~60+ month
     partitions. The dim is order-month-sized and broadcast.
     """
-    path = scratch_path("dpp_lineitem", _tag(sf_dir))
+    path = scratch_path("dpp_lineitem", sf_tag(sf_dir))
     li = read_table(spark, sf_dir, "lineitem").withColumn(
         "ship_month", F.date_format("l_shipdate", "yyyy-MM"))
     write_parquet(li.repartition("ship_month"), path,
@@ -549,7 +545,7 @@ def sink_viewfs_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"re-mounting to {target} would be silently ignored by "
             f"Hadoop's FileSystem cache — use a new mount-table name")
     hconf.set(mount_key, target)
-    path = f"viewfs://qbograft/wh/sink_viewfs/{_tag(sf_dir)}"
+    path = f"viewfs://qbograft/wh/sink_viewfs/{sf_tag(sf_dir)}"
     cust = read_table(spark, sf_dir, "customer")
     (cust.repartition("c_mktsegment").write.mode("overwrite")
      .partitionBy("c_mktsegment").parquet(path))

@@ -29,6 +29,13 @@ def scratch_path(*parts: str) -> str:
     return os.path.abspath(os.path.join(SCRATCH_DIR, *parts))
 
 
+def sf_tag(sf_dir: str) -> str:
+    """The SF dir's basename: keys that keep scratch state (written
+    tables, indexes, snapshots) key it on this, so runs over
+    differently named SF dirs never share state."""
+    return os.path.basename(os.path.normpath(sf_dir)) or "sf"
+
+
 def derby_jdbc_url(spark: SparkSession, db_dir: str) -> tuple[str, str]:
     """(url, driver) for an embedded Derby db under ``db_dir``, with
     ``derby.log`` routed into the scratch dir instead of the process

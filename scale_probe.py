@@ -1,11 +1,16 @@
 #!/usr/bin/env python
-"""Scale probe: generates a ~20x dataset (12M-row lineitem, 3M
-orders, 100k documents with heavy duplication) under .scratch/sf2 and
-measures the plans that matter at scale — fact-fact join, 12M-row
-window, skewed join under AQE vs deterministic salting, and the
-dup-collapsed MinHash dedup. Prints one JSON line per probe.
+"""Scale probe: registry keys timed on replicated copies of one SF.
 
-Run: python scale_probe.py [--regen]
+``generate`` builds an N-replica copy of the base SF dir (fact tables
+replicated, dimension tables symlinked). Each key in ``PROBES`` is
+run once at the base SF to warm the JIT, then timed at every rung of
+``LADDER`` up to its cap, each run ending in a ``noop`` write that
+evaluates every output column. One JSON line per (key, scale):
+``{"probe": "<key>_x<N>", "sec": ..., "shuffle_mb": ...}``.
+
+Run: python scale_probe.py [--regen] [KEY ...]
+  (no keys = the whole table; --regen rebuilds the replica dirs;
+  the base dir comes from SPARK_GRAFT_SF_DIR, default sf0.1)
 """
 
 from __future__ import annotations
@@ -17,1518 +22,186 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import Window
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from quickbooks_aws_etl_pipeline_spark.functions.numeric import exact_sum
 from quickbooks_aws_etl_pipeline_spark.io import read_table
-from quickbooks_aws_etl_pipeline_spark.operators.advanced_joins import salted_join
-from quickbooks_aws_etl_pipeline_spark.operators.dedup import minhash_lsh_pairs
+from quickbooks_aws_etl_pipeline_spark.plans import QUERIES
 from quickbooks_aws_etl_pipeline_spark.session import get_spark
-from quickbooks_aws_etl_pipeline_spark.sinks import scratch_path
+from quickbooks_aws_etl_pipeline_spark.sinks import scratch_path, sf_tag
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-REPLICAS = 20
+LADDER = (1, 20, 80)
+
+# key -> the largest replica count it runs at: the whole ladder,
+# except keys whose work grows with replicas^2 under this recipe
+PROBES: dict[str, int] = dict.fromkeys("""
+    flagship_revenue_by_month_segment join_5way_regional_revenue
+    join_salted_skew join_asof window_running_sum filter_date_range
+    maintenance_sorted_rewrite sql_pricing_summary
+    stream_jdbc_warehouse_live
+
+    graph_pagerank_fixed graph_triangle_count graph_link_prediction
+    graph_link_prediction_sampled graph_label_propagation
+    graph_bfs_distances graph_weighted_sssp mining_basket_pairs
+    query_pareto_skyline
+
+    stream_session_window sessionize_inactivity_gap dq_rate_anomaly
+    dq_higher_moments dq_cusum_drift events_markov_transitions
+    events_sequence_patterns sketch_ams_f2 pipeline_user_features
+    attribution_markov_removal dq_ks_drift dq_chi_square_assoc
+    dq_wasserstein_drift stream_wasserstein_drift_live
+    stats_seasonal_decompose maintenance_ivm_join_view
+    stream_ivm_join_live stream_stream_join_outer stream_stream_join_full
+    eval_bradley_terry eval_rao_kupper
+
+    sketch_count_min sketch_heavy_hitters sketch_hll_merge
+    sketch_hll_retention sketch_bloom_filter sketch_kmv_overlap
+    sample_poisson_bootstrap sample_weighted_reservoir
+
+    dedup_minhash_lsh dedup_ngram_verified dedup_segment_corpus
+    dedup_containment dedup_incremental_minhash dedup_bloom_prefilter
+    decontaminate_minhash_lsh dedup_duplicate_spans
+    dedup_duplicate_spans_fp dedup_spans_rewrite dedup_spans_rewrite_fp
+    tokenizer_bpe_train tokenizer_bpe_apply text_bigram_logprob
+    text_quality_gopher text_cooccurrence_pmi text_hash_embedding
+    text_zipf_curve text_class_nb text_heaps_law
+    text_bm25_topk text_bm25_batch_queries text_bm25_index_serve
+    maintenance_bm25_index_refresh select_token_budget
+    select_importance_resample select_excess_loss
+    mixture_perplexity_buckets mixture_unimax_budget
+    multimodal_audio_windows seq_pack_atomic curate_domain_caps
+    curate_winsorize_scores stats_domain_mix stats_corpus_diff
+    split_leakage_safe pipeline_corpus_curation pipeline_crawl_refresh
+    pipeline_filter_funnel pipeline_pretrain_prep
+    pipeline_classifier_loop pipeline_rag_retrieval
+    pipeline_index_serve_refresh udf_map_in_arrow eval_auc_rank
+    eval_retrieval_ndcg eval_tokenizer_compression
+    eval_classifier_agreement eval_memorization_spans
+    eval_rank_correlation eval_blocking_quality pairs_hard_negatives
+    pairs_hard_negatives_ivf
+
+    sim_topk_cosine sim_topk_batch_queries sim_topk_cosine_ivf_learned
+    sim_topk_cosine_ivf_trainsampled sim_topk_incremental
+    sim_mmr_rerank sim_hamming_topk sim_range_search
+    sim_range_search_ivf sim_margin_bitext_mine_ivf
+    select_kcenter_coreset eval_ann_recall embedding_gram_matrix
+    embedding_pca_project embedding_standardize_stats
+""".split(), LADDER[-1]) | {
+    # 7 s-shifted event replicas densify each user's 7-day window
+    "attribution_time_decay": 20,
+    # the exact miner materializes the full |X| x |Y| pair barrier
+    "sim_margin_bitext_mine": 20,
+    # jittered copies keep their original's label and nearly always its
+    # cell, so within-block pairs grow with replicas^2 (sf0.001: 24 s
+    # at 20x, 423 s at 80x for the cells; 34 s / 477 s for the graph)
+    "dedup_semantic_cells": 20,
+    "sim_knn_graph": 20,
+    # reads only the customer dim, which replicas do not grow
+    "privacy_t_closeness": 1,
+}
 
 
-def generate(spark) -> None:
-    li = read_table(spark, SF_DIR, "lineitem")
-    orders = read_table(spark, SF_DIR, "orders")
-    docs = read_table(spark, SF_DIR, "documents")
-    max_ok = orders.agg(F.max("o_orderkey")).first()[0]
-    rep = F.explode(F.sequence(F.lit(0), F.lit(REPLICAS - 1))).alias("rep")
-    (li.select("*", rep)
-       .withColumn("l_orderkey", F.col("l_orderkey") + F.col("rep") * (max_ok + 1))
-       .drop("rep").repartition(32)
-       .write.mode("overwrite").parquet(scratch_path("sf2", "lineitem.parquet")))
-    (orders.select("*", rep)
-       .withColumn("o_orderkey", F.col("o_orderkey") + F.col("rep") * (max_ok + 1))
-       .drop("rep").repartition(8)
-       .write.mode("overwrite").parquet(scratch_path("sf2", "orders.parquet")))
-    # half the replicas keep identical text -> heavy exact duplication,
-    # the shape real crawl corpora have
-    (docs.select("*", rep)
-       .withColumn("doc_id", F.col("doc_id") + F.col("rep") * 1000000)
-       .withColumn("text", F.when(F.col("rep") % 2 == 0, F.col("text"))
-                            .otherwise(F.concat("text", F.lit(" rep"),
-                                                F.col("rep").cast("string"))))
-       .drop("rep").repartition(16)
-       .write.mode("overwrite").parquet(scratch_path("sf2", "documents.parquet")))
-    # events: same users, time-shifted replicas -> 20x denser timelines
-    events = read_table(spark, SF_DIR, "events")
-    (events.select("*", rep)
-       .withColumn("event_id", F.col("event_id") + F.col("rep") * 10000000)
-       .withColumn("ts", F.col("ts") + F.make_interval(secs=F.col("rep") * 7))
-       .drop("rep").repartition(16)
-       .write.mode("overwrite").parquet(scratch_path("sf2", "events.parquet")))
-    # embeddings: 20x = 1M vectors, components perturbed per replica
-    emb = read_table(spark, SF_DIR, "embeddings")
-    (emb.select("*", rep)
-       .withColumn("vec_id", F.col("vec_id") + F.col("rep") * 10000000)
-       .withColumn("embedding", F.transform(
-           "embedding",
-           lambda x: x + (F.col("rep").cast("float") - 10.0) / 1000.0))
-       .drop("rep").repartition(16)
-       .write.mode("overwrite").parquet(scratch_path("sf2", "embeddings.parquet")))
+def generate(spark: SparkSession, base_dir: str, replicas: int,
+             out_dir: str) -> None:
+    """Write ``replicas`` copies of the base fact tables to ``out_dir``
+    and symlink every other base table (dimensions do not grow).
+
+    - lineitem/orders: orderkey shifted per replica, so every join
+      stays inside one replica;
+    - documents: even replicas keep the text verbatim, odd ones get a
+      suffix (half the corpus is exact duplicates);
+    - events: same users, shifted 7 s per replica;
+    - embeddings: a per-component hash(vec_id, rep, i) jitter of up to
+      +-0.01, which spreads cosines while keeping neighbourhoods.
+    """
+    rep = F.col("rep")
+    stride = (read_table(spark, base_dir, "orders")
+              .agg(F.max("o_orderkey")).first()[0] + 1)
+    facts = {
+        "lineitem": {"l_orderkey": F.col("l_orderkey") + rep * stride},
+        "orders": {"o_orderkey": F.col("o_orderkey") + rep * stride},
+        "documents": {
+            "doc_id": F.col("doc_id") + rep * 1_000_000,
+            "text": F.when(rep % 2 == 0, F.col("text")).otherwise(
+                F.concat("text", F.lit(" rep"), rep.cast("string")))},
+        "events": {"event_id": F.col("event_id") + rep * 10_000_000,
+                   "ts": F.col("ts") + F.make_interval(secs=rep * 7)},
+        "embeddings": {
+            "vec_id": F.col("vec_id") + rep * 10_000_000,
+            "embedding": F.transform("embedding", lambda x, i: x + (
+                F.pmod(F.hash(F.col("vec_id"), rep, i), F.lit(1000))
+                .cast("float") - 500.0) / 50000.0)},
+    }
+    copies = F.explode(F.sequence(F.lit(0), F.lit(replicas - 1)))
+    for table, cols in facts.items():
+        (read_table(spark, base_dir, table)
+         .select("*", copies.alias("rep")).withColumns(cols).drop("rep")
+         .repartition(replicas)
+         .write.mode("overwrite")
+         .parquet(os.path.join(out_dir, f"{table}.parquet")))
+    for name in os.listdir(base_dir):
+        dst = os.path.join(out_dir, name)
+        if (name.removesuffix(".parquet") not in facts
+                and not os.path.lexists(dst)):
+            os.symlink(os.path.join(os.path.abspath(base_dir), name), dst)
 
 
-_SPARK = None
+def _stages(spark: SparkSession) -> list:
+    """The stage attempts the AppStatusStore holds (works with the UI
+    disabled), once the listener bus has delivered every stage event.
+    The store keeps only the newest ``spark.ui.retainedStages``, so a
+    probe's shuffle is summed over stage ids above a watermark, not
+    diffed from a running total."""
+    jvm, sc = spark._jvm, spark._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    empty = jvm.java.util.ArrayList()
+    no_quantiles = spark.sparkContext._gateway.new_array(jvm.double, 0)
+    it = sc.statusStore().stageList(
+        empty, False, False, no_quantiles, empty).iterator()
+    stages = []
+    while it.hasNext():
+        stages.append(it.next())
+    return stages
 
 
-def _shuffle_bytes_total() -> int:
-    """Cumulative shuffle-write bytes across all completed stages,
-    read from the live AppStatusStore (works with the UI disabled).
-    Diff before/after a probe to get that probe's shuffle volume."""
-    try:
-        store = _SPARK._jsc.sc().statusStore()
-        jvm = _SPARK._jvm
-        empty = jvm.java.util.ArrayList()
-        no_quantiles = _SPARK.sparkContext._gateway.new_array(jvm.double, 0)
-        stages = store.stageList(empty, False, False, no_quantiles, empty)
-        total = 0
-        it = stages.iterator()
-        while it.hasNext():
-            total += it.next().shuffleWriteBytes()
-        return int(total)
-    except Exception:
-        return -1
+def run(spark: SparkSession, key: str, sf_dir: str) -> None:
+    QUERIES[key](spark, sf_dir).write.format("noop").mode("overwrite").save()
 
 
-def timed(tag: str, action) -> None:
-    sh0 = _shuffle_bytes_total()
+def timed(spark: SparkSession, key: str, replicas: int, sf_dir: str) -> None:
+    last = max((s.stageId() for s in _stages(spark)), default=-1)
     t0 = time.perf_counter()
-    result = action()
+    run(spark, key, sf_dir)
     sec = round(time.perf_counter() - t0, 2)
-    sh1 = _shuffle_bytes_total()
-    out = {"probe": tag, "sec": sec, "result": result}
-    if sh0 >= 0 and sh1 >= 0:
-        out["shuffle_mb"] = round((sh1 - sh0) / 1e6, 2)
-    print(json.dumps(out))
+    shuffle = sum(s.shuffleWriteBytes() for s in _stages(spark)
+                  if s.stageId() > last)
+    print(json.dumps({"probe": f"{key}_x{replicas}", "sec": sec,
+                      "shuffle_mb": round(shuffle / 1e6, 2)}), flush=True)
 
 
-def main() -> None:
-    global _SPARK
+def main(argv: list[str]) -> None:
+    keys = [a for a in argv if a != "--regen"] or list(PROBES)
+    unknown = [k for k in keys if k not in PROBES]
+    if unknown:
+        sys.exit(f"not in scale_probe.PROBES: {' '.join(unknown)}")
     spark = get_spark("scale-probe", extra_conf={
         "spark.ui.enabled": "false", "spark.driver.memory": "48g"})
-    _SPARK = spark
-    if "--regen" in sys.argv or not os.path.isdir(scratch_path("sf2")):
-        generate(spark)
-
-    li = spark.read.parquet(scratch_path("sf2", "lineitem.parquet"))
-    orders = spark.read.parquet(scratch_path("sf2", "orders.parquet"))
-    docs = spark.read.parquet(scratch_path("sf2", "documents.parquet"))
-
-    timed("join_agg_12M_x_3M", lambda: (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy(F.date_format("o_orderdate", "yyyy-MM").alias("m"))
-        .agg(exact_sum(F.col("l_extendedprice")
-                       * (F.lit(1.0) - F.col("l_discount"))).alias("rev"))
-        .count()))
-
-    # window over 12M rows; aggregate ON the window output so the
-    # optimizer cannot prune the window away
-    w = Window.partitionBy("l_orderkey").orderBy("l_linenumber")
-    timed("window_running_sum_12M", lambda: (
-        li.select(F.sum("l_quantity").over(w).alias("rs"))
-        .agg(F.sum("rs")).first()[0] is not None))
-
-    # skew: one synthetic hot key holding ~30% of 12M rows
-    skewed = li.withColumn(
-        "k", F.when(F.col("l_linenumber") <= 2, F.lit(0))
-              .otherwise(F.col("l_orderkey") % 100000 + 1))
-    dim = skewed.select("k").distinct().withColumn("tag", F.concat(F.lit("t"), "k"))
-    timed("skew_join_aqe", lambda: skewed.join(dim, "k")
-          .groupBy("tag").count().count())
-    timed("skew_join_salted", lambda: salted_join(
-        skewed, dim, "k", salts=16, salt_source="l_linenumber")
-        .groupBy("tag").count().count())
-
-    # as-of + session windows over 20x-dense event timelines
-    from quickbooks_aws_etl_pipeline_spark.operators.advanced_joins import asof_join
-    from quickbooks_aws_etl_pipeline_spark.streaming.windows import session_agg
-    ev = spark.read.parquet(scratch_path("sf2", "events.parquet"))
-    purchases = (ev.filter(F.col("event_type") == "purchase")
-                 .select("event_id", "user_id", "ts", "value"))
-    views = (ev.filter(F.col("event_type") == "view")
-             .select("user_id", "ts", "value"))
-    timed("asof_join_2M_events", lambda: asof_join(
-        purchases, views, "user_id", "ts", "ts", ["value"]).count())
-    timed("session_window_2M_events", lambda: session_agg(ev, 5).count())
-
-    # similarity at 1M x 64-dim vectors: brute-force cosine top-k vs
-    # the IVF cell-restricted search (label = coarse cell)
-    from quickbooks_aws_etl_pipeline_spark.operators.similarity import (
-        cosine_topk, fetch_query_vector)
-    emb2 = spark.read.parquet(scratch_path("sf2", "embeddings.parquet"))
-    # the IVF layout: cell (label) as a PARTITION key, so the cell
-    # filter becomes partition pruning and the scan never touches the
-    # other cells' files — the on-disk shape a real ANN index uses
-    ivf_path = scratch_path("sf2", "embeddings_by_cell.parquet")
-    if not os.path.isdir(ivf_path):
-        (emb2.repartition("label").write.mode("overwrite")
-         .partitionBy("label").parquet(ivf_path))
-    emb_cells = spark.read.parquet(ivf_path)
-    qv = fetch_query_vector(emb2, "embedding", "vec_id", 42)
-    qlabel = emb2.filter(F.col("vec_id") == 42).select("label").first()[0]
-    timed("sim_brute_topk_1M", lambda: cosine_topk(
-        emb2.filter(F.col("vec_id") != 42), "embedding", "vec_id",
-        qv, 10).count())
-    timed("sim_ivf_partition_pruned_topk_1M", lambda: cosine_topk(
-        emb_cells.filter((F.col("label") == qlabel) & (F.col("vec_id") != 42)),
-        "embedding", "vec_id", qv, 10).count())
-
-    # layout: date-sorted files line parquet row-group min/max stats
-    # up with date predicates — the narrow filter scan should beat the
-    # unsorted layout by skipping cold row groups
-    from quickbooks_aws_etl_pipeline_spark.sinks import write_sorted_by
-    sorted_path = scratch_path("sf2", "lineitem_sorted.parquet")
-    if not os.path.isdir(sorted_path):
-        write_sorted_by(li, sorted_path, ["l_shipdate"], 32)
-    li_sorted = spark.read.parquet(sorted_path)
-    pred = (F.col("l_shipdate") >= "1997-03-01") & (F.col("l_shipdate") < "1997-04-01")
-    timed("filtered_scan_unsorted_12M",
-          lambda: li.filter(pred).agg(F.sum("l_quantity")).first()[0] is not None)
-    timed("filtered_scan_datesorted_12M",
-          lambda: li_sorted.filter(pred).agg(F.sum("l_quantity")).first()[0] is not None)
-
-    # warm the md5/array-transform codegen on the small corpus first:
-    # the generated shingling/signature loops run ~10x slower until
-    # the JVM JIT compiles them (a one-time cost on a real cluster)
-    minhash_lsh_pairs(read_table(spark, SF_DIR, "documents"),
-                      "text", "doc_id", num_hashes=16, bands=4,
-                      shingle_n=2, jaccard_threshold=0.5).count()
-    timed("minhash_dedup_100k_docs", lambda: minhash_lsh_pairs(
-        docs, "text", "doc_id", num_hashes=16, bands=4,
-        shingle_n=2, jaccard_threshold=0.5).count())
-
-    # the EXACT tier on the same corpus: complete prefix+length+
-    # positional filters, ~4M verified candidates — the price of a
-    # guarantee the probabilistic MinHash tier doesn't give. Warmed
-    # the same way (JIT compiles the shingle codegen on the small
-    # corpus first).
-    from quickbooks_aws_etl_pipeline_spark.operators.dedup import (
-        ngram_jaccard_prefix_pairs)
-    ngram_jaccard_prefix_pairs(read_table(spark, SF_DIR, "documents"),
-                               "text", "doc_id").count()
-    timed("ngram_exact_dedup_100k_docs", lambda: ngram_jaccard_prefix_pairs(
-        docs, "text", "doc_id").count())
-
-    # segment dedup at 100k docs (half exact replicas -> heavy
-    # cross-doc segment repetition). The claim under test: shuffle is
-    # keyed on the distinct-segment vocabulary after map-side combine,
-    # not on corpus size; collect_list is bounded per document.
-    from quickbooks_aws_etl_pipeline_spark.operators.dedup import (
-        segment_dedup_rebuild)
-    segment_dedup_rebuild(read_table(spark, SF_DIR, "documents"),
-                          "text", "doc_id").count()  # JIT warm
-    timed("segment_dedup_100k_docs", lambda: segment_dedup_rebuild(
-        docs, "text", "doc_id").count())
-
-    # Count-Min sketch over 12M lineitem part keys (200k distinct) and
-    # 2M event users. The claim under test: the sketch table is
-    # depth*width rows no matter the input — shuffle volume stays at
-    # sketch size x tasks while the corpus grows 20x.
-    from quickbooks_aws_etl_pipeline_spark.operators.sketch import (
-        cms_build, cms_estimate)
-    cms_build(read_table(spark, SF_DIR, "lineitem"), "l_partkey").count()
-    timed("cms_build_12M_keys", lambda: cms_build(li, "l_partkey").count())
-    timed("cms_build_2M_events", lambda: cms_build(ev, "user_id").count())
-    sketch = cms_build(li, "l_partkey").localCheckpoint(eager=True)
-    hot = li.groupBy("l_partkey").count().orderBy(F.desc("count")).limit(100)
-    timed("cms_estimate_100_keys", lambda: cms_estimate(
-        sketch, hot.select("l_partkey"), "l_partkey").count())
-
-    # round-4 ops at 20x: incremental probe (5% of the corpus as the
-    # "daily batch"), batched ANN over 1M vectors, weighted reservoir
-    # over 100k docs
-    from quickbooks_aws_etl_pipeline_spark.operators.dedup import (
-        incremental_minhash_matches)
-    from quickbooks_aws_etl_pipeline_spark.operators.sampling import (
-        weighted_sample_topk)
-    flagged = docs.withColumn("is_new", F.col("doc_id") % 20 == 0)
-    incremental_minhash_matches(
-        read_table(spark, SF_DIR, "documents").withColumn(
-            "is_new", F.col("doc_id") % 20 == 0),
-        "text", "doc_id", "is_new", shingle_n=2,
-        jaccard_threshold=0.5).count()  # JIT warm
-    timed("incremental_minhash_5pct_batch_100k", lambda:
-          incremental_minhash_matches(flagged, "text", "doc_id", "is_new",
-                                      shingle_n=2,
-                                      jaccard_threshold=0.5).count())
-    timed("weighted_reservoir_100k_docs", lambda:
-          weighted_sample_topk(docs, "doc_id", "n_chars", k=1000).count())
-    qset = (emb2.filter(F.col("vec_id") < 8)
-            .select(F.col("vec_id").alias("query_id"),
-                    F.col("embedding").alias("qv")))
-    from pyspark.sql import Window as W
-    from quickbooks_aws_etl_pipeline_spark.operators.similarity import (
-        as_double_array, cosine)
-    def batch_topk():
-        scored = (emb2.crossJoin(F.broadcast(qset))
-                  .filter(F.col("vec_id") != F.col("query_id"))
-                  .select("query_id", "vec_id",
-                          F.round(cosine(as_double_array(F.col("embedding")),
-                                         as_double_array(F.col("qv"))),
-                                  6).alias("sim")))
-        w = W.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-        return (scored.withColumn("rnk", F.row_number().over(w))
-                .filter(F.col("rnk") <= 10).count())
-    timed("batched_ann_8q_x_1M_vectors", batch_topk)
-
-    # round-4 analytics/model ops: NB classifier (sparse
-    # decomposition), HLL rollup + retention (sketch algebra), funnel
-    # (map-side-collapsing aggregate)
-    from quickbooks_aws_etl_pipeline_spark.operators.sketch import (
-        hll_month_retention, hll_unique_rollup)
-    from quickbooks_aws_etl_pipeline_spark.operators.text import (
-        nb_classifier_eval)
-    orders2 = spark.read.parquet(scratch_path("sf2", "orders.parquet"))
-    nb_classifier_eval(read_table(spark, SF_DIR, "documents"),
-                       "text", "doc_id", "lang").count()  # JIT warm
-    timed("nb_classifier_train_eval_100k_docs", lambda:
-          nb_classifier_eval(docs, "text", "doc_id", "lang").count())
-    timed("hll_rollup_3M_orders", lambda:
-          hll_unique_rollup(orders2, "o_custkey",
-                            F.date_format("o_orderdate", "yyyy-MM")).count())
-    timed("hll_retention_3M_orders", lambda:
-          hll_month_retention(orders2, "o_custkey", "o_orderdate").count())
-
-    # containment tier on the dup-heavy corpus: measures how far the
-    # un-collapsed prefix x inverted-index join carries before the
-    # documented refinements (exact-dup collapse, rarest-first
-    # prefixes) become necessary
-    from quickbooks_aws_etl_pipeline_spark.operators.dedup import (
-        containment_prefix_pairs)
-    containment_prefix_pairs(read_table(spark, SF_DIR, "documents"),
-                             "text", "doc_id").count()  # JIT warm
-    timed("containment_100k_docs", lambda: containment_prefix_pairs(
-        docs, "text", "doc_id", shingle_n=3, threshold=0.8).count())
-
-    # round-4 session-2 ops. Claims under test:
-    # - bloom: build shuffle bounded at m_bits/60 rows (1,024 words
-    #   here) no matter how many million keys feed it;
-    # - kmv: each side collapses to a k-row sketch, so the whole
-    #   overlap estimate moves ~3k rows after the distinct;
-    # - pagerank: per-iteration shuffle is the groupBy(dst) message
-    #   exchange over the (bounded) distinct-pair edge list, and the
-    #   12M-row fact join happens ONCE (checkpointed routing), not
-    #   once per iteration;
-    # - pricing summary: 6-group full-scan aggregate collapses
-    #   map-side — shuffle should be task-count-sized (~KB at 12M).
-    from quickbooks_aws_etl_pipeline_spark.operators.graph import (
-        pagerank_fixed)
-    from quickbooks_aws_etl_pipeline_spark.operators.sketch import (
-        bloom_build, bloom_probe, kmv_overlap)
-    cust = read_table(spark, SF_DIR, "customer")
-    def bloom_3m():
-        bloom = bloom_build(orders2.select("o_custkey"), "o_custkey")
-        return bloom_probe(bloom, cust.select("c_custkey"),
-                           "c_custkey").count()
-    timed("bloom_build_3M_probe_15k", bloom_3m)
-    half_a = orders2.filter(F.col("o_orderkey") % 2 == 0)
-    half_b = orders2.filter(F.col("o_custkey") % 3 == 0)
-    timed("kmv_overlap_3M_orders", lambda: kmv_overlap(
-        half_a, half_b, "o_custkey", k=64).count())
-    def pagerank_12m():
-        pairs = (li.join(orders2,
-                         F.col("l_orderkey") == F.col("o_orderkey"))
-                 .select(F.concat(F.lit("C"),
-                                  F.col("o_custkey").cast("string"))
-                         .alias("c_node"),
-                         F.concat(F.lit("S"),
-                                  F.col("l_suppkey").cast("string"))
-                         .alias("s_node"))
-                 .distinct())
-        edges = (pairs.selectExpr("c_node AS src", "s_node AS dst")
-                 .unionByName(pairs.selectExpr("s_node AS src",
-                                               "c_node AS dst")))
-        return pagerank_fixed(edges, iterations=3).count()
-    timed("pagerank_12M_lines_3iter", pagerank_12m)
-    timed("pricing_summary_12M", lambda: (
-        li.filter(F.col("l_shipdate") <= "2001-09-01")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(exact_sum(F.col("l_quantity")).alias("sum_qty"),
-             F.count(F.lit(1)).alias("n"))
-        .count()))
-
-    # session-2 wave 3: PMI collocations (inline pair expansion,
-    # vocabulary-bounded shuffles), bloom-prefiltered dedup (filter-
-    # sized build + per-batch probe), gram matrix (d^2-bounded).
-    from quickbooks_aws_etl_pipeline_spark.operators.text import (
-        cooccurrence_pmi)
-    from quickbooks_aws_etl_pipeline_spark.operators.similarity import (
-        gram_matrix)
-    timed("pmi_100k_docs", lambda: cooccurrence_pmi(
-        docs, "text", "doc_id", min_count=5, k=30).count())
-    def bloom_prefilter_100k():
-        from quickbooks_aws_etl_pipeline_spark.operators.sketch import (
-            bloom_build, bloom_probe)
-        key = F.md5(F.encode(F.col("text"), "UTF-8")).alias("k")
-        corpus = docs.filter(F.col("doc_id") % 3 == 0).select(key).distinct()
-        batch = docs.filter(F.col("doc_id") % 2 == 0).select(key).distinct()
-        bloom = bloom_build(corpus, "k", m_bits=614400, k=5)
-        return (bloom_probe(bloom, batch, "k", m_bits=614400, k=5)
-                .groupBy("bloom_member").count().count())
-    timed("bloom_prefilter_100k_docs", bloom_prefilter_100k)
-    emb100k = spark.read.parquet(scratch_path("sf2", "embeddings.parquet")) \
-        if os.path.isdir(scratch_path("sf2", "embeddings.parquet")) else None
-    if emb100k is not None:
-        timed("gram_matrix_100k_vectors", lambda: gram_matrix(
-            emb100k.limit(100000), "embedding").count())
-
-
-def wave4_probes() -> None:
-    """Round-4 wave-4 additions: BPE training (vocab-bounded
-    iterations over 100k docs), bigram scoring (two vocab shuffles +
-    rescore join), blocked kNN graph (sum(block^2) candidates over
-    100k vectors), sessionization (user-partitioned windows over 20x
-    timelines), and the triangle census on a denser co-supply graph.
-    Run: python scale_probe.py --wave4
-    """
-    spark = get_spark("scale-probe", extra_conf={
-        "spark.ui.enabled": "false", "spark.driver.memory": "48g"})
-    global _SPARK
-    _SPARK = spark
-    if not os.path.isdir(scratch_path("sf2", "documents.parquet")):
-        generate(spark)
-    docs = spark.read.parquet(scratch_path("sf2", "documents.parquet"))
-    events = spark.read.parquet(scratch_path("sf2", "events.parquet"))
-    li = spark.read.parquet(scratch_path("sf2", "lineitem.parquet"))
-
-    from quickbooks_aws_etl_pipeline_spark.operators.text import (
-        bigram_cond_logprob_scores, bpe_train_merges, gopher_quality_rules)
-    timed("bpe_train_100k_docs_10merges", lambda: bpe_train_merges(
-        docs, "text", n_merges=10).count())
-    timed("bigram_logprob_100k_docs", lambda: bigram_cond_logprob_scores(
-        docs, "text", "doc_id").count())
-    timed("gopher_rules_100k_docs", lambda: gopher_quality_rules(
-        docs, "text", "doc_id").count())
-
-    def sessionize_6m():
-        w_user = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        us = F.unix_micros(F.col("ts"))
-        brk = F.coalesce(((us - F.lag(us).over(w_user))
-                          > 30 * 60 * 1_000_000).cast("int"), F.lit(1))
-        sess = (events.withColumn("brk", brk)
-                .withColumn("session_id", F.sum("brk").over(
-                    w_user.rowsBetween(Window.unboundedPreceding, 0))))
-        return (sess.groupBy("user_id", "session_id")
-                .agg(F.count(F.lit(1)).alias("n_events"))
-                .count())
-    timed("sessionize_6M_events", sessionize_6m)
-
-    from quickbooks_aws_etl_pipeline_spark.operators.graph import (
-        triangle_stats)
-    def triangles_12m():
-        ps = li.select("l_partkey", "l_suppkey").distinct()
-        a = ps.withColumnRenamed("l_suppkey", "src")
-        b = ps.withColumnRenamed("l_suppkey", "dst")
-        edges = (a.join(b, "l_partkey")
-                 .filter(F.col("src") < F.col("dst"))
-                 .select("src", "dst").distinct())
-        return triangle_stats(edges).collect()[0].asDict()
-    timed("triangles_12M_lineitem", triangles_12m)
-
-    emb = (spark.read.parquet(scratch_path("sf2", "embeddings.parquet"))
-           if os.path.isdir(scratch_path("sf2", "embeddings.parquet"))
-           else None)
-    if emb is not None:
-        from quickbooks_aws_etl_pipeline_spark.operators.similarity import (
-            hyperplanes, knn_graph_blocked, pca_project_topk)
-        e100k = emb.limit(100000)
-        # Label-only blocking at 100k vectors is 10 blocks of 10k ->
-        # 1e9 candidate pairs: the probe that PROVES coarse blocks
-        # don't bound. The scale path composes the label with a
-        # hyperplane-LSH bucket (6 bits -> ~64 sub-buckets), cutting
-        # candidates ~64x while keeping neighbors that agree on the
-        # 6-bit sketch — exactly the IVF-cell refinement the operator
-        # docstring prescribes.
-        planes = hyperplanes(6, 64)
-        sig = sum(
-            ((F.aggregate(
-                F.zip_with("embedding",
-                           F.array(*[F.lit(float(c)) for c in planes[b]]),
-                           lambda x, y: x.cast("double") * y),
-                F.lit(0.0), lambda a, v: a + v) > 0).cast("int")
-             * (2 ** b) for b in range(6)),
-            F.lit(0))
-        blocked = e100k.withColumn(
-            "blk2", F.concat(F.col("label").cast("string"),
-                             F.lit(":"), sig.cast("string")))
-        timed("knn_graph_100k_label_lsh_blocked", lambda: knn_graph_blocked(
-            blocked, "embedding", "vec_id", "blk2", k=5).count())
-        timed("pca_project_100k_vectors", lambda: pca_project_topk(
-            e100k, "embedding", "vec_id", k=8).count())
-
-
-def wave5_probes() -> None:
-    """Round-5 addition: duplicate-span islands (ExactSubstr tier)
-    over the 100k-doc dup-heavy corpus. Claims under test: the
-    n-gram expansion never shuffles (codegen transform), the dup-set
-    aggregate is vocabulary-keyed (map-side combine collapses the
-    half-replica duplication), and the island window only sees the
-    sparse duplicated positions. Run: python scale_probe.py --wave5
-    """
-    spark = get_spark("scale-probe", extra_conf={
-        "spark.ui.enabled": "false", "spark.driver.memory": "48g"})
-    global _SPARK
-    _SPARK = spark
-    if not os.path.isdir(scratch_path("sf2", "documents.parquet")):
-        generate(spark)
-    docs = spark.read.parquet(scratch_path("sf2", "documents.parquet"))
-    from quickbooks_aws_etl_pipeline_spark.operators.dedup import (
-        duplicate_span_islands)
-    duplicate_span_islands(read_table(spark, SF_DIR, "documents"),
-                           "text", "doc_id", n=8).count()  # JIT warm
-    timed("duplicate_spans_100k_docs", lambda: duplicate_span_islands(
-        docs, "text", "doc_id", n=8).count())
-
-    # the APPLY step on the same corpus: detection plan + per-doc
-    # spans collect + left join + codegen token rewrite
-    from quickbooks_aws_etl_pipeline_spark.operators.dedup import (
-        duplicate_span_rewrite)
-    # NOTE: .count() is the WRONG action here — the rewrite's left
-    # join has provably-unique right keys (groupBy(doc_id)), so
-    # Spark's join elimination drops the whole detection subtree
-    # under a bare count (measured: 0.48 s / 0.00 MB shuffle).
-    # Aggregate the rewrite OUTPUT so the plan actually runs.
-    duplicate_span_rewrite(read_table(spark, SF_DIR, "documents"),
-                           "text", "doc_id", n=8) \
-        .agg(F.sum("n_kept")).collect()  # JIT warm
-    timed("duplicate_span_rewrite_100k_docs", lambda: int(
-        duplicate_span_rewrite(docs, "text", "doc_id", n=8)
-        .agg(F.sum("n_kept")).first()[0]))
-
-    # tokenizer apply at 100k docs: 10-merge train (the dominant
-    # cost — 20 vocab-bounded jobs) + vocabulary replay + word join
-    from quickbooks_aws_etl_pipeline_spark.operators.text import (
-        bpe_apply_token_counts)
-    bpe_apply_token_counts(read_table(spark, SF_DIR, "documents"),
-                           "text", "doc_id", n_merges=10).count()  # warm
-    timed("bpe_apply_100k_docs", lambda: bpe_apply_token_counts(
-        docs, "text", "doc_id", n_merges=10).count())
-
-
-def wave7_probes() -> None:
-    """Round-6 addition: A/B of the span-dedup EXACT tier (gram
-    strings in the dup-set exchange) vs the 128-bit FINGERPRINT tier
-    (two xxhash64 seeds, 16-byte fixed shuffle rows) on the same
-    100k-doc dup-heavy corpus. Claim under test: identical island
-    counts, materially smaller shuffle for the fp tier. Run:
-    python scale_probe.py --wave7
-    """
-    spark = get_spark("scale-probe", extra_conf={
-        "spark.ui.enabled": "false", "spark.driver.memory": "48g"})
-    global _SPARK
-    _SPARK = spark
-    if not os.path.isdir(scratch_path("sf2", "documents.parquet")):
-        generate(spark)
-    docs = spark.read.parquet(scratch_path("sf2", "documents.parquet"))
-    from quickbooks_aws_etl_pipeline_spark.operators.dedup import (
-        duplicate_span_islands)
-    small = read_table(spark, SF_DIR, "documents")
-    duplicate_span_islands(small, "text", "doc_id", n=8).count()  # JIT warm
-    duplicate_span_islands(small, "text", "doc_id", n=8,
-                           fingerprint=True).count()  # JIT warm
-    timed("duplicate_spans_exact_100k_docs", lambda: duplicate_span_islands(
-        docs, "text", "doc_id", n=8).count())
-    timed("duplicate_spans_fp_100k_docs", lambda: duplicate_span_islands(
-        docs, "text", "doc_id", n=8, fingerprint=True).count())
-    # second alternating rep of each: first-rep codegen/JIT inflation
-    # on a fresh lineage is the dominant noise source (NOTES round 5)
-    timed("duplicate_spans_exact_100k_docs_rep2",
-          lambda: duplicate_span_islands(
-              docs, "text", "doc_id", n=8).count())
-    timed("duplicate_spans_fp_100k_docs_rep2",
-          lambda: duplicate_span_islands(
-              docs, "text", "doc_id", n=8, fingerprint=True).count())
-
-    # rewrite-path fp A/B (the heavier span pass: its gram exchange
-    # carries (min, max, argmin) partials)
-    from quickbooks_aws_etl_pipeline_spark.operators.dedup import (
-        duplicate_span_rewrite)
-    small2 = read_table(spark, SF_DIR, "documents")
-    duplicate_span_rewrite(small2, "text", "doc_id", n=8) \
-        .agg(F.sum("n_kept")).collect()  # JIT warm
-    duplicate_span_rewrite(small2, "text", "doc_id", n=8,
-                           fingerprint=True) \
-        .agg(F.sum("n_kept")).collect()  # JIT warm
-    timed("span_rewrite_exact_100k_docs", lambda: int(
-        duplicate_span_rewrite(docs, "text", "doc_id", n=8)
-        .agg(F.sum("n_kept")).first()[0]))
-    timed("span_rewrite_fp_100k_docs", lambda: int(
-        duplicate_span_rewrite(docs, "text", "doc_id", n=8,
-                               fingerprint=True)
-        .agg(F.sum("n_kept")).first()[0]))
-
-    # DSIR importance resampling at 100k docs: claim under test —
-    # bucket stats stay 4096-bounded (one corpus aggregate + one
-    # scoring pass; the weight join broadcasts)
-    from quickbooks_aws_etl_pipeline_spark.operators.sampling import (
-        dsir_importance_select, perplexity_buckets)
-    target = F.pmod(F.abs(F.hash("doc_id")), F.lit(10)) == 0
-    dsir_importance_select(read_table(spark, SF_DIR, "documents"),
-                           "text", "doc_id",
-                           F.col("source") == "src0").count()  # JIT warm
-    timed("dsir_importance_100k_docs", lambda: dsir_importance_select(
-        docs, "text", "doc_id", target).count())
-
-    # CCNet perplexity tiers at 100k docs: the bounded-histogram
-    # global rank (driver holds only centi-logprob bin counts)
-    perplexity_buckets(read_table(spark, SF_DIR, "documents"),
-                       "text", "doc_id").count()  # JIT warm
-    timed("ccnet_ppl_buckets_100k_docs", lambda: perplexity_buckets(
-        docs, "text", "doc_id").count())
-
-    # per-dimension standardization at 100k vectors: the d-bounded
-    # moments exchange claim (shuffle must not grow with rows)
-    from quickbooks_aws_etl_pipeline_spark.operators.similarity import (
-        standardize_stats)
-    vecs = spark.read.parquet(scratch_path("sf2", "embeddings.parquet"))
-    standardize_stats(read_table(spark, SF_DIR, "embeddings"),
-                      "embedding").count()  # JIT warm
-    timed("standardize_stats_100k_vectors",
-          lambda: standardize_stats(vecs, "embedding").count())
-
-
-def _generate_sf5(spark) -> None:
-    """50x replicas of the sf0.1 tables the wave-8 curves need:
-    lineitem (30M rows) and embeddings (2.5M x 64-dim vectors),
-    built with the same replica recipe as generate()."""
-    li = read_table(spark, SF_DIR, "lineitem")
-    rep50 = F.explode(F.sequence(F.lit(0), F.lit(49))).alias("rep")
-    max_ok = li.agg(F.max("l_orderkey")).first()[0]
-    (li.select("*", rep50)
-       .withColumn("l_orderkey", F.col("l_orderkey") + F.col("rep") * (max_ok + 1))
-       .drop("rep").repartition(64)
-       .write.mode("overwrite").parquet(scratch_path("sf5", "lineitem.parquet")))
-    emb = read_table(spark, SF_DIR, "embeddings")
-    (emb.select("*", rep50)
-       .withColumn("vec_id", F.col("vec_id") + F.col("rep") * 10000000)
-       .withColumn("embedding", F.transform(
-           "embedding",
-           lambda x: x + (F.col("rep").cast("float") - 25.0) / 2500.0))
-       .drop("rep").repartition(32)
-       .write.mode("overwrite").parquet(scratch_path("sf5", "embeddings.parquet")))
-
-
-def wave8_probes() -> None:
-    """Round-7 (r6 verdict task 5): growth CURVES for the two
-    remaining full-corpus >10 s keys — the bounded production tier
-    vs its exhaustive ground-truth sibling, each at 20x (sf2) and
-    50x (sf5) of the sf0.1 corpus (40k/100k vectors, 12M/30M lineitem rows). Claims under test:
-
-    - sim_topk_cosine_ivf_learned's cost is Lloyd's over the corpus
-      (iters scans + (cell,pos) exchanges); the trainsampled tier
-      cuts exactly that term by the 1/4 sample rate while the
-      search still covers every vector, so its curve must flatten
-      relative to the full trainer as vectors grow 20x -> 50x.
-    - graph_link_prediction's wedge join is sum(deg^2); the p=1/4
-      node sample bounds it ~64x, so the sampled curve must grow
-      far slower than the exhaustive one on the same graph.
-
-    Run: python scale_probe.py --wave8
-    """
-    spark = get_spark("scale-probe", extra_conf={
-        "spark.ui.enabled": "false", "spark.driver.memory": "48g"})
-    global _SPARK
-    _SPARK = spark
-    if not os.path.isdir(scratch_path("sf2", "documents.parquet")):
-        generate(spark)
-    if not os.path.isdir(scratch_path("sf5", "embeddings.parquet")):
-        _generate_sf5(spark)
-    sf2dir, sf5dir = scratch_path("sf2"), scratch_path("sf5")
-
-    from quickbooks_aws_etl_pipeline_spark.plans import QUERIES as Q
-
-    # JIT warm on the small corpus (same policy as every wave)
-    Q["sim_topk_cosine_ivf_trainsampled"](spark, SF_DIR).collect()
-    Q["graph_link_prediction_sampled"](spark, SF_DIR).count()
-
-    for tag, d in (("sf2_40k_vectors", sf2dir), ("sf5_100k_vectors", sf5dir)):
-        timed(f"ivf_trainsampled_{tag}", lambda d=d: Q[
-            "sim_topk_cosine_ivf_trainsampled"](spark, d).collect() and 1)
-        timed(f"ivf_learned_full_{tag}", lambda d=d: Q[
-            "sim_topk_cosine_ivf_learned"](spark, d).collect() and 1)
-    for tag, d in (("sf2_12M_lines", sf2dir), ("sf5_30M_lines", sf5dir)):
-        # aggregate an OUTPUT column (join-elimination lesson, wave 6)
-        timed(f"linkpred_sampled_{tag}", lambda d=d: Q[
-            "graph_link_prediction_sampled"](spark, d)
-            .agg(F.sum("jaccard")).collect() and 1)
-        timed(f"linkpred_exhaustive_{tag}", lambda d=d: Q[
-            "graph_link_prediction"](spark, d)
-            .agg(F.sum("jaccard")).collect() and 1)
-
-
-def wave6_probes() -> None:
-    """Round-5 session-2 additions. Claims under test: the hashing-
-    trick embedding shuffles NOTHING at any corpus size (narrow map +
-    explode); token-budget selection's shuffles are the score
-    histogram plus the kept-bucket windows (pruned buckets never
-    sort); the Zipf head's rank runs entirely on head buckets (the
-    freq=1 tail is offset-pruned); rate anomaly's exchange carries
-    minute buckets, not events; fuzzy decontamination's candidate
-    join scales with the 5% eval slice. Run: python scale_probe.py
-    --wave6
-    """
-    spark = get_spark("scale-probe", extra_conf={
-        "spark.ui.enabled": "false", "spark.driver.memory": "48g"})
-    global _SPARK
-    _SPARK = spark
-    if not os.path.isdir(scratch_path("sf2", "documents.parquet")):
-        generate(spark)
-    docs = spark.read.parquet(scratch_path("sf2", "documents.parquet"))
-    events = spark.read.parquet(scratch_path("sf2", "events.parquet"))
-    small = read_table(spark, SF_DIR, "documents")
-
-    from quickbooks_aws_etl_pipeline_spark.operators.dedup import (
-        incremental_minhash_matches)
-    from quickbooks_aws_etl_pipeline_spark.operators.sampling import (
-        token_budget_selection)
-    from quickbooks_aws_etl_pipeline_spark.operators.text import (
-        hash_embedding_rows, zipf_head)
-
-    hash_embedding_rows(small, "text", "doc_id").count()  # JIT warm
-    timed("hash_embedding_100k_docs", lambda: hash_embedding_rows(
-        docs, "text", "doc_id", dims=16)
-        .agg(F.sum("weight")).collect() and 1)
-
-    token_budget_selection(small, "text", "doc_id").count()  # warm
-    timed("token_budget_100k_docs", lambda: token_budget_selection(
-        docs, "text", "doc_id").agg(F.sum("n_tokens")).collect() and 1)
-
-    zipf_head(small, "text", "doc_id").count()  # warm
-    timed("zipf_head_100k_docs", lambda: zipf_head(
-        docs, "text", "doc_id", k=100).agg(F.sum("freq")).collect() and 1)
-
-    per_min = (events.groupBy(F.date_trunc("minute", F.col("ts"))
-                              .alias("minute"))
-               .agg(F.count(F.lit(1)).alias("n")))
-    timed("rate_buckets_6M_events", lambda: per_min.count())
-
-    flagged = docs.withColumn("is_eval", F.col("doc_id") % 20 == 0)
-    timed("decontaminate_minhash_100k_docs", lambda:
-          incremental_minhash_matches(flagged, "text", "doc_id",
-                                      "is_eval", num_hashes=16, bands=4,
-                                      shingle_n=2, jaccard_threshold=0.3)
-          .count())
-
-    # second batch: bootstrap over 3M orders (narrow x32 explode, one
-    # 32-group exchange), 4th-moment profile + Markov transitions over
-    # 6M events (group-/vocab-bounded exchanges), and the end-to-end
-    # curation pipeline over the dup-heavy corpus
-    from quickbooks_aws_etl_pipeline_spark.operators.sampling import (
-        poisson_bootstrap_means)
-    orders2 = spark.read.parquet(scratch_path("sf2", "orders.parquet"))
-    poisson_bootstrap_means(read_table(spark, SF_DIR, "orders"),
-                            "o_totalprice", "o_orderkey").count()  # warm
-    timed("poisson_bootstrap_3M_orders", lambda: poisson_bootstrap_means(
-        orders2, "o_totalprice", "o_orderkey", replicates=32)
-        .agg(F.sum("n_eff")).collect() and 1)
-
-    from pyspark.sql import Window as W
-    dec = lambda c: c.cast("decimal(28,8)")  # noqa: E731
-    v = F.col("value")
-    timed("higher_moments_6M_events", lambda: (
-        events.filter(v.isNotNull()).groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum(dec(v)).alias("s1"),
-             F.sum(dec(v * v)).alias("s2"),
-             F.sum(dec(v * v * v)).alias("s3"),
-             F.sum(dec(v * v * v * v)).alias("s4")).count()))
-    wl = W.partitionBy("user_id").orderBy("ts", "event_id")
-    timed("markov_transitions_6M_events", lambda: (
-        events.select("user_id", "ts", "event_id", "event_type")
-        .withColumn("prev", F.lag("event_type").over(wl))
-        .filter(F.col("prev").isNotNull())
-        .groupBy("prev", "event_type").count().count()))
-
-    from quickbooks_aws_etl_pipeline_spark.operators.dedup import (
-        normalized_text_key)
-    from quickbooks_aws_etl_pipeline_spark.operators.sampling import (
-        hash_bucket)
-    from quickbooks_aws_etl_pipeline_spark.operators.text import tokens
-
-    def curation():
-        keepers = (docs.select(normalized_text_key(F.col("text"))
-                               .alias("nk"), "doc_id")
-                   .groupBy("nk").agg(F.min("doc_id").alias("doc_id")))
-        b = hash_bucket(F.col("doc_id"))
-        split = (F.when(b < 80, "train")
-                 .when(b < 90, "valid").otherwise("test"))
-        return (docs.join(keepers.select("doc_id"), "doc_id")
-                .withColumn("n_tokens",
-                            F.size(tokens(F.col("text"))).cast("bigint"))
-                .filter(F.col("n_tokens") >= 10)
-                .withColumn("split", split)
-                .groupBy("split", "lang")
-                .agg(F.count(F.lit(1)).alias("n_docs"),
-                     F.sum("n_tokens").alias("n_tokens"))
-                .agg(F.sum("n_docs"), F.sum("n_tokens")).collect() and 1)
-    timed("curation_pipeline_100k_docs", curation)
-
-    # third batch: CUSUM drift (bounded daily pre-aggregate), AMS F2
-    # (constant-width exchange vs the key-bounded exact F2), epoch
-    # upsampling (narrow guarded explode), audio windows (overlap
-    # fan-out through Arrow)
-    wd = W.partitionBy("event_type").orderBy("day")
-    wcum = wd.rowsBetween(W.unboundedPreceding, W.currentRow)
-    def cusum():
-        daily = (events.filter(F.col("value").isNotNull())
-                 .groupBy("event_type", F.to_date("ts").alias("day"))
-                 .agg((F.sum(F.col("value").cast("decimal(18,4)"))
-                       * F.lit(10000)).cast("bigint").alias("v")))
-        tot = daily.groupBy("event_type").agg(
-            F.sum("v").alias("t"), F.count(F.lit(1)).alias("nd"))
-        d = (daily.join(F.broadcast(tot.select(
-                "event_type", F.expr("t div nd").alias("k"))),
-                "event_type")
-             .select("event_type", "day", (F.col("v") - F.col("k"))
-                     .alias("x")))
-        cm = d.select("event_type", "day",
-                      F.sum("x").over(wcum).alias("cum"))
-        return (cm.select((F.col("cum") - F.least(
-            F.lit(0).cast("bigint"), F.min("cum").over(wcum)))
-            .alias("s")).agg(F.sum("s")).collect() and 1)
-    timed("cusum_drift_6M_events", cusum)
-
-    from quickbooks_aws_etl_pipeline_spark.operators.text import md5_long
-    def ams():
-        signs = [
-            F.when(md5_long(F.concat(F.lit(f"ams{i}:"),
-                                     F.col("user_id").cast("string")))
-                   .bitwiseAND(F.lit(1)) == 0, F.lit(1))
-            .otherwise(F.lit(-1)).cast("bigint").alias(f"s{i}")
-            for i in range(16)]
-        return (events.select(*signs)
-                .agg(*[F.sum(f"s{i}").alias(f"z{i}")
-                       for i in range(16)]).collect() and 1)
-    timed("ams_f2_6M_events", ams)
-
-    from quickbooks_aws_etl_pipeline_spark.operators.multimodal import (
-        audio_windows)
-    audio_windows(small, "text", "doc_id").count()  # warm
-    timed("audio_windows_100k_docs", lambda: audio_windows(
-        docs, "text", "doc_id").count())
-
-    # fourth batch: the user feature-store build (one user-keyed
-    # exchange over 6M events) and hub-capped link prediction over
-    # the 12M-row co-purchase graph
-    from quickbooks_aws_etl_pipeline_spark.plans import QUERIES as Q
-    import os as _os
-    sf2dir = scratch_path("sf2")
-    # events/lineitem live under sf2 with the standard names, so the
-    # registered callables run against it directly
-    # NB: aggregate an OUTPUT column, not .count() — counting the
-    # user-grouped result lets Spark prune the whole sessionization
-    # subtree (only distinct user_ids are needed), same lesson as the
-    # span-rewrite probe
-    Q["pipeline_user_features"](spark, SF_DIR).count()  # warm
-    timed("user_features_6M_events", lambda: Q["pipeline_user_features"](
-        spark, sf2dir).agg(F.sum("events_per_session"),
-                           F.sum("total_value")).collect() and 1)
-    Q["graph_link_prediction"](spark, SF_DIR).count()  # warm
-    timed("link_prediction_12M_lines", lambda: Q["graph_link_prediction"](
-        spark, sf2dir).agg(F.sum("jaccard")).collect() and 1)
-
-
-def wave9_probes() -> None:
-    """Round-7 session-3 additions at 20x (100k dup-heavy docs, 40k
-    vectors, 6M events). Claims under test:
-
-    - pipeline_crawl_refresh: the composed crawl-batch loop's cost is
-      batch-driven (the 5%% batch grows 20x with the corpus, the index
-      probe stays banded) — wall must grow far less than 20x.
-    - select_kcenter_coreset: k-1 fixed narrow scans + top-1 cuts —
-      wall is scan-bound, so 20x vectors must cost well under 20x.
-    - sim_mmr_rerank: one corpus scan + shortlist-sized greedy loop —
-      near-flat wall.
-    - dedup_semantic_cells: cell-blocked pair verify; dup-heavy cells
-      stay bounded by the cell cap.
-    - events_sequence_patterns: one user-keyed exchange; 20x denser
-      timelines -> ~20x string length, wall should track the exchange.
-    - eval_auc_rank: the score histogram is DOMAIN-bounded (<= 1e6+1
-      rows) — 20x docs must not grow the post-scan cost; shuffle_mb
-      is the claim's witness.
-    - split_leakage_safe / pipeline_filter_funnel: one corpus scan +
-      the near-dup pair graph; the heavy-dup corpus (10 exact + 10
-      near replicas per base doc) is the adversarial case for the
-      component map staying broadcastable.
-
-    Run: python scale_probe.py --wave9
-    """
-    spark = get_spark("scale-probe", extra_conf={
-        "spark.ui.enabled": "false", "spark.driver.memory": "48g"})
-    global _SPARK
-    _SPARK = spark
-    if not os.path.isdir(scratch_path("sf2", "documents.parquet")):
-        generate(spark)
-    sf2dir = scratch_path("sf2")
-    from quickbooks_aws_etl_pipeline_spark.plans import QUERIES as Q
-
-    for key, agg_probe in [
-        ("pipeline_crawl_refresh", None),
-        ("select_kcenter_coreset", None),
-        ("sim_mmr_rerank", None),
-        ("dedup_semantic_cells", "kept"),
-        ("events_sequence_patterns", "n_view_to_purchase"),
-        ("eval_auc_rank", None),
-        ("split_leakage_safe", None),
-        ("pipeline_filter_funnel", None),
-        ("select_excess_loss", None),
-        ("pipeline_pretrain_prep", None),
-        ("eval_ann_recall", None),
-    ]:
-        # JIT warm at sf0.1, then the measured sf2 rep (wave policy)
-        Q[key](spark, SF_DIR).collect()
-        if agg_probe:
-            timed(f"{key}_sf2", lambda k=key, a=agg_probe: Q[k](
-                spark, sf2dir).agg(F.count(a)).collect() and 1)
-        else:
-            timed(f"{key}_sf2", lambda k=key: len(
-                Q[k](spark, sf2dir).collect()))
-
-
-def wave10_probes() -> None:
-    """Round-8 additions at 20x (100k dup-heavy docs, 6M events, 20
-    domains x 5000 docs). Claims under test:
-
-    - pipeline_classifier_loop: the NB model is VOCAB-bounded (~31
-      tokens on this corpus) and the metrics are score-domain-
-      bounded; wall must track the two token explodes (train 80% +
-      eval 20% scan), i.e. roughly linear in corpus with no
-      super-linear term from the model or metric stages.
-    - curate_domain_caps: ONE source-keyed exchange; per-domain sort
-      grows linearly in domain size (5000 rows/domain at 20x) — wall
-      should track the exchange, and shuffle_mb is the witness that
-      no second corpus exchange appeared.
-    - stats_domain_mix: corpus work is one map-side-combining
-      aggregate to 20 domain rows; wall near-flat vs corpus growth
-      beyond the scan.
-    - stream_stream_join_outer: user-keyed interval join; 20x denser
-      per-user timelines grow candidate pairs ~linearly (the 30-min
-      lookback bounds per-purchase fan-in); closed-region aggregate
-      stays user-cardinality-sized.
-
-    Run: python scale_probe.py --wave10
-    """
-    spark = get_spark("scale-probe", extra_conf={
-        "spark.ui.enabled": "false", "spark.driver.memory": "48g"})
-    global _SPARK
-    _SPARK = spark
-    if not os.path.isdir(scratch_path("sf2", "documents.parquet")):
-        generate(spark)
-    sf2dir = scratch_path("sf2")
-    from quickbooks_aws_etl_pipeline_spark.plans import QUERIES as Q
-
-    for key in ["pipeline_classifier_loop", "curate_domain_caps",
-                "stats_domain_mix", "stream_stream_join_outer"]:
-        # JIT warm at sf0.1, then the measured sf2 rep (wave policy)
-        Q[key](spark, SF_DIR).collect()
-        timed(f"{key}_sf2", lambda k=key: len(
-            Q[k](spark, sf2dir).collect()))
-
-
-def wave11_probes() -> None:
-    """Round-8 session-2 retrieval/serving tier at 20x (100k docs,
-    40k embeddings). Claims under test (measured once in NOTES; this
-    wave keeps them re-measurable):
-
-    - text_bm25_topk / _batch_queries: the posting barrier bounds the
-      exchange to candidate postings (10.7 MB at 100k docs); batch
-      cost independent of Q.
-    - text_bm25_index_serve / maintenance_bm25_index_refresh: the
-      lifecycles are dominated by the one-time build write; the serve
-      leg is partition-pruned to |query| directories.
-    - sim_margin_bitext_mine: pair cosines computed ONCE behind the
-      pair barrier (pre-barrier: 3 nested-loop joins).
-    - pipeline_rag_retrieval: fusion/diversity/final-cut all run on
-      list-sized relations after the two TakeOrdered legs.
-    - seq_pack_atomic: grouped sequential state — wall tracks the
-      per-group scan, parallel across sources.
-
-    Run: python scale_probe.py --wave11
-    """
-    spark = get_spark("scale-probe", extra_conf={
-        "spark.ui.enabled": "false", "spark.driver.memory": "48g"})
-    global _SPARK
-    _SPARK = spark
-    if not os.path.isdir(scratch_path("sf2", "documents.parquet")):
-        generate(spark)
-    sf2dir = scratch_path("sf2")
-    from quickbooks_aws_etl_pipeline_spark.plans import QUERIES as Q
-
-    for key in ["text_bm25_topk", "text_bm25_batch_queries",
-                "text_bm25_index_serve", "maintenance_bm25_index_refresh",
-                "sim_margin_bitext_mine", "pipeline_rag_retrieval",
-                "pairs_hard_negatives", "eval_retrieval_ndcg",
-                "eval_tokenizer_compression", "seq_pack_atomic",
-                "stream_stream_join_full"]:
-        Q[key](spark, SF_DIR).collect()
-        timed(f"{key}_sf2", lambda k=key: len(
-            Q[k](spark, sf2dir).collect()))
-
-
-
-def wave12_probes() -> None:
-    """Round-9 probes, codified from the r8-verdict-task-7 ad-hoc
-    runs (NOTES round 9). Three scale points where data exists
-    (sf0.1 / sf2=20x / sf8=80x; sf8 has documents, embeddings, and
-    the 80-replica events generated in round 9). Claims under test:
-
-    - pipeline_classifier_loop: vocab-sized shuffles + the r9
-      vocab-broadcast hint — NO corpus-token broadcast (the 426 MiB
-      driver-OOM hazard this wave originally caught at sf8).
-    - curate_domain_caps / stats_domain_mix: scan-bound, near-flat.
-    - stream_stream_join_outer: time grows SLOWER than emitted pairs
-      (pairs 20k/467k/2.69M at 1x/20x/80x — the replica recipe
-      inflates in-window matches quadratically; that is output
-      growth, not a plan defect).
-    - pairs_hard_negatives (+_ivf): the r9 max_by rewrite — full
-      scan parallelism, near-linear growth (the old per-query rank
-      windows went superlinear by 80x).
-    """
-    global _SPARK
-    spark = get_spark("scale-probe-w12", extra_conf={
-        "spark.ui.enabled": "false", "spark.driver.memory": "48g"})
-    _SPARK = spark
-    from quickbooks_aws_etl_pipeline_spark.plans import QUERIES as Q
-    sf_dirs = [("sf01", SF_DIR), ("sf2", scratch_path("sf2"))]
-    if os.path.isdir(scratch_path("sf8")):
-        sf_dirs.append(("sf8", scratch_path("sf8")))
-    doc_keys = ["pipeline_classifier_loop", "curate_domain_caps",
-                "stats_domain_mix", "pairs_hard_negatives",
-                "pairs_hard_negatives_ivf",
-                "eval_classifier_agreement", "eval_memorization_spans",
-                "eval_rank_correlation", "mixture_unimax_budget",
-                "stats_corpus_diff"]
-    ev_keys = ["stream_stream_join_outer"]
-    for key in doc_keys + ev_keys:
-        Q[key](spark, SF_DIR).collect()  # JIT warm
-        for tag, d in sf_dirs:
-            if key in ev_keys and not os.path.isdir(
-                    os.path.join(d, "events.parquet")):
-                continue
-            timed(f"{key}_{tag}", lambda k=key, dd=d: len(
-                Q[k](spark, dd).collect()))
-
-
-def wave13_probes() -> None:
-    """Round-10 probes (r9 verdict tasks 3, 7, 8). Claims under test:
-
-    - graph_label_propagation: 3 unrolled LPA rounds = 3 |edges|
-      message exchanges on ONE lineage — growth must stay near-linear
-      in |edges| (sf0.1 -> sf2 is 20x) and shuffle volume must stay
-      edges-sized; superlinear growth here would mean the per-round
-      label relation re-executes earlier rounds and needs a
-      materialization barrier (measured-win doctrine).
-    - sim_range_search: the r10 min_by rewrite — the old Q=8
-      row_number window capped the reduce side at 8 tasks on a
-      data-dependent hit relation; the aggregate must scan-scale.
-    - sim_range_search_ivf: nprobe/4 cell pruning — time and shuffle
-      below the exact key's at every point, near-flat scan growth.
-    - JDBC at lineitem scale (task 8): partitioned
-      DataFrameWriter.jdbc write (8 input partitions = 8 insert
-      connections) + partitionColumn/numPartitions=8 parallel
-      read-back over embedded Derby, 600k rows sf0.1 and 12M sf2 —
-      the numbered receipt behind sink_jdbc_roundtrip's '100 TB
-      shape' docstring claim.
-    """
-    global _SPARK
-    spark = get_spark("scale-probe-w13", extra_conf={
-        "spark.ui.enabled": "false", "spark.driver.memory": "48g"})
-    _SPARK = spark
-    from quickbooks_aws_etl_pipeline_spark.plans import QUERIES as Q
-    emb_dirs = [("sf01", SF_DIR), ("sf2", scratch_path("sf2"))]
-    if os.path.isdir(scratch_path("sf8")):
-        emb_dirs.append(("sf8", scratch_path("sf8")))
-    li_dirs = [("sf01", SF_DIR), ("sf2", scratch_path("sf2"))]
-    if os.path.isdir(scratch_path("sf8", "lineitem.parquet")):
-        li_dirs.append(("sf8", scratch_path("sf8")))
-    # the exact bitext miner materializes the full |X| x |Y| pair
-    # barrier (~1.3B pairs at sf8) — probed only to sf2; the IVF
-    # form is the one that must stay flat at 80x
-    for key, dirs in [("graph_label_propagation", li_dirs),
-                      ("sim_range_search", emb_dirs),
-                      ("sim_range_search_ivf", emb_dirs),
-                      ("sim_margin_bitext_mine", emb_dirs[:2]),
-                      ("sim_margin_bitext_mine_ivf", emb_dirs),
-                      # the relational spine at 80x (sf8
-                      # lineitem/orders are 80-replica; dims symlink
-                      # sf0.1 — keys are replica-shifted so joins
-                      # stay consistent): flagship must TRANSITION
-                      # from broadcast to shuffle join when orders
-                      # outgrows the 64 MB threshold; the 5-way dim
-                      # join must stay broadcast/near-flat
-                      ("flagship_revenue_by_month_segment", li_dirs),
-                      ("join_5way_regional_revenue", li_dirs)]:
-        Q[key](spark, SF_DIR).collect()  # JIT warm
-        for tag, d in dirs:
-            timed(f"{key}_{tag}", lambda k=key, dd=d: len(
-                Q[k](spark, dd).collect()))
-
-    # JDBC wire at fact-table scale: 8-way partitioned write +
-    # 8-way range-split read-back, one Derby db per scale point
-    from quickbooks_aws_etl_pipeline_spark.sinks import derby_jdbc_url
-
-    def jdbc_roundtrip(d: str, tag: str) -> int:
-        li8 = (spark.read.parquet(os.path.join(d, "lineitem.parquet"))
-               .select("l_orderkey", "l_linenumber", "l_quantity",
-                       "l_extendedprice")
-               .repartition(8))
-        url, drv = derby_jdbc_url(
-            spark, scratch_path("jdbc_probe", tag))
-        (li8.write.mode("overwrite").format("jdbc")
-         .option("url", url).option("dbtable", "qb_li_wh")
-         .option("driver", drv).option("batchsize", "10000").save())
-        hi = li8.agg(F.max("l_orderkey")).first()[0]
-        back = (spark.read.format("jdbc").option("url", url)
-                .option("dbtable", "qb_li_wh").option("driver", drv)
-                .option("partitionColumn", "L_ORDERKEY")
-                .option("lowerBound", "0").option("upperBound", str(hi))
-                .option("numPartitions", "8").load())
-        return back.count()
-
-    for tag, d in li_dirs:
-        timed(f"jdbc_lineitem_roundtrip_{tag}",
-              lambda dd=d, tt=tag: jdbc_roundtrip(dd, tt))
-
-
-def _generate_sf8(spark) -> None:
-    """80x replicas, codifying the round-10 ad-hoc recipe (NOTES
-    'relational spine at 80x'): lineitem (48M rows) + orders (12M)
-    replica-shifted on orderkey so joins stay consistent, documents
-    at 80x with the same half-identical duplication shape as sf2,
-    and the dimension tables symlinked from sf0.1 (dims don't grow
-    in the replica model — exactly the 100 TB star-schema shape)."""
-    li = read_table(spark, SF_DIR, "lineitem")
-    orders = read_table(spark, SF_DIR, "orders")
-    max_ok = orders.agg(F.max("o_orderkey")).first()[0]
-    rep80 = F.explode(F.sequence(F.lit(0), F.lit(79))).alias("rep")
-    (li.select("*", rep80)
-       .withColumn("l_orderkey", F.col("l_orderkey") + F.col("rep") * (max_ok + 1))
-       .drop("rep").repartition(64)
-       .write.mode("overwrite").parquet(scratch_path("sf8", "lineitem.parquet")))
-    (orders.select("*", rep80)
-       .withColumn("o_orderkey", F.col("o_orderkey") + F.col("rep") * (max_ok + 1))
-       .drop("rep").repartition(16)
-       .write.mode("overwrite").parquet(scratch_path("sf8", "orders.parquet")))
-    docs = read_table(spark, SF_DIR, "documents")
-    (docs.select("*", rep80)
-       .withColumn("doc_id", F.col("doc_id") + F.col("rep") * 1000000)
-       .withColumn("text", F.when(F.col("rep") % 2 == 0, F.col("text"))
-                            .otherwise(F.concat("text", F.lit(" rep"),
-                                                F.col("rep").cast("string"))))
-       .drop("rep").repartition(32)
-       .write.mode("overwrite").parquet(scratch_path("sf8", "documents.parquet")))
-    # events at 80x: same users, 7-second-shifted replicas -> 80x
-    # denser timelines (the sf2 recipe at 80 replicas; added in
-    # round 12 for the events-shaped key probes)
-    events = read_table(spark, SF_DIR, "events")
-    (events.select("*", rep80)
-       .withColumn("event_id", F.col("event_id") + F.col("rep") * 10000000)
-       .withColumn("ts", F.col("ts") + F.make_interval(secs=F.col("rep") * 7))
-       .drop("rep").repartition(32)
-       .write.mode("overwrite").parquet(scratch_path("sf8", "events.parquet")))
-    # embeddings at 80x with PER-COMPONENT deterministic jitter
-    # (r10 verdict task 5): the old uniform per-replica shift left
-    # replicas as near-exact copies, so margin/recall-shaped probes
-    # measured degenerate outputs (bitext mined 0 rows at sf8 —
-    # every margin <= 0). hash(vec_id, rep, i) -> ±0.01 jitter
-    # (~5% of the typical component scale) spreads cosines while
-    # preserving neighborhoods; fully deterministic re-runs.
-    emb = read_table(spark, SF_DIR, "embeddings")
-    (emb.select("*", rep80)
-       .withColumn("embedding", F.transform(
-           "embedding",
-           lambda x, i: x + (F.pmod(F.hash(F.col("vec_id"),
-                                           F.col("rep"), i),
-                                    F.lit(1000)).cast("float")
-                             - 500.0) / 50000.0))
-       .withColumn("vec_id", F.col("vec_id") + F.col("rep") * 10000000)
-       .drop("rep").repartition(32)
-       .write.mode("overwrite").parquet(scratch_path("sf8", "embeddings.parquet")))
-    events = read_table(spark, SF_DIR, "events")
-    (events.select("*", rep80)
-       .withColumn("event_id", F.col("event_id") + F.col("rep") * 10000000)
-       .withColumn("ts", F.col("ts") + F.make_interval(secs=F.col("rep") * 7))
-       .drop("rep").repartition(32)
-       .write.mode("overwrite").parquet(scratch_path("sf8", "events.parquet")))
-    _symlink_dims("sf8")
-
-
-def _symlink_dims(tag: str) -> None:
-    """Dimension tables don't participate in the replica blow-up;
-    link them from the base SF so replica dirs are complete table
-    sets (read_table resolves any key's inputs there)."""
-    for t in ["region", "nation", "customer", "supplier", "part"]:
-        dst = scratch_path(tag, f"{t}.parquet")
-        if not os.path.exists(dst):
-            os.symlink(os.path.join(SF_DIR, f"{t}.parquet"), dst)
-
-
-def wave14_probes() -> None:
-    """Round-10 session-2 probes: the pattern-mining pack at
-    sf0.1 / sf2 (20x) / sf8 (80x facts). Claims under test:
-
-    - graph_bfs_distances: per-round cost is the |frontier-edges|
-      join; replicas collapse to the same distinct pair set, so the
-      measured growth isolates the fact-scan + distinct shuffle —
-      must track the LPA curve (same edge derivation).
-    - mining_basket_pairs: baskets grow with orderkey replicas; the
-      pair join is equi on the basket key, so growth must stay
-      near-linear in |baskets| with vocab-sized aggregates after.
-    - query_pareto_skyline: one fact shuffle to supplier grain, then
-      bucket-sized relations — the refine stage must stay flat while
-      the fact aggregate scan-scales.
-    - attribution_time_decay: probed to sf2 only — the replica
-      recipe densifies per-user 7-day windows, so pair count grows
-      ~quadratically in replicas (output growth, not a plan defect;
-      production timelines have bounded per-user density).
-    - curate_winsorize_scores: per-source windows at 80x docs —
-      scan-bound, near-flat.
-    """
-    global _SPARK
-    spark = get_spark("scale-probe-w14", extra_conf={
-        "spark.ui.enabled": "false", "spark.driver.memory": "48g"})
-    _SPARK = spark
-    if not os.path.isdir(scratch_path("sf2")):
-        generate(spark)
-    _symlink_dims("sf2")
-    if not os.path.isdir(scratch_path("sf8", "lineitem.parquet")):
-        _generate_sf8(spark)
-    from quickbooks_aws_etl_pipeline_spark.plans import QUERIES as Q
-    li_dirs = [("sf01", SF_DIR), ("sf2", scratch_path("sf2")),
-               ("sf8", scratch_path("sf8"))]
-    for key, dirs in [("graph_bfs_distances", li_dirs),
-                      ("mining_basket_pairs", li_dirs),
-                      ("query_pareto_skyline", li_dirs),
-                      ("attribution_time_decay", li_dirs[:2]),
-                      ("curate_winsorize_scores", li_dirs),
-                      # batch 2 (distribution statistics): KS/chi are
-                      # events-shaped (sf2 = 20x-dense timelines; the
-                      # histogram relations stay domain-bounded);
-                      # t-closeness reads the static customer dim, so
-                      # only the base point is meaningful
-                      ("dq_ks_drift", li_dirs),
-                      ("dq_chi_square_assoc", li_dirs),
-                      ("privacy_t_closeness", li_dirs[:1]),
-                      # batch 3: the binary-code ANN must show the
-                      # bit-packed scan-density win (2 bigints vs 64
-                      # floats per vector) holding at 1M/4M vectors;
-                      # Heaps is one gram-keyed exchange, near-linear
-                      ("sim_hamming_topk", li_dirs),
-                      ("text_heaps_law", li_dirs),
-                      ("udf_map_in_arrow", li_dirs),
-                      # batch 6: the SSSP edge build is the pair
-                      # self-join on the basket key; relaxation
-                      # rounds are |edges| message exchanges
-                      ("graph_weighted_sssp", li_dirs)]:
-        Q[key](spark, SF_DIR).collect()  # JIT warm
-        for tag, d in dirs:
-            timed(f"{key}_{tag}", lambda k=key, dd=d: len(
-                Q[k](spark, dd).collect()))
-
-
-def wave16_probes() -> None:
-    """Round-12 probes (r11 verdict tasks 3, 5, 6):
-
-    - **bitext candidate counts** (task 3): the IVF miner's verify
-      stage scores only the probed candidates — this probe counts
-      them per query at 1x/20x/80x so candidate growth vs embedding
-      density is a measured number, not a guess. If growth is
-      superlinear, the per-query cap goes in; if linear, the 255 s
-      sf8 wall is verify compute growing with candidates, bounded.
-    - **incremental top-k at sf8** (task 5): the 3-batch shortlist
-      loop's wall + shuffle on the jittered 80x corpus.
-    - **serve-refresh per-stage timing** (task 5): the composed
-      dedup -> refresh -> serve loop re-probed with the new
-      stage_receipts hook, so the 66 s sf8 wall decomposes into
-      dedup / lexical-refresh / vector-refresh / readback / serve.
-    - **epoch-segmented live streaming state** (task 6): wave15's
-      join/dedup state receipts showed linear-in-events growth
-      because availableNow ingested the WHOLE range in one batch (no
-      mid-run watermark expiry). Here the sf2 events are staged as 8
-      contiguous TIME-ORDERED files (written sequentially, so file
-      mtime order == event-time order — the file source processes
-      oldest-first) and streamed with maxFilesPerTrigger=1: the
-      watermark advances between batches, and per-batch
-      stateOperators rows must show eviction (numRowsRemoved > 0)
-      with peak state bounded by batch + horizon, not history.
-    """
-    global _SPARK
-    spark = get_spark("scale-probe-w16", extra_conf={
-        "spark.ui.enabled": "false", "spark.driver.memory": "48g"})
-    _SPARK = spark
-    if not os.path.isdir(scratch_path("sf2")):
-        generate(spark)
-    _symlink_dims("sf2")
-    if not os.path.isdir(scratch_path("sf8", "lineitem.parquet")):
-        _generate_sf8(spark)
-    _symlink_dims("sf8")
-    from quickbooks_aws_etl_pipeline_spark.plans import QUERIES as Q
-    from quickbooks_aws_etl_pipeline_spark.plans.retrieval_queries import (
-        _ivf_probe_inputs, pipeline_index_serve_refresh)
-    emb_dirs = [("sf01", SF_DIR), ("sf2", scratch_path("sf2")),
-                ("sf8", scratch_path("sf8"))]
-
-    # --- task 3: candidate-count receipts for the IVF bitext miner ---
-    for tag, d in emb_dirs:
-        def cand_stats(dd=d):
-            celled, probe, _q = _ivf_probe_inputs(
-                spark, dd,
-                query_cond=((F.col("label") == 0)
-                            & (F.pmod(F.col("vec_id"), F.lit(5)) == 0)),
-                query_pred=lambda r: (int(r["label"]) == 0
-                                      and int(r["vec_id"]) % 5 == 0))
-            ys = celled.filter(F.col("label") == 1)
-            per_q = (ys.join(F.broadcast(probe),
-                             ys["cell"] == probe["cid"])
-                     .groupBy("query_id")
-                     .agg(F.count(F.lit(1)).alias("n")))
-            r = per_q.agg(F.count(F.lit(1)).alias("nq"),
-                          F.sum("n").alias("tot"),
-                          F.max("n").alias("mx")).first()
-            return {"n_queries": int(r["nq"]),
-                    "n_candidates": int(r["tot"]),
-                    "max_per_query": int(r["mx"])}
-        timed(f"bitext_ivf_candidates_{tag}", cand_stats)
-    Q["sim_margin_bitext_mine_ivf"](spark, SF_DIR).collect()  # JIT warm
-    for tag, d in emb_dirs:
-        timed(f"sim_margin_bitext_mine_ivf_{tag}", lambda dd=d: len(
-            Q["sim_margin_bitext_mine_ivf"](spark, dd).collect()))
-
-    # --- task 5: incremental top-k + per-stage serve-refresh ---
-    Q["sim_topk_incremental"](spark, SF_DIR).collect()  # JIT warm
-    for tag, d in emb_dirs:
-        timed(f"sim_topk_incremental_{tag}", lambda dd=d: len(
-            Q["sim_topk_incremental"](spark, dd).collect()))
-    for tag, d in emb_dirs:
-        def staged(dd=d):
-            rcp: dict = {}
-            t0 = time.perf_counter()
-            rows = pipeline_index_serve_refresh(
-                spark, dd, stage_receipts=rcp).collect()
-            rcp["s5_serve_sec"] = round(time.perf_counter() - t0
-                                        - sum(v for k, v in rcp.items()
-                                              if k.endswith("_sec")), 2)
-            rcp["rows"] = len(rows)
-            return rcp
-        timed(f"pipeline_index_serve_refresh_stages_{tag}", staged)
-
-    # --- task 6: epoch-segmented live streaming state at sf2 ---
-    _wave16_stream_epochs(spark)
-
-
-def _wave16_stream_epochs(spark) -> None:
-    """Stage sf2 events as 8 contiguous time slices written
-    SEQUENTIALLY (mtime order == event-time order), then run the two
-    wave15 linear-state streams with maxFilesPerTrigger-bounded
-    batches and report per-batch stateOperators rows."""
-    import shutil
-
-    from quickbooks_aws_etl_pipeline_spark.io import normalize_event_time
-    from quickbooks_aws_etl_pipeline_spark.streaming.windows import (
-        interval_pair_join_outer, streaming_dedup_within_watermark)
-
-    ev = normalize_event_time(
-        spark.read.parquet(scratch_path("sf2", "events.parquet")))
-    epoch_root = scratch_path("sf2_epochs")
-    watch = os.path.join(epoch_root, "watch")
-    if os.path.isdir(epoch_root):
-        shutil.rmtree(epoch_root)
-    os.makedirs(watch)
-    lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
-    span = (hi - lo).total_seconds()
-    n_slices = 8
-    for i in range(n_slices):
-        a = F.lit(lo) + F.expr(f"INTERVAL {int(span * i / n_slices)} SECONDS")
-        b = F.lit(lo) + F.expr(f"INTERVAL {int(span * (i + 1) / n_slices)} SECONDS")
-        cond = (F.col("ts") >= a) & ((F.col("ts") < b) if i < n_slices - 1
-                                     else F.lit(True))
-        out = os.path.join(epoch_root, f"slice{i}")
-        ev.filter(cond).coalesce(2).write.mode("overwrite").parquet(out)
-        for f in sorted(os.listdir(out)):
-            if not f.startswith(("_", ".")):
-                os.symlink(os.path.join(out, f),
-                           os.path.join(watch, f"{i:02d}_{f}"))
-    schema = ev.schema
-
-    def run_epochs(name: str, build, output_mode: str = "append"):
-        ckpt = os.path.join(epoch_root, f"ckpt_{name}")
-
-        def src():
-            return normalize_event_time(
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1).parquet(watch))
-
-        q = (build(src).writeStream.format("memory")
-             .queryName(f"w16_{name}").outputMode(output_mode)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        sh0 = _shuffle_bytes_total()
-        t0 = time.perf_counter()
-        if not q.awaitTermination(480):
-            q.stop()
-            raise TimeoutError(name)
-        q.stop()
-        batches = []
-        for p in q.recentProgress:
-            ops = p.get("stateOperators") or []
-            if not ops and p.get("numInputRows", 0) == 0:
-                continue
-            batches.append({
-                "batch": p["batchId"],
-                "in_rows": p.get("numInputRows", 0),
-                "state_rows": sum(o.get("numRowsTotal", 0) for o in ops),
-                "removed": sum(o.get("numRowsRemoved", 0) for o in ops),
-                "state_mb": round(sum(o.get("memoryUsedBytes", 0)
-                                      for o in ops) / 1e6, 1)})
-        out = {"probe": f"epoch_stream_{name}",
-               "sec": round(time.perf_counter() - t0, 2),
-               "shuffle_mb": round(
-                   (_shuffle_bytes_total() - sh0) / 1e6, 2),
-               "sink_rows": spark.table(f"w16_{name}").count(),
-               "batches": batches}
-        print(json.dumps(out))
-
-    # dedup: every event arrives twice (self-union), tight 1-hour
-    # watermark — state must evict between epochs
-    run_epochs("dedup_watermark", lambda src: streaming_dedup_within_watermark(
-        src().unionByName(src()), ["event_id"], watermark="1 hour"))
-
-    # left-outer interval join: 30-min lookback, 10-min watermark
-    def outer(src):
-        def side(et):
-            return (src().filter(F.col("event_type") == et)
-                    .withWatermark("ts", "10 minutes"))
-        return interval_pair_join_outer(side("view"), side("purchase"), 30)
-    run_epochs("ss_join_outer", outer)
-
-
-def wave17_probes() -> None:
-    """Round-12 new-key probes at 1x/20x/80x. Claims under test:
-
-    - stats_seasonal_decompose / dq_wasserstein_drift (+ live twin):
-      day-grain / value-domain-bounded relations — near-flat.
-    - maintenance_ivm_join_view: the base-view build scans the fact
-      once (O(history), by definition); the delta legs are
-      delta x broadcast-dim — total wall must track the fact scan.
-    - eval_bradley_terry: the (user, type) count aggregate is the
-      fact-scan term; pair expansion is |types|^2 per user; the MM
-      solve is model-sized — wall must track the count aggregate.
-    - eval_blocking_quality: both dedup tiers are bucket-joined and
-      exact-dup-collapsed; the replica corpus is half identical
-      copies, so the collapse does the heavy lifting at 80x.
-    - eval_rank_correlation: the fused single-pass spearman — the
-      rewrite's scan-halving claim, measured.
-    """
-    global _SPARK
-    spark = get_spark("scale-probe-w17", extra_conf={
-        "spark.ui.enabled": "false", "spark.driver.memory": "48g"})
-    _SPARK = spark
-    if not os.path.isdir(scratch_path("sf2")):
-        generate(spark)
-    _symlink_dims("sf2")
-    if not os.path.isdir(scratch_path("sf8", "lineitem.parquet")):
-        _generate_sf8(spark)
-    _symlink_dims("sf8")
-    from quickbooks_aws_etl_pipeline_spark.plans import QUERIES as Q
-    dirs3 = [("sf01", SF_DIR), ("sf2", scratch_path("sf2")),
-             ("sf8", scratch_path("sf8"))]
-    for key, dirs in [("stats_seasonal_decompose", dirs3),
-                      ("dq_wasserstein_drift", dirs3),
-                      ("stream_wasserstein_drift_live", dirs3),
-                      ("maintenance_ivm_join_view", dirs3),
-                      ("eval_bradley_terry", dirs3),
-                      # blocking quality now probes the full
-                      # 1x/20x/80x ladder: the r13 sampled-truth
-                      # tier (md5(doc_id) % 4 doc sample before the
-                      # exact prefix tier, mirrored in the oracle)
-                      # cuts the replica corpus's ~C(replicas,2)
-                      # truth-pair blowup by 16x, which is exactly
-                      # the sf2->sf8 pair growth — 80x should cost
-                      # about what unsampled sf2 did (112 s)
-                      ("eval_blocking_quality", dirs3),
-                      ("attribution_markov_removal", dirs3),
-                      ("eval_rank_correlation", dirs3)]:
-        Q[key](spark, SF_DIR).collect()  # JIT warm
-        for tag, d in dirs:
-            timed(f"{key}_{tag}", lambda k=key, dd=d: len(
-                Q[k](spark, dd).collect()))
-
-
-def wave18_probes() -> None:
-    """Round-13 probes. Claims under test:
-
-    - stream_ivm_join_live: the r12 wave rows folded the probe's own
-      coalesce(1) input staging into the wall (35.3 s at 80x) — now
-      timed as separate stage/epochs rows (r12 verdict task 6); the
-      epochs themselves must be near the BATCH ivm key's delta legs.
-    - eval_blocking_quality: the sampled-truth tier (md5(doc_id) % 4
-      before the exact prefix tier) makes the 80x row computable —
-      the receipt the r12 weak flag asked for.
-    """
-    global _SPARK
-    spark = get_spark("scale-probe-w18", extra_conf={
-        "spark.ui.enabled": "false", "spark.driver.memory": "48g"})
-    _SPARK = spark
-    if not os.path.isdir(scratch_path("sf2")):
-        generate(spark)
-    _symlink_dims("sf2")
-    if not os.path.isdir(scratch_path("sf8", "lineitem.parquet")):
-        _generate_sf8(spark)
-    _symlink_dims("sf8")
-    from quickbooks_aws_etl_pipeline_spark.plans import QUERIES as Q
-    from quickbooks_aws_etl_pipeline_spark.plans.streaming_queries import (
-        _ivm_live_serve, _ivm_live_stage)
-    dirs3 = [("sf01", SF_DIR), ("sf2", scratch_path("sf2")),
-             ("sf8", scratch_path("sf8"))]
-    Q["stream_ivm_join_live"](spark, SF_DIR).collect()  # JIT warm
-    for tag, d in dirs3:
-        timed(f"ivm_live_stage_{tag}",
-              lambda dd=d: _ivm_live_stage(spark, dd) and 0)
-        timed(f"ivm_live_epochs_{tag}",
-              lambda dd=d: len(_ivm_live_serve(spark, dd).collect()))
-    Q["eval_blocking_quality"](spark, SF_DIR).collect()  # JIT warm
-    for tag, d in dirs3:
-        timed(f"eval_blocking_quality_{tag}", lambda dd=d: len(
-            Q["eval_blocking_quality"](spark, dd).collect()))
-    # eval_rao_kupper must track eval_bradley_terry's envelope (same
-    # build, ties kept as a third outcome instead of filtered)
-    Q["eval_rao_kupper"](spark, SF_DIR).collect()  # JIT warm
-    for tag, d in dirs3:
-        timed(f"eval_rao_kupper_{tag}", lambda dd=d: len(
-            Q["eval_rao_kupper"](spark, dd).collect()))
+    top = max(PROBES[k] for k in keys)
+    dirs = {1: SF_DIR}
+    for n in LADDER[1:]:
+        if n <= top:
+            # named after the base and the count: keys key their scratch
+            # state on the dir's basename (sinks.sf_tag)
+            dirs[n] = scratch_path("scale", f"{sf_tag(SF_DIR)}_x{n}")
+            if "--regen" in argv or not os.path.isdir(dirs[n]):
+                generate(spark, SF_DIR, n, dirs[n])
+    for key in keys:
+        run(spark, key, SF_DIR)  # JIT warm-up, untimed
+        for n in LADDER:
+            if n <= PROBES[key]:
+                timed(spark, key, n, dirs[n])
 
 
 if __name__ == "__main__":
-    if "--wave18" in sys.argv:
-        wave18_probes()
-    elif "--wave17" in sys.argv:
-        wave17_probes()
-    elif "--wave16" in sys.argv:
-        wave16_probes()
-    elif "--wave14" in sys.argv:
-        wave14_probes()
-    elif "--wave13" in sys.argv:
-        wave13_probes()
-    elif "--wave12" in sys.argv:
-        wave12_probes()
-    elif "--wave11" in sys.argv:
-        wave11_probes()
-    elif "--wave10" in sys.argv:
-        wave10_probes()
-    elif "--wave9" in sys.argv:
-        wave9_probes()
-    elif "--wave8" in sys.argv:
-        wave8_probes()
-    elif "--wave4" in sys.argv:
-        wave4_probes()
-    elif "--wave5" in sys.argv:
-        wave5_probes()
-    elif "--wave6" in sys.argv:
-        wave6_probes()
-    elif "--wave7" in sys.argv:
-        wave7_probes()
-    else:
-        main()
+    main(sys.argv[1:])
