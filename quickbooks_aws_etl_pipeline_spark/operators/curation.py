@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .windows import bit_length, bucketed_cumsum
+
 
 def domain_caps(df: DataFrame, domain_col: str, id_col: str,
                 quality_col: str, tokens_col: str,
@@ -146,39 +148,21 @@ def domain_mix_report(df: DataFrame, domain_col: str,
     Scale shape: the corpus-sized work is ONE map-side-combining
     aggregate keyed on the domain; everything after runs on the
     domain-cardinality relation (metadata-sized — ~1e6 rows for the
-    whole web). The global rank uses the distributed-histogram idiom
-    on bucket = BIT LENGTH of n_docs (zipf_head's exact monotonic
-    key): per-bucket counts prefix-summed driver-side (<= 64 longs),
-    bucket-partitioned windows add the offsets — no un-partitioned
-    window even over the domain relation.
+    whole web). The global rank is :func:`.windows.bucketed_cumsum` on
+    bucket = -(BIT LENGTH of n_docs) (zipf_head's exact monotonic key,
+    <= 64 driver offsets) — no un-partitioned window even over the
+    domain relation.
     """
     agg = (df.groupBy(F.col(domain_col).alias("source"))
            .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-                F.sum(tokens_col).cast("bigint").alias("n_tokens"))
-           .withColumn(
-               "bucket",
-               F.length(F.conv(F.col("n_docs").cast("string"), 10, 2))
-               .cast("int"))
-           .localCheckpoint(eager=True))
-    hist = {r["bucket"]: r["n"]
-            for r in agg.groupBy("bucket")
-                        .agg(F.count(F.lit(1)).alias("n")).collect()}
-    rows, acc = [], 0
-    for b in sorted(hist, reverse=True):  # bucket desc == size desc
-        rows.append((b, acc))
-        acc += hist[b]
-    spark = df.sparkSession
-    off = spark.createDataFrame(rows or [(0, 0)],
-                                "bucket int, __offset long")
-    w = (Window.partitionBy("bucket")
-         .orderBy(F.desc("n_docs"), F.asc("source")))
-    tot = agg.agg(F.sum("n_docs").cast("bigint").alias("__nd"),
-                  F.sum("n_tokens").cast("bigint").alias("__ntk"),
-                  F.count(F.lit(1)).cast("bigint").alias("__ndom"))
-    ranked = (agg.join(F.broadcast(off), "bucket")
-              .withColumn("rnk", (F.row_number().over(w)
-                                  + F.col("__offset")).cast("int"))
-              .crossJoin(F.broadcast(tot)))
+                F.sum(tokens_col).cast("bigint").alias("n_tokens")))
+    ranked, (nd, ntk, ndom) = bucketed_cumsum(
+        agg, -bit_length(F.col("n_docs")),
+        [F.desc("n_docs"), F.asc("source")], values=["n_docs", "n_tokens"])
+    ranked = ranked.withColumns({
+        "rnk": F.col("cum_rows").cast("int"),
+        "__nd": F.lit(nd).cast("bigint"), "__ntk": F.lit(ntk).cast("bigint"),
+        "__ndom": F.lit(ndom).cast("bigint")})
     p7 = F.expr(
         "(2 * CAST(n_docs AS DECIMAL(38,0)) * 10000000"
         " + CAST(__nd AS DECIMAL(38,0)))"

@@ -17,12 +17,30 @@ targets.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.numeric import round_ratio6, round_ratio6_dec
+from .windows import bucketed_cumsum
 
 PPM_DOMAIN = 1_000_001  # integer ppm scores live in [0, 1_000_000]
+
+
+def _ppm_bucket(buckets: int) -> Column:
+    """Monotone range-bucket of a ppm ``score``: [0, ``buckets``) on
+    the ppm domain."""
+    return (F.col("score") * F.lit(buckets)
+            / F.lit(PPM_DOMAIN)).cast("int")
+
+
+def _with_cumneg_below(hist: DataFrame, buckets: int,
+                       partition_by: tuple[str, ...] = ()) -> DataFrame:
+    """Adds ``cumneg_below``, the negatives scored strictly below each
+    row's score within its partition, to a (score, neg_s) histogram."""
+    cum, _ = bucketed_cumsum(hist, _ppm_bucket(buckets), ["score"],
+                             values=["neg_s"], partition_by=partition_by)
+    return cum.withColumn("cumneg_below",
+                          F.col("cum_neg_s") - F.col("neg_s"))
 
 
 def auc_rank_ppm(df: DataFrame, score_col: str, pos_col: str,
@@ -42,14 +60,10 @@ def auc_rank_ppm(df: DataFrame, score_col: str, pos_col: str,
 
     Scale shape: one map-side-combining shuffle builds the histogram,
     whose size is bounded by the ppm DOMAIN (<= 1e6+1 rows) no matter
-    how many rows are scored; the cumulative then uses the
-    distributed-histogram idiom (deterministic_global_shuffle,
-    operators/sampling.py:121) — monotonic range-bucket on the score,
-    per-bucket negative totals prefix-summed DRIVER-side (``buckets``
-    longs, not data), bucket-partitioned windows add the offsets back
-    — so no un-partitioned window anywhere. The driver collect is the
-    per-bucket histogram (<= ``buckets`` rows), the codebook
-    convention.
+    how many rows are scored; the negative-count cumulative is
+    :func:`.windows.bucketed_cumsum` on a range-bucket of the score
+    (<= ``buckets`` driver offsets for in-domain scores; an
+    out-of-domain score gets a bucket of its own, never dropped).
 
     Exactness: every pair count is integer; the single division is
     round_ratio6_dec — the DECIMAL(38,0) DIV form of the integer
@@ -69,28 +83,8 @@ def auc_rank_ppm(df: DataFrame, score_col: str, pos_col: str,
             .agg(F.sum(F.when(F.col(pos_col), 1).otherwise(0))
                  .cast("bigint").alias("pos_s"),
                  F.sum(F.when(F.col(pos_col), 0).otherwise(1))
-                 .cast("bigint").alias("neg_s"))
-            .withColumn("bucket",
-                        (F.col("score") * F.lit(buckets)
-                         / F.lit(PPM_DOMAIN)).cast("int"))
-            .localCheckpoint(eager=True))
-    per_b = {r["bucket"]: r["n"]
-             for r in hist.groupBy("bucket")
-                          .agg(F.sum("neg_s").alias("n")).collect()}
-    rows, acc = [], 0
-    for b in range(buckets):
-        if b in per_b:
-            rows.append((b, acc))
-        acc += per_b.get(b, 0)
-    off = df.sparkSession.createDataFrame(
-        rows or [(0, 0)], "bucket int, __offset long")
-    w = (Window.partitionBy("bucket").orderBy("score")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    cum = (hist.join(F.broadcast(off), "bucket")
-           .withColumn("cumneg_below",
-                       F.sum("neg_s").over(w) + F.col("__offset")
-                       - F.col("neg_s")))
-    return (cum.agg(
+                 .cast("bigint").alias("neg_s")))
+    return (_with_cumneg_below(hist, buckets).agg(
         F.sum("pos_s").cast("bigint").alias("n_pos"),
         F.sum("neg_s").cast("bigint").alias("n_neg"),
         F.sum(F.col("pos_s") * (2 * F.col("cumneg_below")
@@ -117,9 +111,8 @@ def auc_bootstrap_ci(df: DataFrame, score_col: str, pos_col: str,
     index-free, bit-identical on both engines. The weighted score
     histogram aggregates on (replicate, score) in ONE map-side-
     combining exchange (<= replicates * score-domain rows); the
-    cumulative uses the distributed-histogram idiom with
-    (replicate, bucket)-partitioned windows and driver-side offsets
-    (<= replicates * buckets longs — the codebook convention). The
+    cumulative is :func:`.windows.bucketed_cumsum` partitioned by
+    replicate (<= replicates * buckets driver offsets). The
     per-replicate ratio is round_ratio6_dec; a replicate that
     resamples away an entire class (probability ~ e^-n — never at
     any real eval size) emits NULL rather than dividing by zero.
@@ -146,30 +139,8 @@ def auc_bootstrap_ci(df: DataFrame, score_col: str, pos_col: str,
             .agg(F.sum(F.when(F.col("__pos"), F.col("w")).otherwise(0))
                  .cast("bigint").alias("pos_s"),
                  F.sum(F.when(F.col("__pos"), 0).otherwise(F.col("w")))
-                 .cast("bigint").alias("neg_s"))
-            .withColumn("bucket",
-                        (F.col("score") * F.lit(buckets)
-                         / F.lit(PPM_DOMAIN)).cast("int"))
-            .localCheckpoint(eager=True))
-    per_b = {(r["rep"], r["bucket"]): r["n"]
-             for r in hist.groupBy("rep", "bucket")
-                          .agg(F.sum("neg_s").alias("n")).collect()}
-    rows = []
-    for rep in range(replicates):
-        acc = 0
-        for b in range(buckets):
-            if (rep, b) in per_b:
-                rows.append((rep, b, acc))
-                acc += per_b[(rep, b)]
-    off = df.sparkSession.createDataFrame(
-        rows or [(0, 0, 0)], "rep int, bucket int, __offset long")
-    win = (Window.partitionBy("rep", "bucket").orderBy("score")
-           .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    cum = (hist.join(F.broadcast(off), ["rep", "bucket"])
-           .withColumn("cumneg_below",
-                       F.sum("neg_s").over(win) + F.col("__offset")
-                       - F.col("neg_s")))
-    agg = (cum.groupBy("rep")
+                 .cast("bigint").alias("neg_s")))
+    agg = (_with_cumneg_below(hist, buckets, ("rep",)).groupBy("rep")
            .agg(F.sum("pos_s").cast("bigint").alias("n_pos_eff"),
                 F.sum("neg_s").cast("bigint").alias("n_neg_eff"),
                 F.sum(F.col("pos_s") * (2 * F.col("cumneg_below")
@@ -422,10 +393,8 @@ def conformal_threshold(df: DataFrame, score_col: str, pos_col: str,
 
     Scale shape: the order statistic is found on the calibration
     score HISTOGRAM (score-domain-bounded, one map-side-combining
-    exchange), cumulated with the distributed-histogram idiom of
-    auc_rank_ppm — monotonic range-buckets, per-bucket totals
-    prefix-summed driver-side (<= ``buckets`` longs, the codebook
-    convention), bucket-partitioned windows — never a global sort or
+    exchange), cumulated by :func:`.windows.bucketed_cumsum` on
+    auc_rank_ppm's range-buckets — never a global sort or
     un-partitioned window. The eval-split metrics are ONE aggregate
     against the broadcast 1-row threshold.
 
@@ -434,28 +403,11 @@ def conformal_threshold(df: DataFrame, score_col: str, pos_col: str,
     """
     cal = df.filter(F.col(cal_flag) & F.col(pos_col))
     hist = (cal.groupBy(F.col(score_col).alias("score"))
-            .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-            .withColumn("bucket",
-                        (F.col("score") * F.lit(buckets)
-                         / F.lit(PPM_DOMAIN)).cast("int"))
-            .localCheckpoint(eager=True))
-    per_b = {r["bucket"]: r["n"]
-             for r in hist.groupBy("bucket")
-                          .agg(F.sum("cnt").alias("n")).collect()}
-    rows, acc = [], 0
-    for b in range(buckets):
-        if b in per_b:
-            rows.append((b, acc))
-        acc += per_b.get(b, 0)
-    n_cal = acc
+            .agg(F.count(F.lit(1)).cast("bigint").alias("cnt")))
+    cum, (n_cal, _) = bucketed_cumsum(hist, _ppm_bucket(buckets), ["score"],
+                                    values=["cnt"])
     k = max(1, (n_cal + 1) * alpha_num // alpha_den)
-    off = df.sparkSession.createDataFrame(
-        rows or [(0, 0)], "bucket int, __offset long")
-    w = (Window.partitionBy("bucket").orderBy("score")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    thr = (hist.join(F.broadcast(off), "bucket")
-           .withColumn("cum_le", F.sum("cnt").over(w) + F.col("__offset"))
-           .filter(F.col("cum_le") >= k)
+    thr = (cum.filter(F.col("cum_cnt") >= k)
            .agg(F.min("score").cast("bigint").alias("threshold_ppm")))
     ev = df.filter(~F.col(cal_flag))
     return (ev.crossJoin(F.broadcast(thr))
@@ -496,51 +448,30 @@ def spearman_rho(df: DataFrame, a_col: str, b_col: str,
     both sides DECIMAL(38,0) BEFORE any product (n^3 wraps int64 past
     ~1.3e6 rows and D^2 past ~1.5e9 — the BM25 wrap-band lesson),
     emitted through round_ratio6_dec. Two domain-bounded histogram
-    exchanges + two value-keyed map joins + one scalar aggregate; no
-    global sort, no un-partitioned window.
+    exchanges + two value-keyed map joins + one scalar aggregate; the
+    rank cumulative is :func:`.windows.bucketed_cumsum` partitioned by
+    signal — no global sort, no un-partitioned window.
 
     Output (1 row): n, sum_d2_x4 (= sum(D^2)), rho.
     """
     base = df.select(F.col(a_col), F.col(b_col))
-    # ONE stacked histogram pass builds BOTH signals' rank maps
-    # (round-12 rewrite): the previous per-signal _avg_rank2_map
-    # calls scanned the base twice and made two driver offset
-    # round-trips; stacking (sig, val) halves the base scans — the
-    # term that dominates at 100 TB — and fuses the offset collects
-    # into one job. Arithmetic is unchanged, so the result is
-    # bit-identical (pinned by the hypothesis differential test).
+    # ONE stacked histogram pass builds BOTH signals' rank maps:
+    # stacking (sig, val) scans the base once — the term that
+    # dominates at 100 TB — and needs one driver offset collect.
     hist = (base.select(F.expr(
         f"stack(2, 'a', CAST({a_col} AS BIGINT),"
         f" 'b', CAST({b_col} AS BIGINT)) AS (sig, val)"))
         .groupBy("sig", "val")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        .withColumn("bucket",
-                    (F.col("val") * F.lit(buckets)
-                     / F.when(F.col("sig") == "a", F.lit(a_domain))
-                     .otherwise(F.lit(b_domain))).cast("int"))
-        .localCheckpoint(eager=True))
-    per_b = {(r["sig"], r["bucket"]): r["n"]
-             for r in hist.groupBy("sig", "bucket")
-                          .agg(F.sum("cnt").alias("n")).collect()}
-    rows = []
-    for sig in ("a", "b"):
-        acc = 0
-        seen = sorted(bk for s, bk in per_b if s == sig)
-        for bk in sorted(set(seen) | set(range(buckets))):
-            if (sig, bk) in per_b:
-                rows.append((sig, bk, acc))
-            acc += per_b.get((sig, bk), 0)
-    off = df.sparkSession.createDataFrame(
-        rows or [("a", 0, 0)], "sig string, bucket int, __offset long")
-    w = (Window.partitionBy("sig", "bucket").orderBy("val")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    rank = (hist.join(F.broadcast(off), ["sig", "bucket"])
-            .withColumn("below",
-                        F.sum("cnt").over(w) + F.col("__offset")
-                        - F.col("cnt"))
-            .select("sig", "val",
-                    (2 * F.col("below") + F.col("cnt") + 1)
-                    .alias("__r2")))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt")))
+    bucket = (F.col("val") * F.lit(buckets)
+              / F.when(F.col("sig") == "a", F.lit(a_domain))
+              .otherwise(F.lit(b_domain))).cast("int")
+    cum, _ = bucketed_cumsum(hist, bucket, ["val"], values=["cnt"],
+                             partition_by=["sig"])
+    # mid-rank in half-units: 2*(rows below) + cnt + 1
+    rank = cum.select("sig", "val",
+                      (2 * F.col("cum_cnt") - F.col("cnt") + 1)
+                      .alias("__r2"))
     ra = (rank.filter(F.col("sig") == "a")
           .select(F.col("val").alias(a_col),
                   F.col("__r2").alias(f"__r2_{a_col}")))
@@ -575,61 +506,25 @@ def auc_rank_ppm_sliced(df: DataFrame, score_col: str, pos_col: str,
     eval suites surface it.
 
     Same machinery, slice-keyed: ONE (slice, score) map-side-
-    combining exchange (bounded by |slices| x score domain), driver
-    offsets per (slice, bucket) — |slices| x ``buckets`` longs, the
-    codebook convention — and (slice, bucket)-partitioned windows.
-    A single-class slice (n_pos or n_neg = 0) emits NULL auc
-    EXPLICITLY on both sides (Spark DIV by zero yields NULL, DuckDB
-    // raises — the ACF zero-variance lesson).
+    combining exchange (bounded by |slices| x score domain), then
+    :func:`.windows.bucketed_cumsum` partitioned by slice (|slices| x
+    ``buckets`` driver offsets). A single-class slice (n_pos or n_neg
+    = 0) emits NULL auc EXPLICITLY on both sides (Spark DIV by zero
+    yields NULL, DuckDB // raises — the ACF zero-variance lesson).
 
-    Generic over the slice column's type and null content (r12
-    ADVICE): the offset DataFrame's slice field inherits the input
-    column's Spark type, the driver sort keys None before values,
-    and the offset attach is a NULL-SAFE equi-join so a NULL slice
-    forms its own group instead of being silently dropped by
-    equi-join NULL semantics.
+    Generic over the slice column's type and null content: the
+    primitive's NULL-safe offset join keeps a NULL slice as its own
+    group instead of silently dropping it.
 
     Output: one row per slice (slice, n_pos, n_neg, auc_num2, auc).
     """
-    from pyspark.sql.types import (IntegerType, LongType, StructField,
-                                   StructType)
     hist = (df.groupBy(F.col(slice_col).alias("slice"),
                        F.col(score_col).alias("score"))
             .agg(F.sum(F.when(F.col(pos_col), 1).otherwise(0))
                  .cast("bigint").alias("pos_s"),
                  F.sum(F.when(F.col(pos_col), 0).otherwise(1))
-                 .cast("bigint").alias("neg_s"))
-            .withColumn("bucket",
-                        (F.col("score") * F.lit(buckets)
-                         / F.lit(PPM_DOMAIN)).cast("int"))
-            .localCheckpoint(eager=True))
-    per_b = {(r["slice"], r["bucket"]): r["n"]
-             for r in hist.groupBy("slice", "bucket")
-                          .agg(F.sum("neg_s").alias("n")).collect()}
-    rows = []
-    for sl in sorted({s for s, _b in per_b},
-                     key=lambda s: (s is not None, s)):
-        acc = 0
-        for b in range(buckets):
-            if (sl, b) in per_b:
-                rows.append((sl, b, acc))
-            acc += per_b.get((sl, b), 0)
-    off_schema = StructType([
-        StructField("__slice_o", df.schema[slice_col].dataType),
-        StructField("__bucket_o", IntegerType()),
-        StructField("__offset", LongType())])
-    off = df.sparkSession.createDataFrame(
-        rows or [(None, 0, 0)], off_schema)
-    w = (Window.partitionBy("slice", "bucket").orderBy("score")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    cum = (hist.join(F.broadcast(off),
-                     F.col("slice").eqNullSafe(F.col("__slice_o"))
-                     & (F.col("bucket") == F.col("__bucket_o")))
-           .drop("__slice_o", "__bucket_o")
-           .withColumn("cumneg_below",
-                       F.sum("neg_s").over(w) + F.col("__offset")
-                       - F.col("neg_s")))
-    return (cum.groupBy("slice")
+                 .cast("bigint").alias("neg_s")))
+    return (_with_cumneg_below(hist, buckets, ("slice",)).groupBy("slice")
             .agg(F.sum("pos_s").cast("bigint").alias("n_pos"),
                  F.sum("neg_s").cast("bigint").alias("n_neg"),
                  F.sum(F.col("pos_s") * (2 * F.col("cumneg_below")

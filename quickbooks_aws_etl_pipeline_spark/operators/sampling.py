@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..functions.numeric import round6_decimal_mean_expr
 from .text import md5_long
+from .windows import bucketed_cumsum
 
 
 def hash_bucket(col: Column, buckets: int = 100) -> Column:
@@ -128,29 +129,20 @@ def deterministic_global_shuffle(df: DataFrame, key_col: str,
 
     A naive ``row_number() OVER (ORDER BY hash)`` is a scale-killer:
     Spark executes an un-partitioned window on ONE task. Instead the
-    rank is computed in two phases, the distributed-histogram idiom:
-
-    1. RANGE-bucket rows by the hash's top 16 bits: bucket =
-       floor(prefix16 * buckets / 65536). The map is monotonic in the
-       hash, so bucket order == hash order for ANY bucket count in
-       [1, 65536] (a modulo here would interleave ranges and break the
-       global order for buckets < 256); md5 prefixes are uniform by
-       construction, so no skew.
-    2. count rows per bucket, prefix-sum the counts DRIVER-side
-       (``buckets`` longs, not data), broadcast the offsets back;
-    3. row_number within each bucket (parallel windows, one shuffle
-       partition per bucket) + the bucket's offset = global position.
+    position is :func:`.windows.bucketed_cumsum`'s row count on a
+    RANGE-bucket of the hash's top 16 bits: bucket = floor(prefix16 *
+    buckets / 65536). The map is monotonic in the hash, so bucket
+    order == hash order for ANY bucket count in [1, 65536] (a modulo
+    here would interleave ranges and break the global order for
+    buckets < 256); md5 prefixes are uniform by construction, so no
+    skew.
 
     Output (and its order) is identical to the naive form and
     independent of ``buckets``; every stage is bounded by N/buckets
     rows per task. ``buckets`` defaults to 8x the cluster's default
     parallelism (>= 256, <= 65536) so per-bucket volume scales DOWN
     as the cluster scales up — at 100 TB on ~10^3 executors that is
-    ~10^4 buckets of ~10 GB, not 256 buckets of ~400 GB. The keyed
-    frame is localCheckpoint'ed so the histogram pass and the rank
-    pass share one scan of the input (the histogram is an eager
-    plan-construction action by design — the offsets are part of the
-    plan).
+    ~10^4 buckets of ~10 GB, not 256 buckets of ~400 GB.
     """
     if buckets is None:
         par = df.sparkSession.sparkContext.defaultParallelism
@@ -158,31 +150,13 @@ def deterministic_global_shuffle(df: DataFrame, key_col: str,
     if not 1 <= buckets <= 65536:
         raise ValueError(f"buckets must be in [1, 65536], got {buckets}")
     skey = F.md5(F.concat(F.lit(f"{seed}:"), F.col(key_col).cast("string")))
-    keyed = df.select(F.col(key_col), skey.alias("shuffle_key")) \
-              .withColumn("bucket",
-                          (F.conv(F.substring("shuffle_key", 1, 4), 16, 10)
-                           .cast("long") * F.lit(buckets)
-                           / F.lit(65536)).cast("int")) \
-              .localCheckpoint(eager=True)
-    counts = {r["bucket"]: r["n"]
-              for r in keyed.groupBy("bucket")
-                            .agg(F.count(F.lit(1)).alias("n")).collect()}
-    rows, acc = [], 0
-    for b in range(buckets):
-        if counts.get(b, 0):
-            rows.append((b, acc))
-        acc += counts.get(b, 0)
-    # broadcast-join the offsets (one row per non-empty bucket) — a
-    # literal-array lookup would bake `buckets` literals into the
-    # expression tree, which stops compiling around 10^4 buckets
-    off = df.sparkSession.createDataFrame(rows, "bucket int, __offset long")
-    w = Window.partitionBy("bucket").orderBy("shuffle_key", key_col)
-    return (keyed
-            .join(F.broadcast(off), "bucket")
-            .withColumn("position",
-                        (F.row_number().over(w) + F.col("__offset"))
-                        .cast("bigint"))
-            .select("position", key_col, "shuffle_key"))
+    bucket = (F.conv(F.substring("shuffle_key", 1, 4), 16, 10)
+              .cast("long") * F.lit(buckets) / F.lit(65536)).cast("int")
+    ranked, _ = bucketed_cumsum(
+        df.select(F.col(key_col), skey.alias("shuffle_key")), bucket,
+        ["shuffle_key", key_col])
+    return ranked.select(F.col("cum_rows").alias("position"), key_col,
+                         "shuffle_key")
 
 
 def weighted_sample_per_group(df: DataFrame, key_col: str, weight_col: str,
@@ -271,20 +245,12 @@ def token_budget_selection(df: DataFrame, text_col: str, id_col: str,
     the corpus's total tokens.
 
     The global cumulative sum is the scale problem: a naive
-    ``SUM(n) OVER (ORDER BY score DESC)`` runs on ONE task. Same
-    distributed-histogram idiom as :func:`deterministic_global_shuffle`,
-    prefix-SUMMING token counts instead of row counts:
-
-    1. RANGE-bucket docs by score (monotonic map, so bucket order ==
-       rank order); the scored frame is localCheckpoint'ed so the
-       histogram pass and the rank pass share one scan.
-    2. one bounded shuffle sums tokens per bucket; the driver
-       prefix-sums ``buckets`` longs — the corpus total (and so the
-       budget) falls out of the same pass, no extra scan.
-    3. per-bucket windows (parallel, one partition per bucket) add
-       the broadcast offsets back to exact global cumulative counts;
-       the budget filter then prunes whole buckets whose offset
-       already exceeds the budget before their window runs.
+    ``SUM(n) OVER (ORDER BY score DESC)`` runs on ONE task. Instead
+    :func:`.windows.bucketed_cumsum` prefix-sums token counts over a
+    RANGE-bucket of the score (monotonic map, so bucket order == rank
+    order); the corpus total (and so the budget) falls out of its one
+    driver collect, and whole buckets whose offset already reaches the
+    budget are pruned on the driver before their window runs.
 
     Score values cluster on real corpora (many docs share a ppm
     value), so unlike the uniform md5 prefix the bucket map can skew;
@@ -307,37 +273,19 @@ def token_budget_selection(df: DataFrame, text_col: str, id_col: str,
     ).select(
         id_col, "n_tokens",
         F.expr("__stop_ppm_num div n_tokens").alias("score_ppm"),
-    ).withColumn(
-        "bucket",
-        ((F.lit(1_000_000) - F.col("score_ppm")) * F.lit(buckets)
-         / F.lit(1_000_001)).cast("int"),
-    ).localCheckpoint(eager=True)
+    )
+    bucket = ((F.lit(1_000_000) - F.col("score_ppm")) * F.lit(buckets)
+              / F.lit(1_000_001)).cast("int")
 
-    hist = {r["bucket"]: r["t"]
-            for r in scored.groupBy("bucket")
-                           .agg(F.sum("n_tokens").alias("t")).collect()}
-    total = sum(hist.values())
-    budget = total * budget_num // budget_den
-    rows, acc = [], 0
-    for b in range(buckets):
-        if b in hist:
-            rows.append((b, acc))
-        acc += hist.get(b, 0)
-    off = df.sparkSession.createDataFrame(rows, "bucket int, __offset long")
-    w = Window.partitionBy("bucket") \
-              .orderBy(F.desc("score_ppm"), F.col(id_col)) \
-              .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return (scored
-            .join(F.broadcast(off), "bucket")
-            # whole-bucket pruning: a bucket whose offset is already
-            # past the budget contributes nothing — drop it BEFORE
-            # its window sorts anything
-            .filter(F.col("__offset") < F.lit(budget))
-            .withColumn("cum_tokens",
-                        (F.sum("n_tokens").over(w) + F.col("__offset"))
-                        .cast("bigint"))
-            .filter(F.col("cum_tokens") <= F.lit(budget))
-            .select(id_col, "score_ppm", "n_tokens", "cum_tokens"))
+    def budget(totals: tuple[int, ...]) -> int:
+        return totals[0] * budget_num // budget_den
+
+    cum, totals = bucketed_cumsum(
+        scored, bucket, [F.desc("score_ppm"), F.col(id_col)],
+        values=["n_tokens"], stop_at=budget)
+    return (cum.filter(F.col("cum_n_tokens") <= F.lit(budget(totals)))
+            .select(id_col, "score_ppm", "n_tokens",
+                    F.col("cum_n_tokens").alias("cum_tokens")))
 
 
 def poisson1_cdf_thresholds(kmax: int = 8) -> list[float]:
@@ -493,39 +441,22 @@ def perplexity_buckets(df: DataFrame, text_col: str, id_col: str,
     perplexity = head.
 
     The scale problem is the GLOBAL rank: ``row_number() OVER
-    (ORDER BY score)`` is a one-task window. Same distributed-
-    histogram idiom as :func:`deterministic_global_shuffle`, with the
-    range-bucket key being the score QUANTIZED to centi-log bins
-    (floor(avg_logprob * 100) — monotonic in the score, and the
-    score's range is a few hundred bins no matter the corpus size):
-    count per bin, driver prefix-sum over the bounded bin list,
-    bin-partitioned windows + offsets. Bucket assignment is the
+    (ORDER BY score)`` is a one-task window. Instead the rank is
+    :func:`.windows.bucketed_cumsum`'s row count on the score
+    QUANTIZED to centi-log bins (-floor(avg_logprob * 100): monotonic
+    in the descending score, and a few hundred bins no matter the
+    corpus size). Bucket assignment is the
     explicit integer formula ((rank-1) * k) div n — identical SQL on
     both engines, no reliance on an engine's NTILE remainder rule.
     Ties (same score) order by doc_id, so the cut is deterministic.
     """
     from .text import unigram_logprob_scores
 
-    scored = (unigram_logprob_scores(df, text_col, id_col)
-              .withColumn("__bin",
-                          F.floor(F.col("avg_logprob") * 100).cast("int"))
-              .localCheckpoint(eager=True))
-    counts = {r["__bin"]: r["n"]
-              for r in scored.groupBy("__bin")
-                             .agg(F.count(F.lit(1)).alias("n")).collect()}
-    total = sum(counts.values())
-    rows, acc = [], 0
-    # head first: highest logprob bin gets offset 0
-    for b in sorted(counts, reverse=True):
-        rows.append((b, acc))
-        acc += counts[b]
-    off = df.sparkSession.createDataFrame(rows, "__bin int, __offset long")
-    w = Window.partitionBy("__bin").orderBy(
-        F.desc("avg_logprob"), F.asc(id_col))
-    ranked = (scored.join(F.broadcast(off), "__bin")
-              .withColumn("ppl_rank",
-                          (F.col("__offset")
-                           + F.row_number().over(w)).cast("bigint")))
+    ranked, (total,) = bucketed_cumsum(
+        unigram_logprob_scores(df, text_col, id_col),
+        -F.floor(F.col("avg_logprob") * 100).cast("int"),
+        [F.desc("avg_logprob"), F.asc(id_col)])
+    ranked = ranked.withColumnRenamed("cum_rows", "ppl_rank")
     # integer DIV, never `/`: Spark's `/` on bigints is DOUBLE
     # division and double->bigint CAST truncates while DuckDB's
     # rounds (the NOTES cross-engine division lesson)

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .windows import bit_length, bucketed_cumsum
+
 # per-language stopword sets for the n-gram/stopword language-ID
 # heuristic; priority order breaks score ties deterministically
 LANG_STOPWORDS: dict[str, list[str]] = {
@@ -824,15 +826,14 @@ def zipf_head(df, text_col: str, id_col: str, k: int = 100):
     the head) — the standard corpus-health diagnostic (a slope far
     from ~-1 flags synthetic/boilerplate-heavy data).
 
-    The global rank is the distributed-histogram idiom on a DATA-
-    DEPENDENT key: bucket = bit length of the frequency (exact
-    integer, monotonic in freq — no double log anywhere near an
-    ordering decision), so bucket order == frequency order. The
-    bucket histogram is at most 64 rows; buckets whose offset already
-    passes k are pruned BEFORE any sort runs — in particular the
-    giant freq=1 tail bucket that holds most of a real vocabulary
-    never reaches a window. Within-bucket windows are bucket-
-    partitioned (ties: freq desc, token asc).
+    The global rank is :func:`.windows.bucketed_cumsum` on a DATA-
+    DEPENDENT key: bucket = -(bit length of the frequency) (exact
+    integer, monotonic in descending freq — no double log anywhere
+    near an ordering decision). The bucket histogram is at most 64
+    rows; a ``stop_at`` of k prunes buckets whose offset already reaches k
+    BEFORE any sort runs — in particular the giant freq=1 tail bucket
+    that holds most of a real vocabulary never reaches a window
+    (ties: freq desc, token asc).
 
     The slope divides two DECIMAL-exact aggregates (per-element
     log10s rounded to 9 decimals then summed as DECIMAL(28,9)) as
@@ -841,28 +842,12 @@ def zipf_head(df, text_col: str, id_col: str, k: int = 100):
     """
     vc = (df.select(F.explode(tokens(F.col(text_col))).alias("token"))
           .groupBy("token").agg(F.count(F.lit(1)).alias("freq")))
-    vc = vc.withColumn(
-        "bucket", F.length(F.conv(F.col("freq").cast("string"), 10, 2))
-        .cast("int")).localCheckpoint(eager=True)
-    hist = {r["bucket"]: r["n"]
-            for r in vc.groupBy("bucket")
-                       .agg(F.count(F.lit(1)).alias("n")).collect()}
-    rows, acc = [], 0
-    for b in sorted(hist, reverse=True):
-        if acc >= k:
-            break
-        rows.append((b, acc))
-        acc += hist[b]
-    spark = df.sparkSession
-    off = spark.createDataFrame(rows, "bucket int, __offset long")
-    from pyspark.sql import Window
-    w = (Window.partitionBy("bucket")
-         .orderBy(F.desc("freq"), F.col("token")))
-    top = (vc.join(F.broadcast(off), "bucket")
-           .withColumn("rnk", (F.row_number().over(w)
-                               + F.col("__offset")).cast("int"))
-           .filter(F.col("rnk") <= k)
-           .select("rnk", "token", "freq"))
+    ranked, _ = bucketed_cumsum(
+        vc, -bit_length(F.col("freq")), [F.desc("freq"), F.col("token")],
+        stop_at=lambda _totals: k)
+    top = (ranked.select(F.col("cum_rows").cast("int").alias("rnk"),
+                         "token", "freq")
+           .filter(F.col("rnk") <= k))
     d9 = lambda c: F.round(c, 9).cast("decimal(28,9)")  # noqa: E731
     lx = d9(F.log10(F.col("rnk").cast("double")))
     ly = d9(F.log10(F.col("freq").cast("double")))

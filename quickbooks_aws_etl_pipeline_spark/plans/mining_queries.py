@@ -25,12 +25,13 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import read_table, widen
 from ..operators.graph import (cs_node_encode, trade_graph_edges,
                                unrolled_rounds)
+from ..operators.windows import bucketed_cumsum
 from .queries import register
 
 # ---------------------------------------------------------------------------
@@ -352,10 +353,8 @@ def dq_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the per-value histogram is one map-side-combining shuffle
     bounded by the VALUE DOMAIN (cents), never row count; the
-    cumulative uses the distributed-histogram idiom (bucket the
-    monotonic value key, prefix-sum the <=256 bucket totals driver-
-    side, bucket-partitioned windows add offsets back) — no
-    un-partitioned window. Like auc_rank_ppm, the integer ceiling is
+    cumulative is operators.windows.bucketed_cumsum on the value key
+    — no un-partitioned window. Like auc_rank_ppm, the integer ceiling is
     n_ref*n_cur <= int64 for the REPORTED numerator; past ~3e9 rows a
     side, run it on a deterministic hash sample (the metric's
     precision saturates far earlier).
@@ -383,44 +382,23 @@ def ks_value_histogram(events: DataFrame) -> DataFrame:
                  F.sum("grp").cast("bigint").alias("c_cur")))
 
 
+def _cdf_gap() -> Column:
+    """|cum_ref*n_cur - cum_cur*n_ref| in DECIMAL(38,0): the exact
+    integer numerator of the two ECDFs' gap at one value."""
+    return F.expr("abs(cast(cum_c_ref as decimal(38,0)) * n_cur"
+                  " - cast(cum_c_cur as decimal(38,0)) * n_ref)")
+
+
 def ks_from_value_hist(spark: SparkSession, hist0: DataFrame) -> DataFrame:
     """KS finisher over a (v, c_ref, c_cur) histogram: the
-    distributed-histogram cumulative (<=256 driver offsets,
-    bucket-partitioned windows), then the exact integer max
-    |cum_ref*n_cur - cum_cur*n_ref| with its argmax value."""
+    bucketed_cumsum cumulative over 256-cent buckets, then the exact
+    integer max |cum_ref*n_cur - cum_cur*n_ref| with its argmax
+    value."""
     n = hist0.agg(F.sum("c_ref").cast("bigint").alias("n_ref"),
                   F.sum("c_cur").cast("bigint").alias("n_cur"))
-    # Clamp BOTH ends: a negative v would otherwise map to a bucket
-    # the 0..255 offset loop below never emits, and the inner join on
-    # bucket would silently drop those rows (r10 advice).
-    hist = (hist0
-            .withColumn("bucket",
-                        F.greatest(F.lit(0),
-                                   F.least(F.lit(255), F.expr("v div 256")))
-                        .cast("int"))
-            .localCheckpoint(eager=True))
-    per_b = {r["bucket"]: (r["sr"], r["sc"])
-             for r in hist.groupBy("bucket")
-                          .agg(F.sum("c_ref").alias("sr"),
-                               F.sum("c_cur").alias("sc")).collect()}
-    rows, ar, ac = [], 0, 0
-    for b in range(256):
-        if b in per_b:
-            rows.append((b, ar, ac))
-        ar += per_b.get(b, (0, 0))[0]
-        ac += per_b.get(b, (0, 0))[1]
-    off = spark.createDataFrame(
-        rows or [(0, 0, 0)], "bucket int, off_ref long, off_cur long")
-    w = (Window.partitionBy("bucket").orderBy("v")
-         .rowsBetween(Window.unboundedPreceding, 0))
-    dec = "decimal(38,0)"
-    d = (hist.join(F.broadcast(off), "bucket")
-         .withColumn("cum_ref", F.sum("c_ref").over(w) + F.col("off_ref"))
-         .withColumn("cum_cur", F.sum("c_cur").over(w) + F.col("off_cur"))
-         .crossJoin(F.broadcast(n))
-         .withColumn("num", F.expr(
-             f"abs(cast(cum_ref as {dec}) * n_cur"
-             f" - cast(cum_cur as {dec}) * n_ref)")))
+    cum, _ = bucketed_cumsum(hist0, F.expr("cast(v div 256 as int)"), ["v"],
+                             values=["c_ref", "c_cur"])
+    d = cum.crossJoin(F.broadcast(n)).withColumn("num", _cdf_gap())
     mx = d.agg(F.max("num").alias("mxnum"))
     return (d.crossJoin(F.broadcast(mx))
             .agg(F.max("n_ref").alias("n_ref"),
@@ -430,8 +408,9 @@ def ks_from_value_hist(spark: SparkSession, hist0: DataFrame) -> DataFrame:
                  .cast("bigint").alias("at_value_e2"))
             .select("n_ref", "n_cur",
                     F.col("__num").cast("bigint").alias("ks_num"),
-                    F.expr(f"cast(__num * 1000000 div"
-                           f" (cast(n_ref as {dec}) * n_cur) as bigint)")
+                    F.expr("cast(__num * 1000000 div"
+                           " (cast(n_ref as decimal(38,0)) * n_cur)"
+                           " as bigint)")
                     .alias("ks_e6"),
                     "at_value_e2"))
 
@@ -1353,9 +1332,8 @@ def dq_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the histogram is the shared value-DOMAIN-bounded
     conditional aggregate (ks_value_histogram); the spine is
     domain-bounded (~tens of thousands of rows regardless of event
-    count); the cumulative runs through the distributed-histogram
-    idiom (driver bucket offsets + bucket-partitioned windows), never
-    a single-partition window.
+    count); the cumulative is operators.windows.bucketed_cumsum,
+    never a single-partition window.
     """
     ev = read_table(spark, sf_dir, "events")
     return w1_from_value_hist(spark, ks_value_histogram(ev))
@@ -1381,31 +1359,12 @@ def w1_from_value_hist(spark: SparkSession, hist0: DataFrame) -> DataFrame:
     dense = (spine.join(hist0, "v", "left")
              .select("v", "vmin", "vmax",
                      F.coalesce(F.col("c_ref"), F.lit(0)).alias("c_ref"),
-                     F.coalesce(F.col("c_cur"), F.lit(0)).alias("c_cur"))
-             .withColumn("bucket",
-                         F.expr("cast((v - vmin) div 256 as int)"))
-             .localCheckpoint(eager=True))
-    per_b = {r["bucket"]: (r["sr"], r["sc"])
-             for r in dense.groupBy("bucket")
-                           .agg(F.sum("c_ref").alias("sr"),
-                                F.sum("c_cur").alias("sc")).collect()}
-    rows, ar, ac = [], 0, 0
-    for bk in sorted(per_b):
-        rows.append((bk, ar, ac))
-        ar += per_b[bk][0]
-        ac += per_b[bk][1]
-    off = spark.createDataFrame(
-        rows or [(0, 0, 0)], "bucket int, off_ref long, off_cur long")
-    w = (Window.partitionBy("bucket").orderBy("v")
-         .rowsBetween(Window.unboundedPreceding, 0))
+                     F.coalesce(F.col("c_cur"), F.lit(0)).alias("c_cur")))
+    cum, _ = bucketed_cumsum(dense, F.expr("cast((v - vmin) div 256 as int)"),
+                             ["v"], values=["c_ref", "c_cur"])
     dec = "decimal(38,0)"
-    return (dense.join(F.broadcast(off), "bucket")
-            .withColumn("cum_ref", F.sum("c_ref").over(w) + F.col("off_ref"))
-            .withColumn("cum_cur", F.sum("c_cur").over(w) + F.col("off_cur"))
-            .crossJoin(F.broadcast(n))
-            .withColumn("num", F.expr(
-                f"abs(cast(cum_ref as {dec}) * n_cur"
-                f" - cast(cum_cur as {dec}) * n_ref)"))
+    return (cum.crossJoin(F.broadcast(n))
+            .withColumn("num", _cdf_gap())
             .agg(F.max("n_ref").alias("n_ref"),
                  F.max("n_cur").alias("n_cur"),
                  F.max(F.col("vmax") - F.col("vmin")).cast("bigint")

@@ -25,6 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from perfbench.spark_status import SparkStatus
 from quickbooks_aws_etl_pipeline_spark.io import read_table
 from quickbooks_aws_etl_pipeline_spark.plans import QUERIES
 from quickbooks_aws_etl_pipeline_spark.session import get_spark
@@ -147,35 +148,21 @@ def generate(spark: SparkSession, base_dir: str, replicas: int,
             os.symlink(os.path.join(os.path.abspath(base_dir), name), dst)
 
 
-def _stages(spark: SparkSession) -> list:
-    """The stage attempts the AppStatusStore holds (works with the UI
-    disabled), once the listener bus has delivered every stage event.
-    The store keeps only the newest ``spark.ui.retainedStages``, so a
-    probe's shuffle is summed over stage ids above a watermark, not
-    diffed from a running total."""
-    jvm, sc = spark._jvm, spark._jsc.sc()
-    sc.listenerBus().waitUntilEmpty()
-    empty = jvm.java.util.ArrayList()
-    no_quantiles = spark.sparkContext._gateway.new_array(jvm.double, 0)
-    it = sc.statusStore().stageList(
-        empty, False, False, no_quantiles, empty).iterator()
-    stages = []
-    while it.hasNext():
-        stages.append(it.next())
-    return stages
-
-
 def run(spark: SparkSession, key: str, sf_dir: str) -> None:
     QUERIES[key](spark, sf_dir).write.format("noop").mode("overwrite").save()
 
 
-def timed(spark: SparkSession, key: str, replicas: int, sf_dir: str) -> None:
-    last = max((s.stageId() for s in _stages(spark)), default=-1)
+def timed(spark: SparkSession, status: SparkStatus, key: str, replicas: int,
+          sf_dir: str) -> None:
+    """Times one run; its shuffle is summed over the stages submitted
+    since it started (the status store keeps only the newest
+    ``spark.ui.retainedStages``, so a running total can't be diffed)."""
+    since_ms = int(time.time() * 1e3)
     t0 = time.perf_counter()
     run(spark, key, sf_dir)
     sec = round(time.perf_counter() - t0, 2)
-    shuffle = sum(s.shuffleWriteBytes() for s in _stages(spark)
-                  if s.stageId() > last)
+    status.drain()
+    shuffle = sum(s["shuffleWriteBytes"] for s in status.stages(since_ms))
     print(json.dumps({"probe": f"{key}_x{replicas}", "sec": sec,
                       "shuffle_mb": round(shuffle / 1e6, 2)}), flush=True)
 
@@ -196,11 +183,12 @@ def main(argv: list[str]) -> None:
             dirs[n] = scratch_path("scale", f"{sf_tag(SF_DIR)}_x{n}")
             if "--regen" in argv or not os.path.isdir(dirs[n]):
                 generate(spark, SF_DIR, n, dirs[n])
+    status = SparkStatus(spark)
     for key in keys:
         run(spark, key, SF_DIR)  # JIT warm-up, untimed
         for n in LADDER:
             if n <= PROBES[key]:
-                timed(spark, key, n, dirs[n])
+                timed(spark, status, key, n, dirs[n])
 
 
 if __name__ == "__main__":

@@ -53,6 +53,20 @@ def test_auc_equals_bruteforce_pairs(spark, sf_smoke):
     assert 0.0 <= got["auc"] <= 1.0
 
 
+def test_auc_keeps_scores_outside_the_ppm_domain(spark):
+    """A score above PPM_DOMAIN lands in a bucket past ``buckets``; it
+    must still be counted, not dropped by the offset join."""
+    from quickbooks_aws_etl_pipeline_spark.operators.evaluation import (
+        PPM_DOMAIN)
+    rows = [(10, False), (10, True), (400_000, True), (700_000, False),
+            (1_500_000, True), (999_999, False)]
+    assert rows[4][0] > PPM_DOMAIN
+    df = spark.createDataFrame(rows, "score_ppm long, is_pos boolean")
+    n_pos, n_neg, n2 = _python_auc2(rows)
+    got = auc_rank_ppm(df, "score_ppm", "is_pos", buckets=64).collect()[0]
+    assert (got["n_pos"], got["n_neg"], got["auc_num2"]) == (n_pos, n_neg, n2)
+
+
 def test_auc_complement_identity(spark, sf_smoke):
     """Swapping the label polarity must give auc_num2' such that
     num2 + num2' = 2*n_pos*n_neg exactly (wins swap sides, ties stay

@@ -14,12 +14,14 @@ Each test pins one property that matters at 100 TB:
 from __future__ import annotations
 
 import io
+import time
 from contextlib import redirect_stdout
 
 import pytest
 
 from pyspark.sql import functions as F
 
+from perfbench.spark_status import SparkStatus
 from quickbooks_aws_etl_pipeline_spark.io import read_table
 from quickbooks_aws_etl_pipeline_spark.plans import QUERIES
 
@@ -745,9 +747,10 @@ def test_hash_embedding_zero_exchange(spark, sf_smoke):
 
 
 def test_token_budget_window_is_bucket_partitioned(spark, sf_smoke):
-    """The budget cumsum must run as bucket-parallel windows with the
-    whole-bucket budget prune BEFORE the window (offset filter below
-    the Window node), never a global ORDER BY window."""
+    """The budget cumsum must run as bucket-parallel windows over the
+    joined offsets (buckets past the budget are left out of the
+    offsets on the driver, so the join drops them BEFORE the window),
+    never a global ORDER BY window."""
     df = QUERIES["select_token_budget"](spark, sf_smoke)
     plan = plan_of(df)
     assert "SinglePartition" not in plan, plan
@@ -903,31 +906,18 @@ def test_kcenter_coreset_takeordered_integer_no_shuffle(spark, sf_smoke):
     assert "Not(EqualTo(vec_id,0))" in plan \
         or "Not(In(vec_id" in plan, plan
 
-    # the real run moves zero shuffle bytes end-to-end. Measured on
-    # the stages CREATED during the probe (id > the pre-probe max),
-    # not a before/after total: the AppStatusStore retains a bounded
-    # stage history, so in a long pytest session old entries evict
-    # and a cumulative-total delta can go NEGATIVE (seen live in the
-    # round-8 session-2 suite — a harness artifact, not a shuffle).
-    def stage_shuffle(min_stage_exclusive: int) -> tuple[int, int]:
-        store = spark._jsc.sc().statusStore()
-        jvm = spark._jvm
-        empty = jvm.java.util.ArrayList()
-        nq = spark.sparkContext._gateway.new_array(jvm.double, 0)
-        stages = store.stageList(empty, False, False, nq, empty)
-        total, max_id, it = 0, -1, stages.iterator()
-        while it.hasNext():
-            s = it.next()
-            sid = s.stageId()
-            max_id = max(max_id, sid)
-            if sid > min_stage_exclusive:
-                total += s.shuffleWriteBytes()
-        return total, max_id
-
-    _, pre_max = stage_shuffle(2 ** 31)
+    # the real run moves zero shuffle bytes end-to-end, summed over
+    # the stages SUBMITTED during the probe: the status store retains
+    # a bounded stage history, so in a long pytest session a
+    # cumulative-total delta can go NEGATIVE as old entries evict
+    status = SparkStatus(spark)
+    since_ms = int(time.time() * 1e3)
     rows = QUERIES["select_kcenter_coreset"](spark, sf_smoke).collect()
     assert len(rows) == 8
-    new_bytes, _ = stage_shuffle(pre_max)
+    status.drain()
+    stages = status.stages(since_ms)
+    assert stages, "the status store saw no stage of the run"
+    new_bytes = sum(s["shuffleWriteBytes"] for s in stages)
     assert new_bytes == 0, new_bytes
 
 
