@@ -175,8 +175,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
                       num_hashes: int = 16, bands: int = 4,
                       shingle_n: int = 3,
                       jaccard_threshold: float = 0.1,
-                      members_cap: int = 10_000,
-                      materialize: str = "checkpoint") -> DataFrame:
+                      members_cap: int = 10_000) -> DataFrame:
     """X2 (scale tier): MinHash banding -> candidate pairs -> exact
     Jaccard verification.
 
@@ -190,6 +189,9 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
     payload is |doc| x bands shingle ints — for very long documents an
     id-only band join plus a re-fetch verify join shuffles less.
     """
+    if not 0.0 <= jaccard_threshold <= 1.0:
+        raise ValueError(f"minhash_lsh_pairs: jaccard_threshold must be "
+                         f"in [0, 1], got {jaccard_threshold}")
     rows_per_band = num_hashes // bands
     toks = tokens(F.col(text_col))
     # hash shingles once; all downstream set math (signatures AND the
@@ -252,16 +254,10 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
     # sweeps) would accumulate it in executor storage. Checkpointed
     # RDDs are released by the ContextCleaner when the DataFrame is
     # garbage-collected, so storage stays bounded across invocations.
-    # materialize="persist" exists for the A/B in NOTES.md — it was
-    # NOT faster (persist pays the same materialization plus storage-
-    # level bookkeeping, and leaks unless the caller unpersists).
-    )
-    if materialize == "persist":
-        from pyspark import StorageLevel
-        banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-        banded.count()
-    else:
-        banded = banded.localCheckpoint(eager=True)
+    # A persist() A/B (NOTES.md) was NOT faster: it pays the same
+    # materialization plus storage-level bookkeeping, and leaks unless
+    # the caller unpersists.
+    ).localCheckpoint(eager=True)
 
     left = banded.select(F.col("rep").alias("rep_a"),
                          F.col("members").alias("m_a"),
@@ -288,38 +284,54 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
                  # sort of the surviving pairs; distinct() group-keys
                  # the whole row and stays in HashAggregate (r14).
                  .distinct())
+    # band 0 carries each group's member list exactly once, read from
+    # the CHECKPOINTED frame — reading `groups` would re-run the
+    # entire shingle + grouping lineage for the within-group branch
+    # (measured ~2x the operator's wall time at sf0.1)
+    cross, within = _member_pairs(rep_pairs,
+                                  banded.filter(F.col("band") == 0),
+                                  "jaccard")
+    return _unordered(cross).unionByName(within)
 
-    # cross-group expansion: every member-pair inherits the
-    # representatives' jaccard (sets are identical within a group)
+
+def _member_pairs(rep_pairs: DataFrame, groups: DataFrame,
+                  value: str) -> tuple[DataFrame, DataFrame]:
+    """Expand representative pairs back to document pairs, the last
+    step of every set join that collapses identical shingle sets
+    first (``capped_set_groups``).
+
+    ``rep_pairs`` holds one row per verified group pair, with the
+    member arrays ``m_a``/``m_b`` and the score column ``value``;
+    ``groups`` holds one ``members`` array per group. Returns
+    ``(cross, within)``, both ``(id_a, id_b, value)``:
+
+    - cross: every (x in m_a, y in m_b), which inherits the
+      representatives' score (the sets are identical within a group);
+    - within: every pair ``id_a < id_b`` inside one group, scored
+      exactly 1.0 (identical sets).
+    """
     cross = (rep_pairs
-             .select("jaccard",
-                     F.explode("m_a").alias("x"),
-                     F.col("m_b"))
-             .select("jaccard", "x", F.explode("m_b").alias("y"))
-             .select(F.least("x", "y").alias("id_a"),
-                     F.greatest("x", "y").alias("id_b"),
-                     "jaccard"))
-
-    # within-group pairs: identical sets, jaccard exactly 1.0.
-    # Read from the CHECKPOINTED banded frame (band 0 carries each
-    # group's member list exactly once), not from `groups` — reading
-    # `groups` would re-run the entire shingle + grouping lineage a
-    # second time just for this branch (measured ~2x the operator's
-    # wall time at sf0.1).
+             .select(value, F.explode("m_a").alias("id_a"), "m_b")
+             .select(value, "id_a", F.explode("m_b").alias("id_b"))
+             .select("id_a", "id_b", value))
     pair_structs = F.flatten(F.transform(
         F.col("members"),
         lambda x, i: F.transform(
             F.slice(F.col("members"), i + 2,
                     F.greatest(F.size("members") - i - 1, F.lit(0))),
             lambda y: F.struct(x.alias("id_a"), y.alias("id_b")))))
-    within = (banded.filter((F.col("band") == 0)
-                            & (F.size("members") > 1))
+    within = (groups.filter(F.size("members") > 1)
               .select(F.explode(pair_structs).alias("p"))
               .select(F.col("p.id_a"), F.col("p.id_b"),
-                      F.lit(1.0).alias("jaccard")))
-    if jaccard_threshold > 1.0:
-        within = within.filter(F.lit(False))
-    return cross.unionByName(within)
+                      F.lit(1.0).alias(value)))
+    return cross, within
+
+
+def _unordered(pairs: DataFrame) -> DataFrame:
+    """Symmetric-score pairs keyed ``id_a < id_b``."""
+    return pairs.select(F.least("id_a", "id_b").alias("id_a"),
+                        F.greatest("id_a", "id_b").alias("id_b"),
+                        "jaccard")
 
 
 def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
@@ -348,17 +360,17 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
 def ngram_jaccard_prefix_pairs(df: DataFrame, text_col: str, id_col: str,
                                shingle_n: int = 3,
                                threshold: float = 0.8,
-                               members_cap: int = 10_000,
-                               prefix_order: str = "rarest") -> DataFrame:
+                               members_cap: int = 10_000) -> DataFrame:
     """X2 (exact tier, production path): prefix-filtered similarity
     self-join (AllPairs/PPJoin family) — the scale-shaped replacement
     for ``ngram_jaccard_pairs``' blocked cross join.
 
     Each document keeps only its ``n - ceil(t*n) + 1`` smallest
-    shingle hashes (global md5 order) as join candidates; if
-    ``J(A,B) >= t`` the smallest common hash provably lands in BOTH
-    prefixes, so candidate generation is complete — the output equals
-    the quadratic ground truth exactly. The candidate join applies
+    shingle keys (the shared rarest-first order of
+    :func:`_prefix_sets`) as join candidates; if ``J(A,B) >= t`` the
+    smallest common key provably lands in BOTH prefixes, so candidate
+    generation is complete — the output equals the quadratic ground
+    truth exactly. The candidate join applies
     two further complete filters: the length filter ``t*|A| <= |B| <=
     |A|/t``, and PPJoin's positional filter ``1 + min(|A|-pos_A,
     |B|-pos_B) >= ceil(t/(1+t)*(|A|+|B|))`` (any common element at
@@ -378,61 +390,11 @@ def ngram_jaccard_prefix_pairs(df: DataFrame, text_col: str, id_col: str,
     are copies, the uncollapsed form did not finish in 10 minutes.
     Pairs inside an identical-set group expand flat at jaccard 1.0;
     cross-group member pairs inherit their representatives' jaccard.
+    ``threshold`` must lie in (0, 1].
     """
-    toks = tokens(F.col(text_col))
-    # int shingle hashes (md5_long, like MinHash): sorting, comparing
-    # and shuffling 60-bit bigints is ~8x cheaper than 32-char hex
-    # strings at corpus scale. No size filter here — it would force
-    # the sizing branch inside capped_set_groups to compute the
-    # shingle map too; empty-set docs drop after grouping instead.
-    shingled = widen(df).select(
-        F.col(id_col),
-        F.md5(F.encode(F.col(text_col), "UTF-8")).alias("tkey"),
-        F.array_sort(F.array_distinct(
-            base_hashes(word_shingles(toks, shingle_n)))).alias("hs"),
-    )
-    # empty-set groups (docs too short to shingle) drop here — after
-    # the sizing pass, so that pass never touches the shingle column
-    groups = capped_set_groups(shingled, id_col, members_cap) \
-        .filter(F.size("hs") > 0)
-    # localCheckpoint: sh feeds BOTH sides of the candidate join AND
-    # both verify fetches — without it the shingle map + grouping run
-    # four times. Checkpointed RDDs are released by the
-    # ContextCleaner when the DataFrame is garbage-collected.
-    sh = (groups.select(F.col("rep").alias("id"), "members",
-                        F.col("hs").alias("h"))
-          .localCheckpoint(eager=True))
-    # rarest-first re-encoding (same as containment_prefix_pairs):
-    # df in the high bits puts each set's RAREST shingles in its
-    # prefix, so the prefix x prefix join avoids the boilerplate
-    # head. Any shared total order keeps the prefix AND positional
-    # filters complete (positions are relative to the same sorted
-    # order on both sides), and the bijection leaves intersect
-    # counts — and so the output — unchanged.
-    if prefix_order == "rarest":
-        ex = sh.select("id", F.explode("h").alias("p"))
-        freq = ex.groupBy("p").agg(F.count(F.lit(1)).alias("df"))
-        resorted = (ex.join(freq, "p")
-                    .select("id",
-                            (F.least(F.col("df"), F.lit(2 ** 33 - 1))
-                             * F.lit(2 ** 30) + F.col("p")).alias("k"))
-                    .groupBy("id")
-                    .agg(F.array_sort(F.collect_list("k")).alias("h")))
-        sh = (sh.drop("h").join(resorted, "id")
-              .localCheckpoint(eager=True))
-    elif prefix_order != "hash":
-        raise ValueError(f"prefix_order must be 'rarest' or 'hash', "
-                         f"got {prefix_order!r}")
-    # All ceilings carry a 1e-9 epsilon guard: the FP product can
-    # land a hair ABOVE an exact integer (0.8*35 = 28.000000000000004,
-    # 0.8/1.8*63 = 28.000000000000004), and a raw ceil then overshoots
-    # by one — silently dropping pairs whose Jaccard is exactly at the
-    # threshold. The guard only matters within 1e-9 of an integer;
-    # true fractional parts of t*n / t/(1+t)*(na+nb) for any sane t
-    # are orders of magnitude larger. The oracle SQL mirrors the same
-    # guarded expressions so neither side can drift.
-    _EPS = 1e-9
-    # prefix filter: the (n - ceil(t*n) + 1) smallest hashes
+    _check_prefix_threshold("ngram_jaccard_prefix_pairs", threshold)
+    sh = _prefix_sets(df, text_col, id_col, shingle_n, members_cap)
+    # prefix filter: the (n - ceil(t*n) + 1) smallest keys
     prefix_len = (F.size("h")
                   - F.ceil(F.lit(threshold) * F.size("h") - F.lit(_EPS))
                   .cast("int") + F.lit(1))
@@ -461,44 +423,107 @@ def ngram_jaccard_prefix_pairs(df: DataFrame, text_col: str, id_col: str,
                       F.col("b.n") - (F.col("b.pos0") + 1)) >= alpha))
             .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
             .distinct())
-    a = sh.select(F.col("id").alias("id_a"), F.col("h").alias("h_a"),
-                  F.col("members").alias("m_a"))
-    b = sh.select(F.col("id").alias("id_b"), F.col("h").alias("h_b"),
-                  F.col("members").alias("m_b"))
     # |A∪B| = |A| + |B| - |A∩B| for distinct-element arrays: one
     # array_intersect per pair instead of also materializing the
     # union array just to take its size (~40% of verify cost)
     inter = F.size(F.array_intersect("h_a", "h_b"))
     union_sz = F.size("h_a") + F.size("h_b") - inter
-    rep_pairs = (cand.join(a, "id_a").join(b, "id_b")
-                 .select(
-                     "m_a", "m_b",
-                     F.round(inter / union_sz, 6).alias("jaccard"))
-                 .filter(F.col("jaccard") >= threshold))
+    cross, within = _member_pairs(
+        _verified(cand, sh, F.round(inter / union_sz, 6), "jaccard",
+                  threshold),
+        sh, "jaccard")
+    return _unordered(cross).unionByName(within)
 
-    # cross-group expansion: member pairs inherit the reps' jaccard
-    cross = (rep_pairs
-             .select("jaccard", F.explode("m_a").alias("x"), "m_b")
-             .select("jaccard", "x", F.explode("m_b").alias("y"))
-             .select(F.least("x", "y").alias("id_a"),
-                     F.greatest("x", "y").alias("id_b"),
-                     "jaccard"))
 
-    # within-group pairs: identical shingle sets, jaccard exactly 1.0.
-    # Read from the CHECKPOINTED `sh` (one row per group, members
-    # column materialized) — reading `groups` would re-run the whole
-    # shingle + grouping lineage a second time for this branch.
-    pair_structs = F.flatten(F.transform(
-        F.col("members"),
-        lambda x, i: F.transform(
-            F.slice(F.col("members"), i + 2,
-                    F.greatest(F.size("members") - i - 1, F.lit(0))),
-            lambda y: F.struct(x.alias("id_a"), y.alias("id_b")))))
-    within = (sh.filter(F.size("members") > 1)
-              .select(F.explode(pair_structs).alias("pr"))
-              .select(F.col("pr.id_a"), F.col("pr.id_b"),
-                      F.lit(1.0).alias("jaccard")))
-    return cross.unionByName(within)
+# All ceilings of the prefix tiers carry a 1e-9 epsilon guard: the FP
+# product can land a hair ABOVE an exact integer (0.8*35 =
+# 28.000000000000004, 0.8/1.8*63 = 28.000000000000004), and a raw
+# ceil then overshoots by one — silently dropping pairs whose score
+# is exactly at the threshold. The guard only matters within 1e-9 of
+# an integer; true fractional parts of t*n / t/(1+t)*(na+nb) for any
+# sane t are orders of magnitude larger. The oracle SQL mirrors the
+# same guarded expressions so neither side can drift.
+_EPS = 1e-9
+
+
+def _check_prefix_threshold(fn: str, threshold: float) -> None:
+    # at t <= 0 pairs that share no shingle qualify but never meet
+    # in a prefix join, and t > 1 drives the prefix length negative
+    # (slice() then fails inside a task) — both fail here, before any
+    # job runs
+    if not 0.0 < threshold <= 1.0:
+        raise ValueError(f"{fn}: threshold must be in (0, 1], "
+                         f"got {threshold}")
+
+
+def _prefix_sets(df: DataFrame, text_col: str, id_col: str,
+                 shingle_n: int, members_cap: int) -> DataFrame:
+    """The shared front end of the two prefix-filter tiers: one row
+    ``(id, members, h)`` per identical-shingle-set group (id = the
+    group's smallest member), ``h`` its shingle keys sorted in the
+    rarest-first order, localCheckpointed.
+
+    Shingles hash to ints (md5_long, like MinHash): sorting,
+    comparing and shuffling 60-bit bigints is ~8x cheaper than
+    32-char hex strings at corpus scale. ``capped_set_groups``
+    collapses identical sets; empty-set groups (docs too short to
+    shingle) drop after its sizing pass, so that pass never computes
+    the shingle map.
+
+    Rarest-first is the classic AllPairs refinement: each key is
+    re-encoded as ``min(df, 2^33-1) * 2^30 + hash`` (document
+    frequency over the collapsed groups in the HIGH bits, the 30-bit
+    hash below), so the sorted prefix of every set holds its RAREST
+    shingles and the prefix join probes tiny postings lists instead
+    of the boilerplate head. The prefix and positional filters need
+    only SOME total order shared by all sets (positions are relative
+    to the same sorted order on both sides), and the re-encoding is a
+    bijection (df is a function of the hash), so intersection counts
+    — and the output — are those of plain hash order. It costs one
+    vocabulary-bounded count plus one re-sort shuffle and wins
+    whenever hot postings dominate, which is every crawl-like corpus
+    (A/B in NOTES.md).
+    """
+    toks = tokens(F.col(text_col))
+    shingled = widen(df).select(
+        F.col(id_col),
+        F.md5(F.encode(F.col(text_col), "UTF-8")).alias("tkey"),
+        F.array_sort(F.array_distinct(
+            base_hashes(word_shingles(toks, shingle_n)))).alias("hs"),
+    )
+    groups = capped_set_groups(shingled, id_col, members_cap) \
+        .filter(F.size("hs") > 0)
+    # localCheckpoint: the sets feed both candidate sides AND both
+    # verify fetches — without it the shingle map + grouping run four
+    # times. Checkpointed RDDs are released by the ContextCleaner when
+    # the DataFrame is garbage-collected.
+    sh = (groups.select(F.col("rep").alias("id"), "members",
+                        F.col("hs").alias("h"))
+          .localCheckpoint(eager=True))
+    ex = sh.select("id", F.explode("h").alias("p"))
+    freq = ex.groupBy("p").agg(F.count(F.lit(1)).alias("df"))
+    resorted = (ex.join(freq, "p")
+                .select("id",
+                        (F.least(F.col("df"), F.lit(2 ** 33 - 1))
+                         * F.lit(2 ** 30) + F.col("p")).alias("k"))
+                .groupBy("id")
+                .agg(F.array_sort(F.collect_list("k")).alias("h")))
+    return sh.drop("h").join(resorted, "id").localCheckpoint(eager=True)
+
+
+def _verified(cand: DataFrame, sh: DataFrame, score: Column,
+              value: str, threshold: float) -> DataFrame:
+    """Verify id-only candidate pairs ``(id_a, id_b)`` of a prefix
+    tier: re-fetch both sides' keys (``h_a``/``h_b``) and members
+    (``m_a``/``m_b``) from ``sh`` by id, and keep the pairs whose
+    ``score`` (named ``value``) reaches ``threshold``."""
+    a = sh.select(F.col("id").alias("id_a"), F.col("h").alias("h_a"),
+                  F.col("members").alias("m_a"))
+    b = sh.select(F.col("id").alias("id_b"), F.col("h").alias("h_b"),
+                  F.col("members").alias("m_b"))
+    return (cand.join(a, "id_a").join(b, "id_b")
+            .select("m_a", "m_b", score.alias(value))
+            .filter(F.col(value) >= threshold))
 
 
 def connected_components(edges: DataFrame, src: str = "id_a",
@@ -562,23 +587,49 @@ def connected_components(edges: DataFrame, src: str = "id_a",
                          F.col("lbl").alias("component_id"))
 
 
-def broadcast_components_if_small(comp: DataFrame,
-                                  max_rows: int = 2_000_000) -> DataFrame:
-    """Size-gate for broadcasting a connected-components map back
-    onto the corpus (r7 verdict task 2). On THIS testdata the map is
-    cluster-sized (a few % of docs) and broadcasting it keeps the
-    canonical-keep join map-side — but on a dup-heavy crawl corpus
-    30-50% of documents are members of some near-dup cluster, so the
-    map is CORPUS-FRACTION-sized and a forced ``F.broadcast`` hint
-    would OOM every executor (the hint bypasses
-    autoBroadcastJoinThreshold entirely). The gate: the map is
-    already localCheckpoint-materialized by connected_components, so
-    ``count()`` is a cheap cached-RDD pass — broadcast only below
-    ``max_rows`` (default 2M rows ~ 100 MB at two ids/row, inside the
-    executor-memory budget); above it, return the frame un-hinted and
-    let AQE pick the join (shuffle hash / sort-merge on the corpus
-    exchange the pair graph already paid for)."""
-    return F.broadcast(comp) if comp.count() <= max_rows else comp
+# Row ceiling for broadcasting the near-dup cluster map back onto the
+# corpus: 2M rows ~ 100 MB at two ids per row, inside the
+# executor-memory budget.
+CLUSTER_MAP_BROADCAST_ROWS = 2_000_000
+
+
+def near_dup_cluster_map(docs: DataFrame) -> DataFrame:
+    """The near-duplicate cluster map of a ``(doc_id, text)`` corpus:
+    one ``(doc_id, component_id)`` row per document in a cluster of
+    two or more. Pairs are word-trigram Jaccard >= 0.8 from the exact
+    prefix tier (:func:`ngram_jaccard_prefix_pairs`); clusters are
+    their min-label connected components, so ``component_id`` is the
+    cluster's smallest member id. Documents with no near-duplicate
+    have no row."""
+    pairs = ngram_jaccard_prefix_pairs(docs, "text", "doc_id",
+                                       shingle_n=3, threshold=0.8)
+    return connected_components(pairs, "id_a", "id_b")
+
+
+def with_canonical_id(docs: DataFrame) -> DataFrame:
+    """``docs`` plus ``canonical_id``: the smallest id of the
+    document's near-dup cluster (:func:`near_dup_cluster_map`), or its
+    own ``doc_id`` when it has no near-duplicate. The keep-one dedup
+    rule is ``canonical_id == doc_id``.
+
+    The cluster map joins back through a size gate, not a forced
+    hint. On this testdata the map is cluster-sized (a few % of docs)
+    and broadcasting it keeps the join map-side; on a dup-heavy crawl
+    corpus 30-50% of documents sit in some cluster, so the map is
+    corpus-fraction-sized and an ``F.broadcast`` hint (which bypasses
+    autoBroadcastJoinThreshold) would OOM every executor. The map is
+    already localCheckpoint-materialized, so its ``count()`` is a
+    cheap cached-RDD pass: it broadcasts at up to
+    ``CLUSTER_MAP_BROADCAST_ROWS`` rows; above that it joins un-hinted
+    and AQE picks the join.
+    """
+    comp = near_dup_cluster_map(docs)
+    if comp.count() <= CLUSTER_MAP_BROADCAST_ROWS:
+        comp = F.broadcast(comp)
+    return (docs.join(comp, "doc_id", "left")
+            .withColumn("canonical_id",
+                        F.coalesce("component_id", "doc_id"))
+            .drop("component_id"))
 
 
 def embedding_cosine_pairs(df: DataFrame, vec_col: str, id_col: str,
@@ -745,8 +796,7 @@ def incremental_minhash_matches(df: DataFrame, text_col: str, id_col: str,
 def containment_prefix_pairs(df: DataFrame, text_col: str, id_col: str,
                              shingle_n: int = 3,
                              threshold: float = 0.8,
-                             members_cap: int = 10_000,
-                             prefix_order: str = "rarest") -> DataFrame:
+                             members_cap: int = 10_000) -> DataFrame:
     """X2 (containment tier): directional containment
     C(A->B) = |S_A ∩ S_B| / |S_A| >= t — excerpt/quote/boilerplate
     detection. The Jaccard tiers structurally miss this case: a short
@@ -756,7 +806,8 @@ def containment_prefix_pairs(df: DataFrame, text_col: str, id_col: str,
     Prefix filter, complete for the contained side A: if B covers
     >= ceil(t*|A|) of A's shingles it misses at most |A|-ceil(t*|A|)
     of them, so at least one of A's (|A| - ceil(t*|A|) + 1) smallest
-    hashes (global md5 order) appears in B. Candidates join A's
+    keys (the shared rarest-first order of :func:`_prefix_sets`)
+    appears in B. Candidates join A's
     prefix against the full inverted index of ALL documents' shingles
     on the hash — id-only through the shuffle (sets re-fetched by rep
     for the exact verify), plus the complete length filter
@@ -773,47 +824,10 @@ def containment_prefix_pairs(df: DataFrame, text_col: str, id_col: str,
     and cross-group member pairs inherit their representatives'
     directional containment.
 
-    ``prefix_order="rarest"`` (default) applies the classic AllPairs
-    refinement: shingle keys are re-encoded as
-    ``min(df, 2^33-1) * 2^30 + hash`` (document frequency over the
-    collapsed groups in the HIGH bits, the 30-bit hash below), so the
-    sorted prefix of every set holds its RAREST shingles and the
-    probe side joins tiny postings lists instead of the boilerplate
-    head. Completeness needs only SOME total order shared by all
-    sets — any consistent key works — and the re-encoding is a
-    bijection (df is a function of the hash), so intersection counts
-    and therefore the output are IDENTICAL to ``prefix_order="hash"``
-    (kept for A/B). Costs one vocabulary-bounded count plus one
-    re-sort shuffle; wins whenever hot postings dominate, which is
-    every crawl-like corpus (A/B in NOTES.md).
+    ``threshold`` must lie in (0, 1].
     """
-    toks = tokens(F.col(text_col))
-    shingled = widen(df).select(
-        F.col(id_col),
-        F.md5(F.encode(F.col(text_col), "UTF-8")).alias("tkey"),
-        F.array_sort(F.array_distinct(
-            base_hashes(word_shingles(toks, shingle_n)))).alias("hs"),
-    )
-    groups = capped_set_groups(shingled, id_col, members_cap) \
-        .filter(F.size("hs") > 0)
-    sh = (groups.select(F.col("rep").alias("id"), "members",
-                        F.col("hs").alias("h"))
-          .localCheckpoint(eager=True))
-    if prefix_order == "rarest":
-        ex = sh.select("id", F.explode("h").alias("p"))
-        freq = ex.groupBy("p").agg(F.count(F.lit(1)).alias("df"))
-        resorted = (ex.join(freq, "p")
-                    .select("id",
-                            (F.least(F.col("df"), F.lit(2 ** 33 - 1))
-                             * F.lit(2 ** 30) + F.col("p")).alias("k"))
-                    .groupBy("id")
-                    .agg(F.array_sort(F.collect_list("k")).alias("h")))
-        sh = (sh.drop("h").join(resorted, "id")
-              .localCheckpoint(eager=True))
-    elif prefix_order != "hash":
-        raise ValueError(f"prefix_order must be 'rarest' or 'hash', "
-                         f"got {prefix_order!r}")
-    _EPS = 1e-9
+    _check_prefix_threshold("containment_prefix_pairs", threshold)
+    sh = _prefix_sets(df, text_col, id_col, shingle_n, members_cap)
     t = F.lit(threshold)
     min_cover = F.ceil(t * F.size("h") - F.lit(_EPS)).cast("int")
     prefix_len = F.size("h") - min_cover + F.lit(1)
@@ -824,47 +838,24 @@ def containment_prefix_pairs(df: DataFrame, text_col: str, id_col: str,
                          F.size("h").alias("n_b"),
                          F.explode("h").alias("p"))
     # shuffle_hash hint: same estimate-blind-broadcast fix as the
-    # prefix tier above — postings are corpus-sized
+    # Jaccard prefix tier — postings are corpus-sized
     cand = (probe.join(postings.hint("shuffle_hash"), "p")
             .filter((F.col("id_a") != F.col("id_b"))
                     & (F.col("n_b")
                        >= F.ceil(t * F.col("n_a") - F.lit(_EPS))))
             .select("id_a", "id_b").distinct())
-    a = sh.select(F.col("id").alias("id_a"), F.col("h").alias("h_a"),
-                  F.col("members").alias("m_a"))
-    b = sh.select(F.col("id").alias("id_b"), F.col("h").alias("h_b"),
-                  F.col("members").alias("m_b"))
     contain = F.round(
         F.size(F.array_intersect("h_a", "h_b")) / F.size("h_a"), 6)
-    rep_pairs = (cand.join(a, "id_a").join(b, "id_b")
-                 .select("m_a", "m_b", contain.alias("containment"))
-                 .filter(F.col("containment") >= threshold))
-
-    # cross-group expansion: directional pairs (a in A, b in B)
-    # inherit C(repA -> repB); different groups, so a != b always
-    cross = (rep_pairs
-             .select("containment", F.explode("m_a").alias("id_a"), "m_b")
-             .select("containment", "id_a", F.explode("m_b").alias("id_b"))
-             .select("id_a", "id_b", "containment"))
-
-    # within-group ORDERED pairs: identical sets contain each other
-    # at exactly 1.0 in both directions
-    pair_structs = F.flatten(F.transform(
-        F.col("members"),
-        lambda x, i: F.transform(
-            F.slice(F.col("members"), i + 2,
-                    F.greatest(F.size("members") - i - 1, F.lit(0))),
-            lambda y: F.struct(x.alias("id_a"), y.alias("id_b")))))
-    unordered = (sh.filter(F.size("members") > 1)
-                 .select(F.explode(pair_structs).alias("pr"))
-                 .select(F.col("pr.id_a"), F.col("pr.id_b"),
-                         F.lit(1.0).alias("containment")))
-    within = unordered.unionByName(
-        unordered.select(F.col("id_b").alias("id_a"),
-                         F.col("id_a").alias("id_b"), "containment"))
-    if threshold > 1.0:
-        within = within.filter(F.lit(False))
-    return cross.unionByName(within)
+    # cross-group pairs are directional (a in A, b in B) and inherit
+    # C(repA -> repB); different groups, so a != b always. Identical
+    # sets contain each other at exactly 1.0 in BOTH directions, so
+    # the within-group pairs are added reversed as well.
+    cross, within = _member_pairs(
+        _verified(cand, sh, contain, "containment", threshold),
+        sh, "containment")
+    return cross.unionByName(within).unionByName(
+        within.select(F.col("id_b").alias("id_a"),
+                      F.col("id_a").alias("id_b"), "containment"))
 
 
 def duplicate_span_islands(df: DataFrame, text_col: str, id_col: str,

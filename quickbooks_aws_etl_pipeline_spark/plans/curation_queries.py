@@ -198,12 +198,9 @@ def stats_corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-split and per-domain cards (pipeline_pretrain_prep,
     stats_domain_mix) drill into it."""
     from ..functions.numeric import round_ratio6_dec
-    from ..operators.dedup import (connected_components,
-                                   ngram_jaccard_prefix_pairs)
+    from ..operators.dedup import near_dup_cluster_map
     docs = read_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_prefix_pairs(docs, "text", "doc_id",
-                                       shingle_n=3, threshold=0.8)
-    comp = connected_components(pairs, "id_a", "id_b")
+    comp = near_dup_cluster_map(docs)
     n_clustered = comp.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_clustered_docs"),
         F.count_distinct("component_id").cast("bigint")

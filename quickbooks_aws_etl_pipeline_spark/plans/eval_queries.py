@@ -15,9 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import read_table
-from ..operators.dedup import (broadcast_components_if_small,
-                               connected_components,
-                               ngram_jaccard_prefix_pairs)
+from ..operators.dedup import with_canonical_id
 from ..operators.evaluation import (auc_rank_ppm, calibration_bins,
                                     stopword_ppm)
 from ..operators.sampling import hash_bucket
@@ -86,29 +84,18 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-duplicates (a doc_id-hash split puts ~1-1/k of each
     k-member cluster's mass across split boundaries).
 
-    Pipeline: verified n-gram near-dup pairs (same
-    shingle_n=3/threshold=0.8 graph as dedup_canonical_map) ->
-    min-label connected components (cluster-sized output, broadcast
-    back) -> canonical = coalesce(component, own id) -> the same
-    md5 80/10/10 bucket as split_train_test, keyed on the canonical.
+    Pipeline: the near-dup canonical id (operators.dedup
+    with_canonical_id, the cluster map dedup_canonical_map applies)
+    -> the same md5 80/10/10 bucket as split_train_test, keyed on the
+    canonical.
 
     Output per split: document count, distinct-cluster count, and
     n_rescued = docs whose naive id-hash split would have differed —
     the leakage mass this operator prevents. Scale: the only
     corpus-sized exchanges are the pair-generation shuffles the
-    dedup tier already pays; the component map broadcasts only below
-    the size gate (broadcast_components_if_small — a dup-heavy crawl
-    corpus has a corpus-fraction-sized map, where a forced broadcast
-    hint would OOM executors; r7 verdict task 2)."""
+    dedup tier already pays."""
     docs = read_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_prefix_pairs(docs, "text", "doc_id",
-                                       shingle_n=3, threshold=0.8)
-    comp = connected_components(pairs, "id_a", "id_b")
-    base = (docs.select("doc_id")
-            .join(broadcast_components_if_small(comp), "doc_id", "left")
-            .select("doc_id",
-                    F.coalesce("component_id", "doc_id")
-                    .alias("canonical_id")))
+    base = with_canonical_id(docs).select("doc_id", "canonical_id")
     clus_b = hash_bucket(F.col("canonical_id"))
     naive_b = hash_bucket(F.col("doc_id"))
     split = (F.when(clus_b < 80, "train")
@@ -135,17 +122,12 @@ def pipeline_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the anti-pattern this key exists to displace: at 100 TB a
     5-stage re-scanning funnel reads half a petabyte).
 
-    The dedup flag joins the size-gated cluster map (broadcast only
-    below broadcast_components_if_small's ceiling, from the same
-    verified n-gram graph as split_leakage_safe); all other gates
-    are pure codegen on the row. Output: 5 rows
+    The dedup flag is the near-dup canonical keep (operators.dedup
+    with_canonical_id, the same cluster map as split_leakage_safe);
+    all other gates are pure codegen on the row. Output: 5 rows
     (stage_idx, stage, n_docs, n_chars)."""
     docs = read_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_prefix_pairs(docs, "text", "doc_id",
-                                       shingle_n=3, threshold=0.8)
-    comp = connected_components(pairs, "id_a", "id_b")
-    flagged = (docs.join(broadcast_components_if_small(comp),
-                         "doc_id", "left")
+    flagged = (with_canonical_id(docs)
                .select(
                    F.col("n_chars").cast("bigint").alias("n_chars"),
                    F.col("lang").isin("en", "es", "de", "fr")
@@ -153,8 +135,8 @@ def pipeline_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.col("n_chars").between(100, 20000).alias("g2"),
                    (stopword_ppm(F.col("text"), LANG_STOPWORDS["en"])
                     >= 20000).alias("g3"),
-                   (F.coalesce("component_id", "doc_id")
-                    == F.col("doc_id")).alias("g4")))
+                   (F.col("canonical_id") == F.col("doc_id"))
+                   .alias("g4")))
 
     def stage(cond, i):
         n = F.sum(F.when(cond, 1).otherwise(0)).cast("bigint")
@@ -188,30 +170,23 @@ def pipeline_pretrain_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     holds the COMPOSITION to one oracle, the pipeline_ccnet_dsir
     pattern.
 
-    Scale shape: one corpus scan computes gates + token counts; the
-    cluster map joins via the size gate (broadcast below
-    broadcast_components_if_small's ceiling, shuffle join above it);
-    the final aggregate is 3 rows. No corpus-sized exchange beyond
-    the shared pair-graph shuffles."""
+    Scale shape: one corpus scan computes gates + token counts, with
+    the canonical id from operators.dedup.with_canonical_id; the
+    final aggregate is 3 rows. No corpus-sized exchange beyond the
+    shared pair-graph shuffles."""
     docs = read_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_prefix_pairs(docs, "text", "doc_id",
-                                       shingle_n=3, threshold=0.8)
-    comp = connected_components(pairs, "id_a", "id_b")
     from ..operators.text import tokens
-    base = (docs.join(broadcast_components_if_small(comp),
-                      "doc_id", "left")
+    base = (with_canonical_id(docs)
             .select(
-                "doc_id",
-                F.coalesce("component_id", "doc_id")
-                .alias("canonical_id"),
+                "doc_id", "canonical_id",
                 F.size(tokens(F.col("text"))).cast("bigint")
                 .alias("n_tokens"),
                 (F.col("lang").isin("en", "es", "de", "fr")
                  & F.col("n_chars").between(100, 20000)
                  & (stopword_ppm(F.col("text"), LANG_STOPWORDS["en"])
                     >= 20000)
-                 & (F.coalesce("component_id", "doc_id")
-                    == F.col("doc_id"))).alias("kept")))
+                 & (F.col("canonical_id") == F.col("doc_id")))
+                .alias("kept")))
     b = hash_bucket(F.col("canonical_id"))
     split = (F.when(b < 80, "train")
              .when(b < 90, "valid").otherwise("test"))

@@ -11,8 +11,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import read_table
-from ..operators.dedup import (connected_components, embedding_cosine_pairs,
-                               exact_dedup, minhash_lsh_pairs,
+from ..operators.dedup import (embedding_cosine_pairs, exact_dedup,
+                               minhash_lsh_pairs, near_dup_cluster_map,
                                ngram_jaccard_pairs,
                                ngram_jaccard_prefix_pairs, normalized_dedup,
                                simhash_signatures)
@@ -404,9 +404,7 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicate cluster keyed by its smallest doc_id — what a keep-one
     dedup pass actually joins on."""
     docs = read_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_prefix_pairs(docs, "text", "doc_id",
-                                       shingle_n=3, threshold=0.8)
-    return connected_components(pairs, "id_a", "id_b")
+    return near_dup_cluster_map(docs)
 
 
 PLANT_OFFSET = 10_000_000  # planted-copy ids: disjoint from any SF's vec_id
@@ -2593,11 +2591,8 @@ def dedup_canonical_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc keep/drop verdict. Components by min-label propagation
     (dedup_cluster_components), one extra component-keyed aggregate
     for sizes, broadcast back."""
-    from ..operators.dedup import ngram_jaccard_prefix_pairs
     docs = read_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_prefix_pairs(docs, "text", "doc_id",
-                                       shingle_n=3, threshold=0.8)
-    comp = connected_components(pairs, "id_a", "id_b")
+    comp = near_dup_cluster_map(docs)
     sizes = (comp.groupBy("component_id")
              .agg(F.count(F.lit(1)).alias("n_members")))
     return (comp.join(F.broadcast(sizes), "component_id")
@@ -3098,13 +3093,10 @@ def dedup_quality_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-id are the policy's measurable effect)."""
     from pyspark.sql import Window
 
-    from ..operators.dedup import ngram_jaccard_prefix_pairs
     from ..operators.evaluation import stopword_ppm
     from ..operators.text import LANG_STOPWORDS
     docs = read_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_prefix_pairs(docs, "text", "doc_id",
-                                       shingle_n=3, threshold=0.8)
-    comp = connected_components(pairs, "id_a", "id_b")
+    comp = near_dup_cluster_map(docs)
     q = docs.select("doc_id",
                     stopword_ppm(F.col("text"), LANG_STOPWORDS["en"])
                     .alias("quality_ppm"))

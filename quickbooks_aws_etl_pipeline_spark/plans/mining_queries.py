@@ -393,19 +393,26 @@ def ks_from_value_hist(spark: SparkSession, hist0: DataFrame) -> DataFrame:
     """KS finisher over a (v, c_ref, c_cur) histogram: the
     bucketed_cumsum cumulative over 256-cent buckets, then the exact
     integer max |cum_ref*n_cur - cum_cur*n_ref| with its argmax
-    value."""
-    n = hist0.agg(F.sum("c_ref").cast("bigint").alias("n_ref"),
-                  F.sum("c_cur").cast("bigint").alias("n_cur"))
-    cum, _ = bucketed_cumsum(hist0, F.expr("cast(v div 256 as int)"), ["v"],
-                             values=["c_ref", "c_cur"])
-    d = cum.crossJoin(F.broadcast(n)).withColumn("num", _cdf_gap())
-    mx = d.agg(F.max("num").alias("mxnum"))
-    return (d.crossJoin(F.broadcast(mx))
-            .agg(F.max("n_ref").alias("n_ref"),
-                 F.max("n_cur").alias("n_cur"),
-                 F.max("num").alias("__num"),
-                 F.min(F.when(F.col("num") == F.col("mxnum"), F.col("v")))
-                 .cast("bigint").alias("at_value_e2"))
+    value (smallest at ties), both from one aggregate. n_ref/n_cur
+    are the cumulative's grand totals, literals from its collect."""
+    cum, (n_ref, n_cur, n_rows) = bucketed_cumsum(
+        hist0, F.expr("cast(v div 256 as int)"), ["v"],
+        values=["c_ref", "c_cur"])
+    d = cum.withColumns({"n_ref": F.lit(n_ref).cast("bigint"),
+                         "n_cur": F.lit(n_cur).cast("bigint")}) \
+        .withColumn("num", _cdf_gap())
+    # argmax key, unique per row: num first, then ascending v
+    # (cum_rows is the row's position in v order; the NULL-v row
+    # loses every tie), so max_by is deterministic. It stays below 10^38
+    # under the int64 ceiling of n_ref*n_cur, and keeps the aggregate
+    # hash-based (a max over a (num, -v) struct is a SortAggregate).
+    rank = F.when(F.col("v").isNull(), F.lit(0)) \
+        .otherwise(F.lit(n_rows + 1) - F.col("cum_rows"))
+    key = F.col("num") * F.lit(n_rows + 1) + rank
+    return (d.agg(F.max("n_ref").alias("n_ref"),
+                  F.max("n_cur").alias("n_cur"),
+                  F.max("num").alias("__num"),
+                  F.max_by("v", key).cast("bigint").alias("at_value_e2"))
             .select("n_ref", "n_cur",
                     F.col("__num").cast("bigint").alias("ks_num"),
                     F.expr("cast(__num * 1000000 div"

@@ -378,6 +378,36 @@ def test_ngram_prefix_pairs_keep_exact_threshold_pair(
     assert got == {(1, 2): 0.8}
 
 
+@pytest.mark.parametrize("fn, kw, bad", [
+    ("ngram_jaccard_prefix_pairs", "threshold", 1.01),
+    ("ngram_jaccard_prefix_pairs", "threshold", 0.0),
+    ("containment_prefix_pairs", "threshold", 1.01),
+    ("containment_prefix_pairs", "threshold", 0.0),
+    ("minhash_lsh_pairs", "jaccard_threshold", 1.01),
+    ("minhash_lsh_pairs", "jaccard_threshold", -0.1),
+])
+def test_set_joins_reject_out_of_range_thresholds(spark, fn, kw, bad):
+    """An out-of-range threshold fails before any job runs. Past 1.0
+    the Jaccard prefix tier returned two identical docs at 1.0 (below
+    its own threshold), both prefix tiers failed inside a task on a
+    long doc (negative prefix length into slice), and MinHash
+    returned no rows. The prefix tiers take (0, 1]; MinHash takes
+    [0, 1], since 0.0 keeps every band collision."""
+    from quickbooks_aws_etl_pipeline_spark.operators import dedup
+    text = " ".join(f"w{i}" for i in range(300))
+    df = spark.createDataFrame([(1, text), (2, text)],
+                               "doc_id long, text string")
+    sc = spark.sparkContext
+    group = f"threshold-guard-{fn}-{bad}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match="threshold"):
+            getattr(dedup, fn)(df, "text", "doc_id", **{kw: bad})
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
 def test_connected_components_raises_on_iteration_cap(spark):
     """A chain longer than max_iters must fail loudly, not return
     unconverged labels."""
@@ -1169,12 +1199,11 @@ def test_segment_rebuild_matches_python_reference(spark, case):
 
 @settings(max_examples=8, deadline=None)
 @given(span_corpus())
-@pytest.mark.slow  # full-tier: algebra unchanged this round
 def test_prefix_tiers_match_quadratic_reference(spark, case):
     """The AllPairs (Jaccard) and containment prefix-filter tiers
     must equal brute-force quadratic set math on random corpora —
-    under the default rarest-first ordering, with thresholds low
-    enough that candidates actually flow."""
+    under the rarest-first ordering, with thresholds low enough that
+    candidates actually flow."""
     from quickbooks_aws_etl_pipeline_spark.operators.dedup import (
         containment_prefix_pairs, ngram_jaccard_prefix_pairs)
     df = spark.createDataFrame(

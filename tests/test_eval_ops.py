@@ -105,7 +105,6 @@ def test_calibration_bins_partition_corpus(spark, sf_smoke):
         assert lo <= r["mean_score_ppm"] < hi + 1
 
 
-@pytest.mark.slow  # full-tier: algebra unchanged this round
 def test_split_leakage_safe_clusters_atomic(spark, sf_smoke):
     """THE invariant: no near-dup cluster spans a split boundary.
     Recompute the cluster map independently and check every

@@ -121,6 +121,33 @@ def test_ks_statistic_within_bounds(spark, sf_oracle):
     assert 0 <= r.ks_num <= r.n_ref * r.n_cur
 
 
+@pytest.mark.parametrize("hist", [
+    [(1, 1, 0), (2, 0, 1), (3, 1, 0), (4, 0, 1)],           # tie at 1, 3
+    [(None, 1, 0), (1, 1, 0), (2, 0, 1), (3, 1, 0), (4, 0, 1)],
+    [(None, 2, 0), (5, 0, 2)],                             # max at NULL v
+])
+def test_ks_argmax_is_smallest_value_at_max_gap(spark, hist):
+    """ks_from_value_hist against a pure-Python cumulative: NULL
+    values rank first, the argmax is the smallest non-NULL v at the
+    max numerator (NULL when only the NULL row attains it)."""
+    from quickbooks_aws_etl_pipeline_spark.plans.mining_queries import (
+        ks_from_value_hist)
+    n_ref = sum(r for _v, r, _c in hist)
+    n_cur = sum(c for _v, _r, c in hist)
+    cum_r = cum_c = 0
+    nums = []
+    for v, r, c in sorted(hist, key=lambda t: (t[0] is not None, t[0])):
+        cum_r, cum_c = cum_r + r, cum_c + c
+        nums.append((abs(cum_r * n_cur - cum_c * n_ref), v))
+    mx = max(n for n, _v in nums)
+    at = min((v for n, v in nums if n == mx and v is not None),
+             default=None)
+    df = spark.createDataFrame(hist, "v bigint, c_ref bigint, c_cur bigint")
+    got = ks_from_value_hist(spark, df).collect()[0]
+    assert (got.n_ref, got.n_cur, got.ks_num, got.at_value_e2) == \
+        (n_ref, n_cur, mx, at)
+
+
 def test_attribution_credits_conserve_value(spark, sf_oracle):
     """Floor-share conservation: total credited cents can never
     exceed the attributed purchases' total value, and the floor loss
