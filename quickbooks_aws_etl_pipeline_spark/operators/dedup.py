@@ -488,8 +488,9 @@ def _prefix_sets(df: DataFrame, text_col: str, id_col: str,
     shingled = widen(df).select(
         F.col(id_col),
         F.md5(F.encode(F.col(text_col), "UTF-8")).alias("tkey"),
-        F.array_sort(F.array_distinct(
-            base_hashes(word_shingles(toks, shingle_n)))).alias("hs"),
+        # unsorted: only the rarest-first order built below is read
+        F.array_distinct(
+            base_hashes(word_shingles(toks, shingle_n))).alias("hs"),
     )
     groups = capped_set_groups(shingled, id_col, members_cap) \
         .filter(F.size("hs") > 0)

@@ -851,7 +851,11 @@ def zipf_head(df, text_col: str, id_col: str, k: int = 100):
     d9 = lambda c: F.round(c, 9).cast("decimal(28,9)")  # noqa: E731
     lx = d9(F.log10(F.col("rnk").cast("double")))
     ly = d9(F.log10(F.col("freq").cast("double")))
+    # one pass over the (<= k-row) head: the slope's sums and the head
+    # rows themselves come out of the same global aggregate, so the
+    # ranked frame (and its window) is read once, not once per branch
     sl = top.agg(
+        F.collect_list(F.struct("rnk", "token", "freq")).alias("head"),
         F.count(F.lit(1)).cast("decimal(28,9)").alias("n"),
         F.sum(lx).alias("sx"), F.sum(ly).alias("sy"),
         F.sum(lx * ly).alias("sxy"), F.sum(lx * lx).alias("sxx"))
@@ -859,5 +863,5 @@ def zipf_head(df, text_col: str, id_col: str, k: int = 100):
         .cast("double")
     den = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")) \
         .cast("double")
-    slope = sl.select(F.round(num / den, 6).alias("zipf_slope"))
-    return top.crossJoin(F.broadcast(slope))
+    return sl.select(F.inline("head"),
+                     F.round(num / den, 6).alias("zipf_slope"))

@@ -65,7 +65,7 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_table(spark, sf_dir, "orders")).localCheckpoint(eager=False)
     seeds = (read_table(spark, sf_dir, "supplier")
              .filter(F.col("s_suppkey") % 16 == 7)
-             .select(cs_node_encode("S", F.col("s_suppkey")).alias("node"))
+             .select(cs_node_encode("S", "s_suppkey").alias("node"))
              .distinct())
 
     def expand(frontiers: list[DataFrame]) -> DataFrame:

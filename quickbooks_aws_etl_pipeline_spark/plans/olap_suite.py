@@ -516,7 +516,7 @@ def graph_pagerank_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks = pagerank_fixed(edges, iterations=3)
     return (ranks.orderBy(F.col("rank_units").desc(), F.col("node").asc())
             .limit(25)
-            .select(cs_node_decode(F.col("node")).alias("node"),
+            .select(cs_node_decode("node").alias("node"),
                     "rank_units"))
 
 
@@ -1121,5 +1121,5 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_members")))
     return (comm.orderBy(F.desc("n_members"), F.asc("lbl"))
             .limit(10)
-            .select(cs_node_decode(F.col("lbl")).alias("community_label"),
+            .select(cs_node_decode("lbl").alias("community_label"),
                     "n_members"))

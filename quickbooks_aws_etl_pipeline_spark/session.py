@@ -13,6 +13,30 @@ Engine-wide execution defaults (SURVEY.md §4, BASELINE.md):
 - UTC session timezone so timestamp values round-trip identically
   between Spark, Parquet, and the DuckDB oracle.
 - Arrow enabled for every pandas-UDF / toPandas boundary.
+
+Two entries cut the driver work that every plan build repeats:
+
+- ``spark.sql.codegen.cache.maxEntries=4096``: the whole-stage codegen
+  cache is JVM-wide and LRU, 100 classes by default. One pass of the
+  perfbench ``curation_rounds`` keys generates about 121 distinct
+  classes and the 60 ``bench.HEADLINE`` keys about 1,400, so at 100
+  every class was evicted before its next use and recompiled (Janino,
+  then the JIT again) on every pass: 119-122 compiles per steady-state
+  ``curation_rounds`` pass, 0 with this cap. The cost is metaspace for
+  the cached classes: 178 -> 189 MB after two headline sweeps at
+  sf0.001. Entries hold no data.
+- ``spark.python.sql.dataFrameDebugging.enabled=false``: PySpark 4
+  otherwise captures the Python call site on every DataFrame/Column
+  API call — a stack walk plus about four py4j round trips each
+  (``curate_domain_caps``'s build: 580 round trips with it, 240
+  without). The cost: an error's DataFrame query context loses the
+  Python call-site line. Errors still raise, with the same class and
+  message. PySpark reads the switch once per process, from the session
+  active at the first API call.
+
+Both are static: they take effect only when :func:`get_spark` creates
+the session (the first one in its JVM / Python process);
+:func:`apply_engine_conf` cannot set them on a running session.
 """
 
 from __future__ import annotations
@@ -39,6 +63,9 @@ ENGINE_CONF: dict[str, str] = {
     # events.ts is parquet TIMESTAMP(NANOS) which Spark cannot read as
     # a timestamp; read as long and convert in io.read_table
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # static: see the module docstring
+    "spark.sql.codegen.cache.maxEntries": "4096",
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 # Local-mode-only tuning: the testdata tables are single ~1-10 MB
@@ -72,14 +99,17 @@ def get_spark(app_name: str = "quickbooks-aws-etl-pipeline-spark",
 
 
 def apply_engine_conf(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable engine defaults to an existing session
-    (used when the driver hands us its own SparkSession)."""
+    """Apply the runtime-settable engine defaults to an existing
+    session (used when the driver hands us its own SparkSession).
+
+    Static entries (``spark.conf.isModifiable`` is False) are skipped:
+    the codegen cache cap and the call-site switch take effect only
+    through :func:`get_spark`. Any other failure to set an entry
+    raises."""
     conf = dict(ENGINE_CONF)
     if spark.sparkContext.master.startswith("local"):
         conf.update(LOCAL_TUNING)
     for k, v in conf.items():
-        try:
+        if spark.conf.isModifiable(k):
             spark.conf.set(k, v)
-        except Exception:
-            pass  # static conf on a running session — keep going
     return spark

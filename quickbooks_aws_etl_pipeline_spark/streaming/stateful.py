@@ -91,8 +91,7 @@ def run_stream_foreach_batch_parquet(spark: SparkSession, events_path: str,
         stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", _checkpoint_dir(query_name)),
         query_name, 120)
-    return spark.read.option("basePath", out_dir).parquet(
-        os.path.join(out_dir, "batch=*"))
+    return spark.read.parquet(out_dir)
 
 
 def incdedup_epoch_pairs(spark: SparkSession, batch: DataFrame,
@@ -120,8 +119,9 @@ def incdedup_epoch_pairs(spark: SparkSession, batch: DataFrame,
                   jaccard_threshold=0.5)
     out = minhash_lsh_pairs(batch, "text", "doc_id", **params)
     if glob.glob(os.path.join(idx_dir, "batch=*")):
-        index = (spark.read.option("basePath", idx_dir)
-                 .parquet(os.path.join(idx_dir, "batch=*"))
+        # the base dir, with partition discovery: a glob path makes
+        # Spark's sink-metadata probe log a FileNotFoundException
+        index = (spark.read.parquet(idx_dir)
                  .filter(F.col("batch") < F.lit(batch_id))
                  .select("doc_id", "text"))
         both = (batch.withColumn("__new", F.lit(True))
@@ -168,10 +168,10 @@ def run_stream_incremental_dedup(spark: SparkSession, docs: DataFrame,
     index glob already contains the epoch's own prior write — the
     cross probe would match the batch against itself (self-pairs at
     jaccard 1.0, within-batch pairs double-counted). The index read
-    therefore surfaces the ``batch=`` path as a partition column via
-    basePath and keeps only ``batch < batch_id`` — strictly earlier
-    epochs — making the sink a pure function of (batch, batch_id)
-    regardless of delivery count.
+    therefore surfaces the ``batch=`` path as a partition column
+    (partition discovery on the index dir) and keeps only
+    ``batch < batch_id`` — strictly earlier epochs — making the sink
+    a pure function of (batch, batch_id) regardless of delivery count.
     """
     in_dir = _checkpoint_dir(f"incdedup_in_{query_name}")
     idx_dir = _checkpoint_dir(f"incdedup_idx_{query_name}")
@@ -199,8 +199,7 @@ def run_stream_incremental_dedup(spark: SparkSession, docs: DataFrame,
         .option("checkpointLocation",
                 _checkpoint_dir(f"incdedup_ckpt_{query_name}")),
         query_name, 300)
-    return (spark.read.option("basePath", out_dir)
-            .parquet(os.path.join(out_dir, "batch=*"))
+    return (spark.read.parquet(out_dir)
             .select("id_a", "id_b", "jaccard"))
 
 

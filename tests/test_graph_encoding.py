@@ -22,12 +22,15 @@ KEY_SAMPLE = (list(range(0, 130)) + [999, 1000, 1001, 9999, 10000,
 
 def test_lex_embed_roundtrip_and_order(spark):
     df = spark.createDataFrame([(k,) for k in KEY_SAMPLE], "n long")
-    enc = df.select("n", lex_embed(F.col("n")).alias("m"),
+    enc = df.select("n", lex_embed("n").alias("m"),
                     F.col("n").cast("string").alias("s"))
-    rows = enc.withColumn("s2", lex_decode(F.col("m"))).collect()
+    rows = enc.withColumn("s2", lex_decode("m")).collect()
     for r in rows:
         assert r["s2"] == r["s"], f"decode({r['n']}) = {r['s2']}"
         assert 0 <= r["m"] < LEX_SPAN
+        # digit d -> base-11 digit d+1, left-aligned in 10 slots
+        assert r["m"] == sum((int(d) + 1) * 11 ** (9 - i)
+                             for i, d in enumerate(r["s"]))
     by_m = [r["s"] for r in sorted(rows, key=lambda r: r["m"])]
     by_s = [r["s"] for r in sorted(rows, key=lambda r: r["s"])]
     assert by_m == by_s  # numeric order == string order
@@ -41,15 +44,15 @@ def test_lex_embed_out_of_range_raises(spark, bad):
     # dropping the node from every join. Must now fail loudly.
     df = spark.createDataFrame([(bad,)], "n long")
     with pytest.raises(Exception, match="lex_embed"):
-        df.select(lex_embed(F.col("n"))).collect()
+        df.select(lex_embed("n")).collect()
 
 
 def test_lex_embed_in_range_boundary_still_encodes(spark):
     # the guard must not clip the legal boundary: 1e10 - 1 encodes,
     # roundtrips, and stays inside [11**9, LEX_SPAN)
     df = spark.createDataFrame([(10**10 - 1,), (0,)], "n long")
-    rows = (df.select("n", lex_embed(F.col("n")).alias("m"))
-            .withColumn("s2", lex_decode(F.col("m"))).collect())
+    rows = (df.select("n", lex_embed("n").alias("m"))
+            .withColumn("s2", lex_decode("m")).collect())
     for r in rows:
         assert r["s2"] == str(r["n"])
         assert 11**9 <= r["m"] < LEX_SPAN
@@ -61,9 +64,9 @@ def test_cs_node_encode_matches_string_order(spark):
          for p in ("C", "S")], "k long, p string")
     enc = df.select(
         F.concat("p", F.col("k").cast("string")).alias("s"),
-        F.when(F.col("p") == "C", cs_node_encode("C", F.col("k")))
-        .otherwise(cs_node_encode("S", F.col("k"))).alias("m"))
-    rows = enc.withColumn("s2", cs_node_decode(F.col("m"))).collect()
+        F.when(F.col("p") == "C", cs_node_encode("C", "k"))
+        .otherwise(cs_node_encode("S", "k")).alias("m"))
+    rows = enc.withColumn("s2", cs_node_decode("m")).collect()
     assert all(r["s2"] == r["s"] for r in rows)
     by_m = [r["s"] for r in sorted(rows, key=lambda r: r["m"])]
     assert by_m == sorted(r["s"] for r in rows)
@@ -147,3 +150,27 @@ def test_unrolled_rounds_checkpoints_all_but_the_last_state(spark):
     assert unrolled_rounds(start, step, 0) == [start]
     (_, only) = unrolled_rounds(start, step, 1)
     assert "ExistingRDD" not in "\n".join(_physical_lines(only))
+
+
+def test_node_codec_is_one_py4j_expression(spark, monkeypatch):
+    # each codec call parses one SQL string: F.expr's class lookup,
+    # member lookup and call
+    import gc
+
+    from py4j.clientserver import ClientServerConnection
+    sent = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        # "m\nd" commands release proxies of earlier, collected objects
+        if not command.startswith("m\nd"):
+            sent.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    for build in (lambda: cs_node_encode("S", "k"),
+                  lambda: cs_node_decode("m")):
+        gc.collect()
+        sent.clear()
+        build()
+        assert len(sent) <= 3, sent
