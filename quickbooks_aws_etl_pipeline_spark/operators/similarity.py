@@ -40,6 +40,15 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
+def cosine_e6(a: Column, b: Column) -> Column:
+    """cosine(a, b) snapped half-up to integer 1e-6 units,
+    ``floor(cosine * 1e6 + 0.5)`` as bigint: the score every serving
+    key ranks, cuts and thresholds on, so no float decides an order
+    and the DuckDB oracle replays each decision exactly."""
+    return (F.floor(cosine(a, b) * F.lit(1e6) + F.lit(0.5))
+            .cast("bigint"))
+
+
 def hyperplanes(n_bits: int, dim: int) -> list[list[int]]:
     """Deterministic pseudo-random hyperplanes for cosine LSH:
     integer components in [-1000, 1000] derived from md5, so Spark
@@ -541,6 +550,19 @@ def pq_rerank_topk(df: DataFrame, codes_df: DataFrame,
     return cosine_topk(hits, vec_col, id_col, query_vec, k=k)
 
 
+def probe_cells(query_vec: list[float], centroids: list[list[float]],
+                nprobe: int) -> list[int]:
+    """Indices of the ``nprobe`` centroids nearest the query by
+    cosine, best first; ties go to the lower index (stable sort). The
+    driver-side probe ranking of the learned-centroid IVF searches:
+    each term is ``(a / qn) * b`` summed left to right, and a zero
+    query vector ranks against norm 1 instead of dividing by zero."""
+    qn = sum(x * x for x in query_vec) ** 0.5 or 1.0
+    sims = [(i, sum(a / qn * b for a, b in zip(query_vec, c)))
+            for i, c in enumerate(centroids)]
+    return [i for i, _ in sorted(sims, key=lambda t: -t[1])[:nprobe]]
+
+
 def ivf_topk(df: DataFrame, vec_col: str, id_col: str,
              query_vec: list[float], centroids: list[list[float]],
              k: int = 10, nprobe: int = 2) -> DataFrame:
@@ -548,13 +570,27 @@ def ivf_topk(df: DataFrame, vec_col: str, id_col: str,
     ``nprobe`` nearest centroids. With the cell precomputed as a
     partition/cluster key, the filter becomes partition pruning and
     the scan touches nprobe/k of the data."""
-    qn = sum(x * x for x in query_vec) ** 0.5 or 1.0
-    q = [x / qn for x in query_vec]
-    sims = [(i, sum(a * b for a, b in zip(q, c))) for i, c in enumerate(centroids)]
-    probe = [i for i, _ in sorted(sims, key=lambda t: -t[1])[:nprobe]]
+    probe = probe_cells(query_vec, centroids, nprobe)
     celled = df.withColumn("__cell", assign_cell(vec_col, centroids))
     return cosine_topk(celled.filter(F.col("__cell").isin(probe)),
                        vec_col, id_col, query_vec, k=k)
+
+
+def recall_receipt(approx: DataFrame, exact: DataFrame, id_col: str,
+                   k: int, min_hits: int) -> DataFrame:
+    """The one-row check that makes an approximate top-k key
+    oracle-checkable: (k_requested, n_results, recall_ok), where
+    recall_ok says at least ``min_hits`` of the ``approx`` ids are
+    among the ``exact`` ids. An index's recall is not SQL-expressible,
+    so the query verifies it and the oracle states the constants."""
+    a = approx.select(F.col(id_col).alias("id"))
+    hits = a.join(exact.select(F.col(id_col).alias("id")), "id",
+                  "left_semi")
+    return (a.agg(F.count(F.lit(1)).alias("n_results"))
+            .crossJoin(hits.agg(F.count(F.lit(1)).alias("__h")))
+            .select(F.lit(k).alias("k_requested"),
+                    F.col("n_results").cast("bigint").alias("n_results"),
+                    (F.col("__h") >= min_hits).alias("recall_ok")))
 
 
 def int8_quantize_report(df: DataFrame, vec_col: str,

@@ -564,46 +564,51 @@ def udtf_sentence_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """)
 
 
+def _fit_quantizer(emb: DataFrame, fit: DataFrame,
+                   train_mod: int | None) -> tuple[list, list[float]]:
+    """The serving keys' coarse quantizer and query: spherical
+    k-means (k=8, 4 Lloyd's iterations) on ``fit``, with the one-row
+    Q_VEC_ID query fetch from ``emb`` overlapped on a second thread
+    (guide §2.6). Both results are data-determined, so the overlap
+    cannot change the output. Returns (centroids, query vector)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from ..operators.similarity import spherical_kmeans
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        fut_qv = pool.submit(fetch_query_vector, emb, "embedding",
+                             "vec_id", Q_VEC_ID)
+        cents = spherical_kmeans(fit, "embedding", "vec_id", k=8, iters=4,
+                                 train_mod=train_mod)
+        return cents, fut_qv.result()
+
+
+def _ivf_recall(spark: SparkSession, sf_dir: str,
+                train_mod: int | None) -> DataFrame:
+    """IVF top-10 (nprobe=4 of 8 learned cells) against exact
+    brute force for the Q_VEC_ID query, as the recall receipt
+    (operators/similarity.recall_receipt, bound >= 5)."""
+    from ..operators.similarity import ivf_topk, recall_receipt
+    emb = read_table(spark, sf_dir, "embeddings")
+    cents, qv = _fit_quantizer(emb, emb, train_mod)
+    others = emb.filter(F.col("vec_id") != Q_VEC_ID)
+    return recall_receipt(
+        ivf_topk(others, "embedding", "vec_id", qv, cents, k=10, nprobe=4),
+        cosine_topk(others, "embedding", "vec_id", qv, k=10),
+        "vec_id", k=10, min_hits=5)
+
+
 @register("sim_topk_cosine_ivf_learned")
 def sim_topk_cosine_ivf_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3 learned-quantizer ANN: deterministic distributed spherical
     k-means fits the coarse cells (only the k x dim model reaches the
     driver), then the search probes the query's nprobe nearest cells.
 
-    Lloyd's iterations are not SQL-expressible, so the key is made
-    oracle-checkable BY CONSTRUCTION (same pattern as
-    ``sim_topk_cosine_pq``): the query itself compares the IVF top-k
-    to the exact brute-force top-k and emits
-    (k_requested, n_results, recall_ok) — constants the oracle
-    states. recall@10 at nprobe=4/k=8 measures 6-8 across sf0.001-0.1
-    (deterministic — no RNG anywhere); the bound is >= 5. The full
-    recall-vs-random-pruning property stays pinned in
-    tests/test_advanced_ops.py."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from ..operators.similarity import ivf_topk, spherical_kmeans
-    emb = read_table(spark, sf_dir, "embeddings")
-    # overlap the two independent fit inputs (guide §2.6): the
-    # one-row query fetch rides the executor tail of the Lloyd's-fit
-    # jobs; both results are data-determined, so the overlap cannot
-    # change the output
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut_qv = pool.submit(fetch_query_vector, emb, "embedding",
-                             "vec_id", Q_VEC_ID)
-        cents = spherical_kmeans(emb, "embedding", "vec_id", k=8, iters=4)
-        qv = fut_qv.result()
-    others = emb.filter(F.col("vec_id") != Q_VEC_ID)
-    approx = ivf_topk(others, "embedding", "vec_id", qv, cents,
-                      k=10, nprobe=4) \
-        .select(F.col("vec_id").alias("id"))
-    exact = cosine_topk(others, "embedding", "vec_id", qv, k=10) \
-        .select(F.col("vec_id").alias("id"))
-    hits = approx.join(exact, "id", "left_semi")
-    return (approx.agg(F.count(F.lit(1)).alias("n_results"))
-            .crossJoin(hits.agg(F.count(F.lit(1)).alias("__h")))
-            .select(F.lit(10).alias("k_requested"),
-                    F.col("n_results").cast("bigint").alias("n_results"),
-                    (F.col("__h") >= 5).alias("recall_ok")))
+    Lloyd's iterations are not SQL-expressible, so the key emits the
+    recall receipt of :func:`_ivf_recall`. recall@10 at nprobe=4/k=8
+    measures 6-8 across sf0.001-0.1 (deterministic — no RNG
+    anywhere); the bound is >= 5. The full recall-vs-random-pruning
+    property stays pinned in tests/test_advanced_ops.py."""
+    return _ivf_recall(spark, sf_dir, train_mod=None)
 
 
 @register("sim_topk_cosine_ivf_trainsampled")
@@ -615,33 +620,9 @@ def sim_topk_cosine_ivf_trainsampled(spark: SparkSession,
     the dominant term, drops by the sample rate — FAISS itself
     trains IVF on a bounded sample, never the corpus), while
     assignment and the nprobe search still cover EVERY vector, so
-    the index is complete. Same oracle-by-construction contract:
-    recall@10 of the sample-trained index vs exact brute force, with
-    the >= 5 bound stated as constants (measured 6-8 across
-    sf0.001-0.1, deterministic — no RNG anywhere)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from ..operators.similarity import ivf_topk, spherical_kmeans
-    emb = read_table(spark, sf_dir, "embeddings")
-    # overlap the independent query fetch with the fit (guide §2.6)
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut_qv = pool.submit(fetch_query_vector, emb, "embedding",
-                             "vec_id", Q_VEC_ID)
-        cents = spherical_kmeans(emb, "embedding", "vec_id", k=8, iters=4,
-                                 train_mod=4)
-        qv = fut_qv.result()
-    others = emb.filter(F.col("vec_id") != Q_VEC_ID)
-    approx = ivf_topk(others, "embedding", "vec_id", qv, cents,
-                      k=10, nprobe=4) \
-        .select(F.col("vec_id").alias("id"))
-    exact = cosine_topk(others, "embedding", "vec_id", qv, k=10) \
-        .select(F.col("vec_id").alias("id"))
-    hits = approx.join(exact, "id", "left_semi")
-    return (approx.agg(F.count(F.lit(1)).alias("n_results"))
-            .crossJoin(hits.agg(F.count(F.lit(1)).alias("__h")))
-            .select(F.lit(10).alias("k_requested"),
-                    F.col("n_results").cast("bigint").alias("n_results"),
-                    (F.col("__h") >= 5).alias("recall_ok")))
+    the index is complete. Output: the :func:`_ivf_recall` receipt
+    of the sample-trained index (measured 6-8 across sf0.001-0.1)."""
+    return _ivf_recall(spark, sf_dir, train_mod=4)
 
 
 @register("sim_index_persist_serve")
@@ -663,44 +644,26 @@ def sim_index_persist_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
        serve scan reads nprobe directories, never the corpus), then
        exact cosine top-k within the probed cells.
 
-    Same oracle-by-construction contract as the other IVF tiers:
-    recall@10 vs exact brute force over the ORIGINAL table, bound
-    >= 5 stated as constants (deterministic end to end)."""
-    from ..operators.similarity import (assign_cell, cosine_topk,
-                                        spherical_kmeans)
+    Output: the recall receipt (operators/similarity.recall_receipt)
+    against exact brute force over the ORIGINAL table, bound >= 5."""
+    from ..operators.similarity import (assign_cell, probe_cells,
+                                        recall_receipt)
     from ..sinks import scratch_path, sf_tag
-    from concurrent.futures import ThreadPoolExecutor
 
     emb = read_table(spark, sf_dir, "embeddings")
-    # overlap the independent query fetch with the fit (guide §2.6)
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut_qv = pool.submit(fetch_query_vector, emb, "embedding",
-                             "vec_id", Q_VEC_ID)
-        cents = spherical_kmeans(emb, "embedding", "vec_id", k=8, iters=4,
-                                 train_mod=4)
-        qv = fut_qv.result()
+    cents, qv = _fit_quantizer(emb, emb, train_mod=4)
     idx_dir = scratch_path("ivf_index", sf_tag(sf_dir))
     (emb.withColumn("cell", assign_cell("embedding", cents))
         .write.mode("overwrite").partitionBy("cell").parquet(idx_dir))
 
-    qn = sum(x * x for x in qv) ** 0.5 or 1.0
-    sims = [(i, sum(a / qn * b for a, b in zip(qv, c)))
-            for i, c in enumerate(cents)]
-    probe = [i for i, _ in sorted(sims, key=lambda t: -t[1])[:4]]
     index = (spark.read.parquet(idx_dir)
-             .filter(F.col("cell").isin(probe))
+             .filter(F.col("cell").isin(probe_cells(qv, cents, 4)))
              .filter(F.col("vec_id") != Q_VEC_ID))
-    approx = cosine_topk(index, "embedding", "vec_id", qv, k=10) \
-        .select(F.col("vec_id").alias("id"))
-    exact = cosine_topk(emb.filter(F.col("vec_id") != Q_VEC_ID),
-                        "embedding", "vec_id", qv, k=10) \
-        .select(F.col("vec_id").alias("id"))
-    hits = approx.join(exact, "id", "left_semi")
-    return (approx.agg(F.count(F.lit(1)).alias("n_results"))
-            .crossJoin(hits.agg(F.count(F.lit(1)).alias("__h")))
-            .select(F.lit(10).alias("k_requested"),
-                    F.col("n_results").cast("bigint").alias("n_results"),
-                    (F.col("__h") >= 5).alias("recall_ok")))
+    return recall_receipt(
+        cosine_topk(index, "embedding", "vec_id", qv, k=10),
+        cosine_topk(emb.filter(F.col("vec_id") != Q_VEC_ID),
+                    "embedding", "vec_id", qv, k=10),
+        "vec_id", k=10, min_hits=5)
 
 
 @register("dedup_semantic_cells")
@@ -777,12 +740,12 @@ def sim_topk_cosine_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The search is ADC-shortlist -> exact re-rank (the FAISS/ScaNN
     deployment shape): the compressed scan proposes 100 candidates,
-    exact cosine re-ranks just those. Oracle-checkable by
-    construction (same pattern as agg_approx_distinct): emits
-    k_requested / n_results plus a recall@10-vs-brute-force bound
-    the oracle states as constants; the recall property itself is
-    additionally pinned in tests/test_advanced_ops.py."""
-    from ..operators.similarity import pq_encode, pq_rerank_topk, pq_train
+    exact cosine re-ranks just those. Output: the recall receipt
+    (operators/similarity.recall_receipt) against brute force, bound
+    >= 6; the recall property itself is additionally pinned in
+    tests/test_advanced_ops.py."""
+    from ..operators.similarity import (pq_encode, pq_rerank_topk, pq_train,
+                                        recall_receipt)
     emb = read_table(spark, sf_dir, "embeddings")
     books = pq_train(emb, "embedding", "vec_id", m=16, ksub=64)
     qv = fetch_query_vector(emb, "embedding", "vec_id", Q_VEC_ID)
@@ -790,16 +753,10 @@ def sim_topk_cosine_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx = pq_rerank_topk(others,
                             pq_encode(others, "embedding", "vec_id", books),
                             "embedding", "vec_id", qv, books,
-                            k=10, shortlist=100) \
-        .select(F.col("vec_id").alias("id"), "sim")
-    exact = cosine_topk(others, "embedding", "vec_id", qv, k=10) \
-        .select(F.col("vec_id").alias("id"))
-    hits = approx.join(exact, "id", "left_semi")
-    return (approx.agg(F.count(F.lit(1)).alias("n_results"))
-            .crossJoin(hits.agg(F.count(F.lit(1)).alias("__h")))
-            .select(F.lit(10).alias("k_requested"),
-                    F.col("n_results").cast("bigint").alias("n_results"),
-                    (F.col("__h") >= 6).alias("recall_ok")))
+                            k=10, shortlist=100)
+    return recall_receipt(
+        approx, cosine_topk(others, "embedding", "vec_id", qv, k=10),
+        "vec_id", k=10, min_hits=6)
 
 
 @register("map_functions")

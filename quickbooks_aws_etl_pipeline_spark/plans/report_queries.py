@@ -173,9 +173,12 @@ def qbo_entity_deposit(spark: SparkSession, sf_dir: str) -> DataFrame:
     on DepositToAccountRef.value (qb_deposit.py:110), and the
     TO_TIMESTAMP(txn_date,'YYYY-MM-DD HH24:MI:SS') load cast
     (qb_deposit.py:142) — Redshift parses date-only strings to
-    midnight, mirrored here by a two-format coalesce. Page 2 carries a
-    CashBack struct the reference never selects (qb_deposit.py:94-98);
-    it must not break the page union."""
+    midnight, mirrored here by a two-format coalesce. Each parse is a
+    ``try_to_timestamp``, so a string the first format rejects yields
+    NULL for the fallback under ANSI mode too (``to_timestamp`` raises
+    CANNOT_PARSE_TIMESTAMP there). Page 2 carries a CashBack struct
+    the reference never selects (qb_deposit.py:94-98); it must not
+    break the page union."""
     from ..sources.fixtures import DEPOSIT_PAGES
     df = pages_to_df(spark, DEPOSIT_PAGES, "Deposit")
     return df.select(
@@ -183,8 +186,9 @@ def qbo_entity_deposit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("Id").cast("int").alias("id"),
         F.col("TxnDate").alias("txn_date"),
         F.coalesce(
-            F.to_timestamp("TxnDate", "yyyy-MM-dd HH:mm:ss"),
-            F.to_timestamp("TxnDate", "yyyy-MM-dd")).alias("txn_ts"),
+            F.try_to_timestamp("TxnDate", F.lit("yyyy-MM-dd HH:mm:ss")),
+            F.try_to_timestamp("TxnDate", F.lit("yyyy-MM-dd")))
+        .alias("txn_ts"),
         F.col("PrivateNote").alias("private_note"),
         F.to_json("Line").alias("line"),
         F.col("DepositToAccountRef.value").cast("int")

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from ..io import read_table
 from ..operators.retrieval import (bm25_scores, margin_mine, rrf_fuse,
                                    topk_with_rank)
+from ..operators.similarity import as_double_array, cosine_e6
 from .queries import register
 
 # The fixed literal query every lexical key serves: engine-vocabulary
@@ -46,6 +47,26 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rnk")
 
 
+def _dense_rank(spark: SparkSession, sf_dir: str, id_alias: str,
+                rank_alias: str) -> DataFrame:
+    """The dense leg of the fused keys: snapped-cosine top-20 against
+    the vec_id-0 query embedding, as (``id_alias``, ``rank_alias``).
+    The query row broadcasts onto one corpus scan; the cut is a
+    TakeOrderedAndProject, so fusion stays list-sized."""
+    emb = read_table(spark, sf_dir, "embeddings")
+    q = (emb.filter(F.col("vec_id") == 0)
+         .select(F.col("embedding").alias("qv")))
+    scored = (emb.filter(F.col("vec_id") != 0)
+              .crossJoin(F.broadcast(q))
+              .select("vec_id",
+                      cosine_e6(as_double_array(F.col("embedding")),
+                                as_double_array(F.col("qv")))
+                      .alias("sim_e6")))
+    return (topk_with_rank(scored, [F.desc("sim_e6"), F.asc("vec_id")], 20,
+                           rank_alias)
+            .select(F.col("vec_id").alias(id_alias), rank_alias))
+
+
 @register("sim_hybrid_rrf")
 def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid search: reciprocal-rank fusion (k=60) of the BM25
@@ -58,23 +79,10 @@ def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (term-bucketed postings / IVF cells); fusion cost never grows
     with the corpus."""
     docs = read_table(spark, sf_dir, "documents")
-    emb = read_table(spark, sf_dir, "embeddings")
     sparse = (topk_with_rank(bm25_scores(docs, BM25_QUERY_TERMS),
                              [F.desc("score_e6"), F.asc("doc_id")], 20)
               .select(F.col("doc_id").alias("id"), "rnk"))
-    from ..operators.similarity import as_double_array, cosine
-    q = (emb.filter(F.col("vec_id") == 0)
-         .select(F.col("embedding").alias("qv")))
-    dense_scored = (emb.filter(F.col("vec_id") != 0)
-                    .crossJoin(F.broadcast(q))
-                    .select("vec_id",
-                            F.floor(cosine(as_double_array(F.col("embedding")),
-                                           as_double_array(F.col("qv")))
-                                    * F.lit(1e6) + F.lit(0.5))
-                            .cast("bigint").alias("sim_e6")))
-    dense = (topk_with_rank(dense_scored,
-                            [F.desc("sim_e6"), F.asc("vec_id")], 20)
-             .select(F.col("vec_id").alias("id"), "rnk"))
+    dense = _dense_rank(spark, sf_dir, "id", "rnk")
     fused = rrf_fuse(sparse, dense, k_rrf=60)
     return topk_with_rank(fused, [F.desc("rrf"), F.asc("id")], 10,
                           "rnk_fused")
@@ -187,7 +195,6 @@ def pipeline_rag_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, so fusion, the diversity window, and the final cut all run
     on list-sized relations — corpus cost is one chunk scan + one
     posting exchange, independent of k."""
-    from ..operators.similarity import as_double_array, cosine
     from .llm_ops import doc_chunking_overlap
     chunks = (doc_chunking_overlap(spark, sf_dir)
               .select((F.col("doc_id") * 1000 + F.col("chunk_id"))
@@ -201,19 +208,7 @@ def pipeline_rag_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr("CAST(ckey DIV 1000 AS BIGINT)").alias("doc_id"),
                 F.pmod(F.col("ckey"), F.lit(1000)).cast("int")
                 .alias("chunk_id")))
-    emb = read_table(spark, sf_dir, "embeddings")
-    q = (emb.filter(F.col("vec_id") == 0)
-         .select(F.col("embedding").alias("qv")))
-    dense_scored = (emb.filter(F.col("vec_id") != 0)
-                    .crossJoin(F.broadcast(q))
-                    .select("vec_id",
-                            F.floor(cosine(as_double_array(F.col("embedding")),
-                                           as_double_array(F.col("qv")))
-                                    * F.lit(1e6) + F.lit(0.5))
-                            .cast("bigint").alias("sim_e6")))
-    dense = (topk_with_rank(dense_scored,
-                            [F.desc("sim_e6"), F.asc("vec_id")], 20, "rd")
-             .select(F.col("vec_id").alias("doc_id"), "rd"))
+    dense = _dense_rank(spark, sf_dir, "doc_id", "rd")
     from ..functions.numeric import round_ratio6
     fused = sparse.join(F.broadcast(dense), "doc_id", "left")
     num = (F.when(F.col("rd").isNotNull(),
@@ -326,6 +321,57 @@ def text_bm25_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rnk")
 
 
+def _exact_scored(spark: SparkSession,
+                  sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """Exact candidate source for the 8-query batch (vec_id < 8): the
+    query rows broadcast onto ONE corpus scan and every (query,
+    corpus) pair but the query itself is scored. Returns (queries,
+    scored) with scored = (query_id, qlabel, vec_id, label, sim_e6),
+    the shape :func:`_ivf_scored` emits for the IVF-pruned keys."""
+    emb = read_table(spark, sf_dir, "embeddings")
+    queries = (emb.filter(F.col("vec_id") < 8)
+               .select(F.col("vec_id").alias("query_id"),
+                       F.col("embedding").alias("qv"),
+                       F.col("label").alias("qlabel")))
+    scored = (emb.crossJoin(F.broadcast(queries))
+              .filter(F.col("vec_id") != F.col("query_id"))
+              .select("query_id", "qlabel", "vec_id", "label",
+                      cosine_e6(as_double_array(F.col("embedding")),
+                                as_double_array(F.col("qv")))
+                      .alias("sim_e6")))
+    return queries, scored
+
+
+def _hard_negatives(scored: DataFrame) -> DataFrame:
+    """Per query: the positive (nearest same-label candidate), the
+    hard negative (nearest different-label candidate) and n_cand, the
+    candidates scored, from one query-keyed aggregate over a
+    :func:`_exact_scored`-shaped relation. The packed ordering is
+    explained in pairs_hard_negatives."""
+    def best(cond, col):
+        ordering = F.when(cond, F.col("sim_e6") * F.lit(1 << 40)
+                          - F.col("vec_id"))
+        return F.max_by(F.col(col), ordering)
+
+    same = F.col("label") == F.col("qlabel")
+    other = F.col("label") != F.col("qlabel")
+    agg = (scored.groupBy("query_id")
+           .agg(F.count(F.lit(1)).cast("bigint").alias("n_cand"),
+                best(same, "vec_id").alias("pos_id"),
+                best(same, "sim_e6").alias("pos_e6"),
+                best(other, "vec_id").alias("neg_id"),
+                best(other, "sim_e6").alias("neg_e6")))
+    return (agg.filter(F.col("pos_id").isNotNull()
+                       & F.col("neg_id").isNotNull())
+            .select("query_id", "n_cand", "pos_id", "neg_id",
+                    (F.col("pos_e6").cast("double") / F.lit(1e6))
+                    .alias("pos_sim"),
+                    (F.col("neg_e6").cast("double") / F.lit(1e6))
+                    .alias("neg_sim"),
+                    ((F.col("pos_e6") - F.col("neg_e6")).cast("double")
+                     / F.lit(1e6)).alias("margin")))
+
+
 @register("pairs_hard_negatives")
 def pairs_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DPR/ANCE-style HARD-negative mining for contrastive training:
@@ -362,43 +408,7 @@ def pairs_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors), equal sims tie-break on -vec_id, and the pack is
     injective so both max_bys read the same winning row;
     |pack| <= 1e6 * 2^40 ~ 1.2e18 stays inside int64."""
-    from ..operators.similarity import as_double_array, cosine
-    emb = read_table(spark, sf_dir, "embeddings")
-    queries = (emb.filter(F.col("vec_id") < 8)
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("qv"),
-                       F.col("label").alias("qlabel")))
-    scored = (emb.crossJoin(F.broadcast(queries))
-              .filter(F.col("vec_id") != F.col("query_id"))
-              .select("query_id", "qlabel", "vec_id", "label",
-                      F.floor(cosine(as_double_array(F.col("embedding")),
-                                     as_double_array(F.col("qv")))
-                              * F.lit(1e6) + F.lit(0.5))
-                      .cast("bigint").alias("sim_e6")))
-
-    def _best(cond, col):
-        ordering = F.when(cond, F.col("sim_e6") * F.lit(1 << 40)
-                          - F.col("vec_id"))
-        return F.max_by(F.col(col), ordering)
-
-    agg = (scored.groupBy("query_id")
-           .agg(_best(F.col("label") == F.col("qlabel"), "vec_id")
-                .alias("pos_id"),
-                _best(F.col("label") == F.col("qlabel"), "sim_e6")
-                .alias("pos_e6"),
-                _best(F.col("label") != F.col("qlabel"), "vec_id")
-                .alias("neg_id"),
-                _best(F.col("label") != F.col("qlabel"), "sim_e6")
-                .alias("neg_e6")))
-    return (agg.filter(F.col("pos_id").isNotNull()
-                       & F.col("neg_id").isNotNull())
-            .select("query_id", "pos_id", "neg_id",
-                    (F.col("pos_e6").cast("double") / F.lit(1e6))
-                    .alias("pos_sim"),
-                    (F.col("neg_e6").cast("double") / F.lit(1e6))
-                    .alias("neg_sim"),
-                    ((F.col("pos_e6") - F.col("neg_e6")).cast("double")
-                     / F.lit(1e6)).alias("margin")))
+    return _hard_negatives(_exact_scored(spark, sf_dir)[1]).drop("n_cand")
 
 
 @register("maintenance_bm25_index_refresh")
@@ -485,6 +495,42 @@ def maintenance_bm25_index_refresh(spark: SparkSession,
         "rnk")
 
 
+def _range_summary(queries: DataFrame, scored: DataFrame) -> DataFrame:
+    """Radius summary per query over a :func:`_exact_scored`-shaped
+    relation: n_cand (candidates scored), n_in_range (snapped cosine
+    >= 0.2, the integer test sim_e6 >= 200000), the in-range max/min
+    sim and the nearest id. All are conditional aggregates of ONE
+    query-keyed aggregate; nearest-id is a min_by over the packed
+    (-sim, id) long (ids < 2^40 keep the pack exact; a struct
+    ordering would sort-aggregate). Every query of ``queries``
+    reports, zero-filled."""
+    hit = F.col("sim_e6") >= 200000
+    summary = (scored.groupBy("query_id")
+               .agg(F.count(F.lit(1)).cast("bigint").alias("n_cand"),
+                    F.sum(hit.cast("bigint")).cast("bigint")
+                    .alias("n_in_range"),
+                    (F.max(F.when(hit, F.col("sim_e6")))
+                     .cast("double") / F.lit(1e6)).alias("max_sim"),
+                    (F.min(F.when(hit, F.col("sim_e6")))
+                     .cast("double") / F.lit(1e6))
+                    .alias("min_sim_in_range"),
+                    F.min_by("vec_id",
+                             F.when(hit, -F.col("sim_e6") * F.lit(1 << 40)
+                                    + F.col("vec_id")))
+                    .alias("nearest_id")))
+    return (queries.select(F.col("query_id").cast("bigint")
+                           .alias("query_id"))
+            .join(summary.withColumn(
+                "query_id", F.col("query_id").cast("bigint")),
+                "query_id", "left")
+            .select("query_id",
+                    F.coalesce("n_cand", F.lit(0)).cast("bigint")
+                    .alias("n_cand"),
+                    F.coalesce("n_in_range", F.lit(0)).cast("bigint")
+                    .alias("n_in_range"),
+                    "max_sim", "min_sim_in_range", "nearest_id"))
+
+
 @register("sim_range_search")
 def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The OTHER vector-serving query type: RADIUS search (all
@@ -494,46 +540,15 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     with snapped cosine >= 0.2, summarized per query (count, max/min
     in-range sim, nearest id) so the output stays bounded while the
     range set itself is data-dependent. One broadcast-batch corpus
-    pass, integer threshold decision (sim_e6 >= 200000 — no float
-    boundary), ONE query-keyed aggregate: nearest-id is a min_by
-    over (-sim, id) INSIDE that aggregate, not a rank window — a
-    Q-partition window on the radius-hit relation (whose size is
-    data-dependent) would cap the reduce side at Q tasks (the r9
-    verdict finding; same class as pairs_hard_negatives' fix). At
-    corpus scale the pass prunes through the LSH/IVF buckets first
+    pass (:func:`_exact_scored`), integer threshold decision, ONE
+    query-keyed aggregate (:func:`_range_summary`): nearest-id is a
+    min_by INSIDE that aggregate, not a rank window — a Q-partition
+    window on the radius-hit relation (whose size is data-dependent)
+    would cap the reduce side at Q tasks (the r9 verdict finding;
+    same class as pairs_hard_negatives' fix). At corpus scale the
+    pass prunes through the LSH/IVF buckets first
     (sim_range_search_ivf is that composed form)."""
-    from ..operators.similarity import as_double_array, cosine
-    emb = read_table(spark, sf_dir, "embeddings")
-    queries = (emb.filter(F.col("vec_id") < 8)
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("qv")))
-    scored = (emb.crossJoin(F.broadcast(queries))
-              .filter(F.col("vec_id") != F.col("query_id"))
-              .select("query_id", "vec_id",
-                      F.floor(cosine(as_double_array(F.col("embedding")),
-                                     as_double_array(F.col("qv")))
-                              * F.lit(1e6) + F.lit(0.5))
-                      .cast("bigint").alias("sim_e6")))
-    hits = scored.filter(F.col("sim_e6") >= 200000)
-    summary = (hits.groupBy("query_id")
-               .agg(F.count(F.lit(1)).cast("bigint").alias("n_in_range"),
-                    (F.max("sim_e6").cast("double") / F.lit(1e6))
-                    .alias("max_sim"),
-                    (F.min("sim_e6").cast("double") / F.lit(1e6))
-                    .alias("min_sim_in_range"),
-                    # single-long packed (-sim, id) ordering (r14):
-                    # the struct form sort-aggregated the radius-hit
-                    # relation; ids < 2^40 keep the pack exact.
-                    F.min_by("vec_id",
-                             -F.col("sim_e6") * F.lit(1 << 40)
-                             + F.col("vec_id"))
-                    .alias("nearest_id")))
-    return (queries.select("query_id")
-            .join(summary, "query_id", "left")
-            .select("query_id",
-                    F.coalesce("n_in_range", F.lit(0)).cast("bigint")
-                    .alias("n_in_range"),
-                    "max_sim", "min_sim_in_range", "nearest_id"))
+    return _range_summary(*_exact_scored(spark, sf_dir)).drop("n_cand")
 
 
 # IVF quantizer constants for the composed hard-negative serving
@@ -545,17 +560,14 @@ IVF_CENT_IDS = [100, 101, 102, 103]
 IVF_NPROBE = 2
 
 
-def _ivf_probe_inputs(spark: SparkSession, sf_dir: str,
-                      query_cond=None, query_pred=None,
+def _ivf_probe_inputs(spark: SparkSession, sf_dir: str, query_cond=None,
                       ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Shared IVF front half for the composed serving keys
     (pairs_hard_negatives_ivf, sim_range_search_ivf,
     sim_margin_bitext_mine_ivf): corpus rows with their
     integer-argmax cell, the (query, probed-cell) pairs, and the
-    broadcast query vectors. ``query_cond`` (a Column) selects the
-    query batch; ``query_pred`` is the same predicate as a Python
-    row function for the driver-side probe ranking (defaults:
-    the vec_id < 8 batch).
+    broadcast query vectors. ``query_cond`` (a Column; default the
+    vec_id < 8 batch) selects the query batch.
 
     Exact-integer pruning: corpus vectors and the 4 coarse centroids
     (fixed corpus rows, IVF_CENT_IDS) are quantized to the shared
@@ -572,11 +584,10 @@ def _ivf_probe_inputs(spark: SparkSession, sf_dir: str,
     as literals — assign_cell's doctrine, no join, no shuffle). At
     100 TB the cell is a partition key, so the probe join becomes
     partition pruning in the scan."""
-    from ..operators.similarity import as_double_array, quantize_vec
+    from ..operators.similarity import quantize_vec
 
     if query_cond is None:
         query_cond = F.col("vec_id") < 8
-        query_pred = lambda r: int(r["vec_id"]) < 8  # noqa: E731
 
     def qgrid(vec):
         import math
@@ -585,13 +596,15 @@ def _ivf_probe_inputs(spark: SparkSession, sf_dir: str,
     emb = read_table(spark, sf_dir, "embeddings")
     # ONE pushdown-filtered scan fetches both bounded model inputs
     # (4 centroids + the query batch; two separate collects cost
-    # two corpus scans — measured on the 1M-vector sf2 probe)
+    # two corpus scans — measured on the 1M-vector sf2 probe); the
+    # query predicate rides along as a flag column
     seed_rows = (emb.filter(F.col("vec_id").isin(*IVF_CENT_IDS)
                             | query_cond)
-                 .select("vec_id", "embedding", "label").collect())
+                 .select("vec_id", "embedding", "label",
+                         query_cond.alias("is_query")).collect())
     cents = {int(r["vec_id"]): qgrid(r["embedding"])
              for r in seed_rows if int(r["vec_id"]) in IVF_CENT_IDS}
-    q_rows = [r for r in seed_rows if query_pred(r)]
+    q_rows = [r for r in seed_rows if r["is_query"]]
 
     # driver-side probe ranking on the SAME integers the engines use
     probe_pairs = []
@@ -625,6 +638,24 @@ def _ivf_probe_inputs(spark: SparkSession, sf_dir: str,
     return celled, probe, queries
 
 
+def _ivf_scored(spark: SparkSession,
+                sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """IVF candidate source for the same 8-query batch: each query
+    scores only the corpus rows of its IVF_NPROBE probed cells
+    (:func:`_ivf_probe_inputs`; probe pairs and query vectors
+    broadcast). Same (queries, scored) shape as
+    :func:`_exact_scored`."""
+    celled, probe, queries = _ivf_probe_inputs(spark, sf_dir)
+    scored = (celled.join(F.broadcast(probe),
+                          celled["cell"] == probe["cid"])
+              .join(F.broadcast(queries), "query_id")
+              .filter(F.col("vec_id") != F.col("query_id"))
+              .select("query_id", "qlabel", "vec_id", "label",
+                      cosine_e6(as_double_array(F.col("embedding")),
+                                F.col("qv")).alias("sim_e6")))
+    return queries, scored
+
+
 @register("pairs_hard_negatives_ivf")
 def pairs_hard_negatives_ivf(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
@@ -634,53 +665,12 @@ def pairs_hard_negatives_ivf(spark: SparkSession,
     corpus scale, where scoring every (query, corpus) pair is the
     anti-pattern the cell index exists to kill.
 
-    Exact-integer pruning and the cell/probe construction live in
-    :func:`_ivf_probe_inputs` (shared with sim_range_search_ivf).
-    Shape: the probe pairs (8 x nprobe rows) and query vectors
-    broadcast; ONE candidate-bounded scored pass; the same
-    conditional max_by aggregate as pairs_hard_negatives (map-side
-    combine, no window). n_cand in the output is the pruning
-    receipt: candidates scored per query vs the 500-row corpus the
-    exact miner scans."""
-    celled, probe, queries = _ivf_probe_inputs(spark, sf_dir)
-    from ..operators.similarity import as_double_array, cosine
-    cand = (celled.join(F.broadcast(probe),
-                        celled["cell"] == probe["cid"])
-            .join(F.broadcast(queries), "query_id")
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .select("query_id", "qlabel", "vec_id", "label",
-                    F.floor(cosine(as_double_array(F.col("embedding")),
-                                   F.col("qv"))
-                            * F.lit(1e6) + F.lit(0.5))
-                    .cast("bigint").alias("sim_e6")))
-
-    # Single-long packed ordering + long-valued max_bys (r14): the
-    # struct form sort-aggregated; see pairs_hard_negatives for the
-    # exactness argument (ids < 2^40, injective pack).
-    def _best(cond, col):
-        ordering = F.when(cond, F.col("sim_e6") * F.lit(1 << 40)
-                          - F.col("vec_id"))
-        return F.max_by(F.col(col), ordering)
-
-    agg = (cand.groupBy("query_id")
-           .agg(F.count(F.lit(1)).cast("bigint").alias("n_cand"),
-                _best(F.col("label") == F.col("qlabel"), "vec_id")
-                .alias("pos_id"),
-                _best(F.col("label") == F.col("qlabel"), "sim_e6")
-                .alias("pos_e6"),
-                _best(F.col("label") != F.col("qlabel"), "vec_id")
-                .alias("neg_id"),
-                _best(F.col("label") != F.col("qlabel"), "sim_e6")
-                .alias("neg_e6")))
-    return (agg.filter(F.col("pos_id").isNotNull()
-                       & F.col("neg_id").isNotNull())
-            .select("query_id", "n_cand", "pos_id", "neg_id",
-                    (F.col("pos_e6").cast("double") / F.lit(1e6))
-                    .alias("pos_sim"),
-                    (F.col("neg_e6").cast("double") / F.lit(1e6))
-                    .alias("neg_sim"),
-                    ((F.col("pos_e6") - F.col("neg_e6"))
-                     .cast("double") / F.lit(1e6)).alias("margin")))
+    The candidate source is :func:`_ivf_scored` in place of the
+    exact key's full pass; the miner is the same
+    :func:`_hard_negatives` aggregate (map-side combine, no window).
+    n_cand in the output is the pruning receipt: candidates scored
+    per query vs the 500-row corpus the exact miner scans."""
+    return _hard_negatives(_ivf_scored(spark, sf_dir)[1])
 
 
 @register("sim_range_search_ivf")
@@ -694,51 +684,11 @@ def sim_range_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the nprobe cells are not scored), exactly like every deployed
     IVF radius query; the integer floor algebra is unchanged.
 
-    Cell assignment / probe ranking are the shared exact-integer
-    machinery in :func:`_ivf_probe_inputs`. ONE candidate-bounded
-    scored pass, ONE query-keyed aggregate — in-range stats are
-    conditional aggregates over the same pass (no second scan) and
-    nearest-id is the same min_by-over-(-sim, id), no window (the
-    sim_range_search lesson). n_cand is the pruning receipt:
-    candidates scored per query vs the full corpus the exact
-    radius pass scans."""
-    from ..operators.similarity import as_double_array, cosine
-    celled, probe, queries = _ivf_probe_inputs(spark, sf_dir)
-    cand = (celled.join(F.broadcast(probe),
-                        celled["cell"] == probe["cid"])
-            .join(F.broadcast(queries), "query_id")
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .select("query_id", "vec_id",
-                    F.floor(cosine(as_double_array(F.col("embedding")),
-                                   F.col("qv"))
-                            * F.lit(1e6) + F.lit(0.5))
-                    .cast("bigint").alias("sim_e6")))
-    hit = F.col("sim_e6") >= 200000
-    summary = (cand.groupBy("query_id")
-               .agg(F.count(F.lit(1)).cast("bigint").alias("n_cand"),
-                    F.sum(hit.cast("bigint")).cast("bigint")
-                    .alias("n_in_range"),
-                    (F.max(F.when(hit, F.col("sim_e6")))
-                     .cast("double") / F.lit(1e6)).alias("max_sim"),
-                    (F.min(F.when(hit, F.col("sim_e6")))
-                     .cast("double") / F.lit(1e6))
-                    .alias("min_sim_in_range"),
-                    # packed long ordering, as in sim_range_search
-                    F.min_by("vec_id",
-                             F.when(hit, -F.col("sim_e6") * F.lit(1 << 40)
-                                    + F.col("vec_id")))
-                    .alias("nearest_id")))
-    return (queries.select(F.col("query_id").cast("bigint")
-                           .alias("query_id"))
-            .join(summary.withColumn(
-                "query_id", F.col("query_id").cast("bigint")),
-                "query_id", "left")
-            .select("query_id",
-                    F.coalesce("n_cand", F.lit(0)).cast("bigint")
-                    .alias("n_cand"),
-                    F.coalesce("n_in_range", F.lit(0)).cast("bigint")
-                    .alias("n_in_range"),
-                    "max_sim", "min_sim_in_range", "nearest_id"))
+    The candidate source is :func:`_ivf_scored`, the summary the same
+    :func:`_range_summary` aggregate as the exact key. n_cand is the
+    pruning receipt: candidates scored per query vs the full corpus
+    the exact radius pass scans."""
+    return _range_summary(*_ivf_scored(spark, sf_dir))
 
 
 @register("sim_margin_bitext_mine_ivf")
@@ -763,22 +713,17 @@ def sim_margin_bitext_mine_ivf(spark: SparkSession,
     partitioned by x and by y over the candidate relation (never
     global)."""
     from ..operators.retrieval import margin_from_pairs
-    from ..operators.similarity import as_double_array, cosine
     celled, probe, queries = _ivf_probe_inputs(
         spark, sf_dir,
         query_cond=((F.col("label") == 0)
-                    & (F.pmod(F.col("vec_id"), F.lit(5)) == 0)),
-        query_pred=lambda r: (int(r["label"]) == 0
-                              and int(r["vec_id"]) % 5 == 0))
+                    & (F.pmod(F.col("vec_id"), F.lit(5)) == 0)))
     ys = celled.filter(F.col("label") == 1)
     pairs = (ys.join(F.broadcast(probe), ys["cell"] == probe["cid"])
              .join(F.broadcast(queries), "query_id")
              .select(F.col("query_id").cast("bigint").alias("xid"),
                      F.col("vec_id").alias("yid"),
-                     F.floor(cosine(as_double_array(F.col("embedding")),
-                                    F.col("qv"))
-                             * F.lit(1e6) + F.lit(0.5))
-                     .cast("bigint").alias("sim_e6"))
+                     cosine_e6(as_double_array(F.col("embedding")),
+                               F.col("qv")).alias("sim_e6"))
              .localCheckpoint(eager=True))
     return margin_from_pairs(pairs, k=4)
 
@@ -814,26 +759,26 @@ def pipeline_index_serve_refresh(spark: SparkSession,
        duplicated, or double-counted posting is a red driver row;
        ANN top-10 from the persisted vector index with nprobe=4
        partition-pruned cells, recall@10 >= 5 vs exact brute force
-       over the same merged set (the IVF family's
-       oracle-by-construction contract).
+       over the same merged set (operators/similarity.recall_receipt).
 
     Output, one schema for all receipts (stage, rank, id, metric_e6):
     10 serve_bm25 rows (rank, doc_id, score_e6) — full SQL oracle;
     1 refresh_receipt row (id = batch-1 postings read back AFTER the
     double write, metric_e6 = batch-1 vectors) — SQL-provable counts
     that are only right if redelivery replaced instead of appended;
-    1 serve_ann row (id = n_results, metric_e6 = recall_ok) — stated
-    constants, recall verified inside the query.
+    1 serve_ann row (the recall receipt with id = n_results,
+    metric_e6 = recall_ok as 0/1) — stated constants, recall verified
+    inside the query.
     """
     from ..operators.dedup import incremental_minhash_matches
     from ..operators.retrieval import (bm25_contrib_e6_expr, idf_e7,
                                        topk_with_rank)
     from ..operators.similarity import (assign_cell, cosine_topk,
-                                        fetch_query_vector,
-                                        spherical_kmeans)
+                                        probe_cells, recall_receipt)
     from ..operators.sketch import bloom_build, bloom_probe
     from ..operators.text import tokens
     from ..sinks import scratch_path, sf_tag
+    from .llm_ops import Q_VEC_ID, _fit_quantizer
     docs = read_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 3 == 0).select("doc_id", "text")
     batch = docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "text")
@@ -911,18 +856,9 @@ def pipeline_index_serve_refresh(spark: SparkSession,
          .partitionBy("batch").parquet(side_dir))
 
     # --- stage 3: vector index refresh with the frozen quantizer ---
-    from concurrent.futures import ThreadPoolExecutor
-
     emb = read_table(spark, sf_dir, "embeddings")
     base_vec = emb.filter(F.col("vec_id") % 3 == 0)
-    # overlap the independent serve-time query fetch with the fit
-    # (guide §2.6; both results are data-determined)
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut_qv = pool.submit(fetch_query_vector, emb, "embedding",
-                             "vec_id", 0)
-        cents = spherical_kmeans(base_vec, "embedding", "vec_id", k=8,
-                                 iters=4, train_mod=4)
-        qv = fut_qv.result()
+    cents, qv = _fit_quantizer(emb, base_vec, train_mod=4)
     (base_vec.withColumn("cell", assign_cell("embedding", cents))
      .withColumn("batch", F.lit(0))
      .write.mode("overwrite").partitionBy("cell", "batch")
@@ -978,26 +914,18 @@ def pipeline_index_serve_refresh(spark: SparkSession,
     merged_ids = base_vec.select("vec_id").unionByName(
         nv1.select("vec_id")).distinct()
     merged = emb.join(merged_ids, "vec_id")
-    qn = sum(x * x for x in qv) ** 0.5 or 1.0
-    sims = [(i, sum(a / qn * b for a, b in zip(qv, c)))
-            for i, c in enumerate(cents)]
-    probe_cells = [i for i, _ in sorted(sims, key=lambda t: -t[1])[:4]]
     served = (spark.read.parquet(vec_dir)
-              .filter(F.col("cell").isin(probe_cells))
-              .filter(F.col("vec_id") != 0))
-    approx = cosine_topk(served, "embedding", "vec_id", qv, k=10) \
-        .select(F.col("vec_id").alias("id"))
-    exact = cosine_topk(merged.filter(F.col("vec_id") != 0),
-                        "embedding", "vec_id", qv, k=10) \
-        .select(F.col("vec_id").alias("id"))
-    hits = approx.join(exact, "id", "left_semi")
-    ann = (approx.agg(F.count(F.lit(1)).alias("__n"))
-           .crossJoin(hits.agg(F.count(F.lit(1)).alias("__h")))
-           .select(F.lit("serve_ann").alias("stage"),
-                   F.lit(0).cast("int").alias("rank"),
-                   F.col("__n").cast("bigint").alias("id"),
-                   F.when(F.col("__h") >= 5, F.lit(1)).otherwise(F.lit(0))
-                   .cast("bigint").alias("metric_e6")))
+              .filter(F.col("cell").isin(probe_cells(qv, cents, 4)))
+              .filter(F.col("vec_id") != Q_VEC_ID))
+    ann = (recall_receipt(
+        cosine_topk(served, "embedding", "vec_id", qv, k=10),
+        cosine_topk(merged.filter(F.col("vec_id") != Q_VEC_ID),
+                    "embedding", "vec_id", qv, k=10),
+        "vec_id", k=10, min_hits=5)
+        .select(F.lit("serve_ann").alias("stage"),
+                F.lit(0).cast("int").alias("rank"),
+                F.col("n_results").alias("id"),
+                F.col("recall_ok").cast("bigint").alias("metric_e6")))
 
     return (bm25_rows.unionByName(receipt).unionByName(ann)
             .orderBy("stage", "rank", "id"))

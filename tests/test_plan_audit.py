@@ -1201,9 +1201,7 @@ def test_bitext_ivf_pruned_candidates(spark, sf_smoke):
     celled, probe, queries = _ivf_probe_inputs(
         spark, sf_smoke,
         query_cond=(F.col("label") == 0)
-        & (F.pmod(F.col("vec_id"), F.lit(5)) == 0),
-        query_pred=lambda r: (int(r["label"]) == 0
-                              and int(r["vec_id"]) % 5 == 0))
+        & (F.pmod(F.col("vec_id"), F.lit(5)) == 0))
     cand = (celled.filter(F.col("label") == 1)
             .join(F.broadcast(probe), celled["cell"] == probe["cid"])
             .join(F.broadcast(queries), "query_id"))

@@ -136,3 +136,21 @@ def test_read_table_infers_schema_once_per_file_stamp(spark, sf_smoke,
     assert third.columns == first.columns + ["n_extra"]
     assert [r.n_extra for r in third.orderBy("n_extra").collect()] == \
         list(range(table.num_rows))
+
+
+def test_deposit_txn_ts_parses_under_ansi(spark, sf_smoke):
+    """qbo_entity_deposit's two-format timestamp coalesce must not
+    depend on ANSI-off NULLs: with spark.sql.ansi.enabled=true a
+    date-only TxnDate still falls through to the date format (midnight)
+    and the key matches its oracle. The setting is restored after."""
+    from quickbooks_aws_etl_pipeline_spark.plans import ORACLE, QUERIES
+
+    from .oracle_util import assert_matches_oracle
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        df = QUERIES["qbo_entity_deposit"](spark, sf_smoke)
+        assert_matches_oracle(df, ORACLE["qbo_entity_deposit"], sf_smoke,
+                              "qbo_entity_deposit")
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
