@@ -570,13 +570,18 @@ def _fit_quantizer(emb: DataFrame, fit: DataFrame,
     k-means (k=8, 4 Lloyd's iterations) on ``fit``, with the one-row
     Q_VEC_ID query fetch from ``emb`` overlapped on a second thread
     (guide §2.6). Both results are data-determined, so the overlap
-    cannot change the output. Returns (centroids, query vector)."""
+    cannot change the output. The thread inherits the caller's local
+    properties and tags, so the fetch job carries its job group.
+    Returns (centroids, query vector)."""
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
 
     from ..operators.similarity import spherical_kmeans
     with ThreadPoolExecutor(max_workers=1) as pool:
-        fut_qv = pool.submit(fetch_query_vector, emb, "embedding",
-                             "vec_id", Q_VEC_ID)
+        fetch = inheritable_thread_target(emb.sparkSession)(
+            fetch_query_vector)
+        fut_qv = pool.submit(fetch, emb, "embedding", "vec_id", Q_VEC_ID)
         cents = spherical_kmeans(fit, "embedding", "vec_id", k=8, iters=4,
                                  train_mod=train_mod)
         return cents, fut_qv.result()

@@ -1349,29 +1349,36 @@ def dq_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 def w1_from_value_hist(spark: SparkSession, hist0: DataFrame) -> DataFrame:
     """W1 finisher over a (v, c_ref, c_cur) histogram — split out so
     the live streaming twin (stream_wasserstein_drift_live) can score
-    the complete-mode snapshot with the identical plan."""
-    n = hist0.agg(F.sum("c_ref").cast("bigint").alias("n_ref"),
+    the complete-mode snapshot with the identical plan. The
+    population totals come from the same aggregate as the spine's
+    bounds and ride along the spine into the cumulative's
+    checkpoint: the spine stops at vmax - 1, so totals taken from
+    ``bucketed_cumsum`` would miss the vmax row."""
+    b = hist0.agg(F.min("v").alias("vmin"), F.max("v").alias("vmax"),
+                  F.sum("c_ref").cast("bigint").alias("n_ref"),
                   F.sum("c_cur").cast("bigint").alias("n_cur"))
-    b = hist0.agg(F.min("v").alias("vmin"), F.max("v").alias("vmax"))
     # greatest() guard (r12 ADVICE): a single-distinct-value
     # histogram has vmax - 1 < vmin, where Spark's sequence()
     # defaults to step -1 and emits a DESCENDING 2-element spine
     # while DuckDB's generate_series is empty — pin both engines to
     # the one-point spine [vmin] (whose CDF gap is exactly 0).
     spine = (spark.range(1).crossJoin(F.broadcast(b))
-             .select("vmin", "vmax",
+             .select("vmin", "vmax", "n_ref", "n_cur",
                      F.explode(F.expr(
                          "sequence(vmin, greatest(vmin, vmax - 1))"))
                      .alias("v")))
-    dense = (spine.join(hist0, "v", "left")
-             .select("v", "vmin", "vmax",
+    # null-safe key: no isnotnull(v) filter is inferred into the
+    # histogram side, so it stays the same plan as the aggregate above
+    # and the two share one exchange (one scan of the input)
+    h = hist0.withColumnRenamed("v", "__hv")
+    dense = (spine.join(h, F.col("v").eqNullSafe(F.col("__hv")), "left")
+             .select("v", "vmin", "vmax", "n_ref", "n_cur",
                      F.coalesce(F.col("c_ref"), F.lit(0)).alias("c_ref"),
                      F.coalesce(F.col("c_cur"), F.lit(0)).alias("c_cur")))
     cum, _ = bucketed_cumsum(dense, F.expr("cast((v - vmin) div 256 as int)"),
                              ["v"], values=["c_ref", "c_cur"])
     dec = "decimal(38,0)"
-    return (cum.crossJoin(F.broadcast(n))
-            .withColumn("num", _cdf_gap())
+    return (cum.withColumn("num", _cdf_gap())
             .agg(F.max("n_ref").alias("n_ref"),
                  F.max("n_cur").alias("n_cur"),
                  F.max(F.col("vmax") - F.col("vmin")).cast("bigint")

@@ -351,36 +351,43 @@ def stream_source_incremental_restart(spark: SparkSession,
         .alias("run"))
 
 
-@register("sink_python_datasource")
-def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The OUTBOUND half of the Python Data Source story (Spark 4
-    DataSourceWriter): a slice of orders streams task-parallel into
-    JSON-lines part files with a commit-protocol manifest (parts
-    named only after they are fully written; abort leaves no
-    manifest). Read back permissively and aggregated — the round trip
-    must be lossless, proving write/commit saw every row exactly
-    once."""
-    import os
-
+def _jsonl_sink_roundtrip(spark: SparkSession, sf_dir: str,
+                          live: bool) -> DataFrame:
+    """A slice of orders (key, status, price in cents) through the
+    Python Data Source JSON-lines sink — batch
+    (sources/datasource.write_jsonl_datasource) or streaming
+    (write_jsonl_stream_datasource) — read back from the committed
+    parts only and rolled up per status. The round trip must be
+    lossless, so both keys share one oracle."""
     from ..io import read_table
     from ..sinks import scratch_path, sf_tag
-    from ..sources.datasource import write_jsonl_datasource
-    out_dir = scratch_path("pyds_sink", sf_tag(sf_dir))
-    # fresh dir per run: the sink appends part files
-    import shutil
-    if os.path.isdir(out_dir):
-        shutil.rmtree(out_dir)
+    from ..sources.datasource import (write_jsonl_datasource,
+                                      write_jsonl_stream_datasource)
+    tag = sf_tag(sf_dir)
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus",
         F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
         .cast("bigint").alias("cents"))
-    write_jsonl_datasource(spark, orders, out_dir)
-    back = (spark.read.schema("o_orderkey bigint, o_orderstatus string, "
-                              "cents bigint")
-            .json(out_dir))
+    if live:
+        back = write_jsonl_stream_datasource(
+            spark, orders, scratch_path("pyds_stream_sink", tag),
+            query_name=f"pydss_{tag}")
+    else:
+        back = write_jsonl_datasource(spark, orders,
+                                      scratch_path("pyds_sink", tag))
     return (back.groupBy("o_orderstatus")
             .agg(F.count(F.lit(1)).alias("n_rows"),
                  F.sum("cents").alias("cents_total")))
+
+
+@register("sink_python_datasource")
+def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The OUTBOUND half of the Python Data Source story (Spark 4
+    DataSourceWriter): the orders slice streams task-parallel into
+    JSON-lines part files with a commit-protocol manifest (parts
+    named only after they are fully written; abort leaves no
+    manifest), proving write/commit saw every row exactly once."""
+    return _jsonl_sink_roundtrip(spark, sf_dir, live=False)
 
 
 @register("sink_python_stream_datasource")
@@ -388,25 +395,7 @@ def sink_python_stream_datasource(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
     """The STREAMING outbound half (Spark 4 DataSourceStreamWriter):
     the same orders slice streamed through three real micro-batches
-    into the Python JSON-lines sink with a PER-EPOCH commit manifest
-    (manifest-<batchId>.json written last; abort deletes the epoch's
-    parts; a redelivered epoch overwrites its own manifest —
-    exactly-once for a manifest-trusting reader). The read-back of
-    all committed epochs must equal the batch aggregate, so this
-    live key shares sink_python_datasource's oracle. Scale: rows
-    stream executor-side; driver state is one commit-message list
-    per epoch."""
-    from ..io import read_table
-    from ..sinks import scratch_path, sf_tag
-    from ..sources.datasource import write_jsonl_stream_datasource
-    out_dir = scratch_path("pyds_stream_sink", sf_tag(sf_dir))
-    orders = read_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("bigint").alias("cents"))
-    back = write_jsonl_stream_datasource(
-        spark, orders, out_dir,
-        query_name=f"pydss_{sf_tag(sf_dir)}")
-    return (back.groupBy("o_orderstatus")
-            .agg(F.count(F.lit(1)).alias("n_rows"),
-                 F.sum("cents").alias("cents_total")))
+    with a PER-EPOCH commit manifest (a redelivered epoch overwrites
+    its own manifest — exactly-once for a manifest-trusting reader).
+    Shares sink_python_datasource's oracle."""
+    return _jsonl_sink_roundtrip(spark, sf_dir, live=True)

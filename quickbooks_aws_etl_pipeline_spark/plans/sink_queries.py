@@ -150,42 +150,25 @@ def cdc_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC apply-changes: replay an ordered change feed (insert /
     update / delete with a monotone sequence number) into current
     state — the tombstone-aware generalization of merge_upsert_scd1.
-    The feed is derived deterministically from orders (seq 1: full
-    insert; seq 2: +10% price correction for every 3rd key; seq 3:
-    tombstone every 10th key) so the oracle rebuilds it exactly.
+    The feed is derived deterministically from orders
+    (streaming/stateful.cdc_change_waves) so the oracle rebuilds it
+    exactly; stream_cdc_apply_live streams the same waves.
 
-    The apply step is ONE max_by aggregate per key — never the
-    row_number()-over-(key ORDER BY seq DESC) window a naive CDC
-    materializer ships (same shuffle key, but max_by partial-
+    The apply step is ONE max_by aggregate per key
+    (stateful.latest_change) — never the row_number()-over-(key ORDER
+    BY seq DESC) window (same shuffle key, but max_by partial-
     aggregates map-side and keeps one row per key per task, where
     the window must sort full task partitions); the oracle states the
-    window form, proving the rewrite. Tombstones drop AFTER the
-    latest-version pick so a delete genuinely erases earlier
-    versions. Output is the surviving-state rollup per status."""
+    window form, proving the rewrite. Output is the surviving-state
+    rollup per status (stateful.cdc_rollup)."""
+    from functools import reduce
+
+    from ..streaming.stateful import (cdc_change_waves, cdc_rollup,
+                                      latest_change)
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice")
-    ins = orders.select(
-        "o_orderkey", F.lit(1).alias("seq"), F.lit("I").alias("op"),
-        "o_orderstatus", "o_totalprice")
-    upd = (orders.filter(F.col("o_orderkey") % 3 == 0)
-           .select("o_orderkey", F.lit(2).alias("seq"),
-                   F.lit("U").alias("op"), "o_orderstatus",
-                   (F.col("o_totalprice") * 1.1).alias("o_totalprice")))
-    dele = (orders.filter(F.col("o_orderkey") % 10 == 0)
-            .select("o_orderkey", F.lit(3).alias("seq"),
-                    F.lit("D").alias("op"), "o_orderstatus",
-                    F.lit(None).cast("double").alias("o_totalprice")))
-    feed = ins.unionByName(upd).unionByName(dele)
-    latest = (feed.groupBy("o_orderkey")
-              .agg(F.max_by(F.struct("op", "o_orderstatus", "o_totalprice"),
-                            F.col("seq")).alias("v")))
-    alive = (latest.filter(F.col("v.op") != "D")
-             .select("o_orderkey", F.col("v.op").alias("op"),
-                     F.col("v.o_orderstatus").alias("o_orderstatus"),
-                     F.col("v.o_totalprice").alias("o_totalprice")))
-    return (alive.groupBy("o_orderstatus", "op")
-            .agg(F.count(F.lit(1)).alias("n_rows"),
-                 exact_sum(F.col("o_totalprice")).alias("sum_price")))
+    feed = reduce(DataFrame.unionByName, cdc_change_waves(orders))
+    return cdc_rollup(feed.groupBy("o_orderkey").agg(latest_change()))
 
 
 @register("maintenance_snapshot_diff")

@@ -1,13 +1,18 @@
 """Qkeys for the streaming surface (SURVEY.md §2.10), batch-mode
-checked: the exact same transform functions run under
-``readStream`` in tests/test_streaming.py; batch mode is what the
-DuckDB oracle can verify (tumbling == GROUP BY epoch bucket, session
-== gaps-and-islands), per SURVEY.md §5.1.
+checked: batch mode is what the DuckDB oracle can verify (tumbling ==
+GROUP BY epoch bucket, session == gaps-and-islands), per SURVEY.md
+§5.1.
 
 The ``*_live`` keys are true Structured Streaming runs (file source
--> watermark -> window agg -> memory sink, availableNow trigger);
-complete-mode output makes each equal to its batch twin, so every
-live key is held to the full SQL oracle.
+-> watermark -> stateful operator -> sink, availableNow trigger).
+Each calls the exact same transform functions as its batch twin, so
+one oracle holds both: the window aggregates run unchanged under
+``readStream``; the six stream-stream join keys are one builder
+(``_stream_join_report``) over ``windows.interval_pair_join`` and
+its two reports; the CDC pair shares ``stateful.cdc_change_waves``,
+``latest_change`` and ``cdc_rollup`` with ``cdc_apply_changes``.
+Complete-mode output (or append-mode output that is final when
+emitted) makes each live result equal to its batch twin.
 """
 
 from __future__ import annotations
@@ -216,84 +221,106 @@ def stream_stateful_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n_users")))
 
 
+# how -> (live query name, watermark). Inner matches are final when
+# found, so its generous watermark only keeps state alive across
+# micro-batches; the outer joins null-emit at watermark expiry and
+# need the tight one that _outer_cutoff's horizon assumes.
+_STREAM_JOINS = {"inner": ("live_ss_join", "30 days"),
+                 "leftOuter": ("live_ss_outer", "10 minutes"),
+                 "fullOuter": ("live_ss_full", "10 minutes")}
+
+
+def _outer_cutoff(ev: DataFrame) -> DataFrame:
+    """The closed-region horizon both modes agree on: rows whose
+    horizon is older than max(ts) - 50 min (lookback 30 + watermark
+    10 + margin) have FINAL outer-join results — the live run's
+    no-data batch has evicted and null-emitted them; younger
+    unmatched rows may still sit in state when availableNow stops."""
+    return ev.agg((F.max("ts") - F.expr("INTERVAL 50 MINUTES"))
+                  .alias("__cutoff"))
+
+
+def _stream_join_report(spark: SparkSession, sf_dir: str, how: str,
+                        live: bool) -> DataFrame:
+    """The six stream_stream_join* keys: purchases attributed to the
+    same user's views in the prior 30 minutes
+    (streaming/windows.interval_pair_join with ``how``), reported per
+    user. The batch key joins two filters of the events table; the
+    live key joins two watermarked file-source streams into an
+    append-mode memory sink (run_two_stream_join_to_memory). Both
+    run the same join and the same report, so each live key is held
+    to its batch twin's full SQL oracle.
+
+    Inner pairs get attributed_purchase_agg. Outer pairs get
+    attributed_outer_agg over the closed region (_outer_cutoff);
+    the left-outer keys drop its n_orphan_views, which is 0 there."""
+    from ..streaming.windows import (attributed_outer_agg,
+                                     attributed_purchase_agg,
+                                     interval_pair_join,
+                                     run_two_stream_join_to_memory)
+    ev = read_table(spark, sf_dir, "events")
+    if live:
+        name, watermark = _STREAM_JOINS[how]
+        pairs = run_two_stream_join_to_memory(
+            spark, table_path(sf_dir, "events"),
+            query_name=f"{name}{_sanitize(sf_dir)}",
+            watermark=watermark, how=how)
+    else:
+        pairs = interval_pair_join(
+            ev.filter(F.col("event_type") == "view"),
+            ev.filter(F.col("event_type") == "purchase"), how=how)
+    if how == "inner":
+        return attributed_purchase_agg(pairs)
+    report = attributed_outer_agg(pairs, _outer_cutoff(ev))
+    return report if how == "fullOuter" else report.drop("n_orphan_views")
+
+
 @register("stream_stream_join")
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream interval join (batch-mode twin): purchases
-    attributed to the same user's views in the prior 30 minutes,
-    aggregated per user. Same transform functions as the live run."""
-    from ..streaming.windows import (attributed_purchase_agg,
-                                     interval_pair_join)
-    ev = read_table(spark, sf_dir, "events")
-    pairs = interval_pair_join(ev.filter(F.col("event_type") == "view"),
-                               ev.filter(F.col("event_type") == "purchase"))
-    return attributed_purchase_agg(pairs)
+    """Batch twin of the stream-stream interval INNER join."""
+    return _stream_join_report(spark, sf_dir, "inner", live=False)
 
 
 @register("stream_stream_join_live")
 def stream_stream_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TRUE stream-stream join: two watermarked file-source streams
-    (views / purchases), time-range inner join, append-mode memory
-    sink via availableNow — inner matches are final when found, so
-    the sink equals the batch join and the same per-user aggregate
-    over it is held to the full SQL oracle."""
-    from ..streaming.windows import (attributed_purchase_agg,
-                                     run_two_stream_join_to_memory)
-    tag = _sanitize(sf_dir)
-    pairs = run_two_stream_join_to_memory(
-        spark, table_path(sf_dir, "events"),
-        query_name=f"live_ss_join{tag}")
-    return attributed_purchase_agg(pairs)
-
-
-def _outer_cutoff(ev: DataFrame) -> DataFrame:
-    """The closed-region horizon both modes agree on: purchases older
-    than max(ts) - 50 min (lookback 30 + watermark 10 + margin) have
-    FINAL outer-join results — the live run's no-data batch has
-    evicted and null-emitted them; younger unmatched purchases may
-    still sit in state when availableNow stops."""
-    return ev.agg((F.max("ts") - F.expr("INTERVAL 50 MINUTES"))
-                  .alias("__cutoff"))
+    """TRUE stream-stream inner join: matches are final when found,
+    so the append-mode sink equals the batch join."""
+    return _stream_join_report(spark, sf_dir, "inner", live=True)
 
 
 @register("stream_stream_join_outer")
 def stream_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch twin of the watermarked LEFT OUTER stream-stream
     interval join (r7 verdict task 5): every purchase appears in the
-    per-user attribution report — matched ones with their view pairs
-    and attributed value, unmatched ones counted with zero pairs —
-    over the closed region (see _outer_cutoff). Same transform
-    functions as the live run; full SQL oracle."""
-    from ..streaming.windows import (attributed_outer_agg,
-                                     interval_pair_join_outer)
-    ev = read_table(spark, sf_dir, "events")
-    pairs = interval_pair_join_outer(
-        ev.filter(F.col("event_type") == "view"),
-        ev.filter(F.col("event_type") == "purchase"))
-    return attributed_outer_agg(pairs, _outer_cutoff(ev))
+    per-user report — unmatched ones counted with zero pairs."""
+    return _stream_join_report(spark, sf_dir, "leftOuter", live=False)
 
 
 @register("stream_stream_join_outer_live")
 def stream_stream_join_outer_live(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
-    """TRUE streaming LEFT OUTER stream-stream join: two watermarked
-    file-source streams (views / purchases), time-range left-outer
-    join, append-mode memory sink via availableNow. Matches emit in
-    the batch that finds them; null-padded non-matches emit in the
-    no-data micro-batch once the 10-minute watermark passes the
-    purchase's event time (state eviction == emission). The same
-    closed-region aggregate as the batch twin runs over the sink, so
-    the live key is held to the identical full SQL oracle — the
-    append-mode outer-join finalization semantics are exactly what
-    this key exists to pin."""
-    from ..streaming.windows import (attributed_outer_agg,
-                                     run_two_stream_join_to_memory)
-    tag = _sanitize(sf_dir)
-    pairs = run_two_stream_join_to_memory(
-        spark, table_path(sf_dir, "events"),
-        query_name=f"live_ss_outer{tag}",
-        watermark="10 minutes", how="leftOuter")
-    ev = read_table(spark, sf_dir, "events")
-    return attributed_outer_agg(pairs, _outer_cutoff(ev))
+    """TRUE streaming LEFT OUTER join: null-padded non-matches emit in
+    the no-data micro-batch once the 10-minute watermark passes the
+    purchase's event time (state eviction == emission) — the
+    append-mode outer-join finalization this key exists to pin."""
+    return _stream_join_report(spark, sf_dir, "leftOuter", live=True)
+
+
+@register("stream_stream_join_full")
+def stream_stream_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batch twin of the watermarked FULL OUTER stream-stream
+    interval join — the last cell of the join matrix: purchases AND
+    orphan views both emit, and the report adds n_orphan_views."""
+    return _stream_join_report(spark, sf_dir, "fullOuter", live=False)
+
+
+@register("stream_stream_join_full_live")
+def stream_stream_join_full_live(spark: SparkSession,
+                                 sf_dir: str) -> DataFrame:
+    """TRUE streaming FULL OUTER join: the no-data micro-batch
+    null-emits unmatched purchases at purchase_ts expiry AND
+    unmatched views at view_ts + lookback expiry."""
+    return _stream_join_report(spark, sf_dir, "fullOuter", live=True)
 
 
 @register("stream_sliding_topk")
@@ -378,46 +405,6 @@ def stream_drift_monitor_live(spark: SparkSession,
     return psi_from_histogram(hist, n_bins=10).orderBy("bin")
 
 
-@register("stream_stream_join_full")
-def stream_stream_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the watermarked FULL OUTER stream-stream
-    interval join — the last cell of the join matrix (inner r2,
-    left outer r8): purchases AND orphan views both emit. Report per
-    user over the closed region where both sides are final
-    (COALESCE(purchase_ts, view_ts + lookback) <= cutoff); adds
-    n_orphan_views next to the left-outer columns. Same transform
-    functions as the live run; full SQL oracle."""
-    from ..streaming.windows import (attributed_full_agg,
-                                     interval_pair_join_full)
-    ev = read_table(spark, sf_dir, "events")
-    pairs = interval_pair_join_full(
-        ev.filter(F.col("event_type") == "view"),
-        ev.filter(F.col("event_type") == "purchase"))
-    return attributed_full_agg(pairs, _outer_cutoff(ev))
-
-
-@register("stream_stream_join_full_live")
-def stream_stream_join_full_live(spark: SparkSession,
-                                 sf_dir: str) -> DataFrame:
-    """TRUE streaming FULL OUTER stream-stream join: two watermarked
-    file-source streams, time-range full-outer join, append-mode
-    memory sink via availableNow. Matches emit when found; the
-    no-data micro-batch that advances the watermark null-emits
-    unmatched purchases at purchase_ts expiry AND unmatched views at
-    view_ts + lookback expiry (both evictions == emissions). The
-    closed-region aggregate over the sink is held to the identical
-    full SQL oracle as the batch twin."""
-    from ..streaming.windows import (attributed_full_agg,
-                                     run_two_stream_join_to_memory)
-    tag = _sanitize(sf_dir)
-    pairs = run_two_stream_join_to_memory(
-        spark, table_path(sf_dir, "events"),
-        query_name=f"live_ss_full{tag}",
-        watermark="10 minutes", how="fullOuter")
-    ev = read_table(spark, sf_dir, "events")
-    return attributed_full_agg(pairs, _outer_cutoff(ev))
-
-
 @register("stream_jdbc_warehouse_live")
 def stream_jdbc_warehouse_live(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
@@ -447,50 +434,32 @@ def stream_jdbc_warehouse_live(spark: SparkSession,
 @register("stream_cdc_apply_live")
 def stream_cdc_apply_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIVE twin of cdc_apply_changes: the same deterministic
-    insert/update/tombstone feed arrives as a file-source stream
+    insert/update/tombstone feed (stateful.cdc_change_waves) arrives
+    as a file-source stream
     (maxFilesPerTrigger=1, one file per seq wave, so the merge
     genuinely spans multiple micro-batches), and each epoch MERGES
     into an epoch-versioned parquet state table (max-seq per key —
     see streaming/stateful.run_stream_cdc_merge for the idempotent
     redelivery argument). The final state's tombstone-filtered
-    rollup is held to the batch key's oracle VERBATIM — a lost
+    rollup (stateful.cdc_rollup) is held to the batch key's oracle
+    VERBATIM — a lost
     epoch, a double merge, or an ordering dependency is a red row."""
     import os
-    from ..functions.numeric import exact_sum
     from ..sinks import scratch_path
-    from ..streaming.stateful import run_stream_cdc_merge
+    from ..streaming.stateful import (cdc_change_waves, cdc_rollup,
+                                      run_stream_cdc_merge)
     tag = _sanitize(sf_dir)
     feed_dir = scratch_path("cdc_live", tag, "feed")
     state_dir = scratch_path("cdc_live", tag, "state")
-    orders = read_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice")
     if not os.path.isdir(feed_dir):
-        ins = orders.select(
-            "o_orderkey", F.lit(1).alias("seq"), F.lit("I").alias("op"),
-            "o_orderstatus", "o_totalprice")
-        upd = (orders.filter(F.col("o_orderkey") % 3 == 0)
-               .select("o_orderkey", F.lit(2).alias("seq"),
-                       F.lit("U").alias("op"), "o_orderstatus",
-                       (F.col("o_totalprice") * 1.1)
-                       .alias("o_totalprice")))
-        dele = (orders.filter(F.col("o_orderkey") % 10 == 0)
-                .select("o_orderkey", F.lit(3).alias("seq"),
-                        F.lit("D").alias("op"), "o_orderstatus",
-                        F.lit(None).cast("double")
-                        .alias("o_totalprice")))
-        for i, wave in enumerate([ins, upd, dele]):
+        orders = read_table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_orderstatus", "o_totalprice")
+        for i, wave in enumerate(cdc_change_waves(orders)):
             (wave.coalesce(1).write.mode("overwrite")
              .parquet(os.path.join(feed_dir, f"wave{i}")))
-    state = run_stream_cdc_merge(
+    return cdc_rollup(run_stream_cdc_merge(
         spark, os.path.join(feed_dir, "wave*"),
-        query_name=f"cdclive{tag}", state_root=state_dir)
-    alive = (state.filter(F.col("v.op") != "D")
-             .select("o_orderkey", F.col("v.op").alias("op"),
-                     F.col("v.o_orderstatus").alias("o_orderstatus"),
-                     F.col("v.o_totalprice").alias("o_totalprice")))
-    return (alive.groupBy("o_orderstatus", "op")
-            .agg(F.count(F.lit(1)).alias("n_rows"),
-                 exact_sum(F.col("o_totalprice")).alias("sum_price")))
+        query_name=f"cdclive{tag}", state_root=state_dir))
 
 
 @register("stream_ks_drift_live")

@@ -217,25 +217,9 @@ def read_qbo_pages_stream(spark: SparkSession, path: str,
             .option("path", path).option("entity", entity).load())
 
 
-def write_jsonl_datasource(spark: SparkSession, df, out_dir: str) -> int:
-    """Python Data Source V2 WRITER: the outbound half of the qbo_pages
-    source — each task serializes its partition to one JSON-lines
-    part file and returns a commit message with (path, row count);
-    commit() writes a _MANIFEST.json naming exactly the committed
-    parts (written LAST, so a concurrent reader never sees a manifest
-    naming half-written files — the same protocol stage_pages uses on
-    the inbound side). abort() leaves no manifest, so failed writes
-    are invisible. Returns the number of part files committed.
-
-    Scale shape: rows stream through each task (no driver collect);
-    the only driver-side state is the commit-message list — one tuple
-    per task, model-sized.
-    """
-    import json as _json
-    import os
-    import uuid
-
-    from pyspark.sql.datasource import (DataSource, DataSourceWriter,
+if HAS_PY_DATASOURCE:
+    from pyspark.sql.datasource import (DataSourceStreamWriter,
+                                        DataSourceWriter,
                                         WriterCommitMessage)
 
     class PartCommit(WriterCommitMessage):
@@ -243,156 +227,133 @@ def write_jsonl_datasource(spark: SparkSession, df, out_dir: str) -> int:
             self.path = path
             self.n = n
 
+    class JsonlParts:
+        """The part writer both JSON-lines sinks share: each task
+        serializes its partition to one JSON-lines part file and
+        returns a commit message with (path, row count); the commit
+        writes a manifest naming exactly the committed parts (written
+        LAST, so a concurrent reader never sees a manifest naming
+        half-written files — the protocol stage_pages uses on the
+        inbound side); abort deletes the parts and leaves no
+        manifest. Rows stream through each task (no driver collect);
+        the only driver-side state is the commit-message list, one
+        tuple per task."""
+
+        def __init__(self, options: dict, schema):
+            self.dir = options["path"]
+            self.cols = [f.name for f in schema.fields]
+
+        def write(self, it) -> PartCommit:
+            import uuid
+            os.makedirs(self.dir, exist_ok=True)
+            path = os.path.join(self.dir, f"part-{uuid.uuid4().hex}.jsonl")
+            n = 0
+            with open(path, "w", encoding="utf-8") as fh:
+                for row in it:
+                    fh.write(json.dumps(
+                        {c: row[c] for c in self.cols}, default=str) + "\n")
+                    n += 1
+            return PartCommit(path, n)
+
+        def write_manifest(self, messages, name: str) -> None:
+            done = [m for m in messages if m is not None]
+            with open(os.path.join(self.dir, name), "w",
+                      encoding="utf-8") as fh:
+                json.dump({"parts": sorted(os.path.basename(m.path)
+                                           for m in done),
+                           "rows": sum(m.n for m in done)}, fh)
+
+        def abort(self, messages, *_batch_id) -> None:
+            for m in messages:
+                if m is not None and os.path.exists(m.path):
+                    os.remove(m.path)
+
+    class JsonlWriter(JsonlParts, DataSourceWriter):
+        def commit(self, messages) -> None:
+            self.write_manifest(messages, MANIFEST_NAME)
+
+    class JsonlStreamWriter(JsonlParts, DataSourceStreamWriter):
+        def commit(self, messages, batchId) -> None:  # noqa: N803
+            self.write_manifest(messages, f"manifest-{batchId}.json")
+
     class JsonlSink(DataSource):
+        """``df.write`` / ``df.writeStream`` ``.format("qbo_jsonl_sink")
+        .option("path", dir)``: batch writes commit ``_MANIFEST.json``,
+        each streaming epoch ``manifest-<batchId>.json``."""
+
         @classmethod
         def name(cls) -> str:
             return "qbo_jsonl_sink"
 
-        def writer(self, schema, overwrite: bool) -> "JsonlWriter":
-            return JsonlWriter(self.options, [f.name for f in schema.fields])
+        def writer(self, schema, overwrite: bool) -> JsonlWriter:
+            return JsonlWriter(self.options, schema)
 
-    class JsonlWriter(DataSourceWriter):
-        def __init__(self, options: dict, cols: list):
-            self.dir = options["path"]
-            self.cols = cols
+        def streamWriter(self, schema, overwrite) -> JsonlStreamWriter:  # noqa: N802
+            return JsonlStreamWriter(self.options, schema)
 
-        def write(self, it) -> PartCommit:
-            os.makedirs(self.dir, exist_ok=True)
-            path = os.path.join(self.dir, f"part-{uuid.uuid4().hex}.jsonl")
-            n = 0
-            with open(path, "w", encoding="utf-8") as fh:
-                for row in it:
-                    fh.write(_json.dumps(
-                        {c: row[c] for c in self.cols}, default=str) + "\n")
-                    n += 1
-            return PartCommit(path, n)
 
-        def commit(self, messages) -> None:
-            manifest = {
-                "parts": sorted(os.path.basename(m.path) for m in messages
-                                if m is not None),
-                "rows": sum(m.n for m in messages if m is not None),
-            }
-            with open(os.path.join(self.dir, "_MANIFEST.json"), "w",
-                      encoding="utf-8") as fh:
-                _json.dump(manifest, fh)
+def _fresh_dir(path: str) -> None:
+    import shutil
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
 
-        def abort(self, messages) -> None:
-            for m in messages:
-                if m is not None and os.path.exists(m.path):
-                    os.remove(m.path)
 
+def _committed_parts(spark: SparkSession, schema, out_dir: str,
+                     manifests: str) -> DataFrame:
+    """Read back exactly the parts the ``manifests`` glob names."""
+    import glob
+    parts: list[str] = []
+    for mpath in sorted(glob.glob(os.path.join(out_dir, manifests))):
+        with open(mpath, encoding="utf-8") as fh:
+            parts += [os.path.join(out_dir, p) for p in json.load(fh)["parts"]]
+    return spark.read.schema(schema).json(parts)
+
+
+def write_jsonl_datasource(spark: SparkSession, df: DataFrame,
+                           out_dir: str) -> DataFrame:
+    """Python Data Source V2 WRITER, the outbound half of the
+    qbo_pages source: ``df`` goes through :class:`JsonlWriter` into a
+    fresh ``out_dir`` (part files plus ``_MANIFEST.json``). Returns the
+    read-back of the parts the manifest names."""
+    _fresh_dir(out_dir)
     spark.dataSource.register(JsonlSink)
     df.write.format("qbo_jsonl_sink").mode("append") \
         .option("path", out_dir).save()
-    import json as _json2
-    with open(os.path.join(out_dir, "_MANIFEST.json"), encoding="utf-8") as fh:
-        return len(_json2.load(fh)["parts"])
+    return _committed_parts(spark, df.schema, out_dir, MANIFEST_NAME)
 
 
-def write_jsonl_stream_datasource(spark: SparkSession, df,
-                                  out_dir: str, query_name: str):
+def write_jsonl_stream_datasource(spark: SparkSession, df: DataFrame,
+                                  out_dir: str, query_name: str) -> DataFrame:
     """Python Data Source V2 STREAMING writer (Spark 4
     ``DataSourceStreamWriter``) — the exactly-once outbound loop the
-    batch writer above cannot express: executors stream each
-    micro-batch partition to a JSON-lines part file and return a
-    commit message; ``commit(messages, batchId)`` then writes
-    ``manifest-<batchId>.json`` naming exactly that epoch's committed
-    parts (manifest written LAST; ``abort`` deletes the epoch's
-    parts and leaves no manifest). A redelivered epoch OVERWRITES its
-    own manifest, so replays are idempotent and a reader that only
-    trusts manifests sees every row exactly once.
+    batch writer cannot express: each micro-batch goes through
+    :class:`JsonlStreamWriter`, whose commit names exactly that
+    epoch's parts in ``manifest-<batchId>.json``. A redelivered epoch
+    OVERWRITES its own manifest, so replays are idempotent and a
+    reader that only trusts manifests sees every row exactly once.
 
-    ``df`` is staged as parquet files and streamed with
-    maxFilesPerTrigger=1 (availableNow), so the sink really runs
-    multiple epochs. Returns the read-back DataFrame of all
-    manifest-listed parts — the lossless-round-trip check the Qkey
-    aggregates (scale shape: rows never touch the driver; the only
-    driver-side state is the per-epoch commit-message list).
-    """
-    import glob as _glob
-    import json as _json
-    import os
-    import shutil
-    import uuid
-
-    from pyspark.sql.datasource import (DataSource,
-                                        DataSourceStreamWriter,
-                                        WriterCommitMessage)
+    ``df`` is staged as three parquet files and streamed with
+    maxFilesPerTrigger=1 (availableNow) into a fresh ``out_dir``, so
+    the sink really runs multiple epochs. Returns the read-back of
+    all manifest-listed parts."""
+    from pyspark.sql import functions as F
 
     from ..streaming.windows import run_available_now
-
-    class PartCommit(WriterCommitMessage):
-        def __init__(self, path: str, n: int):
-            self.path = path
-            self.n = n
-
-    class JsonlStreamSink(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "qbo_jsonl_stream_sink"
-
-        def streamWriter(self, schema, overwrite):  # noqa: N802
-            return JsonlStreamWriter(self.options,
-                                     [f.name for f in schema.fields])
-
-    class JsonlStreamWriter(DataSourceStreamWriter):
-        def __init__(self, options: dict, cols: list):
-            self.dir = options["path"]
-            self.cols = cols
-
-        def write(self, it) -> PartCommit:
-            os.makedirs(self.dir, exist_ok=True)
-            path = os.path.join(self.dir, f"part-{uuid.uuid4().hex}.jsonl")
-            n = 0
-            with open(path, "w", encoding="utf-8") as fh:
-                for row in it:
-                    fh.write(_json.dumps(
-                        {c: row[c] for c in self.cols}, default=str) + "\n")
-                    n += 1
-            return PartCommit(path, n)
-
-        def commit(self, messages, batchId) -> None:  # noqa: N803
-            manifest = {
-                "parts": sorted(os.path.basename(m.path) for m in messages
-                                if m is not None),
-                "rows": sum(m.n for m in messages if m is not None),
-            }
-            with open(os.path.join(self.dir, f"manifest-{batchId}.json"),
-                      "w", encoding="utf-8") as fh:
-                _json.dump(manifest, fh)
-
-        def abort(self, messages, batchId) -> None:  # noqa: N803
-            for m in messages:
-                if m is not None and os.path.exists(m.path):
-                    os.remove(m.path)
-
-    base = os.path.join(os.path.dirname(out_dir.rstrip("/")),
-                        f"{os.path.basename(out_dir.rstrip('/'))}_src")
-    for d in (out_dir, base):
-        shutil.rmtree(d, ignore_errors=True)
-        os.makedirs(d, exist_ok=True)
-    # stage three files -> three epochs (first column hashed into
-    # thirds; the split only shapes epochs, never the output)
-    from pyspark.sql import functions as F
+    src = f"{out_dir.rstrip('/')}_src"
+    _fresh_dir(src)
+    # first column hashed into thirds; the split only shapes epochs,
+    # never the output
     key = df.columns[0]
     for c in range(3):
         (df.filter(F.pmod(F.abs(F.hash(F.col(key))), F.lit(3)) == c)
-         .coalesce(1).write.mode("append").parquet(base))
-
-    ckpt = os.path.join(out_dir, "_ckpt")
-    spark.dataSource.register(JsonlStreamSink)
+         .coalesce(1).write.mode("append").parquet(src))
+    _fresh_dir(out_dir)
+    spark.dataSource.register(JsonlSink)
     run_available_now(
         spark,
         spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1).parquet(base)
-        .writeStream.format("qbo_jsonl_stream_sink")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt),
+        .option("maxFilesPerTrigger", 1).parquet(src)
+        .writeStream.format("qbo_jsonl_sink").option("path", out_dir)
+        .option("checkpointLocation", os.path.join(out_dir, "_ckpt")),
         query_name, 180)
-    parts: list[str] = []
-    for mpath in sorted(_glob.glob(os.path.join(out_dir, "manifest-*.json"))):
-        with open(mpath, encoding="utf-8") as fh:
-            parts += [os.path.join(out_dir, p)
-                      for p in _json.load(fh)["parts"]]
-    return spark.read.schema(df.schema).json(parts)
+    return _committed_parts(spark, df.schema, out_dir, "manifest-*.json")

@@ -14,12 +14,12 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import normalize_event_time, read_parquet
-from .windows import (_checkpoint_dir, run_available_now,
-                      run_stream_to_memory, stage_stream_source)
+from ..functions.numeric import exact_sum
+from ..io import read_parquet
+from .windows import _checkpoint_dir, run_available_now, staged_stream_reader
 
 
 def dedup_within_watermark(events: DataFrame, keys: list[str],
@@ -78,9 +78,7 @@ def run_stream_foreach_batch_parquet(spark: SparkSession, events_path: str,
     read-back of everything written."""
     out_dir = _checkpoint_dir(f"fb_out_{query_name}")
 
-    schema = read_parquet(spark, events_path).schema
-    src_dir = stage_stream_source(events_path, query_name)
-    stream = normalize_event_time(spark.readStream.schema(schema).parquet(src_dir))
+    stream = staged_stream_reader(spark, events_path, query_name)()
 
     def sink(batch_df, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(
@@ -348,10 +346,7 @@ def run_stream_foreach_batch_jdbc(spark: SparkSession, events_path: str,
     url, drv = derby_jdbc_url(spark, db_dir)
     derby_drop_tables_like(spark, url, "QB_STREAM_WH_B%")
 
-    schema = read_parquet(spark, events_path).schema
-    src_dir = stage_stream_source(events_path, query_name)
-    stream = normalize_event_time(
-        spark.readStream.schema(schema).parquet(src_dir))
+    stream = staged_stream_reader(spark, events_path, query_name)()
 
     def sink(batch_df, batch_id: int) -> None:
         (batch_df.select("event_id", "user_id", "value")
@@ -389,22 +384,65 @@ def run_stream_foreach_batch_jdbc(spark: SparkSession, events_path: str,
     return out
 
 
+def cdc_change_waves(orders: DataFrame) -> list[DataFrame]:
+    """The deterministic three-wave change feed over ``orders``
+    (o_orderkey, o_orderstatus, o_totalprice), one frame per seq:
+    seq 1 inserts every key; seq 2 corrects the price of every 3rd
+    key by +10%; seq 3 tombstones every 10th key. The oracle rebuilds
+    the same feed in SQL."""
+    ins = orders.select(
+        "o_orderkey", F.lit(1).alias("seq"), F.lit("I").alias("op"),
+        "o_orderstatus", "o_totalprice")
+    upd = (orders.filter(F.col("o_orderkey") % 3 == 0)
+           .select("o_orderkey", F.lit(2).alias("seq"),
+                   F.lit("U").alias("op"), "o_orderstatus",
+                   (F.col("o_totalprice") * 1.1).alias("o_totalprice")))
+    dele = (orders.filter(F.col("o_orderkey") % 10 == 0)
+            .select("o_orderkey", F.lit(3).alias("seq"),
+                    F.lit("D").alias("op"), "o_orderstatus",
+                    F.lit(None).cast("double").alias("o_totalprice")))
+    return [ins, upd, dele]
+
+
+def latest_change(v: Column | None = None) -> Column:
+    """The per-key latest-version pick, ``v``: the (op, o_orderstatus,
+    o_totalprice) struct of the max-seq change (or, when merging
+    already-picked states, their ``v`` column). One map-side-combining
+    ``max_by`` aggregate — never the row_number()-over-(key ORDER BY
+    seq DESC) window a naive CDC materializer ships."""
+    if v is None:
+        v = F.struct("op", "o_orderstatus", "o_totalprice")
+    return F.max_by(v, F.col("seq")).alias("v")
+
+
+def cdc_rollup(state: DataFrame) -> DataFrame:
+    """The surviving-state rollup per (o_orderstatus, op) of a
+    per-key ``v`` state: tombstones drop AFTER the latest-version
+    pick, so a delete genuinely erases earlier versions."""
+    alive = (state.filter(F.col("v.op") != "D")
+             .select("o_orderkey", F.col("v.op").alias("op"),
+                     F.col("v.o_orderstatus").alias("o_orderstatus"),
+                     F.col("v.o_totalprice").alias("o_totalprice")))
+    return (alive.groupBy("o_orderstatus", "op")
+            .agg(F.count(F.lit(1)).alias("n_rows"),
+                 exact_sum(F.col("o_totalprice")).alias("sum_price")))
+
+
 def run_stream_cdc_merge(spark: SparkSession, feed_path: str,
-                         query_name: str, state_root: str,
-                         key_col: str = "o_orderkey") -> DataFrame:
+                         query_name: str, state_root: str) -> DataFrame:
     """Streaming CDC MERGE: each micro-batch of an (op, seq) change
     feed is merged into an epoch-VERSIONED state table — version b
     is computed from (latest version < b) UNION (batch b), keeping
-    max-seq per key — so a redelivered epoch overwrites its own
-    version from the same parent and the merge is idempotent by
-    construction (max_by over the same rows twice is a no-op).
-    Versioned directories double as time travel; production systems
-    call this the streaming upsert / CDC-merge pattern (Delta's
-    MERGE INTO foreachBatch recipe, expressed on plain parquet).
-    Returns the final state (latest version). Order-independent:
-    max-seq wins regardless of micro-batch arrival order, so
-    maxFilesPerTrigger-driven multi-epoch replay needs no ordering
-    guarantee from the file source."""
+    max-seq per key (:func:`latest_change`) — so a redelivered epoch
+    overwrites its own version from the same parent and the merge is
+    idempotent by construction (max_by over the same rows twice is a
+    no-op). Versioned directories double as time travel; production
+    systems call this the streaming upsert / CDC-merge pattern
+    (Delta's MERGE INTO foreachBatch recipe, expressed on plain
+    parquet). Returns the final state (latest version).
+    Order-independent: max-seq wins regardless of micro-batch arrival
+    order, so maxFilesPerTrigger-driven multi-epoch replay needs no
+    ordering guarantee from the file source."""
     schema = read_parquet(spark, feed_path).schema
     stream = spark.readStream.schema(schema) \
         .option("maxFilesPerTrigger", "1").parquet(feed_path)
@@ -417,21 +455,16 @@ def run_stream_cdc_merge(spark: SparkSession, feed_path: str,
 
     def sink(batch_df, batch_id: int) -> None:
         prior = [v for v in versions() if v < batch_id]
-        compact = (batch_df.groupBy(key_col)
-                   .agg(F.max("seq").alias("seq"),
-                        F.max_by(F.struct("op", "o_orderstatus",
-                                          "o_totalprice"),
-                                 F.col("seq")).alias("v")))
+        merged = batch_df.groupBy("o_orderkey").agg(
+            F.max("seq").alias("seq"), latest_change())
         if prior:
             prev = spark.read.parquet(
                 os.path.join(state_root, f"v={prior[-1]}"))
-            merged = (prev.select(key_col, "seq", "v")
-                      .unionByName(compact)
-                      .groupBy(key_col)
+            merged = (prev.select("o_orderkey", "seq", "v")
+                      .unionByName(merged)
+                      .groupBy("o_orderkey")
                       .agg(F.max("seq").alias("seq"),
-                           F.max_by(F.col("v"), F.col("seq")).alias("v")))
-        else:
-            merged = compact
+                           latest_change(F.col("v"))))
         (merged.write.mode("overwrite")
          .parquet(os.path.join(state_root, f"v={batch_id}")))
 

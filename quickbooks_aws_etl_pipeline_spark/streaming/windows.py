@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -154,6 +155,20 @@ def run_available_now(spark: SparkSession, writer: DataStreamWriter,
     return q
 
 
+def staged_stream_reader(spark: SparkSession, events_path: str,
+                         query_name: str) -> Callable[[], DataFrame]:
+    """Stage ``events_path`` once (:func:`stage_stream_source`) and
+    return a reader: each call opens one more file stream over the
+    staged directory, with the schema the batch reader infers (a
+    stream cannot infer one) and the event time normalized
+    (``io.normalize_event_time``). A stream-stream join calls it once
+    per side."""
+    schema = read_parquet(spark, events_path).schema
+    src_dir = stage_stream_source(events_path, query_name)
+    return lambda: normalize_event_time(
+        spark.readStream.schema(schema).parquet(src_dir))
+
+
 def run_stream_to_memory(spark: SparkSession, events_path: str,
                          transform, query_name: str,
                          watermark: str | None = None,
@@ -163,12 +178,17 @@ def run_stream_to_memory(spark: SparkSession, events_path: str,
     complete pass over the input, then stop). ``transform`` is the
     same batch function (tumbling_agg etc.) — identical plan in both
     modes."""
-    schema = read_parquet(spark, events_path).schema
-    src_dir = stage_stream_source(events_path, query_name)
-    stream = normalize_event_time(spark.readStream.schema(schema).parquet(src_dir))
+    stream = staged_stream_reader(spark, events_path, query_name)()
     if watermark:
         stream = stream.withWatermark("ts", watermark)
-    out = transform(stream)
+    return _drain_to_memory(spark, transform(stream), query_name,
+                            output_mode, timeout_sec)
+
+
+def _drain_to_memory(spark: SparkSession, out: DataFrame, query_name: str,
+                     output_mode: str, timeout_sec: float) -> DataFrame:
+    """Run the stream ``out`` into the memory table ``query_name``
+    (fresh checkpoint, availableNow) and return that table."""
     run_available_now(
         spark,
         out.writeStream.format("memory").queryName(query_name)
@@ -187,43 +207,29 @@ def streaming_dedup_within_watermark(events: DataFrame, keys: list[str],
 
 
 def interval_pair_join(views: DataFrame, purchases: DataFrame,
-                       lookback_minutes: int = 30) -> DataFrame:
+                       lookback_minutes: int = 30,
+                       how: str = "inner") -> DataFrame:
     """Stream-stream (or batch-batch — same function, same plan)
-    inner join: each purchase paired with the same user's view events
-    in the preceding ``lookback_minutes``. Equi key on user_id with
-    the event-time range as the residual condition — in streaming
-    mode this is the canonical watermarked stream-stream join; in
-    batch mode the identical plan is a sort-merge join the oracle can
-    check. Returns the raw pairs (append-able in streaming: a match
-    is final the moment it is found)."""
-    v = views.select(F.col("user_id"),
-                     F.col("ts").alias("view_ts"),
-                     F.col("value").alias("view_value"))
-    p = purchases.select(F.col("user_id").alias("p_user"),
-                         F.col("ts").alias("purchase_ts"),
-                         F.col("event_id").alias("purchase_id"))
-    cond = ((F.col("user_id") == F.col("p_user"))
-            & (F.col("view_ts") <= F.col("purchase_ts"))
-            & (F.col("view_ts")
-               >= F.col("purchase_ts")
-               - F.expr(f"INTERVAL {lookback_minutes} MINUTES")))
-    return (v.join(p, cond)
-            .select("user_id", "purchase_id", "purchase_ts",
-                    "view_ts", "view_value"))
+    interval join: each purchase paired with the same user's view
+    events in the preceding ``lookback_minutes``. Equi key on user_id
+    with the event-time range as the residual condition — in
+    streaming mode this is the canonical watermarked stream-stream
+    join; in batch mode the identical plan is a join the oracle can
+    check. The two-sided time condition bounds BOTH state stores
+    (views to the lookback window, purchases to watermark expiry).
 
+    ``how`` picks the preserved side; matched pairs are final the
+    moment they are found in every mode:
 
-def interval_pair_join_outer(views: DataFrame, purchases: DataFrame,
-                             lookback_minutes: int = 30) -> DataFrame:
-    """LEFT OUTER sibling of :func:`interval_pair_join` (r7 verdict
-    task 5 — SURVEY §2.10 completeness): every PURCHASE emits.
-    Matched pairs carry the view columns and are final the moment
-    they are found (inner semantics); an unmatched purchase emits
-    ONCE, null-padded, when the watermark passes its event time —
-    no future view can have view_ts <= purchase_ts after that, so
-    eviction and emission coincide. The purchase side is the
-    preserved (left) side; the two-sided time condition bounds BOTH
-    state stores (views to the lookback window, purchases to
-    watermark expiry)."""
+    * ``"inner"`` — matched pairs only;
+    * ``"leftOuter"`` — every PURCHASE emits: an unmatched one emits
+      ONCE, null-padded, when the watermark passes its event time (no
+      future view can have view_ts <= purchase_ts after that, so
+      eviction and emission coincide);
+    * ``"fullOuter"`` — unmatched VIEWS emit too, when the watermark
+      passes view_ts + lookback (after that no future purchase can
+      satisfy view_ts >= purchase_ts - lookback AND
+      view_ts <= purchase_ts); their user_id comes from the view."""
     p = purchases.select(F.col("user_id"),
                          F.col("ts").alias("purchase_ts"),
                          F.col("event_id").alias("purchase_id"))
@@ -235,21 +241,29 @@ def interval_pair_join_outer(views: DataFrame, purchases: DataFrame,
             & (F.col("view_ts")
                >= F.col("purchase_ts")
                - F.expr(f"INTERVAL {lookback_minutes} MINUTES")))
-    return (p.join(v, cond, "leftOuter")
-            .select("user_id", "purchase_id", "purchase_ts",
+    user = (F.coalesce("user_id", "v_user").alias("user_id")
+            if how == "fullOuter" else F.col("user_id"))
+    return (p.join(v, cond, how)
+            .select(user, "purchase_id", "purchase_ts",
                     "view_ts", "view_value"))
 
 
-def attributed_outer_agg(pairs: DataFrame, cutoff: DataFrame) -> DataFrame:
-    """Per-user attribution report over the LEFT OUTER pairs,
+def attributed_outer_agg(pairs: DataFrame, cutoff: DataFrame,
+                         lookback_minutes: int = 30) -> DataFrame:
+    """Per-user attribution report over OUTER pairs (left or full),
     restricted to the CLOSED region (``cutoff`` is a 1-row broadcast
-    frame with column ``__cutoff``): streaming outer results are
-    only FINAL once the watermark passes the purchase's time, so the
-    report is defined on purchases old enough that batch and live
-    modes provably agree — the horizon every production outer-join
-    consumer must respect anyway. Unmatched purchases contribute
-    zero pairs and a 0-decimal attributed value (COALESCE before the
-    DECIMAL(18,4) exact sum, mirrored in the oracle).
+    frame with column ``__cutoff``): streaming outer results are only
+    FINAL once the watermark passes a row's horizon,
+    COALESCE(purchase_ts, view_ts + lookback) — the purchase's own
+    time, or the last instant a future purchase could still match an
+    orphan view — so the report is defined where batch and live modes
+    provably agree, the horizon every production outer-join consumer
+    must respect anyway. Unmatched purchases contribute zero pairs
+    and a 0-decimal attributed value (COALESCE before the
+    DECIMAL(18,4) exact sum, mirrored in the oracle);
+    ``n_orphan_views`` counts the views no purchase attributed (the
+    audience only a full outer join can see; 0 on left-outer pairs,
+    whose purchase_id is never NULL, so those keys drop it).
 
     Two-phase aggregate instead of ``count_distinct`` (r14, same
     defect class as the ``sql_waiting_suppliers`` rewrite): the
@@ -258,23 +272,34 @@ def attributed_outer_agg(pairs: DataFrame, cutoff: DataFrame) -> DataFrame:
     (user, purchase) first then per user needs no Expand, and both
     phases' groupings are satisfied by a user_id hash partitioning —
     when the pair join shuffles on user_id at cluster scale, neither
-    phase adds an exchange. Decimal inner/outer sums keep
-    ``exact_sum``'s bit-exact associativity, so the oracle is
-    unchanged."""
-    matched = F.col("view_ts").isNotNull()
+    phase adds an exchange. A user's orphan views all land in its
+    single NULL-purchase group, which ``F.count("purchase_id")`` then
+    excludes from the purchase counts exactly as ``count_distinct``
+    did. Decimal inner/outer sums keep ``exact_sum``'s bit-exact
+    associativity, so the oracles are unchanged."""
+    matched = (F.col("view_ts").isNotNull()
+               & F.col("purchase_id").isNotNull())
+    final_ts = F.coalesce(
+        F.col("purchase_ts"),
+        F.col("view_ts") + F.expr(f"INTERVAL {lookback_minutes} MINUTES"))
     per_purchase = (
         pairs.crossJoin(F.broadcast(cutoff))
-        .filter(F.col("purchase_ts") <= F.col("__cutoff"))
+        .filter(final_ts <= F.col("__cutoff"))
         .groupBy("user_id", "purchase_id")
         .agg(F.sum(F.when(matched, 1).otherwise(0)).cast("bigint")
              .alias("__pairs"),
-             F.sum(F.coalesce(F.col("view_value"), F.lit(0.0))
-                   .cast("decimal(18,4)")).alias("__val")))
+             F.sum(F.when(F.col("purchase_id").isNull(), 1).otherwise(0))
+             .cast("bigint").alias("__orphans"),
+             F.sum(F.coalesce(F.when(matched, F.col("view_value")),
+                              F.lit(0.0)).cast("decimal(18,4)"))
+             .alias("__val")))
     return (per_purchase.groupBy("user_id")
             .agg(F.count("purchase_id").alias("n_purchases"),
-                 F.count(F.when(F.col("__pairs") > 0, 1))
+                 F.count(F.when((F.col("__pairs") > 0)
+                                & F.col("purchase_id").isNotNull(), 1))
                  .alias("n_matched_purchases"),
                  F.sum("__pairs").alias("n_view_pairs"),
+                 F.sum("__orphans").alias("n_orphan_views"),
                  F.sum("__val").cast("double").alias("attributed_value")))
 
 
@@ -305,112 +330,31 @@ def run_two_stream_join_to_memory(spark: SparkSession, events_path: str,
                                   timeout_sec: int = 180,
                                   how: str = "inner") -> DataFrame:
     """TRUE stream-stream join execution: two file-source streams
-    over the same events input (filtered to views / purchases),
-    watermarked on both sides, inner-joined with the time-range
-    condition, append-mode memory sink, availableNow trigger.
+    over the same staged events input (filtered to views /
+    purchases), watermarked on both sides, joined by
+    :func:`interval_pair_join` with ``how``, append-mode memory sink,
+    availableNow trigger.
 
     Inner-join matches are emitted in the micro-batch that finds
     them (only state EVICTION waits on the watermark), so one
     availableNow pass over a single input file emits every pair and
-    the sink table equals the batch join. The generous watermark
-    keeps state alive across micro-batch boundaries if the source
-    ever splits the input; production deployments tighten it to the
-    real lateness bound to cap state size.
+    the sink table equals the batch join. The generous default
+    watermark keeps state alive across micro-batch boundaries if the
+    source ever splits the input; production deployments tighten it
+    to the real lateness bound to cap state size.
 
-    ``how="leftOuter"`` runs the LEFT OUTER sibling
-    (interval_pair_join_outer): null-padded non-matches are emitted
-    by the no-data micro-batch that advances the watermark after the
-    last data batch, so callers must pass a TIGHT watermark (the
-    default 30-day one would leave every unmatched purchase stuck in
-    state at query end) and must consume only the closed region
-    (attributed_outer_agg's cutoff)."""
-    schema = read_parquet(spark, events_path).schema
-    src_dir = stage_stream_source(events_path, query_name)
+    For ``how="leftOuter"``/``"fullOuter"`` the null-padded
+    non-matches are emitted by the no-data micro-batch that advances
+    the watermark after the last data batch, so callers must pass a
+    TIGHT watermark (the default 30-day one would leave every
+    unmatched row stuck in state at query end) and must consume only
+    the closed region (attributed_outer_agg's cutoff)."""
+    read = staged_stream_reader(spark, events_path, query_name)
 
     def side(event_type: str) -> DataFrame:
-        s = normalize_event_time(
-            spark.readStream.schema(schema).parquet(src_dir))
-        return (s.filter(F.col("event_type") == event_type)
+        return (read().filter(F.col("event_type") == event_type)
                 .withWatermark("ts", watermark))
 
-    joiner = {"inner": interval_pair_join,
-              "leftOuter": interval_pair_join_outer,
-              "fullOuter": interval_pair_join_full}[how]
-    pairs = joiner(side("view"), side("purchase"), lookback_minutes)
-    run_available_now(
-        spark,
-        pairs.writeStream.format("memory").queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", _checkpoint_dir(query_name)),
-        query_name, timeout_sec)
-    return spark.table(query_name)
-
-
-def interval_pair_join_full(views: DataFrame, purchases: DataFrame,
-                            lookback_minutes: int = 30) -> DataFrame:
-    """FULL OUTER sibling of :func:`interval_pair_join` — BOTH sides
-    preserved, completing the stream-stream join matrix (inner r2,
-    left outer r8, full outer r8 session 2). Matched pairs are final
-    when found; an unmatched PURCHASE null-emits when the watermark
-    passes its event time (as in the left-outer case); an unmatched
-    VIEW null-emits when the watermark passes view_ts + lookback —
-    after that no future purchase can satisfy
-    view_ts >= purchase_ts - lookback AND view_ts <= purchase_ts, so
-    its eviction and emission coincide. Both state stores stay
-    bounded by the same two-sided time condition."""
-    p = purchases.select(F.col("user_id"),
-                         F.col("ts").alias("purchase_ts"),
-                         F.col("event_id").alias("purchase_id"))
-    v = views.select(F.col("user_id").alias("v_user"),
-                     F.col("ts").alias("view_ts"),
-                     F.col("value").alias("view_value"))
-    cond = ((F.col("user_id") == F.col("v_user"))
-            & (F.col("view_ts") <= F.col("purchase_ts"))
-            & (F.col("view_ts")
-               >= F.col("purchase_ts")
-               - F.expr(f"INTERVAL {lookback_minutes} MINUTES")))
-    return (p.join(v, cond, "fullOuter")
-            .select(F.coalesce("user_id", "v_user").alias("user_id"),
-                    "purchase_id", "purchase_ts",
-                    "view_ts", "view_value"))
-
-
-def attributed_full_agg(pairs: DataFrame, cutoff: DataFrame,
-                        lookback_minutes: int = 30) -> DataFrame:
-    """Per-user report over the FULL OUTER pairs, on the closed
-    region where BOTH sides are final: a row is final once the
-    watermark passes COALESCE(purchase_ts, view_ts + lookback) — the
-    purchase's own finality horizon, or the last instant a future
-    purchase could still match an orphan view. Adds n_orphan_views
-    (views no purchase attributed — the audience the left-outer
-    report can't see) next to the purchase-side columns.
-
-    Two-phase (user, purchase) -> user aggregate instead of
-    ``count_distinct`` (see :func:`attributed_outer_agg`); a user's
-    orphan views all land in its single NULL-purchase group, which
-    ``F.count("purchase_id")`` then excludes from the purchase counts
-    exactly as ``count_distinct`` did."""
-    matched = (F.col("view_ts").isNotNull()
-               & F.col("purchase_id").isNotNull())
-    final_ts = F.coalesce(
-        F.col("purchase_ts"),
-        F.col("view_ts") + F.expr(f"INTERVAL {lookback_minutes} MINUTES"))
-    per_purchase = (
-        pairs.crossJoin(F.broadcast(cutoff))
-        .filter(final_ts <= F.col("__cutoff"))
-        .groupBy("user_id", "purchase_id")
-        .agg(F.sum(F.when(matched, 1).otherwise(0)).cast("bigint")
-             .alias("__pairs"),
-             F.sum(F.when(F.col("purchase_id").isNull(), 1).otherwise(0))
-             .cast("bigint").alias("__orphans"),
-             F.sum(F.coalesce(F.when(matched, F.col("view_value")),
-                              F.lit(0.0)).cast("decimal(18,4)"))
-             .alias("__val")))
-    return (per_purchase.groupBy("user_id")
-            .agg(F.count("purchase_id").alias("n_purchases"),
-                 F.count(F.when((F.col("__pairs") > 0)
-                                & F.col("purchase_id").isNotNull(), 1))
-                 .alias("n_matched_purchases"),
-                 F.sum("__pairs").alias("n_view_pairs"),
-                 F.sum("__orphans").alias("n_orphan_views"),
-                 F.sum("__val").cast("double").alias("attributed_value")))
+    pairs = interval_pair_join(side("view"), side("purchase"),
+                               lookback_minutes, how)
+    return _drain_to_memory(spark, pairs, query_name, "append", timeout_sec)

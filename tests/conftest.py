@@ -20,45 +20,30 @@ SF_ORACLE = "/root/testdata/sf0.01"
 # budget; `SPARK_GRAFT_FULL_TESTS=1 python -m pytest tests/` runs
 # everything (the pre-round gate used by the builder).
 #
-# The fast tier keeps, unconditionally: every non-key-parametrized
-# test not explicitly marked slow, the full sf0.01 driver-window
-# preflight, and — for the four key-parametrized batteries
-# (registry-oracle sf0.001, plan audit, money ties, rows-only) — the
-# keys the driver can actually turn red this round or recently could:
+# The fast tier keeps, unconditionally: every test not explicitly
+# marked slow, including the sf0.01 driver-window preflight and the
+# sf0.001 registry-oracle and rows-only batteries over EVERY registry
+# key. Only the two plan-level key batteries (the static plan-shape
+# audit and the sf0.01 money ties) are cut down to the keys the
+# driver can actually turn red this round or recently could:
 #   * the ACTIVE sweep window (includes every key touched this round),
-#   * the PREVIOUS round's window (the keys rotated out — r14 verdict
-#     item 9: they must stay internally checked),
 #   * the bench HEADLINE set (every key the driver times),
 #   * the next-round rotation head (keys added/changed mid-round).
-# (ACTIVE, PREVIOUS and NEXT_HEAD come from __spark_entry__.py.)
-# Everything else in those batteries is deselected by default; the
-# tests themselves are unchanged, so the full tier runs the exact
+# (ACTIVE and NEXT_HEAD come from __spark_entry__.py.)
+# Everything else in those two batteries is deselected by default;
+# the tests themselves are unchanged, so the full tier runs the exact
 # same assertions.
 # ---------------------------------------------------------------------------
 
-_KEY_BATTERIES = {
-    "test_query_matches_oracle",
-    "test_rows_only_queries_run",
-    "test_registry_wide_no_scale_killers",
-    "test_money_key_bit_identical_at_sf001",
-}
-
-# The static plan-shape battery and the sf0.01 money-ties battery
-# drop the previous-round window from their fast sets (unlike the
-# sf0.001 ORACLE battery, which keeps it per r14 verdict item 9): a
-# plan-shape or money-tie regression needs a code change, and changed
-# keys are in the ACTIVE window/head by the standing process — the
-# r14-window keys' money ties carry fresh r14 driver rows.
-_PLAN_ONLY_BATTERIES = {"test_registry_wide_no_scale_killers",
-                        "test_money_key_bit_identical_at_sf001"}
+_KEY_BATTERIES = {"test_registry_wide_no_scale_killers",
+                  "test_money_key_bit_identical_at_sf001"}
 
 
-def _fast_keys() -> tuple[set[str], set[str]]:
+def _fast_keys() -> set[str]:
     import __spark_entry__ as E
     import bench
-    active, previous = E.window()
-    plan_fast = set(active) | set(E.NEXT_HEAD) | set(bench.HEADLINE)
-    return plan_fast | previous, plan_fast
+    active, _previous = E.window()
+    return set(active) | set(E.NEXT_HEAD) | set(bench.HEADLINE)
 
 
 _FAST_TIER_DROPPED = pytest.StashKey[tuple[int, int]]()
@@ -81,7 +66,7 @@ def pytest_configure(config):
 def pytest_collection_modifyitems(config, items):
     if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
         return
-    fast, plan_fast = _fast_keys()
+    fast = _fast_keys()
     kept, dropped = [], []
     for item in items:
         if item.get_closest_marker("slow"):
@@ -89,10 +74,9 @@ def pytest_collection_modifyitems(config, items):
             continue
         base = item.name.split("[", 1)[0]
         if base in _KEY_BATTERIES:
-            allowed = plan_fast if base in _PLAN_ONLY_BATTERIES else fast
             params = getattr(item, "callspec", None)
             key = params.params.get("name") if params else None
-            if key is not None and key not in allowed:
+            if key is not None and key not in fast:
                 dropped.append(item)
                 continue
         kept.append(item)

@@ -34,10 +34,6 @@ THRESHOLD = 0.9
 
 # (module:function, module:function) -> reason. Keys are sorted pairs.
 ALLOWED = {
-    ("streaming.windows:interval_pair_join_full",
-     "streaming.windows:interval_pair_join_outer"):
-        "outer vs full interval join; one join-type parameter would "
-        "collapse them (ROADMAP item 8)",
     ("plans.core_relational:sql_shipping_priority",
      "plans.olap_suite:sql_pipe_syntax"):
         "one TPC-H Q3 text in standard SQL and in pipe syntax; the "

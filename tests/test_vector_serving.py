@@ -64,3 +64,28 @@ def test_recall_receipt_empty_approx(spark):
     row = recall_receipt(_ids(spark, []), exact, "vec_id", k=10,
                          min_hits=1).first()
     assert tuple(row) == (10, 0, False)
+
+
+def test_quantizer_fit_jobs_carry_the_callers_job_group(spark, sf_smoke):
+    """The query-vector fetch that ``_fit_quantizer`` overlaps with the
+    k-means fit runs on a pool thread; it must inherit the caller's
+    job group, so group-scoped job counts and ``cancelJobGroup`` see
+    every job the build starts."""
+    import time
+
+    from perfbench.spark_status import SparkStatus
+    from quickbooks_aws_etl_pipeline_spark.plans import QUERIES
+
+    status = SparkStatus(spark)
+    sc = spark.sparkContext
+    status.drain()
+    since = int(time.time() * 1000)
+    sc.setJobGroup("t_ivf_build", "sim_topk_cosine_ivf_trainsampled build")
+    try:
+        QUERIES["sim_topk_cosine_ivf_trainsampled"](spark, sf_smoke)
+    finally:
+        sc.setJobGroup("t_ivf_other", "after the build")
+    status.drain()
+    groups = [j.get("jobGroup") for j in status.jobs(since)]
+    assert groups, "the build started no job"
+    assert set(groups) == {"t_ivf_build"}, groups
